@@ -171,6 +171,16 @@ EXTENDED = [
 HEADLINE = HEADLINE_PINNED + EXTENDED
 
 
+def parse_cpus() -> int:
+    """``$SPARK_GRAFT_CPUS`` when it is a positive integer, else the
+    number of cores this process may run on. Never raises: a malformed
+    value must not cost the run its artifact after every rep has run."""
+    raw = os.environ.get("SPARK_GRAFT_CPUS", "").strip()
+    if raw.isdigit() and int(raw) > 0:
+        return int(raw)
+    return len(os.sched_getaffinity(0))
+
+
 def force(df) -> None:
     """Execute every operator in the plan and materialize all columns.
 
@@ -351,7 +361,7 @@ def build_summaries(
         # Core count the run was taken at (round 15: the scaling rerun
         # overwrites BENCH_SUMMARY.json, so the record must say which
         # core count produced it or cross-count priors get compared).
-        "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 0)),
+        "cpus": parse_cpus(),
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         # Pinned tier only — a frozen 20-name set, so this map cannot
         # grow. Full maps (all tiers, full precision): BENCH_SUMMARY.json.

@@ -12,7 +12,7 @@ Usage:
     df = queries["q1_pricing_summary"](spark, sf)
     df.collect()                      # metrics populate on execution
     s = exchange_summary(df)
-    s["shuffle_bytes"], s["n_shuffles"], s["broadcast_bytes"], ...
+    s["shuffle_bytes"], s["n_shuffles"], s["broadcast_rows"], ...
 """
 
 from __future__ import annotations
@@ -52,8 +52,14 @@ def exchange_summary(df: DataFrame) -> dict[str, Any]:
 
     Returns: n_shuffles, shuffle_records, shuffle_bytes (bytes written
     to shuffle storage), shuffle_data_size (pre-serialization row
-    bytes), n_broadcasts, broadcast_bytes, scan_rows (rows produced by
-    all file scans — the denominator for bytes-per-input-row).
+    bytes), n_broadcasts, broadcast_rows, broadcast_bytes, scan_rows
+    (rows produced by all file scans — the denominator for
+    bytes-per-input-row).
+
+    ``broadcast_bytes`` is the built relation's ``dataSize``: for a
+    hashed relation that is its allocated page memory, which grows with
+    the memory per core, not with the payload. ``broadcast_rows`` is the
+    core-count-independent measure of what was broadcast.
     """
     spark = df.sparkSession
     jvm = spark._jvm
@@ -64,6 +70,7 @@ def exchange_summary(df: DataFrame) -> dict[str, Any]:
         "shuffle_bytes": 0,
         "shuffle_data_size": 0,
         "n_broadcasts": 0,
+        "broadcast_rows": 0,
         "broadcast_bytes": 0,
         "scan_rows": 0,
     }
@@ -92,6 +99,7 @@ def exchange_summary(df: DataFrame) -> dict[str, Any]:
             seen.add(key)
             m = _metric_values(jvm, n)
             out["n_broadcasts"] += 1
+            out["broadcast_rows"] += m.get("numOutputRows", 0)
             out["broadcast_bytes"] += m.get("dataSize", 0)
         elif "FileSourceScan" in cname or cname.endswith("BatchScanExec"):
             if key in seen:

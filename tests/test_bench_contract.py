@@ -14,8 +14,11 @@ build-time guarantee.
 from __future__ import annotations
 
 import json
+import os
 import re
 from pathlib import Path
+
+import pytest
 
 import bench
 
@@ -224,3 +227,22 @@ def test_scaling_rerun_artifact_and_summary_never_become_the_prior(tmp_path):
     src, pq, precision = bench._load_prior_queries(tmp_path)
     assert src == "BENCH_r14.json"
     assert pq == {"a": 1.0}
+
+
+@pytest.mark.parametrize("raw", ["8 ", " 8", "8\n"])
+def test_cpus_accepts_padded_integer(raw, monkeypatch):
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", raw)
+    assert bench.parse_cpus() == 8
+
+
+@pytest.mark.parametrize("raw", ["auto", "", "0", "-2", "2.5", "*"])
+def test_cpus_falls_back_to_affinity_on_malformed_value(raw, monkeypatch, tmp_path):
+    """A malformed ``SPARK_GRAFT_CPUS`` must not crash the summary after
+    every rep has run; the record takes the process's affinity count."""
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", raw)
+    assert bench.parse_cpus() == len(os.sched_getaffinity(0))
+    timings = _fake_timings(20)
+    line, _ = bench.build_summaries(
+        timings, {k: 0.0 for k in timings}, "data/sf0.1", 3, tmp_path
+    )
+    assert json.loads(line)["cpus"] == len(os.sched_getaffinity(0))

@@ -11,6 +11,9 @@ plus a DuckDB differential check it lacks:
 
 from __future__ import annotations
 
+import threading
+import time
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -23,21 +26,30 @@ from glamira_batch_processing_spark.plans.glamira import build_glamira_pipeline
 from glamira_batch_processing_spark.sources.raw_generator import write_raw_tables
 
 N_EVENTS = 8000
+TABLES = (
+    "customer_email_scd", "mart_dim_customer", "mart_dim_product",
+    "mart_dim_location", "mart_dim_date", "mart_fact_order",
+    "audit_null_rates_stg_order", "audit_orphan_rates",
+)
 
 
 @pytest.fixture(scope="module")
 def glamira(spark, tmp_path_factory):
     base = tmp_path_factory.mktemp("glamira")
     paths = write_raw_tables(spark, str(base / "raw"), n_events=N_EVENTS)
-    p = build_glamira_pipeline(
+    p = _pipeline(spark, paths, str(base / "models"))
+    p.run()
+    return p, paths
+
+
+def _pipeline(spark, paths, workdir):
+    return build_glamira_pipeline(
         spark,
         raw_events=spark.read.parquet(paths["raw_events"]),
         raw_product=spark.read.parquet(paths["raw_product"]),
         raw_ip_locations=spark.read.parquet(paths["raw_ip_locations"]),
-        workdir=str(base / "models"),
+        workdir=workdir,
     )
-    p.run()
-    return p, paths
 
 
 def test_stg_order_constraints(glamira):
@@ -443,3 +455,212 @@ def test_check_relationships_fk_integrity(spark):
     assert check_relationships(child, "fk", parent, "id") == 1
     ok = spark.createDataFrame([(10, 1), (13, None)], "ck long, fk long")
     assert check_relationships(ok, "fk", parent, "id") == 0
+
+
+def test_table_reread_schema_equals_inferred(glamira, spark):
+    """A table's re-read takes its schema from the frame just written;
+    it must be exactly what parquet inference would give."""
+    p, _ = glamira
+    for t in TABLES:
+        assert p.ref(t).schema == spark.read.parquet(f"{p.workdir}/{t}").schema, t
+
+
+def test_run_equals_serial_ref_build(glamira, spark, tmp_path):
+    """The concurrent run() builds the same tables as ref() called
+    serially in model order over the same raw inputs."""
+    p, paths = glamira
+    serial = _pipeline(spark, paths, str(tmp_path / "serial"))
+    for name in serial.models:
+        serial.ref(name)
+    for t in TABLES:
+        got, want = p.ref(t).drop("run_ts"), serial.ref(t).drop("run_ts")
+        assert got.count() == want.count() > 0, t
+        assert got.exceptAll(want).isEmpty(), t
+        assert want.exceptAll(got).isEmpty(), t
+
+
+def _table_deps(manifest, name, seen=None):
+    """Table models ``name`` depends on, directly or through views."""
+    seen = set() if seen is None else seen
+    for d in manifest["models"][name]["depends_on"]:
+        if d not in seen:
+            seen.add(d)
+            _table_deps(manifest, d, seen)
+    return {d for d in seen if manifest["models"][d]["materialized"] == "table"}
+
+
+def test_run_results_timing_shows_overlap_and_order(glamira):
+    """run() executes independent tables concurrently, and no model
+    starts executing before its table dependencies have completed."""
+    p, _ = glamira
+    res = {r["model"]: r for r in p.run_results()}
+    assert set(res) == set(p.models)
+    for r in res.values():
+        assert r["status"] == "success"
+        assert r["build_s"] >= 0 and r["execute_s"] >= 0, r
+        assert r["started_at"] <= r["completed_at"], r
+        assert r["build_s"] + r["execute_s"] <= r["elapsed_s"] + 1e-3, r
+        assert r["thread_id"], r
+    execute = {m: (r["completed_at"] - r["execute_s"], r["completed_at"]) for m, r in res.items()}
+    overlapping = [
+        (a, b)
+        for i, a in enumerate(TABLES)
+        for b in TABLES[i + 1:]
+        if execute[a][0] < execute[b][1] and execute[b][0] < execute[a][1]
+    ]
+    assert overlapping, execute
+    manifest = p.manifest()
+    for m in res:
+        for dep in _table_deps(manifest, m):
+            assert execute[m][0] >= res[dep]["completed_at"], (m, dep)
+
+
+class Boom(Exception):
+    pass
+
+
+def test_run_failure_raises_original_after_in_flight_finish(spark, tmp_path):
+    """A failing model: run() waits for the models still building, then
+    raises the model's own exception; a dependent waiting on it fails
+    with an error record instead of hanging."""
+    from glamira_batch_processing_spark.plans.pipeline import Pipeline, UpstreamError
+
+    p = Pipeline(spark, workdir=str(tmp_path))
+    p.add_source("src", spark.range(100).toDF("n"))
+    bad_started = threading.Event()
+
+    # declared first, so run() reads its (wrapped) failure first
+    @p.model("dependent", materialized="table")
+    def dependent(pl):
+        bad_started.wait()
+        return pl.ref("bad")
+
+    @p.model("bad")
+    def bad(pl):
+        bad_started.set()
+        time.sleep(0.2)
+        raise Boom("boom")
+
+    @p.model("slow", materialized="table")
+    def slow(pl):
+        bad_started.wait()
+        time.sleep(1.0)  # still building when bad fails
+        return pl.source("src").selectExpr("n", "n * 2 AS m")
+
+    outcome = {}
+
+    def target():
+        try:
+            p.run()
+        except Exception as exc:  # handed to the test thread
+            outcome["exc"] = exc
+
+    runner = threading.Thread(target=target, daemon=True)
+    runner.start()
+    runner.join(timeout=120)
+    assert not runner.is_alive(), "run() hung after a model failed"
+    assert isinstance(outcome.get("exc"), Boom), outcome
+    res = {r["model"]: r for r in p.run_results()}
+    assert res["bad"]["status"] == "error" and "boom" in res["bad"]["message"]
+    assert res["dependent"]["status"] == "error"
+    assert UpstreamError.__name__ in res["dependent"]["message"]
+    assert res["slow"]["status"] == "success" and res["slow"]["rows"] == 100
+    assert res["slow"]["completed_at"] > res["bad"]["completed_at"]
+
+
+def test_dependency_cycle_raises_instead_of_hanging(spark):
+    """A model that refs itself, directly or across run()'s threads,
+    fails with a cycle error; no thread waits forever."""
+    from glamira_batch_processing_spark.plans.pipeline import Pipeline
+
+    p = Pipeline(spark)
+
+    @p.model("selfref")
+    def selfref(pl):
+        return pl.ref("selfref")
+
+    with pytest.raises(RuntimeError, match="cycle"):
+        p.ref("selfref")
+
+    p.model("a")(lambda pl: pl.ref("b"))
+    p.model("b")(lambda pl: pl.ref("a"))
+    outcome = {}
+
+    def target():
+        try:
+            p.run(["a", "b"])
+        except Exception as exc:  # handed to the test thread
+            outcome["exc"] = exc
+
+    runner = threading.Thread(target=target, daemon=True)
+    runner.start()
+    runner.join(timeout=60)
+    assert not runner.is_alive(), "run() hung on a dependency cycle"
+    assert isinstance(outcome.get("exc"), RuntimeError), outcome
+    assert "cycle" in str(outcome["exc"])
+
+
+def test_run_builds_each_model_once_under_thread_switch_stress(spark):
+    """More model threads than cores over a shared diamond-heavy DAG,
+    with the interpreter switching threads as often as it can: every
+    model function runs exactly once, and every observed edge is kept."""
+    import sys
+
+    from glamira_batch_processing_spark.plans.pipeline import Pipeline
+
+    p = Pipeline(spark)
+    p.add_source("src", spark.range(4).toDF("n"))
+    calls: dict[str, int] = {}
+    calls_lock = threading.Lock()
+    n_models = 24
+    parents = {i: [j for j in (i // 2, i // 3, i - 1) if 0 <= j < i] for i in range(n_models)}
+
+    def make(i):
+        def fn(pl):
+            with calls_lock:
+                calls[f"m{i}"] = calls.get(f"m{i}", 0) + 1
+            df = pl.source("src")
+            for j in sorted(set(parents[i])):
+                df = df.unionByName(pl.ref(f"m{j}"))
+            return df
+        return fn
+
+    for i in range(n_models):
+        p.model(f"m{i}")(make(i))
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        runner = threading.Thread(target=p.run, daemon=True)
+        runner.start()
+        runner.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not runner.is_alive(), "run() did not finish"
+    assert calls == {f"m{i}": 1 for i in range(n_models)}
+    assert sorted(r["model"] for r in p.run_results()) == sorted(calls)
+    edges = p.manifest()["models"]
+    for i in range(n_models):
+        assert edges[f"m{i}"]["depends_on"] == sorted(f"m{j}" for j in set(parents[i]))
+        assert edges[f"m{i}"]["sources"] == ["src"]
+
+
+def test_run_jobs_belong_to_the_callers_job_group(glamira, spark, tmp_path):
+    """Every Spark job a run() submits carries the job group the caller
+    set before calling it, though the models build on other threads."""
+    _, paths = glamira
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    listeners = sc._jsc.sc().listenerBus()
+    group = "glamira-run-job-group"
+    listeners.waitUntilEmpty()
+    ungrouped_before = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup(group, "warehouse build")
+    try:
+        _pipeline(spark, paths, str(tmp_path / "models")).run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        sc.setLocalProperty("spark.job.interruptOnCancel", None)
+    listeners.waitUntilEmpty()
+    assert len(tracker.getJobIdsForGroup(group)) >= len(TABLES)
+    assert set(tracker.getJobIdsForGroup(None)) <= ungrouped_before

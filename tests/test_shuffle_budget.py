@@ -71,10 +71,13 @@ def test_funnel_count_distinct_no_expand_blowup(spark, qs):
 
 def test_decontaminate_probe_is_broadcast(spark, qs):
     """Benchmark decontamination: the eval shingle set broadcasts; the
-    corpus is never shuffled for the overlap probe."""
+    corpus is never shuffled for the overlap probe. Budgeted on rows:
+    the broadcast's byte size is the hash relation's page memory, which
+    varies with the core count (67 MB at 4 cores, 8.4 MB at 32 for the
+    same ~1.9k rows)."""
     s = _run(spark, qs, "decontaminate_benchmark_overlap")
     assert s["n_broadcasts"] >= 1, s
-    assert s["broadcast_bytes"] < 20_000_000, s
+    assert s["broadcast_rows"] < 5_000, s
 
 
 def test_video_frame_decode_is_scan_fused(spark, qs):
