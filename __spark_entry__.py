@@ -44,475 +44,12 @@ from glamira_batch_processing_spark.plans import (  # noqa: F401
 from glamira_batch_processing_spark.plans.registry import ORACLE, QUERIES
 
 # The driver's CORRECTNESS gate samples the FIRST 50 entries of ``queries()``
-# in iteration order. Curate that order explicitly so every SURVEY.md §2
-# operator family, the flagship pipeline, and each LLM-data-pipeline operator
-# family gets a driver row. Round 4 rotates in the 11 queries that had never
-# had a driver row (VERDICT.md r3 ask #1); the 11 rotated out each hold >=2
-# consecutive green rounds (CORRECTNESS_r0{1,2,3}.json) and their families
-# stay represented in-window:
-#   p5 -> p1 (projection), j5/j12 -> j2 (equi/dim join), j13 -> j9
-#   (semi/anti orphan formulation), a3 -> a7+a2 (agg), w4 -> w1 (window
-#   dedupe), f2 -> glamira_pipeline_e2e's int_order_qa (regex QA),
-#   f7 -> f3/f6 (scalar), text_quality_score -> text_repetition_stats
-#   (quality stats), ann_cosine_topk -> ann_ivf_bucketed (ANN),
-#   pack_sequences -> chunk_token_windows (chunk/pack).
-# Rotated-out names stay covered by pytest test_query_vs_oracle + driver_sim.
-# Round 5: the round-4 gate artifacts were never produced (no
-# CORRECTNESS_r04.json exists), so the 11 round-4 rotations STAY
-# in-window — this round's gate is their first external run. The only
-# slack (every other family is single-covered) comes from two swaps,
-# each rotating out a name with >=2 green external rounds:
-#   sample_stratified_lang (r3 green; family still covered by
-#     sample_exact_k) -> search_bm25_topk (new retrieval family)
-#   f6_date_dimension (r1+r3 green; date/time family still covered by
-#     f6_time_arithmetic) -> graph_pagerank_parts (new graph family)
-# Round 6 (VERDICT r5 ask #1): all 50 r5 rows came back green, so the
-# round-4/5 rotations hold their first external rows and rotation is
-# unblocked. 13 swaps rotate in the highest-value NEVER-GATED queries;
-# every rotated-out name holds >=2 green external rounds
-# (CORRECTNESS_r0{1,2,3,5}.json) and its GATE_FAMILIES family keeps an
-# in-window representative (guard test enforces):
-#   j2_revenue_by_nation (r1/2/3/5) -> q5_local_supplier_volume
-#     (dim-join stress; dim_equi_join family)
-#   a2_multiplicity_flag (r1/2/3/5) -> funnel_view_click_purchase
-#     (per-user distinct-stage counting; count_distinct family)
-#   a4_null_rate_audit (r1/2/3/5) -> mix_importance_weights
-#     (conditional-count agg; conditional_agg family)
-#   w1_latest_order_per_customer (r1/2/3/5) -> ohlc_hourly_bars
-#     (new timeseries family; window-dedupe family keeps w2)
-#   u1_union_all (r1/2/3/5) -> u2_intersect_except (set-op family)
-#   f1_string_normalize (r1/3/5) -> boilerplate_strip_lines
-#     (string-normalize family)
-#   dedup_minhash_lsh (r1/2/3/5) -> dedup_substring_spans (near-dup
-#     family; sub-document granularity)
-#   ann_ivf_bucketed (r1/2/3/5) -> ann_pq_adc_topk (ANN family)
-#   text_langid (r1/2/3/5) -> text_langid_trained (trained-path proof)
-#   multimodal_image_meta (r3/5) -> multimodal_pixel_digest
-#     (pixel-level external proof)
-#   pii_redact (r2/3/5) -> pii_luhn_validate (pii family)
-#   heavy_hitters_by_lang (r3/5) -> skew_salted_agg (skew-aware agg)
-#   sketch_kmv_distinct (r3/5) -> sketch_hll_registers (sketch family)
-#   j6_agg_join_back stays (its family has no alternate).
-# Round 7 (VERDICT r6 ask #1): all 50 r6 rows came back green, so the
-# round-6 swaps hold their first external rows and rotation proceeds.
-# 20 swaps rotate in never-gated queries (19 first-time names;
-# interval_join_attribution holds one r2 green and re-gates). Every
-# rotated-out name holds >=2 green external rounds
-# (CORRECTNESS_r0{1,2,3,5,6}.json) and its GATE_FAMILIES family keeps
-# an in-window representative (guard test enforces; tuples extended
-# where the incoming query is the same family in a new shape):
-#   p6_latest_snapshot_filter (r1/2/3/5/6) -> q22_dormant_customers
-#     (scalar-subquery-filtered scan, the A6 family; also anti-join)
-#   j6_agg_join_back (r1/2/3/5/6) -> q18_large_volume_customer
-#     (HAVING-subquery aggregate joined back to detail)
-#   j9_orphan_rate_audit (r1/2/3/5/6) -> q21_waiting_supplier
-#     (multi-EXISTS/NOT-EXISTS semi/anti stress)
-#   a7_group_max_count (r1/2/3/5/6) -> q15_top_supplier (group-max
-#     via scalar-MAX subquery joined back; covers group_max +
-#     agg_join_back)
-#   f6_time_arithmetic (r5/6) -> q12_latency_priority_classes
-#     (ship/commit/receipt date-arithmetic classes; date_time family)
-#   stats_histogram (r5/6) -> q13_customer_distribution
-#     (distribution-of-counts histogram)
-#   o4_topk_composite_order (r3/5/6) -> q3_shipping_priority
-#     (TakeOrdered top-k, composite order)
-#   w5_running_totals (r5/6) -> w7_range_interval_frame (RANGE
-#     interval frame; window_frames family)
-#   f8_json_extract (r1/3/5/6) -> f12_variant_extract (VARIANT =
-#     Spark-4 form of the JSON-extraction family)
-#   search_bm25_topk (r5/6) -> search_hybrid_rrf (BM25+dense RRF)
-#   sample_exact_k (r5/6) -> mix_temperature_sampling
-#   kmeans_lloyd_step (r5/6) -> dedup_semdedup_prune (centroid
-#     assignment + within-cluster prune; clustering + dedup_near)
-#   dedup_exact (r1/2/3/5/6) -> url_canonicalize_dedup (exact dedup
-#     on canonicalized keys)
-#   decontaminate_benchmark_overlap (r3/5/6) -> text_winnow_fingerprints
-#     (winnowing fingerprint selection, the document-overlap /
-#     contamination-detection primitive)
-#   text_repetition_stats (r5/6) -> quality_gopher_filter
-#   stats_column_profile (r5/6) -> stats_correlation
-#   split_train_val_test (r2/3/5/6) -> corpus_shuffle_deterministic
-#   multimodal_audio_meta (r5/6) -> multimodal_audio_resample
-#   asof_join_last_purchase (r3/5/6) + range_lookup_ip_geo (r5/6) ->
-#     interval_join_attribution (member of BOTH temporal-join
-#     families) + q4_order_priority (EXISTS semi-join count)
-# Round 8 (VERDICT r7 ask #1 asked for >=15 swaps; the policy caps
-# this round at NINE — the window arithmetic, so the judge can verify:
-# 19 round-7 rotations hold exactly ONE green row (r7) and must stay
-# until their second lands, and 22 of the 31 multi-green veterans are
-# the SOLE in-window representative of a GATE_FAMILIES family with no
-# incoming same-family query (flagships, q1, p1, p4, j1, f3, f4, f5,
-# w2, w3, u2, ohlc, boilerplate, grouping_sets, graph, langid_trained,
-# interval_join [range_join], pii_luhn, chunk, skew, dedup_components,
-# dedup_cluster). 19 + 22 = 41 locked; 50 - 41 = 9 slots. Every
-# rotated-out name below holds >=2 green external rounds and its
-# family keeps an in-window representative (guard test enforces;
-# tuples extended where the incoming query is the same family in a
-# new shape):
-#   q5_local_supplier_volume (r6/7) -> q9_product_profit (TPC-H
-#     multi-dim profit chain; dim_equi_join keeps q18 too)
-#   funnel_view_click_purchase (r6/7) -> q16_parts_supplier
-#     (COUNT(DISTINCT) per group + NOT IN anti; count_distinct family)
-#   mix_importance_weights (r6/7) -> q14_promo_revenue (CASE-WHEN
-#     conditional share; conditional_agg family)
-#   j11_incremental_merge (r3/5/6/7) -> s11_versioned_lifecycle (NEW:
-#     the full transactional DML lifecycle — create -> MERGE ->
-#     DELETE WHERE -> compact_small -> read_pruned_multi — VERDICT r7
-#     ask #7; merge_upsert family)
-#   zorder_key_orders (r5/6/7) -> s1_chunked_export_roundtrip (NEW:
-#     write+read through the custom chunked_export DataSource —
-#     VERDICT r7 ask #6; table_layout family keeps s11's
-#     stats-pruned-read leg in-window)
-#   dedup_substring_spans (r6/7) -> multimodal_video_frames (AVI/MJPEG
-#     index-driven frame sampling + real entropy decode; dedup_near
-#     keeps dedup_semdedup_prune)
-#   ann_pq_adc_topk (r6/7) -> ann_sq8_topk (SQ8 scalar quantization;
-#     ann family)
-#   multimodal_pixel_digest (r6/7) -> multimodal_variant_routing
-#     (unsupported-variant quarantine gate; multimodal_image family)
-#   sketch_hll_registers (r6/7) -> sketch_theta_overlap (theta-sketch
-#     set algebra; sketch family)
-# Round 9 (VERDICT r8 ask #1): all 50 r8 rows came back green, so the
-# 20 round-7 rotations hold two green rows (r7+r8) and are eligible.
-# The window arithmetic: the NINE round-8 swap-ins hold exactly one
-# green row (r8) and stay (q9, q16, q14, s11, s1, video_frames,
-# ann_sq8, variant_routing, sketch_theta); 26 veterans are the SOLE
-# in-window representative of a GATE_FAMILIES family with no incoming
-# same-family query (flagships, q1, p1, p4, j1, w3, grouping_sets, u2,
-# boilerplate, f3/f4/f5/f12, search_hybrid_rrf, graph, langid_trained,
-# semdedup [clustering+dedup_near], url_canonicalize, winnow,
-# corpus_shuffle, pii_luhn, chunk, skew, audio_resample, interval_join
-# [sole range_join rep]). 9 + 26 = 35 locked; 15 slots free. Every
-# rotated-out name below holds >=2 green external rounds and its
-# family keeps an in-window representative (guard test enforces;
-# tuples extended where the incoming query is the same family in a
-# new shape):
-#   q22_dormant_customers (r7/8) -> q17_small_quantity_revenue
-#     (correlated scalar-AVG subquery filter = the A6 scalar-subquery
-#     family's TPC-H shape; also agg_join_back)
-#   q18_large_volume_customer (r7/8) -> q10_returned_items (multi-dim
-#     join chain + TakeOrdered top-20; dim_equi_join keeps q9 too)
-#   q21_waiting_supplier + q4_order_priority (r7/8) ->
-#     q20_potential_promotion (nested IN-subquery semi-join stress;
-#     semi/anti family) + q19_disjunctive_revenue (OR-of-ANDs
-#     predicate pushdown)
-#   q15_top_supplier (r7/8) -> q2_min_cost_supplier (group-min via
-#     correlated scalar subquery joined back; group_max family)
-#   q12_latency_priority_classes (r7/8) -> q7_volume_shipping (ship-
-#     date year extraction + interval predicates; date_time family
-#     also covered by q6's pushed date-range algebra)
-#   q3_shipping_priority (r7/8) -> q6_forecast_revenue (pushed-bound
-#     range-predicate scan — the round-8 PushedFilters work earns its
-#     external row; topk_order family keeps q10's ORDER BY..LIMIT)
-#   q13_customer_distribution (r7/8) -> qa_snapshot_drift (fixed-grid
-#     bucketed histogram comparison: chi-square + exact-integer KS;
-#     histogram + column_profile families)
-#   stats_correlation (r7/8) -> (column_profile kept by
-#     qa_snapshot_drift above)
-#   ohlc_hourly_bars (r6/7/8) -> cohort_retention (event-time daily
-#     bucketing x distinct actives; timeseries family)
-#   w2_canonical_per_group (r3/5/6/7/8) + dedup_cluster_components
-#     (r3/5/6/7/8) -> dedup_keep_best (the components substrate + a
-#     per-cluster pick-one-survivor window: member of BOTH the
-#     window-dedupe and dedup_components families)
-#   w7_range_interval_frame (r7/8) -> w6_ntile_percent_rank (rank-
-#     function coverage; window_frames family)
-#   quality_gopher_filter (r7/8) -> quality_classifier_trained +
-#     quality_classifier_eval (trained NB quality filter + held-out
-#     integer-exact eval; text_quality family)
-#   mix_temperature_sampling (r7/8) -> mix_resample_sources (source-
-#     proportion resampling; sampling family)
-#   (new family) sessionize_builtin_window — native session_window
-#     sessionization gets its first external row.
-# Round-10 queue (the 15 round-9 rotations above earn their second
-# green in r9 and become eligible): q8_market_share,
-# q11_important_stock, multimodal_video_meta /
-# multimodal_video_routing, asof_forward_next_purchase,
-# gapfill_forward_fill, rolling_7d_active_users, ann_ivf_trained,
-# ann_ivfpq_residual_topk, ann_recall_eval, dedup_lsh_recall_eval,
-# sketch_countmin_tokens, sketch_quantile_sample, f13_collated_group,
-# quality_bigram_familiarity, text_tfidf_topterms,
-# sample_weighted_by_length, winsorize_outlier_counts,
-# drift_split_lang_cells, cluster_label_purity, anomaly_error_spike,
-# event_transition_matrix, and the newly oracled bpe_encode_stats /
-# unigram_encode_stats / q1_coded_layout / s11_cdc_diff /
-# s11_incremental_view / sessionize_streaming_gate /
-# funnel_streaming_gate / alerts_streaming_gate (digest-pinned seed
-# oracles, the coded-layout lifecycle, the CDC +
-# incremental-view-maintenance reads, and REAL stateful-streaming
-# replays of all three applyInPandasWithState operators gated against
-# batch oracles all landed in round 9; the train queries stay
-# rows-only by nature).
-# Round 10 (VERDICT r9 ask #1): all 50 r9 rows came back green, so the
-# 15 round-9 swap-ins hold exactly ONE green row (r9) and STAY until
-# their second lands; the 9 round-8 swap-ins hold two (r8+r9) and are
-# eligible. Window arithmetic (judge-verifiable from the CORRECTNESS
-# files): 15 one-green locks + 25 veterans that are the SOLE in-window
-# representative of a GATE_FAMILIES family with no incoming same-family
-# query (flagships, p1, p4, j1, grouping_sets, w3, u2, boilerplate,
-# f3/f4/f5/f12, search_hybrid_rrf, graph, url_canonicalize, semdedup
-# [dedup_near+clustering], langid_trained, variant_routing [sole image
-# rep], audio_resample, corpus_shuffle, pii_luhn, chunk, winnow, s1
-# [sole ingest_connector]) = 40 locked; 10 slots. Every rotated-out
-# name holds >=2 green external rounds and its family keeps an
-# in-window representative (guard test enforces; tuples extended where
-# the incoming query is the same family in a new shape):
-#   q9_product_profit (r8/9) -> slot freed (dim_equi_join keeps q10;
-#     q8_market_share below also joins the family)
-#   q16_parts_supplier (r8/9) -> slot freed (count_distinct tuple
-#     extended with cohort_retention, whose daily-active metric IS
-#     per-bucket COUNT(DISTINCT user) — in-window, r9 green)
-#   q14_promo_revenue (r8/9) -> q8_market_share (CASE-WHEN share =
-#     conditional_agg family's TPC-H nation-share shape; also a
-#     multi-dim join chain)
-#   s11_versioned_lifecycle (r8/9) -> s11_cdc_diff (the MERGE
-#     lifecycle's change-data-feed read contract: merge_upsert family;
-#     its version-delta file pruning is also the table_layout family's
-#     metadata-driven data-skipping leg)
-#   q1_pricing_summary (r1..r9, 8 greens) -> q1_coded_layout (SAME
-#     oracle, dictionary-coded warehouse layout; pricing_agg family)
-#   multimodal_video_frames (r8/9) -> multimodal_video_meta
-#     (container/index parse leg of the multimodal_video family)
-#   ann_sq8_topk (r8/9) -> ann_ivfpq_residual_topk (residual IVF+PQ;
-#     ann family)
-#   sketch_theta_overlap (r8/9) -> sketch_countmin_tokens (Count-Min
-#     IS the classic heavy-hitters sketch: sketch family + extends
-#     heavy_hitters)
-#   skew_salted_agg (r6/7/8/9) -> slot freed (heavy_hitters kept by
-#     sketch_countmin_tokens above)
-#   interval_join_attribution (r2/7/8/9) -> asof_forward_next_purchase
-#     (forward as-of = as-of semantics over a time-inequality range
-#     predicate — member of BOTH temporal-join families by the same
-#     argument that admitted interval_join in round 7)
-# The three freed slots go to round 9's headline engineering — REAL
-# stateful-streaming replays under batch oracles (new streaming_state
-# family): sessionize_streaming_gate, funnel_streaming_gate,
-# alerts_streaming_gate. 10 first-time names total.
-# Round-11 queue (the 10 round-10 swap-ins become eligible once their
-# second green lands): s11_incremental_view, bpe_encode_stats,
-# unigram_encode_stats, q11_important_stock, multimodal_video_routing,
-# gapfill_forward_fill, rolling_7d_active_users, ann_ivf_trained,
-# ann_recall_eval, dedup_lsh_recall_eval, sketch_quantile_sample,
-# f13_collated_group, quality_bigram_familiarity, text_tfidf_topterms,
-# sample_weighted_by_length, winsorize_outlier_counts,
-# drift_split_lang_cells, cluster_label_purity, anomaly_error_spike,
-# event_transition_matrix, plus the two new round-10 operators:
-# ann_index_persist (the persisted-IVF index lifecycle — create ->
-# incremental MERGE -> clustered compact -> list-pruned probe reads)
-# and split_leakage_safe (cluster-atomic train/val/test assignment),
-# each oracle-matched at multiple scale factors the session it landed.
-# Round 11 (VERDICT r10 ask #1): all 50 r10 rows came back green, so
-# the 10 round-10 swap-ins hold exactly ONE green row and STAY; the 15
-# round-9 swap-ins now hold two (r9+r10) and are eligible. 15 rotate
-# out, each with >=2 greens and its family kept in-window (tuples
-# extended where the incoming query is the same family in a new
-# shape):
-#   q17_small_quantity_revenue (r9/10) -> q11_important_stock (Q11's
-#     HAVING-against-a-scalar-fraction-of-the-same-aggregate is the
-#     scalar-subquery-filter shape that admitted q22 in round 7 AND
-#     the agg-joined-back-to-agg shape that admitted q18)
-#   q2_min_cost_supplier (r9/10) -> text_tfidf_topterms (per-doc
-#     rank<=3 window = the group-extreme pick; also joins retrieval —
-#     tf-idf is BM25's lexical-relevance ancestor) freeing
-#     search_hybrid_rrf (r7..r10)
-#   q10_returned_items (r9/10) -> sample_weighted_by_length (A-ES
-#     top-64 by composite weight key plans TakeOrderedAndProject =
-#     the topk_order shape; already a sampling rep) freeing
-#     mix_resample_sources (r9/10)
-#   q6/q7 (r9/10 each) -> gapfill_forward_fill (its hour spine is
-#     F6's GENERATE_DATE_ARRAY+UNNEST shape — sequence + explode +
-#     date_trunc; its running last(ignorenulls) ROWS frame is also
-#     the w5 running-accumulation window_frames shape, freeing
-#     w6_ntile_percent_rank r9/10)
-#   cohort_retention (r9/10) -> rolling_7d_active_users (per-bucket
-#     COUNT(DISTINCT user) — the same argument that admitted cohort
-#     in round 10; also a timeseries rep)
-#   f12_variant_extract (r7..r10) -> f14_json_retype (NEW round-11
-#     operator: the reference repair script's from_json nested
-#     re-typing — json_extract family; closes VERDICT r10 missing #1)
-#   dedup_semdedup_prune (r7..r10) -> dedup_lsh_recall_eval
-#     (dedup_near) + cluster_label_purity (Lloyd-assignment
-#     contingency purity = the clustering family's evaluation leg)
-#   quality_classifier_trained/_eval (r9/10 each) ->
-#     quality_bigram_familiarity (the Gopher-family quality-filter
-#     metric: text_quality family)
-#   corpus_shuffle_deterministic (r7..r10) -> split_leakage_safe
-#     (cluster-atomic split: the split family's leakage-safe leg)
-#   q19_disjunctive_revenue (r9/10) -> slot freed
-# The freed slots take the round-10 headliners s11_incremental_view
-# (merge_upsert rep) + ann_index_persist (ann family) and the
-# digest-pinned tokenizer encodes bpe_encode_stats /
-# unigram_encode_stats (NEW tokenizer family) + multimodal_video_
-# routing (already a multimodal_video rep). 15 first-time names total.
-# Round-12 queue (the 15 round-11 swap-ins become eligible once their
-# second green lands): sketch_quantile_sample, f13_collated_group,
-# drift_split_lang_cells, anomaly_error_spike, event_transition_matrix,
-# ann_ivf_trained, ann_recall_eval, winsorize_outlier_counts, plus the
-# three previously queue-orphaned names (VERDICT r10 ask #4):
-# ann_recall_multiprobe, ann_sq8_recall_eval, f10_array_lambda_stats,
-# and the one NEW round-11 operator sketch_countmin_estimate (the
-# Count-Min estimate leg: broadcast-sketch probes beside exact counts,
-# oracle-matched at sf0.001/0.01/0.1 the session it landed).
-# Round 12 (VERDICT r11 asks #2/#3 asked for 15 swap-ins; the window
-# arithmetic caps this round at NINE, same situation as round 8, so
-# the judge can verify: the 15 round-11 rotations hold exactly ONE
-# green row (r11) and must stay until their second lands, and 26 of
-# the 35 multi-green veterans are the SOLE in-window representative of
-# a GATE_FAMILIES family with no incoming same-family query (both
-# flagships, q1_coded [pricing_agg], p1 [projection], p4 [fake_null],
-# q8 [dim_equi_join + conditional_agg], s11_cdc_diff [table_layout],
-# q20 [semi_anti], grouping_sets, w3 [scd2], alerts_streaming_gate
-# [streaming_state's kept rep], u2 [union], f3, f4, f5, graph_pagerank,
-# url_canonicalize [dedup_exact], dedup_keep_best [window_dedupe +
-# dedup_components], text_langid_trained, multimodal_variant_routing
-# [image], multimodal_audio_resample, asof_forward [asof + range_join],
-# pii_luhn, chunk_token_windows, text_winnow [decontaminate],
-# s1_chunked_export [ingest_connector]). 15 + 26 = 41 locked;
-# 50 - 41 = 9 slots. Every rotated-out name holds >=2 green external
-# rounds and its family keeps an in-window representative (guard test
-# enforces; tuples extended where the incoming query is the same
-# family in a new shape):
-#   j1_posexplode_outer (r1..r11, 10 greens — the most-gated name in
-#     the history) -> f10_array_lambda_stats (the SAME cart-array
-#     nested-data family analyzed in place with higher-order lambdas
-#     instead of explode+agg — two physical strategies, one family;
-#     the double-posexplode itself still executes under the gate every
-#     round inside glamira_pipeline_e2e, plans/glamira.py:62)
-#   boilerplate_strip_lines (r6..r11) -> f13_collated_group (case
-#     normalization performed IN the grouping via UTF8_LCASE collation
-#     — the string_normalize family, Spark-4-native shape)
-#   sessionize_builtin_window (r9/10/11) -> event_transition_matrix
-#     (lead() over (user_id, ts) event sequencing — the same per-user
-#     ordered-event primitive sessionization's gap detection uses)
-#   qa_snapshot_drift (r9/10/11) -> drift_split_lang_cells (the same
-#     chi-square distribution-drift profile over (split, lang) cells;
-#     column_profile) + winsorize_outlier_counts (percentile_disc
-#     bounds + clip counts; the histogram/percentile family)
-#   sketch_countmin_tokens (r10/11) -> sketch_countmin_estimate (the
-#     estimate leg of the SAME CMS; sketch + heavy_hitters families)
-#   ann_ivfpq_residual_topk (r10/11) -> ann_ivf_trained +
-#     ann_recall_eval (the ann family's trained-centroid path and its
-#     recall evaluation — the deployed-kernel evidence VERDICT r11
-#     flagged; ann_index_persist stays in-window)
-#   sessionize_streaming_gate + funnel_streaming_gate (r10/11 each) ->
-#     slots freed; streaming_state keeps alerts_streaming_gate, and
-#     all three replays stay in the committed DRIVERSIM battery
-#   multimodal_video_meta (r10/11) -> slot freed (multimodal_video
-#     keeps multimodal_video_routing, r11)
-# The ninth slot goes to ann_cosine_topk_np (rows-only by design: the
-# numpy kernel's float summation order cannot hash-match DuckDB; its
-# tolerance parity vs the oracled ann_cosine_topk is pytest-pinned) —
-# VERDICT r11 ask #3: its only external row was the r02 "no_oracle"
-# flag, the single non-green row in the CORRECTNESS history.
-# Round-13 queue (the 9 round-12 swap-ins become eligible once their
-# second green lands; the 15 round-11 swap-ins reach >=2 greens this
-# round and free their slots): the remaining oracle-backed never-gated
-# tail sketch_quantile_sample, anomaly_error_spike,
-# ann_recall_multiprobe, ann_sq8_recall_eval, then the rows-only
-# production kernels dedup_minhash_lsh_fast + datapipe_e2e_fast
-# (VERDICT r11 ask #3's remaining two), and the THREE NEW round-12
-# operators sketch_hll_estimate (the HLL estimate leg: in-engine raw
-# estimate beside the exact distinct count, hash-matched at
-# sf0.001/0.01/0.1 the session it landed),
-# dedup_streaming_ingest_gate (incremental LSH dedup-at-ingest as a
-# real Structured Streaming replay, union of per-batch pair emissions
-# hash-matched against the whole-corpus batch LSH oracle), and
-# sketch_bloom_membership (engine-portable Bloom filter kill-list
-# membership: bit_or build onto 8 words, broadcast probe, confusion
-# cells incl. deterministic false positives hash-matched) — plus
-# budget_quality_select (token-budget data selection: the Spark side
-# runs the two-phase bucket-histogram form, the oracle states the
-# naive global running-sum window; hash-equality at
-# sf0.001/0.01/0.1/sf1 proves the scale rewrite semantics-preserving).
-# Round 13 (VERDICT r12 ask #2 asked for 10 first-timers; the window
-# arithmetic caps this round at NINE — the round-8/round-12 situation,
-# so the judge can verify: the 8 surviving round-12 swap-ins hold
-# exactly ONE green row (r12) and must stay until their second lands
-# (f10, q8's cohort-mates drift/winsorize, event_transition, f13,
-# sketch_countmin_estimate, ann_ivf_trained, ann_recall_eval), and 33
-# of the remaining veterans are the SOLE in-window representative of a
-# GATE_FAMILIES family with no incoming same-family query (both
-# flagships, q1_coded [pricing_agg], p1, p4, q8 [dim_equi_join +
-# conditional_agg], q11 [snapshot_filter + agg_join_back],
-# s11_cdc_diff [merge_upsert + table_layout], q20 [semi_anti],
-# grouping_sets, w3 [scd2], gapfill [window_frames + date_time], u2,
-# f3, f4, f5, f14 [json_extract], text_tfidf [group_max + retrieval],
-# graph_pagerank, url_canonicalize [dedup_exact], dedup_keep_best
-# [window_dedupe + dedup_components], cluster_label_purity
-# [clustering], text_langid_trained, quality_bigram [text_quality],
-# multimodal_variant_routing [image], multimodal_audio_resample,
-# multimodal_video_routing, asof_forward [asof + range_join],
-# split_leakage_safe [split], pii_luhn, chunk_token_windows,
-# bpe_encode_stats [tokenizer's kept rep], s1_chunked_export
-# [ingest_connector]). 8 + 33 = 41 locked; 50 - 41 = 9 slots. Every
-# rotated-out name holds >=2 green external rounds and its family
-# keeps an in-window representative (guard test enforces; tuples
-# extended where the incoming query is the same family in a new
-# shape):
-#   s11_incremental_view (r11/12) -> slot freed (merge_upsert keeps
-#     s11_cdc_diff)
-#   rolling_7d_active_users (r11/12) -> sketch_hll_estimate computes
-#     the exact COUNT(DISTINCT event_id) beside the HLL estimate — the
-#     count_distinct family's sketch-vs-exact shape (same argument
-#     style that admitted cohort_retention in r10 and rolling_7d in
-#     r11); timeseries keeps gapfill + incoming anomaly_error_spike
-#   dedup_lsh_recall_eval (r11/12) -> dedup_streaming_ingest_gate
-#     (the banded-LSH near-dup family AT INGEST: per-batch signatures
-#     MERGEd into persistent state, replayed as real Structured
-#     Streaming) — also extends streaming_state, freeing
-#     alerts_streaming_gate (r10/11/12, 3 greens)
-#   ann_index_persist (r11/12) -> ann_recall_multiprobe +
-#     ann_sq8_recall_eval (the ann family's recall-eval legs)
-#   sample_weighted_by_length (r11/12) -> budget_quality_select
-#     (token-budget data selection = the sampling family's
-#     budget-constrained selection leg, and the ordered-prefix
-#     topk_order shape: ORDER BY quality DESC taken until the token
-#     budget — top-k with a data-defined k)
-#   unigram_encode_stats (r11/12) -> slot freed (tokenizer keeps
-#     bpe_encode_stats)
-#   text_winnow_fingerprints (r7..r12, 6 greens) ->
-#     sketch_bloom_membership (the decontaminate family's kill-list
-#     membership primitive — Bloom-probing a benchmark kill-list is
-#     how decontamination runs at 100 TB — also a sketch rep)
-#   (ninth slot) sketch_quantile_sample (sketch family's quantile leg,
-#     the last of the r11 oracle-backed tail)
-# In-place settlement of ann_cosine_topk_np (VERDICT r12 ask #5): the
-# raw float kernel's rows-only row kept re-stamping err="no_oracle",
-# so it leaves the window and its ids-only projection
-# ann_cosine_topk_np_ids gates instead WITH the exact-fold oracle
-# restated over (query_id, neighbor_id) — id-set equality vs the fold
-# verified EQUAL at sf0.001/0.01/0.1/sf1 this round and pinned in
-# tests/test_operators.py. The float kernel stays registered
-# (rows-only, pytest tolerance parity) but un-gated. Result: ZERO
-# rows-only members in-window — every round-13 gate row carries a full
-# value-hash oracle.
-# Round-14 queue (8 names — exactly the slots the 8 round-12 swap-ins
-# free when their second green lands in r13):
-# - the rows-only production kernels dedup_minhash_lsh_fast +
-#   datapipe_e2e_fast (VERDICT r11 ask #3's last two, displaced by
-#   this round's arithmetic cap; both need rows_only_ok entries);
-# - the THREE new round-13 operators watermark_late_data_gate
-#   (withWatermark + tumbling-window agg in append mode, straggler
-#   replay, oracle restating the split-watermark algebra
-#   boundary-exactly), s11_time_travel_restore (VERSION AS OF +
-#   RESTORE, restore proven a metadata re-commit), and
-#   shard_balance_tokens (token-balanced round-robin shard dealing,
-#   imbalance bounded by one document);
-# - the THREE names newly oracled in round 13 and therefore now the
-#   oracle-backed never-gated tail: bpe_train_merges +
-#   unigram_train_pieces (the distributed trainers vs committed
-#   Spark-free-twin seed tables — the round-9 encode-seed pattern
-#   extended to TRAINING) and ann_ivf_bucketed_np_ids (the numpy IVF
-#   kernel's ids projection vs the exact-fold IVF oracle — the
-#   ann_cosine settlement pattern; id sets EQUAL at 4 scales);
-# - interval_join_streaming_gate (the FOURTH new round-13 operator:
-#   the stream-stream interval join replayed as a real two-source
-#   Structured Streaming join, the view side delivered one chunk late
-#   so nearly every attribution pair needs cross-batch join state;
-#   emission set hash-matches the batch oracle).
-# That is 9 candidates for 8 freed slots — round 14's arithmetic
-# picks; all driver_sim-verified at sf0.001/0.01/0.1/sf1 the session
-# they landed.
+# in iteration order, so ``_PRIORITY`` curates that window. The rule:
+# - every family in ``tests/test_driver_contract.py::GATE_FAMILIES`` keeps
+#   at least one representative in the window (the guard test enforces it);
+# - names rotated out of the window stay covered by pytest
+#   (``test_query_vs_oracle``) and ``scripts/driver_sim.py``.
+# The rotation history lives in git.
 _PRIORITY: list[str] = [
     # Flagships: whole-warehouse DAG (staging -> SCD -> marts -> rollup)
     # and whole-training-data pipeline (quality -> dedup+components ->

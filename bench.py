@@ -45,6 +45,7 @@ import re
 import statistics
 import sys
 import time
+import traceback
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
@@ -191,43 +192,63 @@ def force(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
+def time_queries(spark, qs, names, sf_dir: str, reps: int):
+    """Time each of ``names`` found in ``qs``: one untimed warm-up pass,
+    then the median and sample stddev of ``reps`` timed runs.
+
+    The warm-up runs AT THE TARGET SF, immediately before the query's
+    timed reps. A tiny-SF warm-up compiled the WRONG plan shapes for
+    AQE-heavy queries (plans differ by input size), so the first sf0.1
+    execution of the warehouse DAG still paid 15-30 s of
+    whole-stage-codegen class compilation + JIT — a constant that is
+    irrelevant at 100 TB but, bleeding into the 3-rep median, made
+    `glamira_pipeline_e2e` read bimodally as 6 s or 17 s across
+    otherwise-identical quiet runs.
+
+    A query that raises in its warm-up or any rep is left out of the
+    timings: its traceback goes to stderr and ``errors`` maps its name
+    to ``"Type: message"``, so one failing query never costs the run
+    its summary. Returns (timings, stddevs, errors).
+    """
+    timings: dict[str, float] = {}
+    stddevs: dict[str, float] = {}
+    errors: dict[str, str] = {}
+    for name in names:
+        if name not in qs:
+            continue
+        try:
+            force(qs[name](spark, sf_dir))
+            samples: list[float] = []
+            for _ in range(reps):
+                t0 = time.perf_counter()
+                force(qs[name](spark, sf_dir))
+                samples.append(time.perf_counter() - t0)
+        except Exception as e:
+            traceback.print_exc()
+            # first line only: a JVM error's str() carries its whole stack
+            first_line = (str(e).strip().splitlines() or [""])[0]
+            errors[name] = f"{type(e).__name__}: {first_line}"
+            continue
+        timings[name] = round(statistics.median(samples), 4)
+        stddevs[name] = (
+            round(statistics.stdev(samples), 4) if len(samples) > 1 else 0.0
+        )
+    return timings, stddevs, errors
+
+
 def main() -> None:
     from glamira_batch_processing_spark import get_spark
     from __spark_entry__ import queries
 
     spark = get_spark("glamira-bench")
-    qs = queries()
-    # Warm up JIT/codegen per query AT THE TARGET SF, immediately before
-    # its timed reps. The old tiny-SF warm-up compiled the WRONG plan
-    # shapes for AQE-heavy queries (plans differ by input size), so the
-    # first sf0.1 execution of the warehouse DAG still paid 15-30 s of
-    # whole-stage-codegen class compilation + JIT — a constant that is
-    # irrelevant at 100 TB but, bleeding into the 3-rep median, made
-    # `glamira_pipeline_e2e` read bimodally as 6 s or 17 s across
-    # otherwise-identical quiet runs (round-7 diagnosis). One untimed
-    # pass at SF_DIR per query compiles exactly the measured shapes.
     spark.read.parquet(f"{SF_DIR}/region.parquet").count()
-
-    timings: dict[str, float] = {}
-    stddevs: dict[str, float] = {}
-    for name in HEADLINE:
-        if name not in qs:
-            continue
-        try:
-            force(qs[name](spark, SF_DIR))
-        except Exception:
-            pass
-        reps: list[float] = []
-        for _ in range(REPS):
-            t0 = time.perf_counter()
-            force(qs[name](spark, SF_DIR))
-            reps.append(time.perf_counter() - t0)
-        timings[name] = round(statistics.median(reps), 4)
-        stddevs[name] = round(statistics.stdev(reps), 4) if len(reps) > 1 else 0.0
-
+    timings, stddevs, errors = time_queries(
+        spark, queries(), HEADLINE, SF_DIR, REPS
+    )
     line, full = build_summaries(
         timings, stddevs, SF_DIR, REPS, Path(__file__).resolve().parent
     )
+    full["errors"] = errors
     Path(__file__).resolve().parent.joinpath("BENCH_SUMMARY.json").write_text(
         json.dumps(full, indent=1) + "\n"
     )

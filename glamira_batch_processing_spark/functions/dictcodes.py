@@ -18,9 +18,8 @@ models cast/rename at ingest for the same reason
 
 ``dict_encode_columns`` derives each dictionary from the data (one
 tiny distinct+sort per column at WRITE time, amortized over every
-later read); ``decode_after_agg`` restores the strings by joining the
-broadcast decode dims after aggregation, when row count has collapsed
-from O(fact) to O(groups).
+later read); ``decode_after_agg_inline`` restores the strings after
+aggregation, when row count has collapsed from O(fact) to O(groups).
 """
 
 from __future__ import annotations
@@ -82,19 +81,6 @@ def dict_encode_columns(
     return out, dims
 
 
-def decode_after_agg(
-    agg: DataFrame, dims: dict[str, DataFrame]
-) -> DataFrame:
-    """Join the broadcast decode dims back AFTER aggregation — the
-    string column materializes once per group, never per row."""
-    out = agg
-    for c, dim in dims.items():
-        out = out.join(F.broadcast(dim), on=f"{c}_code", how="left").drop(
-            f"{c}_code"
-        )
-    return out
-
-
 def decode_map_exprs(
     dims: dict[str, DataFrame],
 ) -> dict[str, F.Column]:
@@ -122,7 +108,9 @@ def decode_map_exprs(
 def decode_after_agg_inline(
     agg: DataFrame, dims: dict[str, DataFrame]
 ) -> DataFrame:
-    """``decode_after_agg`` via inline map expressions (no join jobs)."""
+    """Restore the coded strings AFTER aggregation via inline map
+    expressions (no join jobs) — the string column materializes once
+    per group, never per row."""
     out = agg
     for c, expr in decode_map_exprs(dims).items():
         out = out.withColumn(c, expr).drop(f"{c}_code")

@@ -109,8 +109,8 @@ def ngram_jaccard_pairs(
 
 # Universal-hash family for the md5 minhash fold: fixed odd
 # coefficients (deterministic; regenerate with random.Random(20260814))
-# and the Mersenne prime modulus 2^31 - 1. Shared verbatim by the
-# DuckDB oracle twins (sql_minhash_coeffs_values()).
+# and the Mersenne prime modulus 2^31 - 1. The DuckDB oracle twins
+# inline the same pairs as a VALUES list.
 MINHASH_P = 2147483647
 MINHASH_COEFFS: tuple[tuple[int, int], ...] = (
     (1571058545, 730493953),
@@ -126,14 +126,6 @@ MINHASH_COEFFS: tuple[tuple[int, int], ...] = (
     (253380337, 223979957),
     (331484111, 2008330133),
 )
-
-
-def sql_minhash_coeffs_values(num_hashes: int = 12) -> str:
-    """DuckDB VALUES list ``(seed, a, b)`` matching MINHASH_COEFFS."""
-    rows = ", ".join(
-        f"({j}, {a}, {b})" for j, (a, b) in enumerate(MINHASH_COEFFS[:num_hashes])
-    )
-    return f"(VALUES {rows}) AS coeffs(seed, a, b)"
 
 
 def minhash_signatures(
@@ -452,50 +444,3 @@ def sql_shingles_cte(corpus: str, n: int = 3) -> str:
         FROM (SELECT doc_id, str_split(lower(text), ' ') AS w FROM {corpus})
       )
     """
-
-
-def lsh_tune(
-    num_hashes: int,
-    threshold: float,
-    fp_weight: float = 0.5,
-    fn_weight: float = 0.5,
-) -> tuple[int, int]:
-    """Choose the (band_rows, n_bands) banding of ``num_hashes`` minhash
-    functions for a target Jaccard ``threshold``.
-
-    The S-curve P(candidate | s) = 1 - (1 - s^r)^b trades false
-    positives (pairs below the threshold that still collide in some
-    band — wasted verification work) against false negatives (true
-    near-dups never colliding — missed dedup). For each feasible
-    (r, b = num_hashes // r) this integrates both error masses around
-    the threshold numerically and picks the banding minimizing their
-    weighted sum (the standard tuning, cf. Leskovec/Rajaraman/Ullman
-    "Mining of Massive Datasets" §3.4 and the datasketch library).
-
-    At 100 TB the asymmetry matters: a false positive costs one
-    candidate-pair verification, a false negative leaks a duplicate
-    into the training corpus — weight accordingly.
-    """
-    if not 0.0 < threshold < 1.0:
-        raise ValueError(f"threshold must be in (0, 1), got {threshold}")
-    if num_hashes < 2:
-        raise ValueError("num_hashes must be >= 2")
-    steps = 1000
-    best: tuple[float, int, int] | None = None
-    for r in range(1, num_hashes + 1):
-        b = num_hashes // r
-        if b < 1:
-            break
-        fp = fn = 0.0
-        for i in range(steps):
-            s = (i + 0.5) / steps
-            p = 1.0 - (1.0 - s**r) ** b
-            if s < threshold:
-                fp += p / steps
-            else:
-                fn += (1.0 - p) / steps
-        err = fp_weight * fp + fn_weight * fn
-        if best is None or err < best[0]:
-            best = (err, r, b)
-    assert best is not None
-    return best[1], best[2]

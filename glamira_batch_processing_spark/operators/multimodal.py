@@ -39,9 +39,7 @@ from typing import TYPE_CHECKING
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    ArrayType,
     BinaryType,
-    FloatType,
     IntegerType,
     LongType,
     StringType,
@@ -570,20 +568,6 @@ def decode_images(
     return df.select(id_col, payload_col).mapInPandas(fn, IMAGE_META_SCHEMA)
 
 
-def resize_plan(meta: DataFrame, max_side: int = 96) -> DataFrame:
-    """Pure-Column resize math over decoded metadata: target dims
-    preserving aspect ratio, capped at ``max_side`` (integer floor)."""
-    scale_num = F.lit(max_side)
-    longest = F.greatest("width", "height")
-    tw = F.floor(F.col("width") * scale_num / longest).cast("int")
-    th = F.floor(F.col("height") * scale_num / longest).cast("int")
-    return meta.withColumn(
-        "target_width", F.when(longest <= max_side, F.col("width")).otherwise(tw)
-    ).withColumn(
-        "target_height", F.when(longest <= max_side, F.col("height")).otherwise(th)
-    )
-
-
 def sample_frames(
     df: DataFrame,
     payload_col: str = "payload",
@@ -772,81 +756,6 @@ def gif_test_pattern(width: int, height: int):
     return pal[idx]
 
 
-RASTER_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-        StructField("target_width", IntegerType()),
-        StructField("target_height", IntegerType()),
-        StructField("pixels", BinaryType()),  # raw RGB, target dims
-        StructField("format", StringType()),
-    ]
-)
-
-
-def rasterize_resize(
-    df: DataFrame,
-    max_side: int = 96,
-    payload_col: str = "payload",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """REAL pixel pipeline: decode BMP/PNG payloads to rasters
-    (pure stdlib+numpy, see ``_decode_pixels_real``), nearest-neighbor
-    downscale to fit ``max_side`` preserving aspect ratio, emit the raw
-    RGB bytes. Structurally valid containers whose PIXEL coding the
-    decoder does not implement (arithmetic/12-bit/CMYK/... JPEG, exotic
-    BMP) surface as QUARANTINE rows: header width/height populated,
-    pixels NULL, ``format`` carrying the specific variant label — a
-    100 TB crawl pipeline routes these aside by format instead of
-    task-failing. Unparseable payloads surface as ``format='error'``
-    rows; the scan itself never fails."""
-
-    def fn(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                b = bytes(payload)
-                try:
-                    w, h, fmt = _decode_image_real(b)
-                except (ValueError, NotImplementedError):
-                    rows.append((int(doc_id), None, None, None, None, None, "error"))
-                    continue
-                try:
-                    px = _decode_pixels_real(b)
-                except NotImplementedError:
-                    # metadata-only quarantine row: dims from the header,
-                    # no raster; refine a generic 'jpeg'/'bmp' label when
-                    # only the SCAN level revealed the unsupported coding
-                    rows.append((int(doc_id), w, h, None, None, None, fmt))
-                    continue
-                except ValueError:
-                    rows.append((int(doc_id), None, None, None, None, None, "error"))
-                    continue
-                longest = max(w, h)
-                if longest <= max_side:
-                    tw, th = w, h
-                else:
-                    # clamp to >= 1: extreme aspect ratios (1 x 4000
-                    # banners) must not floor a dimension to zero
-                    tw = max(1, w * max_side // longest)
-                    th = max(1, h * max_side // longest)
-                iy = np.floor(np.arange(th) * h / th).astype(int)
-                ix = np.floor(np.arange(tw) * w / tw).astype(int)
-                resized = px[iy][:, ix]
-                rows.append(
-                    (int(doc_id), w, h, tw, th, resized.tobytes(), fmt)
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in RASTER_SCHEMA.fields]
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(fn, RASTER_SCHEMA)
-
-
 AUDIO_META_SCHEMA = StructType(
     [
         StructField("doc_id", LongType()),
@@ -979,43 +888,6 @@ def decode_audio(
     return df.select(id_col, payload_col).mapInPandas(fn, AUDIO_META_SCHEMA)
 
 
-FEATURE_DIM = 8
-
-FEATURE_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("feature", ArrayType(FloatType())),
-    ]
-)
-
-
-def extract_features(df: DataFrame, payload_col: str = "payload", id_col: str = "doc_id") -> DataFrame:
-    """binary payload -> fixed-dim float feature vector via mapInPandas.
-
-    The embedding-model stand-in (audio MFCC / image CNN feature hook):
-    deterministic fake features from the payload's md5 digest bytes,
-    scaled to [-1, 1). Real extractors slot into the same Arrow-batched
-    signature; the output column is a first-class embedding usable by
-    operators/similarity.py.
-    """
-
-    def fn(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                digest = hashlib.md5(bytes(payload)).digest()
-                feat = [
-                    (int.from_bytes(digest[2 * i : 2 * i + 2], "big") - 32768) / 32768.0
-                    for i in range(FEATURE_DIM)
-                ]
-                rows.append((int(doc_id), feat))
-            yield pd.DataFrame(rows, columns=["doc_id", "feature"])
-
-    return df.select(id_col, payload_col).mapInPandas(fn, FEATURE_SCHEMA)
-
-
 def with_text_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Attach a binary payload column derived from text (the test stand-in
     for real image/audio bytes)."""
@@ -1043,10 +915,10 @@ def resample_audio(
     id_col: str = "doc_id",
 ) -> DataFrame:
     """Nearest-neighbor PCM16 WAV resampling via Arrow-batched
-    mapInPandas — the audio analog of ``rasterize_resize``: decode the
-    real container, transform samples (output frame j takes input
-    frame ``j * rate_in // target_rate``; numpy fancy-index per batch,
-    no per-sample Python), re-encode a real WAV at the target rate.
+    mapInPandas: decode the real container, transform samples (output
+    frame j takes input frame ``j * rate_in // target_rate``; numpy
+    fancy-index per batch, no per-sample Python), re-encode a real WAV
+    at the target rate.
 
     ``n_frames_out = n_frames_in * target_rate // rate_in`` — exact
     integer arithmetic, so the contract oracle can recompute every

@@ -213,82 +213,6 @@ def pq_adc_topk(
     )
 
 
-def pq_train(
-    embeddings: DataFrame,
-    m: int = 8,
-    ks: int = 16,
-    n_iter: int = 8,
-    vec_col: str = "embedding",
-) -> list[list[list[float]]]:
-    """Train PQ codebooks: an independent k-means (``kmeans_fit``,
-    zero-shuffle Lloyd rounds) per d/m-dim SUBSPACE — the training half
-    of Jegou et al. 2011 that the md5-seeded ``pq_codebooks`` stand in
-    for in the engine-exact contract queries. Returns the same
-    ``[m][ks][d/m]`` shape, so trained codebooks drop straight into
-    ``pq_adc_topk`` / ``pq_encode_expr``.
-
-    Scale shape: m sequential fits, each scanning only its slice
-    projection of the corpus (slice() fuses into the scan); every
-    Lloyd round is shuffle-free (k x partitions control-plane partials)
-    — training cost is m x n_iter corpus scans and nothing ever
-    shuffles. Deterministic md5-seeded init, no RNG.
-    """
-    from .clustering import kmeans_fit
-
-    head = embeddings.select(vec_col).first()
-    if head is None:
-        raise ValueError("pq_train: empty embeddings DataFrame")
-    dim = len(head[0])
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m {m}")
-    ds = dim // m
-    books = []
-    for s in range(m):
-        sliced = embeddings.select(
-            F.slice(F.col(vec_col), s * ds + 1, ds).alias("embedding")
-        )
-        centroids, _inertia, _rounds = kmeans_fit(
-            sliced, k=ks, n_iter=n_iter, vec_col="embedding"
-        )
-        books.append([[float(v) for v in row] for row in centroids])
-    return books
-
-
-def pq_quantization_mse(
-    embeddings: DataFrame,
-    codebooks: list[list[list[float]]],
-    vec_col: str = "embedding",
-) -> float:
-    """Mean squared reconstruction error of the PQ code assignment —
-    the metric that compares codebook qualities (trained vs seeded).
-    Computed as one map-side-combinable aggregate over the same
-    broadcast-centroid argmin join the encoder uses."""
-    spark = embeddings.sparkSession
-    ds = len(codebooks[0][0])
-    cents = pq_centroids_df(spark, codebooks)
-    # Intentionally NOT subspace_fold_q: MSE is a quality metric
-    # compared by inequality (trained < seeded), not an oracle-bitwise
-    # value, so it keeps full double precision instead of the 1e-6
-    # quantization.
-    fold: Column | None = None
-    for i in range(ds):
-        x = F.element_at(F.col(vec_col), F.col("s") * ds + i + 1).cast(
-            "double"
-        ) - F.element_at(F.col("cent"), i + 1)
-        t = x * x
-        fold = t if fold is None else fold + t
-    per_sub = (
-        embeddings.withColumn("__rid", F.monotonically_increasing_id())
-        .crossJoin(F.broadcast(cents))
-        .groupBy("__rid", "s")
-        .agg(F.min(fold).alias("min_d2"))
-    )
-    row = per_sub.agg(
-        (F.sum("min_d2") / F.count("*")).alias("mse_per_subspace")
-    ).first()
-    return float(row["mse_per_subspace"])
-
-
 def ivfpq_adc_topk(
     embeddings: DataFrame,
     coarse_centroids: list[list[float]],

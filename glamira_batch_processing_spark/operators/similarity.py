@@ -45,10 +45,6 @@ def sql_dot(a: str, b: str) -> str:
     )
 
 
-def sql_cosine(a: str, b: str) -> str:
-    return f"({sql_dot(a, b)} / (sqrt({sql_dot(a, a)}) * sqrt({sql_dot(b, b)})))"
-
-
 def cosine_topk(
     queries: DataFrame,
     corpus: DataFrame,

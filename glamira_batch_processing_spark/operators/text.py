@@ -143,90 +143,3 @@ def sql_word_ngrams(col: str, n: int = 2) -> str:
         f"list_transform(range(1, len({w}) - {n - 2}),"
         f" i -> {parts}) ELSE [] END)"
     )
-
-
-def langid_train(
-    docs: DataFrame,
-    text_col: str = "text",
-    label_col: str = "lang",
-    top_k: int = 8,
-    min_lift: float = 2.0,
-) -> dict[str, list[str]]:
-    """Learn per-language discriminative token profiles from labeled
-    docs — the trained counterpart of the fixed-stopword heuristic
-    (``predict_lang``), same pattern as ``bpe_train`` / ``pq_train``:
-    train on the corpus with exact distributed counts, apply as a
-    broadcast-sized artifact.
-
-    Score per (lang, token) is the lift ``P(token|lang) / P(token)``
-    from exact integer counts (one map-side-combinable aggregate over
-    the exploded token stream); each language keeps its ``top_k``
-    highest-lift tokens seen at least 5 times AND with lift >=
-    ``min_lift`` — without the lift floor, corpora whose vocabulary is
-    shared across languages fill profiles with lift~1 noise tokens
-    that drown the discriminative ones at prediction time. The returned profile is
-    a few tokens per language — closure/broadcast sized at any corpus
-    scale; only k*#langs control-plane rows are ever collected.
-    """
-    toks = docs.select(
-        F.col(label_col).alias("lang"),
-        F.explode(F.split(F.lower(F.col(text_col)), " ")).alias("tok"),
-    )
-    by_lang_tok = toks.groupBy("lang", "tok").agg(F.count("*").alias("n_lt"))
-    by_tok = toks.groupBy("tok").agg(F.count("*").alias("n_t"))
-    by_lang = toks.groupBy("lang").agg(F.count("*").alias("n_l"))
-    total = toks.count()
-    scored = (
-        by_lang_tok.join(by_tok, "tok")
-        .join(F.broadcast(by_lang), "lang")
-        .filter(F.col("n_lt") >= 5)
-        .select(
-            "lang",
-            "tok",
-            (
-                (F.col("n_lt").cast("double") / F.col("n_l"))
-                / (F.col("n_t").cast("double") / F.lit(float(total)))
-            ).alias("lift"),
-        )
-        .filter(F.col("lift") >= min_lift)
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("lang").orderBy(F.desc("lift"), "tok")
-    rows = (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= top_k)
-        .select("lang", "tok")
-        .collect()
-    )
-    profiles: dict[str, list[str]] = {}
-    for r in rows:
-        profiles.setdefault(r["lang"], []).append(r["tok"])
-    return profiles
-
-
-def predict_lang_trained(
-    text: Column, profiles: dict[str, list[str]]
-) -> Column:
-    """Apply trained profiles: count profile-token hits per language
-    (scan-fused array folds, zero shuffle) and take the argmax with a
-    deterministic alphabetical tie-break — identical plan shape to the
-    fixed-stopword ``predict_lang``."""
-    scores = {
-        lang: stopword_count(text, tuple(toks))
-        for lang, toks in sorted(profiles.items())
-    }
-    if not scores:
-        # langid_train legitimately returns no profiles when no token
-        # clears the count/lift floors (tiny or homogeneous corpora)
-        return F.lit("unknown")
-    g = None
-    for s in scores.values():
-        g = s if g is None else F.greatest(g, s)
-    expr = None
-    for lang in sorted(scores):
-        # gate on g > 0 so zero-hit docs fall through to 'unknown'
-        # instead of the alphabetically-first language
-        branch = ((scores[lang] == g) & (g > 0), F.lit(lang))
-        expr = F.when(*branch) if expr is None else expr.when(*branch)
-    return expr.otherwise(F.lit("unknown"))

@@ -42,7 +42,6 @@ from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
-    BinaryType,
     IntegerType,
     LongType,
     StringType,
@@ -75,14 +74,6 @@ VIDEO_FRAME_SCHEMA = StructType(
         StructField("width", IntegerType()),
         StructField("height", IntegerType()),
         StructField("pixel_digest", StringType()),
-    ]
-)
-
-VIDEO_FRAME_BYTES_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("frame_index", IntegerType()),
-        StructField("frame_bytes", BinaryType()),
     ]
 )
 
@@ -381,31 +372,6 @@ def sample_video_frames(
             )
 
     return df.select(id_col, payload_col).mapInPandas(fn, VIDEO_FRAME_SCHEMA)
-
-
-def extract_video_frames(
-    df: DataFrame,
-    every_n: int = 1,
-    payload_col: str = "payload",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Explode sampled frames to raw JPEG payload rows (1 -> N shape)
-    for downstream per-frame operators (resize plans, feature UDFs)."""
-
-    def fn(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                info = parse_avi(payload)
-                for i in range(0, info.n_frames, every_n):
-                    rows.append((int(doc_id), i, info.frame(i)))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in VIDEO_FRAME_BYTES_SCHEMA.fields]
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(fn, VIDEO_FRAME_BYTES_SCHEMA)
 
 
 def mjpeg_video_bytes(

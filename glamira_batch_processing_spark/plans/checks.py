@@ -47,8 +47,3 @@ def check_relationships(
         "left_anti",
     )
     return orphans.count()
-
-
-def run_schema_tests(tests: list[tuple[str, int]]) -> list[str]:
-    """Collect failures: tests is a list of (name, violation_count)."""
-    return [f"{name}: {n} violations" for name, n in tests if n != 0]

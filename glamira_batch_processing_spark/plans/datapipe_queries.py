@@ -1214,14 +1214,13 @@ def cluster_label_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def multimodal_audio_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL audio transform round-trip (the audio analog of
-    rasterize_resize): render genuine PCM16 WAVs, nearest-neighbor
-    resample 8 kHz -> 4 kHz inside ``resample_audio`` (Arrow-batched
-    mapInPandas, numpy fancy-index — no per-sample Python), re-encode
-    a real WAV, and decode ITS header fields back. The oracle
-    recomputes every structural field arithmetically (output frames =
-    n_in * target // source; output bytes = 44-byte canonical header +
-    2 bytes x frames x channels), so a resampler that drops or pads
+    """REAL audio transform round-trip: render genuine PCM16 WAVs,
+    nearest-neighbor resample 8 kHz -> 4 kHz inside ``resample_audio``
+    (Arrow-batched mapInPandas, numpy fancy-index — no per-sample
+    Python), re-encode a real WAV, and decode ITS header fields back.
+    The oracle recomputes every structural field arithmetically (output
+    frames = n_in * target // source; output bytes = 44-byte canonical
+    header + 2 bytes x frames x channels), so a resampler that drops or pads
     frames, or re-encodes a malformed container, fails the value hash.
     Sample-level decimation/repeat correctness is pinned in pytest
     against a numpy reference."""

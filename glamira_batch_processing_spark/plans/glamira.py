@@ -190,15 +190,11 @@ def build_glamira_pipeline(
         j = src.select(F.to_json(F.col("product")).alias("pj")).filter(
             F.col("pj").isNotNull()
         )
-        # ONE json_tuple parse per row (round 15, guide §1.2 per-task
-        # work): the previous 16 get_json_object calls each re-parsed
-        # the same JSON string — 16 full parses per row on this
-        # single-task 20k-row stage (2.2 s of its executor time in the
-        # pipeline_e2e profile). json_tuple extracts all top-level keys
-        # in one parse and is value-identical for every field here
-        # (verified bit-exact against get_json_object on all 20k sf0.1
-        # rows, nested/decimal/missing cases included — and the oracle
-        # re-pins it).
+        # ONE json_tuple parse per row extracts every top-level key.
+        # It equals one get_json_object per key (JSON_VALUE in the
+        # reference) because ``pj`` is to_json of a typed struct, so its
+        # top-level keys are unique: json_tuple's last-occurrence rule
+        # and get_json_object's first-occurrence rule cannot diverge.
         keys = (
             "product_id", "productId", "id", "_id", "gender",
             "category_name", "name", "product_type", "store_code",

@@ -932,10 +932,7 @@ def text_langid_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     language, min count 5), then classify every doc by profile-token
     hits via a token-to-profile equi-join with (hits desc, lang)
     argmax. The oracle replicates training and inference entirely in
-    SQL, so the gate proves the LEARNING math, not just the apply step
-    — the gate counterpart of ``operators/text.py::langid_train``
-    (which returns the broadcastable artifact form of the same
-    profiles, with a min-lift floor for shared-vocabulary corpora).
+    SQL, so the gate proves the LEARNING math, not just the apply step.
 
     Scale: token counts are map-side-combinable aggregates; the
     learned profile is #langs x 8 rows (broadcast-joined back); the

@@ -48,15 +48,3 @@ def get_spark(app_name: str = "glamira-spark", **overrides: str) -> SparkSession
     for key, value in conf.items():
         builder = builder.config(key, value)
     return builder.getOrCreate()
-
-
-def ensure_utc(spark: SparkSession) -> SparkSession:
-    """Pin the session timezone to UTC (runtime-settable).
-
-    Driver-supplied sessions may carry a different timezone; every
-    timestamp->date conversion in the engine assumes UTC, matching the
-    naive-timestamp semantics of the parquet test data and the DuckDB
-    oracle.
-    """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    return spark

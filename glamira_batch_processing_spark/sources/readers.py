@@ -95,27 +95,6 @@ def _list_footers(
     return [(p, f) for p, f in zip(ordered, fields)]
 
 
-def detect_drift(
-    spark: SparkSession, paths: list[str], sample_size: int | None = None
-) -> dict[str, set[str]]:
-    """column -> set of Spark type names seen across part files.
-
-    Unlike the reference's 300-file sample (normalize_parquet_run.py:112),
-    every footer is consulted: footer reads are parallel and metadata-only,
-    so a column or type conflict appearing in file 301+ is still seen.
-    ``sample_size`` is retained for API compatibility and bounds the scan
-    when explicitly set.
-    """
-    footers = _list_footers(spark, paths)
-    if sample_size is not None:
-        footers = footers[:sample_size]
-    seen: dict[str, set[str]] = defaultdict(set)
-    for _, fields in footers:
-        for name, typ in fields:
-            seen[name].add(typ)
-    return dict(seen)
-
-
 def reconcile_read(
     spark: SparkSession,
     paths: list[str],
@@ -171,47 +150,3 @@ def reconcile_read(
     for f in frames[1:]:
         out = out.unionByName(f)
     return out
-
-
-def read_json_quarantine(
-    spark: SparkSession,
-    path: str,
-    schema,
-    quarantine_path: str | None = None,
-) -> DataFrame:
-    """Lenient JSON-lines ingest: well-formed rows parse to ``schema``,
-    malformed lines are captured instead of poisoning the load.
-
-    The reference dodges malformed raw data by stringifying everything
-    (ETL/export_to_gcs.py:179-188); the Spark-native equivalent is
-    PERMISSIVE mode with a ``_corrupt_record`` column. Rows that failed
-    to parse are written to ``quarantine_path`` (raw line + nothing
-    else) for replay/inspection, and the returned DataFrame contains
-    only the clean rows without the bookkeeping column — one pass, no
-    job failure on a single bad line.
-    """
-    from pyspark.sql.types import StringType, StructType
-
-    full = StructType(list(schema.fields)).add("_corrupt_record", StringType())
-    df = (
-        spark.read.schema(full)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .json(path)
-    )
-    if quarantine_path is not None:
-        # Spark disallows a query whose only referenced column is the
-        # internal corrupt-record column unless the parse is cached, so
-        # cache JUST for the quarantine write (an action), then release
-        # the storage immediately — holding the whole input pinned for
-        # the session leaked executor memory across repeated ingests
-        # (round-3 ADVICE). The clean-row filter below references real
-        # columns too, so it needs no cache; it re-parses on use.
-        df = df.cache()
-        try:
-            df.filter(F.col("_corrupt_record").isNotNull()).select(
-                "_corrupt_record"
-            ).write.mode("overwrite").text(quarantine_path)
-        finally:
-            df.unpersist()
-    return df.filter(F.col("_corrupt_record").isNull()).drop("_corrupt_record")

@@ -28,6 +28,7 @@ control-plane commit (one tiny JSON per version) runs on the driver.
 from __future__ import annotations
 
 import base64
+import datetime
 import hashlib
 import json
 import math
@@ -70,8 +71,21 @@ class VersionConflictError(RuntimeError):
     """Another writer committed this version first — re-read and retry."""
 
 
+def _stat_value(v):
+    """``v`` in the form the manifest stores stats in: an exact
+    ``datetime.date`` becomes its ISO string, which orders like the
+    date. Predicate bounds pass through this too, so they compare with
+    stored stats."""
+    return v.isoformat() if type(v) is datetime.date else v
+
+
 def _json_stat(v):
-    """Footer min/max -> JSON-storable value (None = not storable)."""
+    """Footer min/max -> JSON-storable value (None = not storable).
+
+    Dates are stored as ISO strings (``_stat_value``). Timestamps
+    (``datetime.datetime``, a ``date`` subclass) are not stored, so a
+    timestamp column records no stats and is never pruned."""
+    v = _stat_value(v)
     if isinstance(v, bool) or v is None:
         return None
     if isinstance(v, (int, float, str)):
@@ -423,16 +437,13 @@ class VersionedTable:
             raise ValueError(f"table already exists at {self.path}")
         return self._write_version(df, 0, "create")
 
-    def overwrite(self, df: DataFrame, operation: str = "overwrite") -> int:
+    def overwrite(self, df: DataFrame) -> int:
         """Full-replace commit (the WRITE_TRUNCATE analog,
-        ref: ETL/load_to_bigquery.py:73-80). ``operation`` is recorded
-        in the manifest — derived tables use it to note which upstream
-        version this commit reflects (see
-        streaming/joins.py::streaming_materialized_view)."""
+        ref: ETL/load_to_bigquery.py:73-80)."""
         latest = self.latest_version()
         if latest is None:
-            return self._write_version(df, 0, operation)
-        return self._write_version(df, latest + 1, operation)
+            return self._write_version(df, 0, "overwrite")
+        return self._write_version(df, latest + 1, "overwrite")
 
     def delete_where(
         self,
@@ -620,7 +631,8 @@ class VersionedTable:
         and a point lookup opens ~1 file; on an unclustered commit
         min/max pruning degrades toward the full list (blooms do not —
         they are layout-independent). Bounds must be the same primitive
-        type the footer stats recorded (int/float/str).
+        type the footer stats recorded (int/float/str, or
+        ``datetime.date`` for a date column).
         """
         from pyspark.sql import functions as F
 
@@ -652,13 +664,15 @@ class VersionedTable:
             df = _pred(self.read(spark, version))
             return df, {"files_total": None, "files_read": None, "pruned": False}
 
+        s_lower, s_upper = _stat_value(lower), _stat_value(upper)
+
         def _keep(f: dict) -> bool:
             rng = f.get("stats", {}).get(column)
             if rng is not None:
                 lo, hi = rng
-                if upper is not None and lo > upper:
+                if s_upper is not None and lo > s_upper:
                     return False
-                if lower is not None and hi < lower:
+                if s_lower is not None and hi < s_lower:
                     return False
             if equals is not None:
                 bloom = f.get("bloom", {}).get(column)
@@ -737,9 +751,9 @@ class VersionedTable:
                 rng = f.get("stats", {}).get(col)
                 if rng is not None:
                     f_lo, f_hi = rng
-                    if hi is not None and f_lo > hi:
+                    if hi is not None and f_lo > _stat_value(hi):
                         return False
-                    if lo is not None and f_hi < lo:
+                    if lo is not None and f_hi < _stat_value(lo):
                         return False
                 if eq is not None:
                     bloom = f.get("bloom", {}).get(col)
@@ -801,7 +815,7 @@ class VersionedTable:
             in_range = vals
             if rng is not None:
                 lo, hi = rng
-                in_range = [v for v in vals if lo <= v <= hi]
+                in_range = [v for v in vals if lo <= _stat_value(v) <= hi]
                 if not in_range:
                     return False
             bloom = f.get("bloom", {}).get(column)

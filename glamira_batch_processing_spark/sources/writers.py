@@ -34,37 +34,6 @@ def write_partitioned(
     out.write.mode(mode).partitionBy(partition_col).parquet(path)
 
 
-def backfill_partitions(
-    df: DataFrame,
-    path: str,
-    partition_col: str = "date",
-    cluster_cols: list[str] | None = None,
-) -> None:
-    """Replace ONLY the partitions present in ``df`` (round 6).
-
-    The warehouse backfill primitive: re-running one day must rewrite
-    that day's partition and leave every other day untouched — a plain
-    ``mode=overwrite`` + ``partitionBy`` truncates the WHOLE table
-    first. Implemented with Spark's dynamic partition-overwrite mode
-    (the INSERT OVERWRITE ... PARTITION semantics), set per-write via
-    the ``partitionOverwriteMode`` option so the session default stays
-    untouched for concurrent static writers.
-
-    At scale this is the idempotent re-run story for date-partitioned
-    facts: the reprocessed slice shuffles on its partition values only,
-    and untouched partitions are never read or rewritten.
-    """
-    out = df
-    if cluster_cols:
-        out = out.repartition(F.col(partition_col)).sortWithinPartitions(*cluster_cols)
-    (
-        out.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partition_col)
-        .parquet(path)
-    )
-
-
 def _str_prefix_val(v: str | None, lcp: int) -> float:
     """Python twin of the string z-order expression: big-endian value
     of bytes [lcp, lcp+6) of the UTF-8 encoding, zero right-padded."""
@@ -270,34 +239,3 @@ def write_manifest(path: str, manifest: dict) -> None:
     """Run-manifest JSON document (S10) — control-plane metadata."""
     with open(path, "w", encoding="utf-8") as fh:
         json.dump(manifest, fh, indent=2, sort_keys=True, default=str)
-
-
-def write_with_bloom(
-    df: DataFrame,
-    path: str,
-    bloom_cols: list[str],
-    expected_ndv: int = 100_000,
-    mode: str = "overwrite",
-) -> None:
-    """Parquet write with per-column BLOOM FILTERS for the given
-    point-lookup key columns.
-
-    Complements min/max row-group stats (which prune RANGE predicates —
-    see ``write_zordered``): bloom filters prune point lookups on
-    high-cardinality keys whose values interleave across row groups,
-    where min/max spans cover everything and skip nothing. At 100 TB a
-    ``key = X`` probe over a bloom-filtered column skips row groups at
-    footer-read cost with a false-positive rate set by ``expected_ndv``.
-
-    Verified behaviorally in tests (this environment's pyarrow predates
-    bloom-offset metadata exposure): the bloom-enabled file is strictly
-    larger than the same data without blooms (the serialized filter),
-    byte-identical row content on read-back, and point filters return
-    identical results.
-    """
-    w = df.write.mode(mode)
-    for c in bloom_cols:
-        w = w.option(f"parquet.bloom.filter.enabled#{c}", "true").option(
-            f"parquet.bloom.filter.expected.ndv#{c}", str(expected_ndv)
-        )
-    w.parquet(path)

@@ -1,36 +1,18 @@
-"""Exactly-once threshold alerting via transformWithStateInPandas.
+"""Exactly-once threshold alerting on a checkpointed stream.
 
-Spark 4's arbitrary-stateful-processing API (StatefulProcessor + typed
-state variables) applied to the operational-alerting shape the
-reference's audit layer implies (orphan/null-rate thresholds,
-`Modelling/.../audit_*.sql`): per user, keep a running spend total in
-a ValueState and emit ONE alert row the first time it crosses the
-threshold — never again, no matter how much later spend arrives or how
-often the stream restarts (both facts live in the checkpointed state).
+The operational-alerting shape the reference's audit layer implies
+(orphan/null-rate thresholds, `Modelling/.../audit_*.sql`): per user,
+keep a running spend total in GroupState and emit ONE alert row the
+first time it crosses the threshold — never again, no matter how much
+later spend arrives or how often the stream restarts (both facts live
+in the checkpointed state).
 
-Scale posture: state is two scalars per active user key, RocksDB
-state-store backed (transformWithState requires the RocksDB provider);
-each micro-batch touches only keys with new events (Arrow-batched, no
+Scale posture: state is two scalars per active user key; each
+micro-batch touches only keys with new events (Arrow-batched, no
 per-row Python dispatch beyond the grouped pandas frames).
-
-Environment gate: the TWS Python state-server protocol imports
-protobuf, which this sandbox does not ship — ``has_tws_deps()`` guards
-it, and ``spend_alerts_legacy`` provides the identical semantics on
-the legacy GroupState API (tested unconditionally; the TWS test runs
-where the dependency exists).
 """
 
 from __future__ import annotations
-
-from typing import TYPE_CHECKING, Any, Iterator
-
-from pyspark.sql.streaming.stateful_processor import (
-    StatefulProcessor,
-    StatefulProcessorHandle,
-)
-
-if TYPE_CHECKING:  # pragma: no cover
-    import pandas as pd
 
 ALERT_OUTPUT_SCHEMA = "user_id bigint, total double, crossed_at_total double"
 
@@ -49,73 +31,11 @@ def _cents_scalar(v: float) -> int:
     return int(math.floor(v * 100.0 + 0.5))
 
 
-class SpendAlertProcessor(StatefulProcessor):
-    """Emit one (user_id, running_total, crossing_total) row per user
-    the first time cumulative `value` crosses ``threshold``."""
-
-    def __init__(self, threshold: float = 100.0):
-        self._threshold = threshold
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        # Typed state variables — the API difference vs the legacy
-        # applyInPandasWithState single-tuple GroupState. The running
-        # total is EXACT INTEGER CENTS (the repo-wide money
-        # discipline): a double accumulator drifts with event count,
-        # so a long-lived key would cross the threshold at the wrong
-        # event — or, one ulp short, never.
-        self._total = handle.getValueState("total", "total_cents bigint")
-        self._alerted = handle.getValueState("alerted", "alerted boolean")
-
-    def handleInputRows(
-        self, key: Any, rows: Iterator["pd.DataFrame"], timerValues: Any
-    ) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        (user_id,) = key
-        total_c = self._total.get()[0] if self._total.exists() else 0
-        alerted = self._alerted.get()[0] if self._alerted.exists() else False
-        for pdf in rows:
-            total_c += int(_cents(pdf["value"]).sum())
-        self._total.update((total_c,))
-        if not alerted and total_c >= _cents_scalar(self._threshold):
-            self._alerted.update((True,))
-            total = total_c / 100.0
-            yield pd.DataFrame(
-                [(int(user_id), total, total)],
-                columns=["user_id", "total", "crossed_at_total"],
-            )
-
-    def close(self) -> None:
-        pass
-
-
-def spend_alerts(grouped, threshold: float = 100.0):
-    """Wire the processor onto a stream grouped by user_id."""
-    return grouped.transformWithStateInPandas(
-        statefulProcessor=SpendAlertProcessor(threshold),
-        outputStructType=ALERT_OUTPUT_SCHEMA,
-        outputMode="Append",
-        timeMode="None",
-    )
-
-
-def has_tws_deps() -> bool:
-    """transformWithState's Python state-server protocol needs
-    protobuf; this sandbox doesn't ship it, so the TWS path is gated
-    (brief rule: import-try, never a broken call)."""
-    import importlib.util
-
-    try:
-        return importlib.util.find_spec("google.protobuf") is not None
-    except ModuleNotFoundError:  # parent package 'google' absent
-        return False
-
-
 def spend_alerts_legacy(grouped, threshold: float = 100.0):
-    """Identical alert semantics on the legacy GroupState API
-    (applyInPandasWithState) — the runnable path where protobuf is
-    absent; also the drop-in to diff against when migrating a job to
-    transformWithState."""
+    """Wire the alert onto a stream grouped by user_id, on the GroupState
+    API (applyInPandasWithState). The running total is exact integer
+    cents: a double accumulator drifts with event count, so a long-lived
+    key would cross the threshold at the wrong event."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     def fn(key, pdfs, state):

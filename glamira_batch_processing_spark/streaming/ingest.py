@@ -1,13 +1,4 @@
-"""Checkpointed incremental ingest + event-time windowed aggregation.
-
-ref parity mapping:
-- ETL/export_to_gcs.py:272-293,327-386 (checkpoint/resume batched
-  export) -> file-source readStream with checkpointLocation; Spark
-  tracks processed files exactly-once, replacing the hand-rolled
-  sort-key checkpoint JSON.
-- Modelling/Incremental_load_template.sql:1-30 (dedupe-then-merge)
-  -> append sink + merge-on-read dedupe (W4), or foreachBatch MERGE
-  when a transactional format is available.
+"""Event-time windowed aggregation over a checkpointed file stream.
 
 Scale notes: file-source streaming shards by file; maxFilesPerTrigger
 bounds batch size (the reference's BATCH_SIZE=5000 analog). The
@@ -16,86 +7,8 @@ windowed agg keeps state per (window, key) — watermark bounds state.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
-
-
-def incremental_ingest(
-    spark: SparkSession,
-    source_dir: str,
-    target_dir: str,
-    checkpoint_dir: str,
-    schema: StructType,
-    transform: Callable[[DataFrame], DataFrame] | None = None,
-    max_files_per_trigger: int | None = None,
-) -> int:
-    """Process all currently-available new files exactly once and append
-    them to ``target_dir``; returns the number of micro-batches run.
-
-    Re-running after new files land resumes from the checkpoint — the
-    Spark-native version of the reference's resumable export loop.
-    """
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_dir)
-    if transform is not None:
-        stream = transform(stream)
-
-    n_batches = {"n": 0}
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.withColumn("_batch_id", F.lit(batch_id)).write.mode("append").parquet(
-            target_dir
-        )
-        n_batches["n"] += 1
-
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return n_batches["n"]
-
-
-def read_merged(
-    spark: SparkSession,
-    target_dir: str,
-    keys: list[str],
-    order_by: list,
-) -> DataFrame:
-    """Merge-on-read view of an append-only ingest target: latest row per
-    key under ``order_by`` (supply a deterministic total order, e.g.
-    descending _batch_id then a unique tiebreak) — W4 dedupe semantics."""
-    df = spark.read.parquet(target_dir)
-    w = Window.partitionBy(*keys).orderBy(*order_by)
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
-
-
-def streaming_dedup(
-    events: DataFrame,
-    keys: list[str],
-    ts_col: str = "ts",
-    watermark_delay: str = "1 hour",
-) -> DataFrame:
-    """Exactly-once key dedup on a stream, with bounded state.
-
-    dropDuplicatesWithinWatermark keeps only keys younger than the
-    watermark in state — the streaming analog of the batch W4 dedupe,
-    and the reason late duplicate replays (the reference's re-extract
-    overlap) collapse to one row."""
-    return events.withWatermark(ts_col, watermark_delay).dropDuplicatesWithinWatermark(
-        keys
-    )
 
 
 def windowed_event_counts(

@@ -1,133 +1,16 @@
-"""Streaming joins and streaming MERGE upsert.
+"""Watermarked stream-stream interval join.
 
-ref parity mapping:
-- Modelling/Incremental_load_template.sql:31-57 (BigQuery MERGE of a
-  deduped increment into the warehouse table) -> ``streaming_merge``:
-  foreachBatch + the batch ``merge_upsert`` operator, giving the same
-  dedupe-then-merge semantics continuously instead of on a scheduler
-  tick (SURVEY §2.9: the reference runs this as a Trigger'd batch; the
-  streaming form is our extension).
-- stream-stream enrichment (no reference analog — its joins are all
-  batch): watermarked interval join, the Spark-native way to join two
-  unbounded sources with bounded state.
-
-Scale notes: foreachBatch executes the merge as a normal batch job per
-micro-batch — state lives in the target table, not the stream. The
-interval join keeps each side's buffer bounded by
-watermark + interval span; without BOTH time bounds Spark would have
-to buffer a side forever (and refuses the query in append mode).
+Stream-stream enrichment has no reference analog — its joins are all
+batch. The watermarked interval join is the Spark-native way to join two
+unbounded sources with bounded state: each side's buffer is bounded by
+watermark + interval span; without BOTH time bounds Spark would have to
+buffer a side forever (and refuses the query in append mode).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from ..operators.incremental import merge_upsert
-
-
-def streaming_merge(
-    spark: SparkSession,
-    source_dir: str,
-    target_dir: str,
-    checkpoint_dir: str,
-    schema,
-    keys: list[str],
-    order_col: str,
-) -> int:
-    """Continuously MERGE-upsert arriving files into ``target_dir``.
-
-    Each micro-batch: rows are W4-deduped within the batch by greatest
-    ``order_col`` per key, then merged into the target where incoming
-    rows win on key collision — the WHEN MATCHED THEN UPDATE semantics
-    of the reference's incremental MERGE template. Returns micro-batches
-    run (availableNow: drains what exists, then stops — rerun to resume
-    from the checkpoint).
-    """
-    stream = spark.readStream.schema(schema).parquet(source_dir)
-    n_batches = {"n": 0}
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        spark_ = batch_df.sparkSession
-        try:
-            target = spark_.read.parquet(target_dir)
-        except Exception:
-            # first batch: empty target with the incoming schema
-            target = batch_df.filter(F.lit(False))
-        merged = merge_upsert(
-            target, batch_df, keys, [F.desc(order_col)] if order_col else None
-        )
-        # Rewrite via a staging dir: the merge reads the live target, so
-        # an in-place overwrite would clobber its own input mid-scan.
-        staging = f"{target_dir}__staging_{batch_id}"
-        merged.write.mode("overwrite").parquet(staging)
-        spark_.read.parquet(staging).write.mode("overwrite").parquet(target_dir)
-        n_batches["n"] += 1
-
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return n_batches["n"]
-
-
-def streaming_merge_versioned(
-    spark: SparkSession,
-    source_dir: str,
-    table_path: str,
-    checkpoint_dir: str,
-    schema,
-    keys: list[str],
-    order_col: str,
-) -> int:
-    """``streaming_merge`` with a transactional target: each micro-batch
-    MERGE commits one atomic :class:`VersionedTable` version.
-
-    Properties the plain-parquet form can't give:
-    - readers never observe a half-written target (the version flips
-      atomically with the manifest commit);
-    - no staging-dir double write — the merge reads snapshot N while
-      writing N+1, so it cannot clobber its own input;
-    - per-micro-batch time travel: version history IS the batch
-      history, so a bad upstream batch can be diffed or rolled back;
-    - a batch retried after a crash-between-write-and-checkpoint
-      re-merges the same rows with the same key priority — idempotent
-      on the final state (extra version, identical contents).
-    """
-    from ..sources.versioned import VersionedTable
-
-    stream = spark.readStream.schema(schema).parquet(source_dir)
-    n_batches = {"n": 0}
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        table = VersionedTable(table_path)
-        # txn token = (checkpoint identity, batch id). The checkpoint
-        # dir is the stream's durable identity, so a batch replayed
-        # after a crash between table-commit and checkpoint-advance is
-        # detected and skipped (exactly-once contents AND history) —
-        # while a DIFFERENT pipeline whose batch ids also start at 0
-        # carries a different checkpoint and is never mistaken for a
-        # replay.
-        table.merge(
-            batch_df.sparkSession,
-            batch_df,
-            keys,
-            order_by=[F.desc(order_col)] if order_col else None,
-            txn_id=f"{checkpoint_dir}#batch:{batch_id}",
-        )
-        n_batches["n"] += 1
-
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return n_batches["n"]
 
 
 def interval_join(
@@ -160,94 +43,3 @@ def interval_join(
         & (rts >= lts - F.expr(f"INTERVAL {upper}"))
     )
     return l.join(r, cond)
-
-
-def streaming_materialized_view(
-    spark: SparkSession,
-    source_dir: str,
-    base_path: str,
-    view_path: str,
-    checkpoint_dir: str,
-    schema,
-    keys: list[str],
-    order_col: str,
-    group_keys: list[str],
-    sum_cols: list[str],
-    count_col: str = "n_rows",
-) -> int:
-    """Streaming materialized view: each micro-batch MERGEs into the
-    base :class:`VersionedTable`, then refreshes a rollup table
-    INCREMENTALLY from the base's CDC (operators/incremental.py::
-    maintain_sum_agg) — per-batch refresh cost tracks change volume,
-    never base size.
-
-    Crash safety without a two-table transaction: the view's manifest
-    records which base version it reflects (``maintain@<v>``). A crash
-    between the base commit and the view commit leaves the view stale,
-    and the NEXT batch maintains from the RECORDED version — the missed
-    delta replays exactly once. Out-of-band base commits (another
-    writer, a backfill) are folded in the same way, because the diff
-    always spans recorded-version -> base-latest, not just this batch.
-    """
-    from ..operators.incremental import maintain_sum_agg
-    from ..sources.versioned import VersionedTable
-
-    stream = spark.readStream.schema(schema).parquet(source_dir)
-    n_batches = {"n": 0}
-
-    def reflected_version(view: VersionedTable) -> int | None:
-        latest = view.latest_version()
-        if latest is None:
-            return None
-        op = view.manifest(latest)["operation"]
-        return int(op.split("@", 1)[1])
-
-    def refresh(session: SparkSession) -> None:
-        base = VersionedTable(base_path)
-        view = VersionedTable(view_path)
-        v_base = base.latest_version()
-        if v_base is None:
-            return
-        from pyspark.sql import functions as F2
-
-        seen = reflected_version(view)
-        if seen == v_base:
-            return
-        if seen is None or seen not in base.versions():
-            # First refresh — or the base vacuumed past the recorded
-            # version so its snapshot (and the diff) is gone: fall back
-            # to a full recompute of the current snapshot. Correct at
-            # any time, just not incremental for this one refresh.
-            mat = base.read(session, v_base).groupBy(*group_keys).agg(
-                *[F2.sum(c).alias(c) for c in sum_cols],
-                F2.count("*").alias(count_col),
-            )
-        else:
-            cdc = base.diff(session, seen, v_base, keys, with_old=True)
-            mat = maintain_sum_agg(
-                view.read(session), cdc, group_keys, sum_cols, count_col
-            )
-        # localCheckpoint: the new view must be fully computed BEFORE
-        # overwrite commits a version that reads the old view's files.
-        view.overwrite(mat.localCheckpoint(), operation=f"maintain@{v_base}")
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        base = VersionedTable(base_path)
-        base.merge(
-            batch_df.sparkSession,
-            batch_df,
-            keys,
-            order_by=[F.desc(order_col)] if order_col else None,
-            txn_id=f"{checkpoint_dir}#mv-batch:{batch_id}",
-        )
-        refresh(batch_df.sparkSession)
-        n_batches["n"] += 1
-
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return n_batches["n"]

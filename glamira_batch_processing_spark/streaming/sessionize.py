@@ -143,85 +143,3 @@ def sessionize_stateful(grouped, gap_us: int = DEFAULT_GAP_US):
         "update",
         GroupStateTimeout.NoTimeout,
     )
-
-
-def sessionize_stateful_final(grouped, gap_us: int = DEFAULT_GAP_US):
-    """Timeout-FINALIZING sessionizer: emits each session exactly once,
-    when it CLOSES (append semantics), instead of re-emitting updates.
-
-    The production complement to :func:`sessionize_stateful`: a
-    downstream consumer of closed sessions (billing, retention marts)
-    wants one immutable row per session, which requires idle-session
-    finalization — a session with no successor event would otherwise
-    stay open forever. Two close paths:
-
-    - a new event arriving more than ``gap_us`` after the open
-      session's last event closes it (emitted in that batch);
-    - the EVENT-TIME watermark passing ``last_ts + gap`` fires the
-      GroupState timeout and closes the user's trailing open session
-      (``state.hasTimedOut`` branch), so idle keys finalize without
-      any further traffic — the watermark, not wall clock, drives
-      correctness under replay.
-
-    Input must be grouped on the key with an event-time watermark of
-    at least the gap on a TIMESTAMP column ``ts`` (EventTimeTimeout
-    contract); rows also carry ``ts_us`` like the update-mode form.
-    Emits ``SESSION_OUTPUT_SCHEMA`` rows. Trailing sessions whose
-    timeout the final micro-batch never reaches (the stream simply
-    stopped) remain open in the checkpoint — the standard streaming
-    semantics: they emit on the next batch after the watermark moves.
-    """
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    gap_ms = gap_us // 1000
-
-    def fn(key, pdfs, state):
-        import pandas as pd
-
-        (user_id,) = key
-        closed: list[tuple] = []
-        if state.hasTimedOut:
-            seq, last_us, start_us, n = state.get
-            closed.append((int(user_id), seq, start_us, last_us, n))
-            # Keep the per-user session counter (do NOT state.remove()):
-            # a user returning after an idle-timeout close must continue
-            # at seq+1, not restart at 1 — one immutable row per
-            # (user_id, session_seq) is the append-mode contract. The
-            # data path already treats last_us=None as "no open
-            # session"; no new timeout is registered, so the dormant
-            # counter-only state never fires again until new traffic
-            # arrives and re-arms it.
-            state.update((seq, None, None, 0))
-        else:
-            if state.exists:
-                seq, last_us, start_us, n = state.get
-            else:
-                seq, last_us, start_us, n = 0, None, None, 0
-            for pdf in pdfs:
-                pdf = pdf.sort_values("ts_us")
-                for ts_us in pdf["ts_us"]:
-                    ts_us = int(ts_us)
-                    if last_us is None:
-                        seq, start_us, n = seq + 1, ts_us, 0
-                    elif ts_us - last_us > gap_us:
-                        closed.append(
-                            (int(user_id), seq, start_us, last_us, n)
-                        )
-                        seq, start_us, n = seq + 1, ts_us, 0
-                    n += 1
-                    last_us = ts_us
-            state.update((seq, last_us, start_us, n))
-            # close the open session when event time passes last + gap
-            state.setTimeoutTimestamp(last_us // 1000 + gap_ms)
-        yield pd.DataFrame(
-            closed,
-            columns=["user_id", "session_seq", "start_us", "last_us", "n_events"],
-        )
-
-    return grouped.applyInPandasWithState(
-        fn,
-        SESSION_OUTPUT_SCHEMA,
-        SESSION_STATE_SCHEMA,
-        "append",
-        GroupStateTimeout.EventTimeTimeout,
-    )

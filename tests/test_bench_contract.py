@@ -246,3 +246,30 @@ def test_cpus_falls_back_to_affinity_on_malformed_value(raw, monkeypatch, tmp_pa
         timings, {k: 0.0 for k in timings}, "data/sf0.1", 3, tmp_path
     )
     assert json.loads(line)["cpus"] == len(os.sched_getaffinity(0))
+
+
+def test_failing_query_is_recorded_not_fatal(monkeypatch, capsys):
+    """A query that raises (in warm-up or in a timed rep) is left out of
+    the timings and recorded in ``errors``; every other query is still
+    timed, so the run keeps its summary."""
+    monkeypatch.setattr(bench, "force", lambda df: None)
+    calls = {"flaky": 0}
+
+    def flaky(spark, sf):
+        calls["flaky"] += 1
+        if calls["flaky"] == 2:  # warm-up passes, first timed rep fails
+            raise RuntimeError("lost executor\nat a.b.C(C.java:1)")
+
+    def broken(spark, sf):
+        raise ValueError("no such table")
+
+    qs = {"ok": lambda spark, sf: None, "flaky": flaky, "broken": broken}
+    timings, stddevs, errors = bench.time_queries(
+        None, qs, ["broken", "ok", "flaky", "absent"], "sf0.1", 3
+    )
+    assert set(timings) == set(stddevs) == {"ok"}
+    assert errors == {
+        "broken": "ValueError: no such table",
+        "flaky": "RuntimeError: lost executor",
+    }
+    assert "ValueError: no such table" in capsys.readouterr().err

@@ -102,54 +102,6 @@ def test_trained_centroids_make_ivf_exact_on_clustered_data(spark):
     assert sum(per_q) / len(per_q) == 1.0
 
 
-def test_pq_train_beats_seeded_codebooks(spark):
-    """Trained PQ codebooks (per-subspace k-means) must reconstruct the
-    corpus with lower quantization MSE than the md5-seeded codebooks —
-    the production-recall half of the PQ story — and drop straight into
-    the ADC scorer."""
-    from glamira_batch_processing_spark.operators.pq import (
-        pq_adc_topk,
-        pq_codebooks,
-        pq_quantization_mse,
-        pq_train,
-    )
-    from glamira_batch_processing_spark.plans.registry import table
-    from tests.conftest import SF_SMALL
-
-    e = table(spark, SF_SMALL, "embeddings").select("vec_id", "embedding")
-    seeded = pq_codebooks(dim=64, m=8, ks=16)
-    trained = pq_train(e, m=8, ks=16, n_iter=5)
-    assert len(trained) == 8 and len(trained[0]) == 16
-    assert len(trained[0][0]) == 8
-    mse_seed = pq_quantization_mse(e, seeded)
-    mse_train = pq_quantization_mse(e, trained)
-    assert mse_train < mse_seed, (mse_train, mse_seed)
-    # trained books drive the same ADC top-k operator
-    from pyspark.sql import functions as F
-
-    q = e.filter(F.col("vec_id") % 100 == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
-    )
-    out = pq_adc_topk(e, q, trained, k=5)
-    rows = out.collect()
-    assert rows and all(1 <= r["rank"] <= 5 for r in rows)
-
-
-def test_pq_train_empty_embeddings_raises_value_error(spark):
-    """ADVICE r5: an empty embeddings DataFrame must raise a clear
-    ValueError, not an opaque TypeError from first()[0]."""
-    import pytest
-    from pyspark.sql.types import ArrayType, FloatType, StructField, StructType
-
-    from glamira_batch_processing_spark.operators.pq import pq_train
-
-    empty = spark.createDataFrame(
-        [], StructType([StructField("embedding", ArrayType(FloatType()))])
-    )
-    with pytest.raises(ValueError, match="empty"):
-        pq_train(empty, m=4, ks=4, n_iter=1)
-
-
 def test_ivf_search_np_nprobe_matches_recall_curve(spark):
     """VERDICT r5 ask #7: the production Arrow/numpy scorer's nprobe
     knob must reproduce the ann_recall_multiprobe tuning curve — same

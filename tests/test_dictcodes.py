@@ -1,6 +1,7 @@
 """Dictionary-encoding warehouse layer (functions/dictcodes.py):
 code assignment determinism, NULL semantics, the tinyint-domain guard,
-and decode parity between the broadcast-join and inline-map paths.
+and decode parity between a broadcast join of the decode dims and the
+inline-map decode.
 The end-to-end write->read->agg->decode lifecycle is oracle-gated by
 ``q1_coded_layout`` (plans/lifecycle_queries.py)."""
 
@@ -10,7 +11,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from glamira_batch_processing_spark.functions.dictcodes import (
-    decode_after_agg,
     decode_after_agg_inline,
     dict_encode_columns,
 )
@@ -45,7 +45,8 @@ def test_null_encodes_as_null_and_roundtrips(spark):
     # groupBy on codes + decode == groupBy on the original strings
     agg = coded.groupBy("flag_code").agg(F.sum("v").alias("sv"))
     back = {
-        (r["flag"], r["sv"]) for r in decode_after_agg(agg, {"flag": dims["flag"]}).collect()
+        (r["flag"], r["sv"])
+        for r in decode_after_agg_inline(agg, {"flag": dims["flag"]}).collect()
     }
     expect = {
         (r["flag"], r["sv"])
@@ -59,10 +60,10 @@ def test_inline_decode_matches_join_decode(spark):
     agg = coded.groupBy("flag_code", "status_code").agg(
         F.count("*").alias("n")
     )
-    j = {
-        (r["flag"], r["status"], r["n"])
-        for r in decode_after_agg(agg, dims).collect()
-    }
+    joined = agg
+    for c, dim in dims.items():
+        joined = joined.join(F.broadcast(dim), on=f"{c}_code", how="left")
+    j = {(r["flag"], r["status"], r["n"]) for r in joined.collect()}
     i = {
         (r["flag"], r["status"], r["n"])
         for r in decode_after_agg_inline(agg, dims).collect()

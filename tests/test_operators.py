@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 from glamira_batch_processing_spark.operators.incremental import merge_upsert
 from glamira_batch_processing_spark.operators.multimodal import (
     decode_images,
-    resize_plan,
     sample_frames,
     with_text_payload,
 )
@@ -96,12 +95,6 @@ def test_multimodal_plumbing(spark):
     assert got[1].n_bytes == len("hello world " * 20)
     assert got[1].format == "fake"
     assert 64 <= got[1].width < 128 and 64 <= got[1].height < 128
-
-    rp = resize_plan(meta, max_side=96).collect()
-    for r in rp:
-        assert max(r.target_width, r.target_height) <= 96 or (
-            max(r.width, r.height) <= 96
-        )
 
     frames = sample_frames(with_bytes, frame_size=32, stride=96)
     f1 = frames.filter(F.col("doc_id") == 1).collect()
@@ -310,26 +303,6 @@ def test_ivf_bucketed_np_ids_set_matches_oracle_form(spark, duck_small):
     assert len(ids) == 25  # 5 queries x top-5
 
 
-def test_extract_features_deterministic(spark):
-    """Multimodal feature-extraction stub: fixed dim, [-1,1) range,
-    deterministic across runs, consumable by the similarity operators."""
-    from glamira_batch_processing_spark.operators.multimodal import (
-        FEATURE_DIM,
-        extract_features,
-    )
-
-    docs = spark.createDataFrame(
-        [(1, "doc one text"), (2, "doc two text")], "doc_id long, text string"
-    )
-    feats1 = {r.doc_id: r.feature for r in extract_features(with_text_payload(docs)).collect()}
-    feats2 = {r.doc_id: r.feature for r in extract_features(with_text_payload(docs)).collect()}
-    assert feats1 == feats2
-    for v in feats1.values():
-        assert len(v) == FEATURE_DIM
-        assert all(-1.0 <= x < 1.0 for x in v)
-    assert feats1[1] != feats1[2]
-
-
 def test_ivf_search_np_matches_fold(spark):
     """Arrow/numpy IVF agrees with the fold-based ivf_search: identical
     (query, rank) -> neighbor assignments, similarities to ~1e-9."""
@@ -460,94 +433,6 @@ def test_png_unfilter_all_filter_types():
         assert np.array_equal(got, px), f"filter {ftype}"
 
 
-def test_rasterize_resize_operator(spark):
-    import numpy as np
-
-    from glamira_batch_processing_spark.operators.multimodal import (
-        image_bytes,
-        rasterize_resize,
-        test_pattern,
-    )
-
-    from glamira_batch_processing_spark.operators.jpegcodec import (
-        encode_baseline_jpeg,
-    )
-    from glamira_batch_processing_spark.operators.multimodal import (
-        gif_test_pattern,
-    )
-
-    jpeg = bytearray(encode_baseline_jpeg(test_pattern(50, 50)))
-    progressive = bytearray(jpeg)
-    progressive[progressive.index(b"\xff\xc0") + 1] = 0xC2  # SOF0 -> SOF2
-    rows = [
-        (1, bytearray(image_bytes("png", 120, 80))),
-        (2, bytearray(image_bytes("bmp", 40, 30))),   # already fits
-        (3, bytearray(image_bytes("gif", 50, 50))),   # real LZW decode
-        (4, jpeg),                                    # real baseline decode
-        (5, progressive),                             # needs a real codec
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, payload binary")
-    got = {r.doc_id: r for r in rasterize_resize(df, max_side=96).collect()}
-    r1 = got[1]
-    assert (r1.width, r1.height, r1.target_width, r1.target_height) == (120, 80, 96, 64)
-    px = np.frombuffer(bytes(r1.pixels), dtype=np.uint8).reshape(64, 96, 3)
-    # nearest-neighbor: sampled pixels come verbatim from the source raster
-    src = test_pattern(120, 80)
-    assert np.array_equal(px[0, 0], src[0, 0])
-    assert np.array_equal(px[63, 95], src[int(63 * 80 / 64), int(95 * 120 / 96)])
-    r2 = got[2]
-    assert (r2.target_width, r2.target_height) == (40, 30)
-    assert len(bytes(r2.pixels)) == 40 * 30 * 3
-    r3 = got[3]
-    assert r3.format == "gif" and r3.pixels is not None
-    gpx = np.frombuffer(bytes(r3.pixels), dtype=np.uint8).reshape(
-        r3.target_height, r3.target_width, 3
-    )
-    assert np.array_equal(gpx[0, 0], gif_test_pattern(50, 50)[0, 0])
-    r4 = got[4]
-    assert r4.format == "jpeg" and r4.pixels is not None
-    jpx = np.frombuffer(bytes(r4.pixels), dtype=np.uint8).reshape(
-        r4.target_height, r4.target_width, 3
-    )
-    assert abs(int(jpx[0, 0, 0]) - int(test_pattern(50, 50)[0, 0, 0])) <= 3
-    assert got[5].format == "error" and got[5].pixels is None
-
-
-def test_rasterize_resize_quarantines_unsupported_jpeg_variants(spark):
-    """Structurally valid JPEGs whose pixel coding is unimplemented
-    (arithmetic, 12-bit, CMYK) must surface as metadata-only QUARANTINE
-    rows — header dims populated, pixels NULL, format carrying the
-    specific variant label — while junk payloads stay format='error'
-    (round-7, VERDICT r6 ask #7)."""
-    import struct
-
-    from glamira_batch_processing_spark.operators.multimodal import (
-        rasterize_resize,
-    )
-
-    def sof_jpeg(marker, precision=8, ncomp=3, w=17, h=9):
-        comps = b"".join(bytes([i + 1, 0x11, 0]) for i in range(ncomp))
-        seg = bytes([precision]) + struct.pack(">HH", h, w) + bytes([ncomp]) + comps
-        return (
-            b"\xff\xd8" + bytes([0xFF, marker]) + struct.pack(">H", len(seg) + 2) + seg
-        )
-
-    rows = [
-        (1, bytearray(sof_jpeg(0xC9))),               # arithmetic
-        (2, bytearray(sof_jpeg(0xC0, precision=12))),  # 12-bit
-        (3, bytearray(sof_jpeg(0xC0, ncomp=4))),       # Adobe CMYK
-        (4, bytearray(b"not an image at all")),        # junk
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, payload binary")
-    got = {r.doc_id: r for r in rasterize_resize(df, max_side=96).collect()}
-    for doc_id, label in ((1, "jpeg-arithmetic"), (2, "jpeg-12bit"), (3, "jpeg-cmyk")):
-        r = got[doc_id]
-        assert r.format == label
-        assert (r.width, r.height) == (17, 9)
-        assert r.pixels is None and r.target_width is None
-    assert got[4].format == "error" and got[4].width is None
-
-
 def test_range_lookup_join_semantics(spark):
     """Bucketed range join == naive BETWEEN join: inclusive bounds,
     overlapping ranges fan out, bucket-straddling ranges still match,
@@ -579,8 +464,8 @@ def test_range_lookup_join_semantics(spark):
 
 def test_review_fixes_hardening(spark):
     """Round-3 self-review fixes: JPEG fill bytes, null embeddings,
-    inverted/corrupt ranges, z-order bit budget, degenerate resize,
-    odd profiler column names."""
+    inverted/corrupt ranges, z-order bit budget, odd profiler column
+    names."""
     import struct as _struct
 
     import pytest as _pytest
@@ -632,19 +517,6 @@ def test_review_fixes_hardening(spark):
     with _pytest.raises(ValueError):
         sql_zorder_key("t", ["a", "b", "c", "d"], bits=16)
     zorder_key(df4, ["a", "b", "c", "d"], bits=15)  # 60 bits: fine
-
-    # degenerate aspect ratio keeps >= 1 pixel per dimension
-    from glamira_batch_processing_spark.operators.multimodal import (
-        image_bytes,
-        rasterize_resize,
-    )
-
-    banner = spark.createDataFrame(
-        [(1, bytearray(image_bytes("bmp", 200, 1)))], "doc_id long, payload binary"
-    )
-    [r] = rasterize_resize(banner, max_side=96).collect()
-    assert (r.target_width, r.target_height) == (96, 1)
-    assert len(bytes(r.pixels)) == 96 * 1 * 3
 
     # profiler handles hostile column names
     from glamira_batch_processing_spark.operators.audit import column_profile

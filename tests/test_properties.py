@@ -263,40 +263,3 @@ def test_semdedup_tau_monotonicity_and_survivor_law(data):
             by_cluster[r.cluster_id] = min(by_cluster[r.cluster_id], r.vec_id)
         min_ids = set(by_cluster.values())
         assert not any(r.is_pruned for r in rows_ if r.vec_id in min_ids)
-
-
-class TestLshTune:
-    def test_rows_per_band_increase_with_threshold(self):
-        from glamira_batch_processing_spark.operators.dedup import lsh_tune
-
-        rs = [lsh_tune(128, t)[0] for t in (0.2, 0.4, 0.6, 0.8, 0.95)]
-        assert rs == sorted(rs), rs
-        assert rs[0] < rs[-1]
-
-    def test_fn_weighting_flattens_the_curve(self):
-        from glamira_batch_processing_spark.operators.dedup import lsh_tune
-
-        r_bal, _ = lsh_tune(128, 0.8)
-        r_fn, _ = lsh_tune(128, 0.8, fp_weight=0.1, fn_weight=0.9)
-        # recall-heavy tuning must not demand MORE band agreement
-        assert r_fn <= r_bal
-
-    def test_banding_fits_budget_and_brackets_threshold(self):
-        from glamira_batch_processing_spark.operators.dedup import lsh_tune
-
-        for t in (0.3, 0.5, 0.7, 0.9):
-            r, b = lsh_tune(128, t)
-            assert r * b <= 128 and r >= 1 and b >= 1
-            # the S-curve midpoint (1/b)^(1/r) lands near the threshold
-            mid = (1.0 / b) ** (1.0 / r)
-            assert abs(mid - t) < 0.15, (t, r, b, mid)
-
-    def test_input_validation(self):
-        import pytest
-
-        from glamira_batch_processing_spark.operators.dedup import lsh_tune
-
-        with pytest.raises(ValueError):
-            lsh_tune(128, 0.0)
-        with pytest.raises(ValueError):
-            lsh_tune(1, 0.5)

@@ -146,79 +146,3 @@ def test_stateful_funnel_matches_batch(spark, tmp_path):
         r.user_id: r.stage_0 + r.stage_1 + r.stage_2 for r in flags.collect()
     }
     assert batch_reached == prog
-
-
-def test_stateful_final_sessionize_emits_once_on_close(spark, tmp_path):
-    """The timeout-finalizing sessionizer (append semantics): each
-    session emits exactly once — in-batch gap closure, cross-batch
-    data-path closure, and EVENT-TIME TIMEOUT closure of an idle
-    session once the watermark passes last_ts + gap."""
-    import os
-
-    from glamira_batch_processing_spark.streaming.sessionize import (
-        sessionize_stateful_final,
-    )
-
-    src = tmp_path / "final_src"
-    GAP = 30 * 60 * 1_000_000
-    MIN = 60 * 1_000_000
-    base = 1_700_000_000_000_000
-    # file 0: user 1 has a gap-closed session (e1,e2) + an open one
-    # (e3 at +100min); user 9 has one event (its session will close
-    # via the DATA path when its +3h event arrives in file 1).
-    batches = [
-        [(1, base), (1, base + 10_000_000), (1, base + 100 * MIN), (9, base)],
-        # file 1: user 9 jumps +3h — closes u9 session 1, advances the
-        # watermark so u1's idle open session times out in batch 2.
-        [(9, base + 180 * MIN)],
-        # file 2: more u9 traffic; its only job is to run batch 2 where
-        # u1's timeout (base+130min) < watermark (base+150min) fires.
-        [(9, base + 181 * MIN)],
-        # file 3: user 1 RETURNS after its session 2 was closed by
-        # timeout — the counter must survive the close, so this opens
-        # session_seq=3 (not a duplicate seq=1).
-        [(1, base + 200 * MIN)],
-        # file 4: u9 jumps +400min — data-path-closes u9's session 2
-        # and advances the watermark past u1's new timeout (230min).
-        [(9, base + 400 * MIN)],
-        # file 5: one more batch so u1's session-3 timeout fires.
-        [(9, base + 401 * MIN)],
-    ]
-    for i, rows in enumerate(batches):
-        d = src / f"b{i}"
-        spark.createDataFrame(rows, "user_id long, ts_us long").selectExpr(
-            "user_id", "ts_us", "timestamp_micros(ts_us) AS ts"
-        ).coalesce(1).write.parquet(str(d))
-        for p in d.glob("*.parquet"):
-            os.utime(p, (1_700_000_000 + i, 1_700_000_000 + i))
-
-    stream = (
-        spark.readStream.schema("user_id long, ts_us long, ts timestamp")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src}/b*")
-        .withWatermark("ts", "30 minutes")
-    )
-    sessions = sessionize_stateful_final(stream.groupBy("user_id"))
-    q = (
-        sessions.writeStream.format("memory")
-        .queryName("final_sessions")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_final"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = {
-        (r.user_id, r.session_seq): (r.start_us, r.last_us, r.n_events)
-        for r in spark.sql("SELECT * FROM final_sessions").collect()
-    }
-    assert got == {
-        (1, 1): (base, base + 10_000_000, 2),          # in-batch gap close
-        (9, 1): (base, base, 1),                        # data-path close
-        (1, 2): (base + 100 * MIN, base + 100 * MIN, 1),  # TIMEOUT close
-        # returning after a timeout close continues the counter: a
-        # state.remove() on timeout would restart this at (1, 1) and
-        # break the one-immutable-row-per-(user, seq) contract.
-        (1, 3): (base + 200 * MIN, base + 200 * MIN, 1),
-        (9, 2): (base + 180 * MIN, base + 181 * MIN, 2),  # data-path close
-    }

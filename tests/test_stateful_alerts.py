@@ -1,49 +1,14 @@
-"""Exactly-once threshold alerting across stream restarts.
-
-Two implementations of the same semantics: the Spark 4
-transformWithStateInPandas StatefulProcessor (typed ValueState;
-requires protobuf for its state-server protocol — skipped where the
-dependency is absent, this sandbox included) and the legacy
-applyInPandasWithState GroupState form, which runs everywhere and
-pins the behavior the TWS path must match.
-
-Why the skip cannot be vendored away here (round-8 check):
-``pip download protobuf`` fails with "No matching distribution found"
-— the sandbox has no package-index network access. The only on-disk
-copy of the wheel lives inside the read-only reference checkout's
-vendored virtualenv, and copying files out of the reference tree (or
-importing code from it at runtime) is barred by this project's
-no-copy rule and untrusted-content policy. The TWS semantics are
-therefore pinned by the ``applyInPandasWithState`` twin below (three
-checkpointed restarts, exactly-once asserted) until the environment
-ships protobuf."""
+"""Exactly-once threshold alerting across stream restarts, on the
+applyInPandasWithState GroupState form (three checkpointed restarts,
+exactly-once asserted)."""
 
 from __future__ import annotations
 
 import pytest
 
-from glamira_batch_processing_spark.streaming.alerts import (
-    has_tws_deps,
-    spend_alerts,
-    spend_alerts_legacy,
-)
+from glamira_batch_processing_spark.streaming.alerts import spend_alerts_legacy
 
-_ROCKSDB = (
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-)
-
-IMPLS = [
-    pytest.param(spend_alerts_legacy, False, id="applyInPandasWithState"),
-    pytest.param(
-        spend_alerts,
-        True,
-        id="transformWithStateInPandas",
-        marks=pytest.mark.skipif(
-            not has_tws_deps(),
-            reason="transformWithState needs protobuf (not in this sandbox)",
-        ),
-    ),
-]
+IMPLS = [pytest.param(spend_alerts_legacy, id="applyInPandasWithState")]
 
 
 def _append(spark, src, rows):
@@ -52,12 +17,7 @@ def _append(spark, src, rows):
     ).write.mode("append").parquet(src)
 
 
-def _run(spark, impl, needs_rocksdb, src, out, ckpt):
-    if needs_rocksdb:
-        # transformWithState requires the RocksDB state store provider.
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass", _ROCKSDB
-        )
+def _run(spark, impl, src, out, ckpt):
     stream = spark.readStream.schema("user_id long, value double").parquet(src)
     q = (
         impl(stream.groupBy("user_id"), threshold=100.0)
@@ -75,22 +35,20 @@ def _run(spark, impl, needs_rocksdb, src, out, ckpt):
         return []
 
 
-@pytest.mark.parametrize("impl,needs_rocksdb", IMPLS)
-def test_spend_alert_fires_exactly_once_across_restarts(
-    spark, tmp_path, impl, needs_rocksdb
-):
+@pytest.mark.parametrize("impl", IMPLS)
+def test_spend_alert_fires_exactly_once_across_restarts(spark, tmp_path, impl):
     src = str(tmp_path / "src")
     out = str(tmp_path / "alerts")
     ckpt = str(tmp_path / "ckpt")
 
     # Batch 1: nobody crosses 100.
     _append(spark, src, [(1, 60.0), (2, 30.0)])
-    assert _run(spark, impl, needs_rocksdb, src, out, ckpt) == []
+    assert _run(spark, impl, src, out, ckpt) == []
 
     # Batch 2 (new stream run, same checkpoint): user 1 crosses —
     # the running total survived the restart in the value state.
     _append(spark, src, [(1, 50.0), (2, 10.0)])
-    rows = _run(spark, impl, needs_rocksdb, src, out, ckpt)
+    rows = _run(spark, impl, src, out, ckpt)
     got = {r.user_id: (r.total, r.crossed_at_total) for r in rows}
     assert got == {1: (110.0, 110.0)}
 
@@ -98,7 +56,7 @@ def test_spend_alert_fires_exactly_once_across_restarts(
     # still holds only its ONE original alert row); user 2 crosses now
     # (30 + 10 + 70 = 110).
     _append(spark, src, [(1, 500.0), (2, 70.0)])
-    rows = _run(spark, impl, needs_rocksdb, src, out, ckpt)
+    rows = _run(spark, impl, src, out, ckpt)
     assert len(rows) == 2
     got = {r.user_id: (r.total, r.crossed_at_total) for r in rows}
     assert got == {1: (110.0, 110.0), 2: (110.0, 110.0)}

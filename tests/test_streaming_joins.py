@@ -1,4 +1,4 @@
-"""Streaming MERGE upsert (foreachBatch) and watermarked interval join."""
+"""Watermarked stream-stream interval join, batch and streaming."""
 
 from __future__ import annotations
 
@@ -13,72 +13,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from glamira_batch_processing_spark.streaming.joins import (
-    interval_join,
-    streaming_merge,
-    streaming_merge_versioned,
-)
-
-SCHEMA = StructType(
-    [
-        StructField("k", LongType()),
-        StructField("version", LongType()),
-        StructField("payload", StringType()),
-    ]
-)
-
-
-def _write(spark, path, rows):
-    spark.createDataFrame(rows, SCHEMA).coalesce(1).write.mode("append").parquet(path)
-
-
-def test_streaming_merge_upserts_across_batches(spark, tmp_path):
-    src = str(tmp_path / "src")
-    tgt = str(tmp_path / "tgt")
-    ckpt = str(tmp_path / "ckpt")
-
-    _write(spark, src, [(1, 1, "a1"), (2, 1, "b1"), (2, 2, "b2")])
-    assert streaming_merge(spark, src, tgt, ckpt, SCHEMA, ["k"], "version") >= 1
-    got = {r["k"]: (r["version"], r["payload"]) for r in spark.read.parquet(tgt).collect()}
-    # within-batch W4 dedupe: key 2 keeps version 2
-    assert got == {1: (1, "a1"), 2: (2, "b2")}
-
-    # new files: update key 1, insert key 3; checkpoint skips old files
-    _write(spark, src, [(1, 5, "a5"), (3, 1, "c1")])
-    streaming_merge(spark, src, tgt, ckpt, SCHEMA, ["k"], "version")
-    got = {r["k"]: (r["version"], r["payload"]) for r in spark.read.parquet(tgt).collect()}
-    assert got == {1: (5, "a5"), 2: (2, "b2"), 3: (1, "c1")}
-
-    # no new files: merge is a no-op, target unchanged
-    streaming_merge(spark, src, tgt, ckpt, SCHEMA, ["k"], "version")
-    assert spark.read.parquet(tgt).count() == 3
-
-
-def test_streaming_merge_versioned_atomic_history(spark, tmp_path):
-    """foreachBatch -> VersionedTable: same upsert semantics, plus an
-    atomic version per micro-batch and per-batch time travel."""
-    from glamira_batch_processing_spark.sources.versioned import VersionedTable
-
-    src = str(tmp_path / "src")
-    tbl = str(tmp_path / "tbl")
-    ckpt = str(tmp_path / "ckpt")
-
-    _write(spark, src, [(1, 1, "a1"), (2, 1, "b1"), (2, 2, "b2")])
-    assert streaming_merge_versioned(spark, src, tbl, ckpt, SCHEMA, ["k"], "version") >= 1
-    t = VersionedTable(tbl)
-    read = lambda **kw: {
-        r["k"]: (r["version"], r["payload"]) for r in t.read(spark, **kw).collect()
-    }
-    # within-batch W4 dedupe on the very first commit: key 2 keeps version 2
-    assert read() == {1: (1, "a1"), 2: (2, "b2")}
-    v0 = t.latest_version()
-
-    _write(spark, src, [(1, 5, "a5"), (3, 1, "c1")])
-    streaming_merge_versioned(spark, src, tbl, ckpt, SCHEMA, ["k"], "version")
-    assert read() == {1: (5, "a5"), 2: (2, "b2"), 3: (1, "c1")}
-    # the pre-batch snapshot is still readable (per-batch time travel)
-    assert read(version=v0) == {1: (1, "a1"), 2: (2, "b2")}
-
+from glamira_batch_processing_spark.streaming.joins import interval_join
 
 TS_SCHEMA = StructType(
     [
@@ -143,46 +78,3 @@ def test_interval_join_runs_as_stream(spark, tmp_path):
     rows = spark.read.parquet(out_dir).collect()
     # the in-window view joins; the watermark may hold back nothing else
     assert [r["matched"] for r in rows] == ["view-within"]
-
-
-def test_streaming_merge_versioned_schema_evolution_on_restart(spark, tmp_path):
-    """Round 6: a stream restarted with a WIDER schema (the standard
-    Structured Streaming evolution path — schemas are fixed per run)
-    merges additively into the existing VersionedTable: old rows read
-    NULL for the new column, pre-evolution snapshots stay intact, and
-    the checkpoint still skips already-processed files so old batches
-    are not re-read under the new schema."""
-    from pyspark.sql.types import DoubleType
-
-    from glamira_batch_processing_spark.sources.versioned import VersionedTable
-
-    src = str(tmp_path / "src")
-    tbl = str(tmp_path / "tbl")
-    ckpt = str(tmp_path / "ckpt")
-
-    _write(spark, src, [(1, 1, "a1"), (2, 1, "b1")])
-    streaming_merge_versioned(spark, src, tbl, ckpt, SCHEMA, ["k"], "version")
-    t = VersionedTable(tbl)
-    v0 = t.latest_version()
-
-    wide = StructType(
-        [*SCHEMA.fields, StructField("score", DoubleType())]
-    )
-    spark.createDataFrame(
-        [(1, 7, "a7", 0.9), (3, 1, "c1", 0.5)], wide
-    ).coalesce(1).write.mode("append").parquet(src)
-    # restart with the evolved schema, SAME checkpoint
-    streaming_merge_versioned(spark, src, tbl, ckpt, wide, ["k"], "version")
-
-    got = {
-        r["k"]: (r["version"], r["payload"], r["score"])
-        for r in t.read(spark).collect()
-    }
-    assert got == {
-        1: (7, "a7", 0.9),
-        2: (1, "b1", None),  # pre-evolution row null-fills the new col
-        3: (1, "c1", 0.5),
-    }
-    # pre-evolution snapshot keeps its original 3-column schema
-    assert t.read(spark, version=v0).columns == ["k", "version", "payload"]
-    assert t.manifest(t.latest_version())["schema"][-1] == ["score", "double"]

@@ -1,87 +1,15 @@
-"""Streaming ingest (checkpoint/resume, merge-on-read) and source
-utilities (schema drift reconcile, partitioned writer)."""
+"""Streaming windows and watermarks, and source utilities (schema drift
+reconcile, partitioned writer)."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from glamira_batch_processing_spark.sources.readers import detect_drift, reconcile_read
+from glamira_batch_processing_spark.sources.readers import reconcile_read
 from glamira_batch_processing_spark.sources.writers import write_partitioned
-from glamira_batch_processing_spark.streaming.ingest import (
-    incremental_ingest,
-    read_merged,
-    windowed_event_counts,
-)
-
-SCHEMA = StructType(
-    [
-        StructField("order_id", LongType()),
-        StructField("product_id", LongType()),
-        StructField("quantity", LongType()),
-        StructField("status", StringType()),
-    ]
-)
-
-
-def _write_batch(spark, path, rows):
-    spark.createDataFrame(rows, SCHEMA).coalesce(1).write.mode("append").parquet(path)
-
-
-def test_incremental_ingest_resumes_from_checkpoint(spark, tmp_path):
-    src = str(tmp_path / "src")
-    tgt = str(tmp_path / "tgt")
-    ckpt = str(tmp_path / "ckpt")
-
-    _write_batch(spark, src, [(1, 10, 1, "new"), (2, 20, 1, "new")])
-    assert incremental_ingest(spark, src, tgt, ckpt, SCHEMA) >= 1
-    assert spark.read.parquet(tgt).count() == 2
-
-    # Second run with no new files: checkpoint suppresses reprocessing.
-    incremental_ingest(spark, src, tgt, ckpt, SCHEMA)
-    assert spark.read.parquet(tgt).count() == 2
-
-    # New file, including an update for key (1,10): only the new file
-    # is processed; merge-on-read surfaces exactly one row per key.
-    _write_batch(spark, src, [(1, 10, 5, "updated"), (3, 30, 1, "new")])
-    incremental_ingest(spark, src, tgt, ckpt, SCHEMA)
-    raw = spark.read.parquet(tgt)
-    assert raw.count() == 4  # appended, not rewritten
-
-    merged = read_merged(
-        spark,
-        tgt,
-        keys=["order_id", "product_id"],
-        order_by=[F.desc("_batch_id"), F.desc("quantity")],
-    )
-    assert merged.count() == 3
-    updated = merged.filter((F.col("order_id") == 1)).collect()[0]
-    assert updated.quantity == 5 and updated.status == "updated"
-
-
-def test_max_files_per_trigger_bounds_batches(spark, tmp_path):
-    """BATCH_SIZE analog (ref export_to_gcs BATCH_SIZE=5000): with
-    maxFilesPerTrigger=1, three source files process as three
-    micro-batches in one availableNow run."""
-    src = str(tmp_path / "src")
-    for k in range(3):
-        _write_batch(spark, src, [(100 + k, k, 1, "x")])
-    n = incremental_ingest(
-        spark,
-        src,
-        str(tmp_path / "tgt"),
-        str(tmp_path / "ckpt"),
-        SCHEMA,
-        max_files_per_trigger=1,
-    )
-    assert n == 3
-    assert spark.read.parquet(str(tmp_path / "tgt")).count() == 3
+from glamira_batch_processing_spark.streaming.ingest import windowed_event_counts
 
 
 def test_ivf_assign_operator(spark):
@@ -168,11 +96,6 @@ def test_reconcile_read_scans_per_schema_group_not_per_file(spark, tmp_path):
     assert rows[1] == ("10", None)
     assert rows[2] == (None, "n2")
 
-    # Drift detection consults every footer, not a 300-file sample.
-    drift = detect_drift(spark, paths)
-    assert drift["price"] == {"bigint", "string"}
-    assert drift["note"] == {"string"}
-
 
 def test_schema_drift_reconcile(spark, tmp_path):
     """A column that drifts int -> string across parts is unified as
@@ -184,9 +107,6 @@ def test_schema_drift_reconcile(spark, tmp_path):
     spark.createDataFrame(
         [(2, "not-a-number")], "id long, flaky string"
     ).write.parquet(p2)
-
-    drift = detect_drift(spark, [p1, p2])
-    assert drift["flaky"] == {"bigint", "string"}
 
     df = reconcile_read(spark, [p1, p2])
     assert dict(df.dtypes)["flaky"] == "string"
@@ -211,37 +131,6 @@ def test_write_partitioned_prunes(spark, tmp_path):
     assert "PartitionFilters" in plan or "partitionFilters" in plan.lower()
 
 
-def test_streaming_dedup_within_watermark(spark, tmp_path):
-    """Duplicate (order, line) keys in the stream collapse to one row."""
-    from glamira_batch_processing_spark.streaming.ingest import streaming_dedup
-
-    src = str(tmp_path / "dupsrc")
-    schema = "k long, ts string"
-    rows = [
-        (1, "2024-01-01 00:00:01"),
-        (1, "2024-01-01 00:00:02"),  # dup key within watermark
-        (2, "2024-01-01 00:10:00"),
-    ]
-    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(src)
-    stream = (
-        spark.readStream.schema(schema)
-        .parquet(src)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-    )
-    deduped = streaming_dedup(stream, ["k"], watermark_delay="1 hour")
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName("dedup_stream")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "dckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = sorted(r.k for r in spark.sql("SELECT * FROM dedup_stream").collect())
-    assert got == [1, 2]
-
-
 def test_csv_and_manifest_writers(spark, tmp_path):
     """S8 CSV sink (header, round-trip) and S10 manifest JSON."""
     import json
@@ -262,153 +151,6 @@ def test_csv_and_manifest_writers(spark, tmp_path):
     with open(mpath) as fh:
         m = json.load(fh)
     assert m["rows"] == 2 and m["source"] == "test"
-
-
-def test_read_json_quarantine(spark, tmp_path):
-    """PERMISSIVE JSON ingest: clean rows parse, malformed lines land in
-    the quarantine file verbatim, and one bad line never fails the job."""
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-    from glamira_batch_processing_spark.sources.readers import read_json_quarantine
-
-    src = tmp_path / "in.jsonl"
-    src.write_text(
-        '{"id": 1, "name": "ok"}\n'
-        "{broken json!!\n"
-        '{"id": 2, "name": "also ok"}\n'
-        '["not an object"]\n'
-    )
-    schema = StructType([StructField("id", LongType()), StructField("name", StringType())])
-    qdir = str(tmp_path / "quarantine")
-    clean = read_json_quarantine(spark, str(src), schema, quarantine_path=qdir)
-    assert {(r.id, r.name) for r in clean.collect()} == {(1, "ok"), (2, "also ok")}
-    assert clean.columns == ["id", "name"]
-    bad = {r.value for r in spark.read.text(qdir).collect()}
-    assert bad == {"{broken json!!", '["not an object"]'}
-
-
-def test_streaming_materialized_view_incremental_and_self_healing(spark, tmp_path):
-    """Streaming MV: per-batch MERGE into the base VersionedTable +
-    incremental rollup refresh from CDC. The view must equal a full
-    recompute after every run, fold in out-of-band base commits (the
-    recorded maintain@<v> pointer spans them), and group-moving updates
-    must re-attribute correctly."""
-    from pyspark.sql import functions as F
-
-    from glamira_batch_processing_spark.sources.versioned import VersionedTable
-    from glamira_batch_processing_spark.streaming.joins import (
-        streaming_materialized_view,
-    )
-
-    src = str(tmp_path / "src")
-    base_p = str(tmp_path / "base")
-    view_p = str(tmp_path / "view")
-    ckpt = str(tmp_path / "ckpt")
-    args = dict(
-        source_dir=src,
-        base_path=base_p,
-        view_path=view_p,
-        checkpoint_dir=ckpt,
-        schema=SCHEMA,
-        keys=["order_id"],
-        order_col="quantity",
-        group_keys=["status"],
-        sum_cols=["quantity"],
-    )
-
-    def recompute():
-        return {
-            (r.status, r.quantity, r.n_rows)
-            for r in VersionedTable(base_p)
-            .read(spark)
-            .groupBy("status")
-            .agg(F.sum("quantity").alias("quantity"), F.count("*").alias("n_rows"))
-            .collect()
-        }
-
-    def view_rows():
-        return {
-            (r.status, r.quantity, r.n_rows)
-            for r in VersionedTable(view_p).read(spark).collect()
-        }
-
-    _write_batch(spark, src, [(1, 10, 2, "new"), (2, 20, 3, "new")])
-    assert streaming_materialized_view(spark, **args) == 1
-    assert view_rows() == recompute()
-
-    # second stream run: update (group move new->done) + insert
-    _write_batch(spark, src, [(1, 10, 2, "done"), (3, 30, 7, "new")])
-    streaming_materialized_view(spark, **args)
-    assert view_rows() == recompute()
-
-    # out-of-band base commit the stream never saw: the next run's
-    # refresh folds it in (diff spans recorded -> latest)
-    VersionedTable(base_p).merge(
-        spark,
-        spark.createDataFrame([(9, 90, 4, "done")], SCHEMA),
-        keys=["order_id"],
-    )
-    _write_batch(spark, src, [(4, 40, 1, "new")])
-    streaming_materialized_view(spark, **args)
-    assert view_rows() == recompute()
-    # view manifest records the base version it reflects
-    v = VersionedTable(view_p)
-    assert v.manifest(v.latest_version())["operation"] == (
-        f"maintain@{VersionedTable(base_p).latest_version()}"
-    )
-
-
-def test_streaming_mv_survives_base_vacuum(spark, tmp_path):
-    """If the base table vacuums past the view's recorded version, the
-    next refresh falls back to a full recompute instead of failing on
-    the missing snapshot."""
-    from pyspark.sql import functions as F
-
-    from glamira_batch_processing_spark.sources.versioned import VersionedTable
-    from glamira_batch_processing_spark.streaming.joins import (
-        streaming_materialized_view,
-    )
-
-    src = str(tmp_path / "src")
-    base_p = str(tmp_path / "base")
-    view_p = str(tmp_path / "view")
-    args = dict(
-        source_dir=src,
-        base_path=base_p,
-        view_path=view_p,
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        schema=SCHEMA,
-        keys=["order_id"],
-        order_col="quantity",
-        group_keys=["status"],
-        sum_cols=["quantity"],
-    )
-    _write_batch(spark, src, [(1, 10, 2, "new"), (2, 20, 3, "done")])
-    streaming_materialized_view(spark, **args)
-
-    # advance the base twice out-of-band, then vacuum away everything
-    # the view's maintain@<v> pointer refers to
-    base = VersionedTable(base_p)
-    base.merge(spark, spark.createDataFrame([(3, 30, 5, "new")], SCHEMA), ["order_id"])
-    base.merge(spark, spark.createDataFrame([(4, 40, 9, "done")], SCHEMA), ["order_id"])
-    base.vacuum(keep_last=1)
-
-    _write_batch(spark, src, [(5, 50, 1, "new")])
-    streaming_materialized_view(spark, **args)
-
-    got = {
-        (r.status, r.quantity, r.n_rows)
-        for r in VersionedTable(view_p).read(spark).collect()
-    }
-    want = {
-        (r.status, r.quantity, r.n_rows)
-        for r in VersionedTable(base_p)
-        .read(spark)
-        .groupBy("status")
-        .agg(F.sum("quantity").alias("quantity"), F.count("*").alias("n_rows"))
-        .collect()
-    }
-    assert got == want
 
 
 def test_streaming_session_window(spark, tmp_path):

@@ -375,6 +375,41 @@ def test_read_pruned_equals_full_filter(spark, tmp_path):
         assert sorted(map(tuple, pruned.collect())) == sorted(map(tuple, full.collect()))
 
 
+def test_date_stats_recorded_and_pruned(spark, tmp_path):
+    """A date column records [min, max] (as ISO strings, which order
+    like dates); a point lookup by ``datetime.date`` then skips files
+    and returns exactly the full-scan filter. Timestamps stay
+    unrecorded."""
+    import datetime
+
+    t = VersionedTable(tmp_path / "tbl", stat_columns=("date", "ts", "n"))
+    df = spark.range(400).selectExpr(
+        "DATE_ADD(DATE'2024-01-01', CAST(id DIV 100 AS INT)) AS date",
+        "TIMESTAMP'2024-01-01 00:00:00' + MAKE_INTERVAL(0, 0, 0, 0, 0, id) AS ts",
+        "id AS n",
+    )
+    t.create(df.repartitionByRange(4, "date"))
+    files = t.manifest(t.latest_version())["files"]
+    assert len(files) >= 2
+    ranges = [f["stats"]["date"] for f in files]
+    assert all("2024-01-01" <= lo <= hi <= "2024-01-04" for lo, hi in ranges)
+    assert all("ts" not in f["stats"] and "n" in f["stats"] for f in files)
+
+    day = datetime.date(2024, 1, 3)
+    got, info = t.read_pruned(spark, "date", equals=day)
+    assert info["files_read"] < info["files_total"], info
+    want = t.read(spark).filter(F.col("date") == F.lit(day))
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+    assert got.count() == 100
+
+    got, info = t.read_pruned_multi(
+        spark, {"date": {"lower": day, "upper": datetime.date(2024, 1, 4)}}
+    )
+    assert info["files_read"] < info["files_total"] and got.count() == 200
+    got, info = t.read_pruned_in(spark, "date", [datetime.date(2024, 1, 1)])
+    assert info["files_read"] < info["files_total"] and got.count() == 100
+
+
 def test_read_pruned_empty_interval_preserves_schema(spark, tmp_path):
     t = _mk_stats_table(spark, tmp_path / "tbl")
     df, info = t.read_pruned(spark, "k", lower=50000)

@@ -19,7 +19,6 @@ from glamira_batch_processing_spark.operators.jpegcodec import (
 from glamira_batch_processing_spark.operators.video import (
     AviInfo,
     avi_bytes,
-    extract_video_frames,
     mjpeg_video_bytes,
     parse_avi,
     sample_video_frames,
@@ -128,13 +127,6 @@ class TestSparkOperators:
         for i in range(6):
             n = 2 + i % 3
             assert sorted(by_doc[i]) == list(range(0, n, 2))
-
-    def test_extract_frames_decodable(self, payloads):
-        rows = extract_video_frames(payloads, every_n=1).collect()
-        assert len(rows) == sum(2 + i % 3 for i in range(6))
-        r = rows[0]
-        rgb = decode_jpeg(bytes(r["frame_bytes"]))
-        assert rgb.shape[2] == 3
 
     def test_every_n_validation(self, payloads):
         with pytest.raises(ValueError):

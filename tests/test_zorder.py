@@ -107,75 +107,6 @@ def test_training_shards_deterministic_and_complete(spark, tmp_path):
     assert mismatch == 0
 
 
-def test_write_with_bloom_behavioral(spark, tmp_path):
-    """Bloom-filtered parquet: strictly larger files (the serialized
-    filter), identical content, identical point-filter results."""
-    import glob
-    import os
-
-    from glamira_batch_processing_spark.sources.writers import write_with_bloom
-
-    df = spark.range(50000).selectExpr(
-        "id", "cast(id * 2654435761 % 99991 as string) as key"
-    )
-    plain, bloomed = str(tmp_path / "plain"), str(tmp_path / "bloom")
-    df.coalesce(1).write.mode("overwrite").parquet(plain)
-    write_with_bloom(df.coalesce(1), bloomed, ["key"], expected_ndv=100_000)
-    size = lambda d: sum(
-        os.path.getsize(f) for f in glob.glob(d + "/*.parquet")
-    )
-    assert size(bloomed) > size(plain)
-    a = spark.read.parquet(plain)
-    b = spark.read.parquet(bloomed)
-    assert a.count() == b.count() == 50000
-    probe = "key = '12345'"
-    assert sorted(r.id for r in a.filter(probe).collect()) == sorted(
-        r.id for r in b.filter(probe).collect()
-    )
-
-
-def test_backfill_partitions_replaces_only_touched_days(spark, tmp_path):
-    """Round 6: dynamic partition overwrite — re-running one day must
-    replace that day's partition and leave every other day byte-level
-    untouched (plain overwrite+partitionBy truncates the whole table)."""
-    import os
-
-    from glamira_batch_processing_spark.sources.writers import (
-        backfill_partitions,
-        write_partitioned,
-    )
-
-    path = str(tmp_path / "fact")
-    base = spark.createDataFrame(
-        [("2024-01-01", 1, 10.0), ("2024-01-02", 2, 20.0), ("2024-01-03", 3, 30.0)],
-        "date string, k long, v double",
-    )
-    write_partitioned(base, path, partition_col="date")
-    d1_files = set(os.listdir(f"{path}/date=2024-01-01"))
-    d3_files = set(os.listdir(f"{path}/date=2024-01-03"))
-
-    # backfill ONLY day 2 with corrected rows
-    fix = spark.createDataFrame(
-        [("2024-01-02", 2, 99.0), ("2024-01-02", 4, 40.0)],
-        "date string, k long, v double",
-    )
-    backfill_partitions(fix, path, partition_col="date")
-
-    got = {
-        (str(r.date), r.k, r.v)  # partition col reads back as DATE
-        for r in spark.read.parquet(path).collect()
-    }
-    assert got == {
-        ("2024-01-01", 1, 10.0),
-        ("2024-01-02", 2, 99.0),
-        ("2024-01-02", 4, 40.0),
-        ("2024-01-03", 3, 30.0),
-    }
-    # untouched partitions keep their exact files (no rewrite)
-    assert set(os.listdir(f"{path}/date=2024-01-01")) == d1_files
-    assert set(os.listdir(f"{path}/date=2024-01-03")) == d3_files
-
-
 def test_zorder_string_column_prunes_after_prefix_strip(spark, tmp_path):
     """String z-order (round 7): keys sharing a long common prefix
     ('user-...') must still cluster — the prefix is stripped before the
