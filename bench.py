@@ -255,6 +255,37 @@ def main() -> None:
     print(line)
 
 
+def _artifact_record(path: Path) -> dict | None:
+    """The bench record a committed JSON file holds: a driver artifact's
+    ``parsed`` payload, or the file itself (``BENCH_SUMMARY.json``).
+    ``{}`` for an artifact of a run that printed no record
+    (``parsed: null``), None for an unreadable file."""
+    try:
+        rec = json.loads(path.read_text())
+    except (OSError, ValueError):
+        return None
+    if not isinstance(rec, dict):
+        return None
+    rec = rec.get("parsed", rec)
+    return rec if isinstance(rec, dict) else {}
+
+
+def _same_run(a: dict, b: dict) -> bool:
+    """Whether two bench records can be one run's: equal, recorded
+    headline totals, and never two different recorded core counts."""
+    if a.get("cpus") is not None and b.get("cpus") is not None and a["cpus"] != b["cpus"]:
+        return False
+    return a.get("value") is not None and a.get("value") == b.get("value")
+
+
+def _same_cpus_or_total(a: dict, b: dict) -> bool:
+    """Whether ``a`` was taken at ``b``'s core count; by the headline
+    total only when either record predates the ``cpus`` field."""
+    if a.get("cpus") is not None and b.get("cpus") is not None:
+        return a["cpus"] == b["cpus"]
+    return _same_run(a, b)
+
+
 def _load_prior_queries(repo_dir: Path) -> tuple[str, dict[str, float], str]:
     """Best prior per-query medians for the like-for-like comparison.
 
@@ -262,8 +293,9 @@ def _load_prior_queries(repo_dir: Path) -> tuple[str, dict[str, float], str]:
       1. The latest committed ``BENCH_r*.json`` whose ``parsed`` payload
          carries a queries map, upgraded to full precision from the
          committed ``BENCH_SUMMARY.json`` when that summary came from the
-         same run: same headline total AND the artifact's name set is a
-         SUBSET of the summary's. (Since round 12 the stdout map is the
+         same run: same headline total, no conflicting recorded
+         ``cpus``, AND the artifact's name set is a SUBSET of the
+         summary's. (Since round 12 the stdout map is the
          pinned 20-name tier only, so the artifact's map is always a
          strict subset of the summary's full map — set-equality would
          never match and the comparison would silently collapse to 20
@@ -277,36 +309,33 @@ def _load_prior_queries(repo_dir: Path) -> tuple[str, dict[str, float], str]:
          stale/restored summary that provably belongs to an older round
          must not shadow that round's own artifact.
 
+    A summary recorded at the core count of a suffixed scaling-rerun
+    artifact (``BENCH_r14_c8.json``) is that rerun's record and is never
+    used; records from before the ``cpus`` field fall back to matching
+    the headline total.
+
     Returns ``(source_name, queries_map, precision)``; empty map means no
     usable prior exists and the same-set fields are omitted.
     """
-    summary: dict = {}
-    try:
-        s = json.loads(repo_dir.joinpath("BENCH_SUMMARY.json").read_text())
-        if isinstance(s, dict) and isinstance(s.get("queries"), dict):
-            summary = s
-    except (OSError, ValueError):
-        pass
+    summary = _artifact_record(repo_dir / "BENCH_SUMMARY.json") or {}
+    if not isinstance(summary.get("queries"), dict):
+        summary = {}
     # Only the driver's MAIN per-round artifacts qualify as a prior.
     # Suffixed variants (e.g. BENCH_r14_c8.json, the low-core scaling
     # rerun) are measurements under a different core count; comparing
     # the next full-core run against them would misread every ratio.
     parsed_artifacts: list[tuple[str, dict | None]] = []
-    variant_values: set = set()
+    variants: list[dict] = []
     for artifact in sorted(repo_dir.glob("BENCH_r*.json"), reverse=True):
-        try:
-            prev = json.loads(artifact.read_text())
-        except (OSError, ValueError):
+        prev = _artifact_record(artifact)
+        if prev is None:
             continue  # a malformed prior artifact never blocks the bench
-        if not isinstance(prev, dict):
-            continue
-        prev = prev.get("parsed", prev)
-        ok = isinstance(prev, dict) and isinstance(prev.get("queries"), dict)
+        ok = isinstance(prev.get("queries"), dict)
         if re.fullmatch(r"BENCH_r\d+\.json", artifact.name):
             parsed_artifacts.append((artifact.name, prev if ok else None))
         elif ok:
-            variant_values.add(prev.get("value"))
-    if summary and summary.get("value") in variant_values:
+            variants.append(prev)
+    if summary and any(_same_cpus_or_total(summary, v) for v in variants):
         # The committed summary is a suffixed variant run's full record
         # (the scaling rerun overwrites BENCH_SUMMARY.json after the
         # main run — live repo state after round 14). Its timings are
@@ -320,7 +349,7 @@ def _load_prior_queries(repo_dir: Path) -> tuple[str, dict[str, float], str]:
             # (else it is that older round's data, restored; continue
             # the walk and let that artifact represent itself).
             if summary and not any(
-                p is not None and summary.get("value") == p.get("value")
+                p is not None and _same_run(summary, p)
                 for _, p in parsed_artifacts[i + 1 :]
             ):
                 return "BENCH_SUMMARY.json", dict(summary["queries"]), "full"
@@ -334,7 +363,7 @@ def _load_prior_queries(repo_dir: Path) -> tuple[str, dict[str, float], str]:
         # 67+ name set instead of the pinned 20.
         if (
             summary
-            and summary.get("value") == prev.get("value")
+            and _same_run(summary, prev)
             and set(pq) <= set(summary.get("queries", {}))
         ):
             return name, dict(summary["queries"]), "full"
@@ -399,8 +428,14 @@ def build_summaries(
     src, pq, precision = _load_prior_queries(repo_dir)
     if pq:
         shared = [n for n in timings if n in pq]
+        prior = _artifact_record(repo_dir / src) or {}
         summary["sameset_vs"] = src
         summary["sameset_prev_precision"] = precision
+        # The prior's conditions, so the comparison explains itself: it
+        # is like-for-like only at the same recorded core count.
+        summary["sameset_prev_cpus"] = prior.get("cpus")
+        summary["sameset_prev_loadavg_1m"] = prior.get("loadavg_1m")
+        summary["sameset_like_for_like"] = prior.get("cpus") == summary["cpus"]
         summary["sameset_n"] = len(shared)
         summary["sameset_total"] = round(sum(timings[n] for n in shared), 3)
         summary["sameset_prev_total"] = round(

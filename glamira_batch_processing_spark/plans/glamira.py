@@ -146,40 +146,39 @@ def build_glamira_pipeline(
 
     @p.model("stg_customer")
     def stg_customer(p: Pipeline) -> DataFrame:
-        """ref: models/staging/stg_customer.sql — user status classify,
-        join back, email multiplicity flag, distinct pairs."""
+        """ref: models/staging/stg_customer.sql — one row per distinct
+        (email, user id string) pair of VALID users, flagged Unique or
+        Multiple by the email's count of distinct user id strings.
+
+        One aggregation replaces the reference's four steps:
+        - ``user_check`` (lines 3-14) groups by ``user_id_db`` and the
+          join back (16-26) keeps the rows whose group is VALID. The
+          status is a function of the group key, and a VALID key is
+          non-null, so it matches its own group only: the join back is
+          a filter on the row's own status.
+        - ``email_base`` (28-39) counts distinct id strings per email,
+          the distinct pairs (41-47) list them and the join (49-55) puts
+          the two together; ``collect_set`` per email gives both, so
+          ``explode`` yields the pairs and ``size`` the count (never 0,
+          so the reference's "Unknown" branch cannot occur).
+        Ids stay strings until the final cast, so ``"012"`` and ``"12"``
+        remain two pairs (and two distinct ids) as in the reference."""
         src = p.source("countly_summary")
-        user_check = (
-            src.groupBy("user_id_db")
-            .agg(F.count("*").alias("_n"))
-            .select(
-                "user_id_db", user_id_status(F.col("user_id_db")).alias("user_status")
-            )
+        checked = src.filter(
+            (user_id_status(F.col("user_id_db")) == "VALID")
+            & F.col("email_address").isNotNull()
+            & (F.trim("email_address") != "")
+        ).select("email_address", F.col("user_id_db").cast("string").alias("user_db_id"))
+        per_email = checked.groupBy("email_address").agg(
+            F.collect_set("user_db_id").alias("user_db_ids")
         )
-        checked = (
-            user_check.join(src, "user_id_db")
-            .filter(
-                F.col("email_address").isNotNull()
-                & (F.trim("email_address") != "")
-                & (F.col("user_status") == "VALID")
-            )
-            .select("email_address", F.col("user_id_db").cast("string").alias("user_db_id"))
-        )
-        email_base = checked.groupBy("email_address").agg(
-            F.when(F.countDistinct("user_db_id") == 1, "Unique")
-            .when(F.countDistinct("user_db_id") > 1, "Multiple")
-            .otherwise("Unknown")
-            .alias("has_email_multiple_user_ids")
-        )
-        pairs = checked.distinct()
-        return (
-            pairs.join(email_base, "email_address")
-            .select(
-                "email_address",
-                F.col("user_db_id").try_cast("long").alias("user_db_id"),
-                "has_email_multiple_user_ids",
-            )
-        )
+        return per_email.select(
+            "email_address",
+            F.explode("user_db_ids").alias("user_db_id"),
+            F.when(F.size("user_db_ids") == 1, "Unique")
+            .otherwise("Multiple")
+            .alias("has_email_multiple_user_ids"),
+        ).withColumn("user_db_id", F.col("user_db_id").try_cast("long"))
 
     @p.model("stg_product")
     def stg_product(p: Pipeline) -> DataFrame:
@@ -249,11 +248,15 @@ def build_glamira_pipeline(
     @p.model("customer_email_scd", materialized="table")
     def customer_email_scd(p: Pipeline) -> DataFrame:
         """ref: snapshots/customer_email_scd.sql — per-event append-only
-        SCD2 history of (user, email) with recency rank."""
+        SCD2 history of (user, email) with recency rank.
+
+        The reference's inner join to the customers (lines 26-31) only
+        keeps orders whose user is a known customer; a left-semi join
+        says exactly that, without deduplicating the customer side."""
         o = p.ref("stg_order")
         c = p.ref("stg_customer")
         fact = (
-            o.join(c.select("user_db_id").distinct(), "user_db_id")
+            o.join(c.select("user_db_id"), "user_db_id", "left_semi")
             .filter(
                 F.col("user_db_id").isNotNull()
                 & F.col("email_address").isNotNull()
@@ -273,44 +276,49 @@ def build_glamira_pipeline(
 
     @p.model("mart_dim_customer", materialized="table")
     def mart_dim_customer(p: Pipeline) -> DataFrame:
-        """ref: models/marts/mart_dim_customer.sql — latest email per
-        (email,user) from the SCD history wins over staging email."""
+        """ref: models/marts/mart_dim_customer.sql — one row per user
+        (the dim key is unique): the latest email seen in the SCD
+        history wins over the normalized staging email (line 8), keyed
+        by the email's hash (line 67).
+
+        Two steps replace the reference's three:
+        - its latest row per (email, user) (lines 24-40), then one per
+          user on (latest time, smallest email), is one dedupe per user
+          on that order;
+        - its merge-back onto every staging row of the user, then one
+          row per user on (latest time, smallest email), gives a user
+          with history its latest email and a user without the smallest
+          staging email: a per-user ``min`` joined to the latest row.
+        The second step rests on two invariants:
+        - staging emails are non-null after normalization
+          (``stg_customer`` drops NULL and blank emails, and
+          ``normalize_email`` of a non-null string is non-null), so
+          ``min`` picks what an ascending nulls-first order picks;
+        - the latest-per-user row's email is non-null (the SCD drops
+          NULL and blank emails too), so ``coalesce`` falls back to the
+          staging email only for users with no SCD history."""
         c = p.ref("stg_customer")
         scd = p.ref("customer_email_scd")
         latest = dedupe_latest(
-            scd.select("email_address", "user_db_id", F.col("time")),
-            ["email_address", "user_db_id"],
-            [F.desc("time")],
+            scd.select("user_db_id", "email_address", "time"),
+            ["user_db_id"],
+            [F.desc("time"), F.col("email_address")],
         ).select(
             "user_db_id",
             F.col("email_address").alias("latest_seen_email_address"),
             F.col("time").alias("last_seen_ts"),
         )
-        # One latest row per user for the merge-back (deterministic).
-        latest_per_user = dedupe_latest(
-            latest, ["user_db_id"], [F.desc("last_seen_ts"), F.col("latest_seen_email_address")]
+        original = c.groupBy("user_db_id").agg(
+            F.min(normalize_email(F.col("email_address"))).alias("original_email_address")
         )
-        merged = c.select(
-            "user_db_id", normalize_email(F.col("email_address")).alias("original_email_address")
-        ).join(latest_per_user, "user_db_id", "left")
-        final = merged.select(
+        final = original.join(latest, "user_db_id", "left").select(
             "user_db_id",
             F.coalesce("latest_seen_email_address", "original_email_address").alias(
                 "email_address_final"
             ),
             "last_seen_ts",
         )
-        # One row per user: multi-email users collapse to the latest-seen
-        # email (deterministic tiebreak), keeping customer_key joinable
-        # from the fact (schema.yml declares the dim key unique).
-        one_per_user = dedupe_latest(
-            final.distinct(),
-            ["user_db_id"],
-            [F.desc("last_seen_ts"), F.col("email_address_final")],
-        )
-        return one_per_user.withColumn(
-            "customer_key", F.xxhash64("email_address_final")
-        )
+        return final.withColumn("customer_key", F.xxhash64("email_address_final"))
 
     @p.model("mart_dim_product", materialized="table")
     def mart_dim_product(p: Pipeline) -> DataFrame:

@@ -38,6 +38,7 @@ import uuid
 from pathlib import Path
 
 from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from ..operators.incremental import merge_upsert
 
@@ -59,12 +60,21 @@ class StagedWrite:
     def read(self, spark: "SparkSession") -> "DataFrame":
         """The staged snapshot, for audit queries. Uses the schema
         recorded at stage time — no parquet schema-inference job."""
-        reader = spark.read
-        if self.schema:
-            reader = reader.schema(
-                ", ".join(f"`{name}` {dtype}" for name, dtype in self.schema)
-            )
-        return reader.parquet(str(self.data_dir))
+        return _schema_reader(spark, self.schema).parquet(str(self.data_dir))
+
+
+def _schema_reader(spark: SparkSession, schema: dict | list | None):
+    """``spark.read`` with a recorded schema: a ``StructType.json()``
+    document, or — in manifests written before it — ``[name,
+    simpleString]`` pairs, read as DDL. simpleString leaves nested field
+    names unquoted, so only the JSON form round-trips every name. With
+    no recorded schema the reader infers it from the files."""
+    reader = spark.read
+    if isinstance(schema, dict):
+        return reader.schema(StructType.fromJson(schema))
+    if schema:
+        return reader.schema(", ".join(f"`{name}` {dtype}" for name, dtype in schema))
+    return reader
 
 
 class VersionConflictError(RuntimeError):
@@ -316,7 +326,7 @@ class VersionedTable:
         operation: str,
         txn_id: str | None = None,
         files: list[dict] | None = None,
-        schema: list[list[str]] | None = None,
+        schema: dict | list | None = None,
         cleanup_on_conflict: bool = True,
         extra: dict | None = None,
     ) -> None:
@@ -325,7 +335,7 @@ class VersionedTable:
         racing writers. ``txn_id`` is an optional idempotence token
         recorded in the manifest (see :meth:`merge`); ``files`` is the
         optional per-file stats list (see ``stat_columns``); ``schema``
-        is the committed column list ([name, type] pairs) so readers
+        is the committed schema (``StructType.json()``) so readers
         can see the schema history without opening data files."""
         import os
 
@@ -370,7 +380,7 @@ class VersionedTable:
 
     def _write_data_with_stats(
         self, df: DataFrame, data_dir: Path
-    ) -> tuple[list[dict] | None, list[list[str]]]:
+    ) -> tuple[list[dict] | None, dict]:
         """Write ``df`` under ``data_dir`` and collect the per-file
         footer stats + schema every manifest records. Shared by the
         committed path (:meth:`_write_version`) and the staged path
@@ -411,8 +421,7 @@ class VersionedTable:
                 }
                 for p, rows, stats in results
             ]
-        schema = [[f.name, f.dataType.simpleString()] for f in df.schema.fields]
-        return files, schema
+        return files, json.loads(df.schema.json())
 
     def _write_version(
         self,
@@ -575,16 +584,10 @@ class VersionedTable:
         MERGE, compact, diff, pruned probe — was paying one small
         driver-blocking job per read just to rediscover a schema the
         control plane already knows). Spark marks file-source schemas
-        nullable either way, so the DDL round-trip (simpleString) is
-        exactly the inferred schema. Manifests without a recorded
-        schema (pre-round-6 tables) fall back to inference."""
-        reader = spark.read
-        schema = m.get("schema")
-        if schema:
-            reader = reader.schema(
-                ", ".join(f"`{name}` {dtype}" for name, dtype in schema)
-            )
-        return reader
+        nullable either way, so the recorded schema is exactly the
+        inferred one. Manifests without a recorded schema (pre-round-6
+        tables) fall back to inference."""
+        return _schema_reader(spark, m.get("schema"))
 
     def read(self, spark: SparkSession, version: int | None = None) -> DataFrame:
         """Snapshot read: latest (default) or time-travel to ``version``.

@@ -229,6 +229,52 @@ def test_scaling_rerun_artifact_and_summary_never_become_the_prior(tmp_path):
     assert pq == {"a": 1.0}
 
 
+def test_main_and_variant_sharing_a_total_are_told_apart_by_cpus(tmp_path):
+    """ADVICE bench.py:280: a main run and its scaling rerun can print
+    the same headline total. The summary's recorded ``cpus`` says whose
+    record it is: the main run's upgrades the prior to full precision,
+    the rerun's is discarded and never upgrades the main artifact."""
+    main = {"rc": 0, "parsed": {"value": 50.0, "cpus": 32, "queries": {"a": 1.0}}}
+    c8 = {"rc": 0, "parsed": {"value": 50.0, "cpus": 8, "queries": {"a": 2.0}}}
+    tmp_path.joinpath("BENCH_r16.json").write_text(json.dumps(main))
+    tmp_path.joinpath("BENCH_r16_c8.json").write_text(json.dumps(c8))
+    summary = tmp_path.joinpath("BENCH_SUMMARY.json")
+    summary.write_text(json.dumps({"value": 50.0, "cpus": 32, "queries": {"a": 1.0041, "b": 3.0}}))
+    assert bench._load_prior_queries(tmp_path) == (
+        "BENCH_r16.json", {"a": 1.0041, "b": 3.0}, "full"
+    )
+    summary.write_text(json.dumps({"value": 50.0, "cpus": 8, "queries": {"a": 2.0041, "b": 6.0}}))
+    assert bench._load_prior_queries(tmp_path) == ("BENCH_r16.json", {"a": 1.0}, "stdout_2dp")
+
+
+def test_records_without_totals_never_match(tmp_path):
+    """A summary and a variant that both lack ``value`` are not the same
+    run: with the main artifact crashed, the summary stands in for it."""
+    tmp_path.joinpath("BENCH_r16.json").write_text(json.dumps({"rc": 1, "parsed": None}))
+    tmp_path.joinpath("BENCH_r16_c8.json").write_text(
+        json.dumps({"rc": 0, "parsed": {"queries": {"a": 2.0}}})
+    )
+    tmp_path.joinpath("BENCH_SUMMARY.json").write_text(json.dumps({"queries": {"a": 3.0}}))
+    assert bench._load_prior_queries(tmp_path) == ("BENCH_SUMMARY.json", {"a": 3.0}, "full")
+
+
+def test_summary_records_prior_conditions(tmp_path, monkeypatch):
+    """The same-set fields carry the prior's ``cpus`` and load, and a
+    prior at another core count is marked not like-for-like."""
+    tmp_path.joinpath("BENCH_r16.json").write_text(json.dumps(
+        {"rc": 0, "parsed": {"value": 5.0, "cpus": 32, "loadavg_1m": 4.3, "queries": {"a": 1.0}}}
+    ))
+    timings = _fake_timings(20)
+    for cpus, like in (("32", True), ("4", False)):
+        monkeypatch.setenv("SPARK_GRAFT_CPUS", cpus)
+        line, _ = bench.build_summaries(timings, {k: 0.0 for k in timings}, "sf0.1", 3, tmp_path)
+        parsed = json.loads(line)
+        assert parsed["sameset_vs"] == "BENCH_r16.json"
+        assert parsed["sameset_prev_cpus"] == 32
+        assert parsed["sameset_prev_loadavg_1m"] == 4.3
+        assert parsed["sameset_like_for_like"] is like
+
+
 @pytest.mark.parametrize("raw", ["8 ", " 8", "8\n"])
 def test_cpus_accepts_padded_integer(raw, monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_CPUS", raw)

@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import threading
 import time
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -354,6 +355,201 @@ def test_mart_fact_usd_vs_duckdb(glamira, spark):
             assert (a is None or a != a) and (b is None or b != b), (k, a, b)
         else:
             assert abs(a - b) <= 1e-6 * max(1.0, abs(b)), (k, a, b)
+
+
+# Adversarial customer rows appended to the generator's events for the
+# reference-SQL differential below: user ids that cast to the same long
+# ("09001" / "9001") sharing an email, fake-null and blank ids, an id
+# that does not cast, a latest-time tie broken by the normalized email,
+# and users whose only emails come from non-checkout events.
+EDGE_EVENTS = (
+    # (user_id_db, email_address, time_stamp, is_checkout)
+    ("09001", "twin@edge.test", 1700000000, True),
+    ("9001", "twin@edge.test", 1700000100, True),
+    ("9001", "solo9001@edge.test", 1700000200, False),
+    ("9002", "Zed@edge.test", 1700000300, True),
+    ("9002", "alpha@edge.test", 1700000300, True),
+    ("9002", "older@edge.test", 1600000000, True),
+    ("9003", " Carol@edge.test ", 1700000400, False),
+    ("9003", "bob@edge.test", 1700000500, False),
+    ("9004", "aaa@edge.test", 1700000600, False),
+    ("9004", "zzz@edge.test", 1700000700, True),
+    ("9004", "   ", 1700000800, True),
+    ("abc9006", "nocast@edge.test", 1700000900, True),
+    ("abc9006", "nocast2@edge.test", 1700000950, False),
+    ("NULL", "fake@edge.test", 1700001000, True),
+    (" N/A ", "fake@edge.test", 1700001100, True),
+    ("None", "fake@edge.test", 1700001150, False),
+    ("", "fake@edge.test", 1700001200, True),
+    ("  ", "fake@edge.test", 1700001300, False),
+    (None, "fake@edge.test", 1700001400, True),
+    ("9007", None, 1700001500, True),
+    ("9007", "Shared@Edge.test", 1700001600, False),
+    ("9008", "shared@edge.test", 1700001700, True),
+)
+
+
+@pytest.fixture(scope="module")
+def customer_edge(spark, glamira, tmp_path_factory):
+    """The generator's raw events plus ``EDGE_EVENTS``, with the
+    customer branch (stg_customer -> customer_email_scd ->
+    mart_dim_customer) built over them."""
+    _, paths = glamira
+    base = tmp_path_factory.mktemp("customer_edge")
+    raw = spark.read.parquet(paths["raw_events"])
+    rows = [
+        {
+            **{f: None for f in raw.columns},
+            "order_id": f"EDGE{k}" if checkout else None,
+            "time_stamp": ts,
+            "collection": "checkout_success" if checkout else "view_product_detail",
+            "ip": "1.2.3.4",
+            "user_id_db": uid,
+            "store_id": "1",
+            "email_address": email,
+        }
+        for k, (uid, email, ts, checkout) in enumerate(EDGE_EVENTS)
+    ]
+    extra = spark.createDataFrame([tuple(r[f] for f in raw.columns) for r in rows], raw.schema)
+    edge_paths = {**paths, "raw_events": str(base / "raw_events.parquet")}
+    raw.unionByName(extra).write.parquet(edge_paths["raw_events"])
+    p = _pipeline(spark, edge_paths, str(base / "models"))
+    p.ref("mart_dim_customer")
+    return p, edge_paths
+
+
+# DuckDB transcriptions of the reference models as written: a status
+# per user_id_db joined back to the events, the per-email distinct-id
+# count joined to the distinct (email, id) pairs, and the two-step
+# latest-email dedupe merged back onto the staging emails. They share no
+# code with the Spark models, so agreeing with them does not rest on the
+# rewrites being right.
+REF_STG_CUSTOMER = """
+WITH user_check AS (                      -- stg_customer.sql:3-14
+  SELECT user_id_db,
+         CASE WHEN user_id_db IS NULL THEN 'NULL'
+              WHEN trim(user_id_db) = '' THEN 'EMPTY'
+              WHEN lower(trim(user_id_db)) IN ('null', 'n/a', 'na', 'none', 'undefined')
+                THEN 'FAKE_NULL'
+              ELSE 'VALID' END AS user_status
+  FROM raw_events
+  GROUP BY user_id_db
+),
+checked AS (                              -- stg_customer.sql:16-26
+  SELECT cs.email_address, CAST(cs.user_id_db AS VARCHAR) AS user_db_id
+  FROM user_check uc JOIN raw_events cs ON uc.user_id_db = cs.user_id_db
+  WHERE cs.email_address IS NOT NULL AND trim(cs.email_address) != ''
+    AND uc.user_status = 'VALID'
+),
+email_base AS (                           -- stg_customer.sql:28-39
+  SELECT email_address,
+         CASE WHEN count(DISTINCT user_db_id) = 1 THEN 'Unique'
+              WHEN count(DISTINCT user_db_id) > 1 THEN 'Multiple'
+              ELSE 'Unknown' END AS has_email_multiple_user_ids
+  FROM checked
+  GROUP BY email_address
+),
+email_user_pairs AS (                     -- stg_customer.sql:41-47
+  SELECT DISTINCT email_address, user_db_id FROM checked
+)
+SELECT p.email_address,                   -- stg_customer.sql:49-55
+       TRY_CAST(p.user_db_id AS BIGINT) AS user_db_id,
+       b.has_email_multiple_user_ids
+FROM email_user_pairs p JOIN email_base b USING (email_address)
+"""
+
+REF_MART_DIM_CUSTOMER = """
+WITH scd AS (                             -- customer_email_scd.sql:26-31
+  SELECT TRY_CAST(e.user_id_db AS BIGINT) AS user_db_id,
+         lower(trim(e.email_address)) AS email_address,
+         e.time_stamp AS time
+  FROM raw_events e
+  JOIN (SELECT DISTINCT user_db_id FROM stg_customer) c
+    ON TRY_CAST(e.user_id_db AS BIGINT) = c.user_db_id
+  WHERE e.collection = 'checkout_success'
+    AND e.email_address IS NOT NULL AND trim(e.email_address) != ''
+),
+latest AS (                               -- mart_dim_customer.sql:24-40
+  SELECT user_db_id, email_address AS latest_seen_email_address, time AS last_seen_ts
+  FROM (SELECT *, row_number() OVER (PARTITION BY email_address, user_db_id
+                                     ORDER BY time DESC NULLS LAST) AS rn
+        FROM scd)
+  WHERE rn = 1
+),
+latest_per_user AS (
+  SELECT * FROM (
+    SELECT *, row_number() OVER (
+      PARTITION BY user_db_id
+      ORDER BY last_seen_ts DESC NULLS LAST, latest_seen_email_address ASC NULLS FIRST) AS rn
+    FROM latest)
+  WHERE rn = 1
+),
+merged AS (
+  SELECT DISTINCT c.user_db_id,
+         coalesce(l.latest_seen_email_address, lower(trim(c.email_address))) AS email_address_final,
+         l.last_seen_ts
+  FROM stg_customer c LEFT JOIN latest_per_user l ON c.user_db_id = l.user_db_id
+)
+SELECT user_db_id, email_address_final, last_seen_ts FROM (
+  SELECT *, row_number() OVER (
+    PARTITION BY user_db_id
+    ORDER BY last_seen_ts DESC NULLS LAST, email_address_final ASC NULLS FIRST) AS rn
+  FROM merged)
+WHERE rn = 1
+"""
+
+
+def _multiset(rows) -> Counter:
+    return Counter(tuple(None if v != v else v for v in row) for row in rows)
+
+
+def _reference_duck(paths):
+    import duckdb
+
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW raw_events AS SELECT * FROM '{paths['raw_events']}/*.parquet'"
+    )
+    con.execute(f"CREATE VIEW stg_customer AS {REF_STG_CUSTOMER}")
+    return con
+
+
+def test_stg_customer_equals_reference_sql(customer_edge):
+    """stg_customer is the reference's four-step model, row for row,
+    including the two rows ``"09001"`` and ``"9001"`` leave for one
+    shared email."""
+    p, paths = customer_edge
+    con = _reference_duck(paths)
+    want = _multiset(con.sql("SELECT * FROM stg_customer").fetchall())
+    got = _multiset(
+        p.ref("stg_customer")
+        .select("email_address", "user_db_id", "has_email_multiple_user_ids")
+        .collect()
+    )
+    assert got == want
+    assert want[("twin@edge.test", 9001, "Multiple")] == 2
+    assert not any(email == "fake@edge.test" for email, _, _ in want)
+
+
+def test_mart_dim_customer_equals_reference_sql(customer_edge):
+    """mart_dim_customer is the reference's dedupe / merge-back / one
+    row per user over reference-SQL staging and history rows."""
+    p, paths = customer_edge
+    con = _reference_duck(paths)
+    want = _multiset(con.sql(REF_MART_DIM_CUSTOMER).fetchall())
+    got = _multiset(
+        p.ref("mart_dim_customer")
+        .select("user_db_id", "email_address_final", F.unix_seconds("last_seen_ts"))
+        .collect()
+    )
+    assert got == want
+    finals = {user: email for user, email, _ in want}
+    # tie at the latest time -> smallest normalized email; no history ->
+    # smallest staging email; history -> latest email over staging
+    assert finals[9002] == "alpha@edge.test"
+    assert finals[9003] == "bob@edge.test"
+    assert finals[9004] == "zzz@edge.test"
+    assert finals[None] == "nocast2@edge.test"
 
 
 def test_incremental_fact_run(glamira, spark, tmp_path):

@@ -842,3 +842,61 @@ def test_shard_balance_rank_window_is_partitioned(spark):
     # The SinglePartition exchange's child is the histogram aggregate,
     # not a corpus scan.
     assert "HashAggregate" in lines[singles[0] + 1], plan
+
+
+@pytest.fixture(scope="module")
+def customer_branch(spark, tmp_path_factory):
+    """Executed plans of the warehouse's customer models over the test
+    generator's events, keyed by model name. ``customer_email_scd`` is
+    materialized first, as ``mart_dim_customer`` reads it back."""
+    from glamira_batch_processing_spark.plans.glamira import build_glamira_pipeline
+    from glamira_batch_processing_spark.sources.raw_generator import write_raw_tables
+
+    base = tmp_path_factory.mktemp("customer_branch")
+    paths = write_raw_tables(spark, str(base / "raw"), n_events=2000)
+    read = spark.read.parquet
+    p = build_glamira_pipeline(
+        spark, read(paths["raw_events"]), read(paths["raw_product"]),
+        read(paths["raw_ip_locations"]), workdir=str(base / "models"),
+    )
+    p.ref("customer_email_scd")
+    plans = {}
+    for name in ("stg_customer", "customer_email_scd", "mart_dim_customer"):
+        df = p.models[name].fn(p)
+        df.collect()  # AQE's final plan
+        plans[name] = df._jdf.queryExecution().executedPlan()
+    return plans
+
+
+def _nodes(plan):
+    from glamira_batch_processing_spark.plans.metrics import _walk
+
+    return list(_walk(plan))
+
+
+def _shuffles(plan) -> int:
+    return sum("ShuffleExchange" in n.getClass().getName() for n in _nodes(plan))
+
+
+def test_customer_branch_exchange_counts(customer_branch):
+    """One shuffle per step of the customer branch, counted as plan
+    nodes (not bytes), so the budget is the same at any core count:
+    stg_customer is one aggregation per email, and mart_dim_customer
+    adds only the per-user aggregate and the per-user latest dedupe."""
+    assert _shuffles(customer_branch["stg_customer"]) == 1
+    assert _shuffles(customer_branch["mart_dim_customer"]) <= 3
+
+
+def test_customer_email_scd_user_filter_is_semi_join(customer_branch):
+    """The known-customer filter is a left-semi join that leaves the
+    stg_order side unshuffled; the only shuffles are stg_customer's
+    aggregation and the recency window."""
+    plan = customer_branch["customer_email_scd"]
+    semis = [
+        n for n in _nodes(plan)
+        if n.getClass().getName().endswith("JoinExec")
+        and n.joinType().toString() == "LeftSemi"
+    ]
+    assert len(semis) == 1, plan.toString()
+    assert _shuffles(semis[0].left()) == 0, plan.toString()
+    assert _shuffles(plan) == 2, plan.toString()

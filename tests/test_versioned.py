@@ -10,6 +10,7 @@ from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from glamira_batch_processing_spark.sources.versioned import (
     VersionConflictError,
@@ -496,12 +497,12 @@ def test_merge_additive_schema_evolution(spark, tmp_path):
     # time travel: version 0 keeps its original 2-column schema
     assert t.read(spark, version=0).columns == ["k", "v"]
     # manifest schema history is inspectable without reading data
-    assert t.manifest(0)["schema"] == [["k", "bigint"], ["v", "string"]]
-    assert t.manifest(1)["schema"] == [
-        ["k", "bigint"],
-        ["v", "string"],
-        ["score", "bigint"],
-    ]
+    def columns(v):
+        return [(f.name, f.dataType.simpleString())
+                for f in StructType.fromJson(t.manifest(v)["schema"]).fields]
+
+    assert columns(0) == [("k", "bigint"), ("v", "string")]
+    assert columns(1) == [("k", "bigint"), ("v", "string"), ("score", "bigint")]
     # reconcile_read handles the union of raw version directories
     from glamira_batch_processing_spark.sources.readers import reconcile_read
 
@@ -514,6 +515,38 @@ def test_merge_additive_schema_evolution(spark, tmp_path):
     union = reconcile_read(spark, paths)
     assert set(union.columns) == {"k", "v", "score"}
     assert union.count() == 5  # 2 rows in v0 + 3 in v1
+
+
+def test_nested_field_name_with_space_and_colon_round_trips(spark, tmp_path):
+    """The manifest stores ``StructType.json()``: a nested field name
+    that simpleString leaves unquoted (``"a b:c"``) survives create ->
+    merge -> read with the schema taken from the manifest."""
+    schema = "k long, s struct<`a b:c`: long, plain: string>"
+    t = VersionedTable(tmp_path / "tbl")
+    t.create(spark.createDataFrame([(1, (10, "x")), (2, (20, "y"))], schema))
+    t.merge(spark, spark.createDataFrame([(2, (21, "Y")), (3, (30, "z"))], schema), keys=["k"])
+    df = t.read(spark)
+    assert df.schema["s"].dataType.fieldNames() == ["a b:c", "plain"]
+    got = sorted((r.k, r["s"]["a b:c"], r["s"]["plain"]) for r in df.collect())
+    assert got == [(1, 10, "x"), (2, 21, "Y"), (3, 30, "z")]
+
+
+def test_legacy_pair_schema_manifest_still_reads(spark, tmp_path):
+    """A manifest written before the JSON schema, with ``[name,
+    simpleString]`` pairs, is read through them as DDL."""
+    import json
+
+    t = VersionedTable(tmp_path / "tbl")
+    t.create(spark.createDataFrame([(1, "a")], "k long, v string"))
+    path = t._manifest_path(0)
+    m = json.loads(path.read_text())
+    m["schema"] = [["k", "bigint"], ["v", "string"]]
+    path.write_text(json.dumps(m))
+    df = t.read(spark)
+    assert [(f.name, f.dataType.simpleString()) for f in df.schema.fields] == [
+        ("k", "bigint"), ("v", "string")
+    ]
+    assert [(r.k, r.v) for r in df.collect()] == [(1, "a")]
 
 
 def test_merge_source_missing_column_null_fills_inserts(spark, tmp_path):
