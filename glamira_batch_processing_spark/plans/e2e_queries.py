@@ -1,11 +1,15 @@
-"""Flagship end-to-end contract query: the Glamira order-flattening
+"""Flagship end-to-end contract queries: the Glamira order-flattening
 spine expressed over the driver's TPC-H-ish tables.
 
-Builds nested cart_products from lineitem (collect_list of structs),
-then runs the reference's stg_order semantics — null-preserving double
-flatten, localized price parse, composite item key, line totals — and
-a revenue rollup. Exercises J1+F3+F5+F7+A-family in one plan, with a
-full DuckDB oracle.
+``_tpch_carts`` is the one raw-cart builder: it maps lineitem onto
+countly's nested cart_products[] (collect_list of item structs with
+localized price strings, currency labels and option arrays), and
+``glamira_pipeline_e2e`` feeds the same carts to the warehouse DAG.
+Over them ``glamira_e2e_order_flatten`` runs the reference's stg_order
+semantics — null-preserving double flatten, localized price parse,
+composite item key, line totals — and ``glamira_e2e_revenue_rollup``
+rolls the parsed prices up by nation and month. Exercises
+J1+F3+F5+F7+A-family in one plan, with a full DuckDB oracle.
 """
 
 from __future__ import annotations
@@ -16,6 +20,7 @@ from pyspark.sql import functions as F
 from ..functions.cleaning import parse_localized_number, parse_localized_number_sql
 from ..functions.keys import key_input
 from .registry import fan_out, query, table
+from .scalar_queries import _label_for
 
 # Localized price string variants built from the 2dp decimal rendering
 # of l_extendedprice (same trick as f3, keyed by orderkey+linenumber).
@@ -43,6 +48,78 @@ _OPTS_SQL = f"""
             ELSE CAST(NULL AS {_OPT_TYPE_SQL})
           END
 """
+
+
+def _price_raw(ok, ln):
+    """Spark twin of ``_PRICE_SQL``: the localized price-string variant
+    of l_extendedprice's 2dp rendering, keyed by orderkey+linenumber."""
+    base = F.col("l_extendedprice").cast("decimal(12,2)").cast("string")
+    return (
+        F.when((ok + ln) % 4 == 0, F.replace(base, F.lit("."), F.lit(",")))
+        .when((ok + ln) % 4 == 1, F.concat(F.lit("1."), F.replace(base, F.lit("."), F.lit(","))))
+        .when((ok + ln) % 4 == 2, F.concat(F.lit("1,"), base))
+        .otherwise(base)
+    )
+
+
+def _tpch_carts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``(l_orderkey, cart)``: each order's countly cart_products[], the
+    sorted list of item structs (ln, product_id, amount, price,
+    currency, option) built from its lineitem rows.
+
+    ``glamira_e2e_order_flatten`` never reads ``currency``, and
+    carrying it does not change the sort order: currency and option are
+    both functions of (l_orderkey, l_partkey), so two items that tie on
+    (ln, product_id, amount, price) are equal in every field."""
+    # Hash-repartition the narrow raw columns by the groupBy key before
+    # building the structs: the struct build runs in parallel instead of
+    # on the single-task scan, and the collect_list groupBy reuses this
+    # partitioning, so no exchange is added and the one that remains
+    # carries the raw columns instead of built structs.
+    li = fan_out(
+        table(spark, sf_dir, "lineitem").select(
+            "l_orderkey",
+            "l_linenumber",
+            "l_partkey",
+            "l_quantity",
+            "l_extendedprice",
+        ),
+        "l_orderkey",
+    )
+    ok, ln, pk = F.col("l_orderkey"), F.col("l_linenumber"), F.col("l_partkey")
+    opt_type = "array<struct<option_id:string,option_label:string>>"
+    opts = (
+        F.when(
+            pk % 3 == 0,
+            F.array(
+                F.struct(
+                    F.concat(F.lit("opt"), (pk % 7).cast("string")).alias("option_id"),
+                    F.lit("stone").alias("option_label"),
+                ),
+                F.struct(
+                    F.concat(F.lit("opt"), ((pk + 1) % 7).cast("string")).alias("option_id"),
+                    F.lit("metal").alias("option_label"),
+                ),
+            ),
+        )
+        .when(pk % 3 == 1, F.array().cast(opt_type))
+        .otherwise(F.lit(None).cast(opt_type))
+    )
+    items = li.select(
+        "l_orderkey",
+        F.struct(
+            ln.alias("ln"),
+            pk.alias("product_id"),
+            F.col("l_quantity").cast("long").alias("amount"),
+            _price_raw(ok, ln).alias("price"),
+            _label_for(ok + pk).alias("currency"),
+            opts.alias("option"),
+        ).alias("item"),
+    )
+    return items.groupBy("l_orderkey").agg(
+        F.array_sort(F.collect_list("item")).alias("cart")
+    )
+
 
 @query(
     "glamira_e2e_order_flatten",
@@ -111,63 +188,7 @@ def glamira_e2e_order_flatten(spark: SparkSession, sf_dir: str) -> DataFrame:
     UNNEST WITH OFFSET (posexplode_outer x2) -> localized price parse ->
     composite item key -> line totals. NULL carts (orderkey%10==0) and
     NULL/empty option arrays must all survive with NULL offsets."""
-    # fan_out by the groupBy key (round 14, guide §2.4/§8): the cart
-    # item structs (price-string variants, option arrays) were built
-    # map-side on the single-task scan and then shuffled WIDE into the
-    # collect_list agg. Hash-repartitioning the 5 raw columns by
-    # l_orderkey first (a) parallelizes the struct build and (b) is the
-    # same hash partitioning the groupBy needs, so the exchange count
-    # is unchanged and the bytes crossing it are the narrower raw
-    # columns instead of built structs.
-    li = fan_out(
-        table(spark, sf_dir, "lineitem").select(
-            "l_orderkey",
-            "l_linenumber",
-            "l_partkey",
-            "l_quantity",
-            "l_extendedprice",
-        ),
-        "l_orderkey",
-    )
-    ok, ln, pk = F.col("l_orderkey"), F.col("l_linenumber"), F.col("l_partkey")
-    base = F.col("l_extendedprice").cast("decimal(12,2)").cast("string")
-    price = (
-        F.when((ok + ln) % 4 == 0, F.replace(base, F.lit("."), F.lit(",")))
-        .when((ok + ln) % 4 == 1, F.concat(F.lit("1."), F.replace(base, F.lit("."), F.lit(","))))
-        .when((ok + ln) % 4 == 2, F.concat(F.lit("1,"), base))
-        .otherwise(base)
-    )
-    opt_type = "array<struct<option_id:string,option_label:string>>"
-    opts = (
-        F.when(
-            pk % 3 == 0,
-            F.array(
-                F.struct(
-                    F.concat(F.lit("opt"), (pk % 7).cast("string")).alias("option_id"),
-                    F.lit("stone").alias("option_label"),
-                ),
-                F.struct(
-                    F.concat(F.lit("opt"), ((pk + 1) % 7).cast("string")).alias("option_id"),
-                    F.lit("metal").alias("option_label"),
-                ),
-            ),
-        )
-        .when(pk % 3 == 1, F.array().cast(opt_type))
-        .otherwise(F.lit(None).cast(opt_type))
-    )
-    items = li.select(
-        "l_orderkey",
-        F.struct(
-            ln.alias("ln"),
-            pk.alias("product_id"),
-            F.col("l_quantity").cast("long").alias("amount"),
-            price.alias("price"),
-            opts.alias("option"),
-        ).alias("item"),
-    )
-    carts = items.groupBy("l_orderkey").agg(
-        F.array_sort(F.collect_list("item")).alias("cart")
-    )
+    carts = _tpch_carts(spark, sf_dir)
     o = table(spark, sf_dir, "orders")
     based = o.join(carts, o.o_orderkey == carts.l_orderkey, "left").select(
         "o_orderkey",
@@ -241,19 +262,16 @@ def glamira_e2e_revenue_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     by nation x month in exact decimal.
 
     Shape: lineitem pre-aggregates to per-order (units, item count)
-    BEFORE the dim joins. At sf0.1 this is timing-neutral (all three
-    joins broadcast either way; profiled 2026-08: scan 0.23 s, price
-    synth +0.25 s, parse +0.4 s, joins+agg 1.0 s — the plan is minimal,
-    the rest is genuine string workload both engines pay). At cluster
-    scale, where orders cannot broadcast, the pre-agg is the win: the
-    orderkey exchange carries one combined row per order instead of
-    every line item (~4x fewer rows), and the agg's hash partitioning
-    is reused by the join exchange on the same key.
+    BEFORE the dim joins. Where all three joins broadcast this is
+    timing-neutral; most of the time goes to the price synth and parse,
+    a string workload both engines pay. At cluster scale, where orders
+    cannot broadcast, the pre-agg is the win: the orderkey exchange
+    carries one combined row per order instead of every line item (~4x
+    fewer rows), and the agg's hash partitioning is reused by the join
+    exchange on the same key.
     """
-    # fan_out by the pre-agg key (round 14, guide §2.4/§8): same move
-    # as glamira_e2e_order_flatten — the price synth + 12-branch parse
-    # ran on the single-task scan; hash-repartitioning the 4 raw
-    # columns by l_orderkey parallelizes it, and the groupBy reuses the
+    # fan_out by the pre-agg key, as in _tpch_carts: the price synth and
+    # the 12-branch parse run in parallel, and the groupBy reuses the
     # partitioning, so no exchange is added at any scale.
     li = fan_out(
         table(spark, sf_dir, "lineitem").select(
@@ -261,21 +279,14 @@ def glamira_e2e_revenue_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "l_orderkey",
     )
-    ok, ln = F.col("l_orderkey"), F.col("l_linenumber")
-    base = F.col("l_extendedprice").cast("decimal(12,2)").cast("string")
-    price_raw = (
-        F.when((ok + ln) % 4 == 0, F.replace(base, F.lit("."), F.lit(",")))
-        .when((ok + ln) % 4 == 1, F.concat(F.lit("1."), F.replace(base, F.lit("."), F.lit(","))))
-        .when((ok + ln) % 4 == 2, F.concat(F.lit("1,"), base))
-        .otherwise(base)
-    )
+    price_raw = _price_raw(F.col("l_orderkey"), F.col("l_linenumber"))
     # Stage the synthesized price through its own projection before
     # parsing: parse_localized_number references its input ~12 times,
     # and an inline expression argument is DUPLICATED at each use in
     # the expression tree (conditional branches defeat codegen CSE).
     # CollapseProject keeps the boundary because the alias is non-cheap
     # and multi-referenced (SPARK-36718), so the synth chain evaluates
-    # once per row — this was the r6 sf1 2.25x-vs-DuckDB gap.
+    # once per row instead of once per reference.
     staged = li.select("l_orderkey", "l_quantity", price_raw.alias("price_raw"))
     # exact 1e-4-dollar units on longs (the 4dp parse is exact, so the
     # scale shift is lossless); integer multiply/sum replaces per-row

@@ -31,11 +31,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.cleaning import parse_localized_number_sql
-from ..functions.currency import FX_SEED_ROWS, fx_rates
-from .e2e_queries import _OPTS_SQL, _PRICE_SQL
+from ..functions.currency import fx_rates
+from .e2e_queries import _PRICE_SQL, _tpch_carts
 from .glamira import build_glamira_pipeline
 from .registry import query, table
-from .scalar_queries import _LABELS, _TLDS
+from .scalar_queries import _FX_VALUES, _LABELS, _TLD_CASE, _tld_for
 
 # Per-line currency label keyed on (l_orderkey + l_partkey) % 12 —
 # covers CLEAN (mapped), AMBIGUOUS ('$', 'kr'), UNKNOWN ('') labels.
@@ -43,17 +43,11 @@ _LINE_LABEL_CASE = " ".join(
     f"WHEN (l_orderkey + l_partkey) % 12 = {i} THEN '{lab}'"
     for i, lab in enumerate(_LABELS)
 )
-_ORD_TLD_CASE = " ".join(
-    f"WHEN o_custkey % 6 = {i} THEN '{t}'" for i, t in enumerate(_TLDS)
-)
-_FX_VALUES = ",\n      ".join(
-    f"('{code}', {rate!r})" for _, _, code, rate in FX_SEED_ROWS
-)
 
 _ORACLE = f"""
     WITH ord AS (
       SELECT o_orderkey, o_custkey,
-             concat('https://www.glamira.', CASE {_ORD_TLD_CASE} END, '/checkout')
+             concat('https://www.glamira.', CASE {_TLD_CASE} END, '/checkout')
                AS current_url,
              (o_orderkey % 10 = 0) AS null_cart
       FROM orders
@@ -174,20 +168,6 @@ _ORACLE = f"""
 """
 
 
-def _label_for(key):
-    expr = F.when(F.lit(False), F.lit(None))
-    for i, lab in enumerate(_LABELS):
-        expr = expr.when(key % 12 == i, F.lit(lab))
-    return expr
-
-
-def _tld_for(key):
-    expr = F.when(F.lit(False), F.lit(None))
-    for i, t in enumerate(_TLDS):
-        expr = expr.when(key % 6 == i, F.lit(t))
-    return expr
-
-
 def _ip_for(custkey):
     """Injective custkey -> IPv4 string (unique per customer)."""
     return F.concat(
@@ -201,64 +181,7 @@ def _raw_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """countly_summary-shaped raw events from orders x lineitem: nested
     cart_products[].option[] with localized prices and currency labels,
     plus the event metadata stg_order and stg_customer consume."""
-    # fan_out by the groupBy key (round 14): same move as
-    # glamira_e2e_order_flatten — the cart-item struct build (price
-    # variants, labels, option arrays) ran on the single-task scan;
-    # repartitioning the 5 raw columns by l_orderkey parallelizes it
-    # and the collect_list groupBy reuses the partitioning, so the
-    # exchange count is unchanged and it carries narrower rows.
-    from .registry import fan_out
-
-    li = fan_out(
-        table(spark, sf_dir, "lineitem").select(
-            "l_orderkey",
-            "l_linenumber",
-            "l_partkey",
-            "l_quantity",
-            "l_extendedprice",
-        ),
-        "l_orderkey",
-    )
-    ok, ln, pk = F.col("l_orderkey"), F.col("l_linenumber"), F.col("l_partkey")
-    base = F.col("l_extendedprice").cast("decimal(12,2)").cast("string")
-    price = (
-        F.when((ok + ln) % 4 == 0, F.replace(base, F.lit("."), F.lit(",")))
-        .when((ok + ln) % 4 == 1, F.concat(F.lit("1."), F.replace(base, F.lit("."), F.lit(","))))
-        .when((ok + ln) % 4 == 2, F.concat(F.lit("1,"), base))
-        .otherwise(base)
-    )
-    opt_type = "array<struct<option_id:string,option_label:string>>"
-    opts = (
-        F.when(
-            pk % 3 == 0,
-            F.array(
-                F.struct(
-                    F.concat(F.lit("opt"), (pk % 7).cast("string")).alias("option_id"),
-                    F.lit("stone").alias("option_label"),
-                ),
-                F.struct(
-                    F.concat(F.lit("opt"), ((pk + 1) % 7).cast("string")).alias("option_id"),
-                    F.lit("metal").alias("option_label"),
-                ),
-            ),
-        )
-        .when(pk % 3 == 1, F.array().cast(opt_type))
-        .otherwise(F.lit(None).cast(opt_type))
-    )
-    items = li.select(
-        "l_orderkey",
-        F.struct(
-            ln.alias("ln"),
-            pk.alias("product_id"),
-            F.col("l_quantity").cast("long").alias("amount"),
-            price.alias("price"),
-            _label_for(ok + pk).alias("currency"),
-            opts.alias("option"),
-        ).alias("item"),
-    )
-    carts = items.groupBy("l_orderkey").agg(
-        F.array_sort(F.collect_list("item")).alias("cart")
-    )
+    carts = _tpch_carts(spark, sf_dir)
     o = table(spark, sf_dir, "orders")
     ck = F.col("o_custkey")
     return o.join(carts, o.o_orderkey == carts.l_orderkey, "left").select(

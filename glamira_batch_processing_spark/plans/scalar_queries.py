@@ -60,6 +60,24 @@ _LABELS = [
 ]
 _TLDS = ["de", "co.uk", "se", "com", "dk", "fr"]
 
+
+def _label_for(key):
+    """Currency label ``_LABELS[key % 12]`` (Spark twin of the oracles'
+    label CASE)."""
+    expr = F.when(F.lit(False), F.lit(None))
+    for i, lab in enumerate(_LABELS):
+        expr = expr.when(key % 12 == i, F.lit(lab))
+    return expr
+
+
+def _tld_for(key):
+    """Storefront TLD ``_TLDS[key % 6]`` (Spark twin of ``_TLD_CASE``)."""
+    expr = F.when(F.lit(False), F.lit(None))
+    for i, t in enumerate(_TLDS):
+        expr = expr.when(key % 6 == i, F.lit(t))
+    return expr
+
+
 _LABEL_CASE = " ".join(
     f"WHEN o_orderkey % 12 = {i} THEN '{lab}'" for i, lab in enumerate(_LABELS)
 )
@@ -148,17 +166,12 @@ def f4_currency_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     J3/F7 — SURVEY §2.8 F4). Labels and URLs are constructed
     deterministically from order keys; the fx seed is broadcast."""
     o = table(spark, sf_dir, "orders")
-    ok = F.col("o_orderkey")
-    label = F.when(F.lit(False), F.lit(None))
-    for i, lab in enumerate(_LABELS):
-        label = label.when(ok % 12 == i, F.lit(lab))
-    tld = F.when(F.lit(False), F.lit(None))
-    for i, t in enumerate(_TLDS):
-        tld = tld.when(F.col("o_custkey") % 6 == i, F.lit(t))
     src = o.select(
         "o_orderkey",
-        label.alias("currency_raw"),
-        F.concat(F.lit("https://www.glamira."), tld, F.lit("/checkout")).alias("current_url"),
+        _label_for(F.col("o_orderkey")).alias("currency_raw"),
+        F.concat(
+            F.lit("https://www.glamira."), _tld_for(F.col("o_custkey")), F.lit("/checkout")
+        ).alias("current_url"),
         F.col("o_totalprice").cast("decimal(18,2)").cast("double").alias("amount"),
     )
     mapped = src.select(

@@ -231,6 +231,48 @@ def test_stg_order_vs_duckdb(glamira, spark):
     assert s == d
 
 
+def test_e2e_flatten_equals_stg_order(spark):
+    """The two double-flatten implementations agree: the contract query
+    glamira_e2e_order_flatten and the warehouse's stg_order, run over
+    the raw events glamira_pipeline_e2e builds from the same TPC-H
+    carts, emit the same line items."""
+    from glamira_batch_processing_spark.plans import pipeline_e2e
+    from glamira_batch_processing_spark.plans.e2e_queries import (
+        glamira_e2e_order_flatten,
+    )
+
+    from tests.conftest import SF_SMALL
+
+    def items(df, order_id, pos, opt_pos, quantity, price):
+        return df.select(
+            F.col(order_id).cast("long"),
+            F.coalesce(F.col(pos), F.lit(-1)),
+            F.coalesce(F.col(opt_pos), F.lit(-1)),
+            "product_id",
+            F.col(quantity),
+            F.col(price).cast("double"),
+            "option_id",
+        ).collect()
+
+    flat = items(
+        glamira_e2e_order_flatten(spark, SF_SMALL),
+        "o_orderkey", "pos", "opt_pos", "quantity", "price",
+    )
+    p = build_glamira_pipeline(
+        spark,
+        raw_events=pipeline_e2e._raw_events(spark, SF_SMALL),
+        raw_product=pipeline_e2e._raw_product(spark, SF_SMALL),
+        raw_ip_locations=pipeline_e2e._raw_ip_locations(spark, SF_SMALL),
+        workdir=None,
+    )
+    stg = items(
+        p.ref("stg_order"),
+        "order_id", "cp_offset", "opt_offset", "product_quantity", "product_price",
+    )
+    assert len(flat) == len(stg) > 0
+    assert _multiset(flat) == _multiset(stg)
+
+
 def test_mart_fact_usd_vs_duckdb(glamira, spark):
     """End-to-end warehouse differential: USD revenue by currency_code
     from mart_fact_order vs a full DuckDB replication (flatten -> parse
