@@ -171,6 +171,14 @@ EXTENDED = [
 
 HEADLINE = HEADLINE_PINNED + EXTENDED
 
+#: A prior is like-for-like only within this factor of per-core load
+#: (``loadavg_1m / cpus``). Co-tenant load takes the same cores the
+#: queries run on: identical runs at similar load drift by about 20%,
+#: while a scaling pair taken at load averages 2.2x apart (3.05 and
+#: 6.6) read half its per-query ratios the wrong way round. A 2x gap in
+#: per-core load already moves times by more than the changes compared.
+LIKE_FOR_LIKE_LOAD_FACTOR = 2.0
+
 
 def parse_cpus() -> int:
     """``$SPARK_GRAFT_CPUS`` when it is a positive integer, else the
@@ -180,6 +188,25 @@ def parse_cpus() -> int:
     if raw.isdigit() and int(raw) > 0:
         return int(raw)
     return len(os.sched_getaffinity(0))
+
+
+def _per_core_load(record: dict) -> float | None:
+    """A bench record's ``loadavg_1m / cpus``; None when either is
+    missing."""
+    load, cpus = record.get("loadavg_1m"), record.get("cpus")
+    if not isinstance(load, (int, float)) or not isinstance(cpus, int) or cpus < 1:
+        return None
+    return load / cpus
+
+
+def _like_for_like(run: dict, prior: dict) -> bool:
+    """Whether ``prior`` was measured under ``run``'s conditions: the
+    same recorded ``cpus`` and per-core loads within
+    ``LIKE_FOR_LIKE_LOAD_FACTOR`` of each other."""
+    a, b = _per_core_load(run), _per_core_load(prior)
+    if prior.get("cpus") != run.get("cpus") or a is None or b is None:
+        return False
+    return max(a, b) <= LIKE_FOR_LIKE_LOAD_FACTOR * min(a, b)
 
 
 def force(df) -> None:
@@ -420,6 +447,7 @@ def build_summaries(
         },
         "full_record": "BENCH_SUMMARY.json",
     }
+    summary["loadavg_per_core"] = round(_per_core_load(summary), 3)
     # Like-for-like comparison (round-10 bench hygiene): when the
     # headline grows with a gate-window rotation, the raw total reads
     # as a slowdown. Compare over the INTERSECTION of query names so
@@ -432,10 +460,15 @@ def build_summaries(
         summary["sameset_vs"] = src
         summary["sameset_prev_precision"] = precision
         # The prior's conditions, so the comparison explains itself: it
-        # is like-for-like only at the same recorded core count.
+        # is like-for-like only at the same recorded core count and a
+        # similar per-core load.
         summary["sameset_prev_cpus"] = prior.get("cpus")
         summary["sameset_prev_loadavg_1m"] = prior.get("loadavg_1m")
-        summary["sameset_like_for_like"] = prior.get("cpus") == summary["cpus"]
+        prev_load = _per_core_load(prior)
+        summary["sameset_prev_loadavg_per_core"] = (
+            None if prev_load is None else round(prev_load, 3)
+        )
+        summary["sameset_like_for_like"] = _like_for_like(summary, prior)
         summary["sameset_n"] = len(shared)
         summary["sameset_total"] = round(sum(timings[n] for n in shared), 3)
         summary["sameset_prev_total"] = round(

@@ -4,8 +4,8 @@ ref: audit/audit_null_rates_stg_order.sql:1-31 (A4),
 audit/audit_orphan_rates.sql:1-33 (J9/A5), intermediate/int_order_qa.sql
 :19-95 (the 13 row-level QA rules) — SURVEY.md §2.4, §5.
 
-Everything is a single-pass conditional aggregation or a left join +
-conditional aggregation — one shuffle, map-side partials, no UDFs.
+Everything is a single-pass conditional aggregation, over EXISTS flags
+for the orphan audit — one shuffle, map-side partials, no UDFs.
 """
 
 from __future__ import annotations
@@ -32,26 +32,36 @@ def null_rates(df: DataFrame, cols: list[str]) -> DataFrame:
 
 
 def orphan_rates(
-    fact: DataFrame, dims: dict[str, tuple[DataFrame, Column, str]]
+    fact: DataFrame, dims: dict[str, tuple[DataFrame, str, Column]]
 ) -> DataFrame:
-    """Referential-integrity audit: for each dim, count fact rows with no
-    match. ``dims`` maps name -> (dim_df, join_condition, dim_probe_col).
+    """Referential-integrity audit: for each dim, count the fact rows
+    with no match. ``dims`` maps name -> (dim_df, dim_key, fact_key): a
+    fact row is an orphan of the dim when no dim row has ``dim_key``
+    equal to the row's ``fact_key`` (a NULL key matches nothing).
 
-    Implemented as left joins + conditional agg (the reference's
-    formulation); equivalent to a left-anti count per dim but all dims
-    are checked in ONE pass over the fact.
+    Each check is an EXISTS flag (an ExistenceJoin), so duplicate dim
+    keys cannot fan the fact out and the dims need no ``distinct``; all
+    dims are still checked in ONE pass over the fact. The fact keys are
+    aliased to names no dim carries first: an outer reference whose name
+    also appears in the dim's plan would resolve inside the subquery,
+    and every row would then "exist".
     """
-    joined = fact
-    for _, (dim, cond, _) in dims.items():
-        joined = joined.join(dim, cond, "left")
+    fk = [f"__orphan_fk_{i}" for i in range(len(dims))]
+    keyed = fact.select(*[k.alias(a) for (_, _, k), a in zip(dims.values(), fk)])
+    flags = keyed.select(
+        *[
+            (~dim.where(F.col(key) == F.col(a).outer()).exists()).alias(f"__orphan_{name}")
+            for (name, (dim, key, _)), a in zip(dims.items(), fk)
+        ]
+    )
     aggs = [F.count("*").alias("fact_rows")]
-    for name, (_, _, probe) in dims.items():
+    for name in dims:
         aggs.append(
-            F.sum(F.when(F.col(probe).isNull(), 1).otherwise(0)).alias(
+            F.sum(F.when(F.col(f"__orphan_{name}"), 1).otherwise(0)).alias(
                 f"orphan_{name}_rows"
             )
         )
-    out = joined.agg(*aggs)
+    out = flags.agg(*aggs)
     for name in dims:
         out = out.withColumn(
             f"orphan_{name}_rate",

@@ -119,13 +119,12 @@ def a4_null_rate_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def j9_orphan_rate_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Orphan-rate audit (ref: audit_orphan_rates.sql:1-33 — J9/A5):
-    events.user_id not present in customer. Left join + conditional agg
-    in one pass; the dim side is broadcast."""
+    events.user_id not present in customer. An EXISTS flag per event
+    + conditional agg in one pass; the oracle's left join is equal
+    because c_custkey is unique."""
     e = table(spark, sf_dir, "events")
-    c = F.broadcast(table(spark, sf_dir, "customer"))
     return orphan_rates(
-        e,
-        {"customer": (c, e.user_id == c.c_custkey, "c_custkey")},
+        e, {"customer": (table(spark, sf_dir, "customer"), "c_custkey", e.user_id)}
     )
 
 

@@ -558,15 +558,12 @@ def build_glamira_pipeline(
         """ref: models/audit/audit_orphan_rates.sql — fact vs product/
         customer/location orphans in one pass."""
         o = p.ref("stg_order")
-        prod = p.ref("stg_product").select(F.col("product_id").alias("p_product_id")).distinct()
-        cust = p.ref("stg_customer").select(F.col("user_db_id").alias("c_user_db_id")).distinct()
-        loc = p.ref("stg_location").select(F.col("ip").alias("l_ip")).distinct()
         return orphan_rates(
             o,
             {
-                "product": (F.broadcast(prod), o.product_id == F.col("p_product_id"), "p_product_id"),
-                "customer": (F.broadcast(cust), o.user_db_id == F.col("c_user_db_id"), "c_user_db_id"),
-                "location": (F.broadcast(loc), o.ip == F.col("l_ip"), "l_ip"),
+                "product": (p.ref("stg_product"), "product_id", o.product_id),
+                "customer": (p.ref("stg_customer"), "user_db_id", o.user_db_id),
+                "location": (p.ref("stg_location"), "ip", o.ip),
             },
         ).withColumn("fact_table", F.lit("stg_order")).withColumn(
             "run_ts", F.current_timestamp()

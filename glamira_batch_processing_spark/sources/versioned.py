@@ -4,15 +4,24 @@ ref: the reference relies on warehouse-native transactional MERGE —
 dbt snapshot MERGE (snapshots/customer_email_scd.sql:1-12) and BigQuery
 MERGE (Modelling/Incremental_load_template.sql:31-57). This environment
 ships no transactional table format, so this module provides the
-minimal log-structured equivalent, delta-lake style but ~150 lines:
+minimal log-structured equivalent, delta-lake style:
 
-- every table version is an immutable parquet directory written by
-  Spark's committer (``data/v00007/``);
-- a version becomes visible only when its tiny JSON manifest is
+- data files are immutable parquet written by Spark's committer under
+  ``data/``; a version is visible only once its small JSON manifest is
   created in ``_manifests/`` with O_EXCL — an atomic, last-step commit.
-  Readers list manifests and read exactly one version's files, so they
-  get SNAPSHOT ISOLATION for free; a writer crash mid-write leaves an
-  orphaned data dir but never a half-visible table;
+  Readers read exactly one version's files, so they get SNAPSHOT
+  ISOLATION for free; a writer crash mid-write leaves an orphaned data
+  dir but never a half-visible table;
+- a manifest has one of two forms. A DIRECTORY version (create, merge,
+  overwrite, delete, compact, publish) names its ``data_dir``, and its
+  per-file ``files`` entries are relative to that directory. A
+  FILE-LIST version (``compact_small``, and a ``restore`` of one) also
+  names its files in ``file_paths``, and it and its entries are
+  relative to the table root (``paths_relative_to: "table"``), so it
+  can list files that other versions wrote;
+- one resolver, ``VersionedTable._version_files``, turns either form
+  into absolute paths; reads, pruned reads, compaction, vacuum and
+  orphan collection all go through it;
 - concurrent committers race on the same manifest name and exactly one
   O_EXCL create wins; the loser gets ``VersionConflictError`` and must
   re-read + retry (optimistic concurrency, same contract as Delta).
@@ -22,7 +31,7 @@ minimal log-structured equivalent, delta-lake style but ~150 lines:
 
 The DATA PLANE is untouched Spark parquet — scans keep columnar
 pruning, predicate pushdown, and distributed writes; only the
-control-plane commit (one tiny JSON per version) runs on the driver.
+control-plane commit (one small JSON per version) runs on the driver.
 """
 
 from __future__ import annotations
@@ -35,6 +44,7 @@ import math
 import shutil
 import time
 import uuid
+from collections.abc import Callable
 from pathlib import Path
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -220,6 +230,40 @@ def _file_bloom_stats(path: str, columns: tuple[str, ...], fpp: float):
     return path, blooms
 
 
+def _file_may_match(entry: dict, column: str, lower=None, upper=None, values=None) -> bool:
+    """The per-file skipping check: False only when the manifest
+    entry's recorded stats prove that no row of the file has ``column``
+    in [lower, upper] (either bound None = unbounded) or, when
+    ``values`` is given, equal to one of them. The min/max range tests
+    the bounds and each value; a bloom, where recorded, drops the values
+    it says are definitely absent. A file without stats for the column
+    is kept, so pruning stays sound."""
+    rng = entry.get("stats", {}).get(column)
+    if rng is not None:
+        lo, hi = rng
+        if upper is not None and lo > _stat_value(upper):
+            return False
+        if lower is not None and hi < _stat_value(lower):
+            return False
+        if values is not None:
+            values = [v for v in values if lo <= _stat_value(v) <= hi]
+    bloom = entry.get("bloom", {}).get(column)
+    if values is not None and bloom is not None:
+        values = [v for v in values if _bloom_probe(bloom, v)]
+    return values is None or bool(values)
+
+
+def _range_filter(df: DataFrame, column: str, lower=None, upper=None) -> DataFrame:
+    """``df`` restricted to ``lower <= column <= upper`` (None = unbounded)."""
+    from pyspark.sql import functions as F
+
+    if lower is not None:
+        df = df.filter(F.col(column) >= F.lit(lower))
+    if upper is not None:
+        df = df.filter(F.col(column) <= F.lit(upper))
+    return df
+
+
 def _align_merge_schemas(
     target: DataFrame, source: DataFrame, keys: list[str]
 ) -> tuple[DataFrame, DataFrame]:
@@ -318,6 +362,47 @@ class VersionedTable:
 
     def manifest(self, version: int) -> dict:
         return json.loads(self._manifest_path(version).read_text())
+
+    def _head(self, version: int | None = None) -> int:
+        """``version``, or the latest committed one when it is None;
+        raises FileNotFoundError when the table has no version."""
+        if version is None:
+            version = self.latest_version()
+            if version is None:
+                raise FileNotFoundError(f"no committed version at {self.path}")
+        return version
+
+    def _txn_version(self, txn_id: str | None) -> int | None:
+        """The newest retained version committed with ``txn_id``, or
+        None. Reads every retained manifest (small driver-side JSONs,
+        O(versions)); vacuum() shrinks that set, so replay protection
+        reaches exactly as far back as the vacuum retention window."""
+        if txn_id is not None:
+            for v in reversed(self.versions()):
+                if self.manifest(v).get("txn_id") == txn_id:
+                    return v
+        return None
+
+    def _version_files(self, m: dict) -> tuple[list[str], list[dict]]:
+        """Resolve one version's manifest ``m`` to absolute paths:
+        ``(paths, entries)``. ``paths`` is what a scan of the version
+        reads; ``entries`` are its per-file stat/bloom entries (empty
+        when none were recorded), each with ``path`` made absolute.
+
+        A directory version's ``paths`` is its one data directory, which
+        Spark lists itself (given more than 32 explicit paths, Spark's
+        file index lists them with an extra job); its entries are
+        relative to that directory. A file-list version names its files
+        in ``file_paths``, relative to the table root like its entries
+        (``paths_relative_to: "table"``)."""
+        data_dir = self.path / m["data_dir"]
+        if "file_paths" in m:
+            paths = [str(self.path / p) for p in m["file_paths"]]
+        else:
+            paths = [str(data_dir)]
+        root = self.path if m.get("paths_relative_to") == "table" else data_dir
+        entries = [{**e, "path": str(root / e["path"])} for e in m.get("files") or ()]
+        return paths, entries
 
     def _commit(
         self,
@@ -471,13 +556,10 @@ class VersionedTable:
         same contract as merge()."""
         from pyspark.sql import functions as F
 
-        latest = self.latest_version()
-        if latest is None:
-            raise FileNotFoundError(f"no committed version at {self.path}")
-        if txn_id is not None:
-            for v in self.versions():
-                if self.manifest(v).get("txn_id") == txn_id:
-                    return v  # replayed delete: already applied
+        latest = self._head()
+        replayed = self._txn_version(txn_id)
+        if replayed is not None:
+            return replayed  # replayed delete: already applied
         pred = F.expr(predicate) if isinstance(predicate, str) else predicate
         remaining = self.read(spark, latest).filter(
             ~F.coalesce(pred, F.lit(False))
@@ -509,20 +591,17 @@ class VersionedTable:
         data_root = self.path / _DATA_DIR
         if not data_root.is_dir():
             return []
-        referenced: set[str] = set()
+        referenced: set[Path] = set()
         for v in self.versions():
             m = self.manifest(v)
-            referenced.add(m["data_dir"])
-            for f in m.get("file_paths", ()):  # compact_small carry-overs
-                referenced.add(str(Path(f).parent))
+            referenced.add(self.path / m["data_dir"])  # even with no file in it
+            referenced.update(Path(f).parent for f in self._version_abs_files(m))
         now = time.time()
         removed: list[str] = []
         for d in sorted(data_root.iterdir()):
-            if not d.is_dir():
+            if not d.is_dir() or d in referenced:
                 continue
             rel = str(d.relative_to(self.path))
-            if rel in referenced:
-                continue
             if not include_staged and d.name.startswith("staged-"):
                 continue  # in-flight WAP stage; see docstring
             if now - d.stat().st_mtime < min_age_seconds:
@@ -544,13 +623,6 @@ class VersionedTable:
                 except OSError:
                     pass
         return removed
-
-    def _version_file_paths(self, m: dict) -> list[str] | None:
-        """Absolute data files of a manifest, or None for a plain
-        whole-directory version (read the dir)."""
-        if "file_paths" in m:
-            return [str(self.path / p) for p in m["file_paths"]]
-        return None
 
     def version_as_of(self, ts_unix: float) -> int:
         """Timestamp time-travel (the ``timestampAsOf`` analog): the
@@ -577,16 +649,11 @@ class VersionedTable:
         return self.read(spark, self.version_as_of(ts_unix))
 
     def _reader(self, spark: SparkSession, m: dict):
-        """DataFrameReader for one version — with the manifest's
-        RECORDED schema when present (round 15, guide §2.6/§1.2: every
-        commit stores the committed column list, so snapshot reads need
-        no parquet schema-inference job; a whole lifecycle — create,
-        MERGE, compact, diff, pruned probe — was paying one small
-        driver-blocking job per read just to rediscover a schema the
-        control plane already knows). Spark marks file-source schemas
-        nullable either way, so the recorded schema is exactly the
-        inferred one. Manifests without a recorded schema (pre-round-6
-        tables) fall back to inference."""
+        """DataFrameReader for one version, with the schema its manifest
+        recorded, so a snapshot read runs no parquet schema-inference
+        job. Spark marks file-source schemas nullable either way, so the
+        recorded schema is exactly the inferred one. Manifests without
+        a recorded schema fall back to inference."""
         return _schema_reader(spark, m.get("schema"))
 
     def read(self, spark: SparkSession, version: int | None = None) -> DataFrame:
@@ -596,15 +663,37 @@ class VersionedTable:
         (untouched big files of the prior version + the newly packed
         files) rather than one directory — the manifest's
         ``file_paths`` names them and the scan plans exactly those."""
-        if version is None:
-            version = self.latest_version()
-            if version is None:
-                raise FileNotFoundError(f"no committed version at {self.path}")
-        m = self.manifest(version)
-        paths = self._version_file_paths(m)
-        if paths is not None:
-            return self._reader(spark, m).parquet(*paths)
-        return self._reader(spark, m).parquet(str(self.path / m["data_dir"]))
+        m = self.manifest(self._head(version))
+        return self._reader(spark, m).parquet(*self._version_files(m)[0])
+
+    def _read_pruned(
+        self,
+        spark: SparkSession,
+        version: int | None,
+        keep: Callable[[dict], bool] | None,
+        row_filter: Callable[[DataFrame], DataFrame],
+    ) -> tuple[DataFrame, dict]:
+        """The one pruned-scan planner: scan only the files of
+        ``version`` (default latest) whose manifest entry passes
+        ``keep``, then apply ``row_filter`` — pruning is an
+        optimization, never the filter itself. A version without
+        per-file entries is read whole (``pruned: False``). When no file
+        is kept, or ``keep`` is None (no row can match), the result is
+        the schema-preserving empty read: a false filter over the
+        version, which opens footers only."""
+        from pyspark.sql import functions as F
+
+        m = self.manifest(self._head(version))
+        paths, entries = self._version_files(m)
+        reader = self._reader(spark, m)
+        if keep is not None and not entries:
+            df = row_filter(reader.parquet(*paths))
+            return df, {"files_total": None, "files_read": None, "pruned": False}
+        kept = [e["path"] for e in entries if keep is not None and keep(e)]
+        info = {"files_total": len(entries) or None, "files_read": len(kept), "pruned": True}
+        if not kept:
+            return reader.parquet(*paths).filter(F.lit(False)), info
+        return row_filter(reader.parquet(*kept)), info
 
     def read_pruned(
         self,
@@ -637,61 +726,18 @@ class VersionedTable:
         type the footer stats recorded (int/float/str, or
         ``datetime.date`` for a date column).
         """
-        from pyspark.sql import functions as F
-
+        values = None
         if equals is not None:
             if lower is not None or upper is not None:
                 raise ValueError("equals is mutually exclusive with lower/upper")
             lower = upper = equals
-        if version is None:
-            version = self.latest_version()
-            if version is None:
-                raise FileNotFoundError(f"no committed version at {self.path}")
-        m = self.manifest(version)
-        data_dir = self.path / m["data_dir"]
-
-        def _pred(df: DataFrame) -> DataFrame:
-            if lower is not None:
-                df = df.filter(F.col(column) >= F.lit(lower))
-            if upper is not None:
-                df = df.filter(F.col(column) <= F.lit(upper))
-            return df
-
-        def _resolve(f: dict) -> str:
-            # compact_small manifests record table-root-relative paths
-            root = self.path if m.get("paths_relative_to") == "table" else data_dir
-            return str(root / f["path"])
-
-        files = m.get("files")
-        if not files:
-            df = _pred(self.read(spark, version))
-            return df, {"files_total": None, "files_read": None, "pruned": False}
-
-        s_lower, s_upper = _stat_value(lower), _stat_value(upper)
-
-        def _keep(f: dict) -> bool:
-            rng = f.get("stats", {}).get(column)
-            if rng is not None:
-                lo, hi = rng
-                if s_upper is not None and lo > s_upper:
-                    return False
-                if s_lower is not None and hi < s_lower:
-                    return False
-            if equals is not None:
-                bloom = f.get("bloom", {}).get(column)
-                if bloom is not None and not _bloom_probe(bloom, equals):
-                    return False  # definitely absent from this file
-            return True  # no stats and bloom didn't rule it out -> read
-
-        kept = [f for f in files if _keep(f)]
-        info = {"files_total": len(files), "files_read": len(kept), "pruned": True}
-        if not kept:
-            # preserve schema: full scan with a false predicate
-            # (parquet footers only; no data pages are read)
-            df = self.read(spark, version).filter(F.lit(False))
-            return df, info
-        paths = [_resolve(f) for f in kept]
-        return _pred(self._reader(spark, m).parquet(*paths)), info
+            values = [equals]
+        return self._read_pruned(
+            spark,
+            version,
+            lambda f: _file_may_match(f, column, lower, upper, values),
+            lambda df: _range_filter(df, column, lower, upper),
+        )
 
     def read_pruned_multi(
         self,
@@ -711,12 +757,6 @@ class VersionedTable:
         :meth:`read_pruned`). Semantics are identical per column; the
         value predicates are all still applied to the result, so
         pruning remains an optimization, never the filter."""
-        from pyspark.sql import functions as F
-
-        if version is None:
-            version = self.latest_version()
-            if version is None:
-                raise FileNotFoundError(f"no committed version at {self.path}")
         norm: dict[str, tuple] = {}
         for col, p in predicates.items():
             unknown = set(p) - {"lower", "upper", "equals"}
@@ -726,51 +766,19 @@ class VersionedTable:
             lo, hi = p.get("lower"), p.get("upper")
             if eq is not None and (lo is not None or hi is not None):
                 raise ValueError(f"{col}: equals is mutually exclusive with bounds")
-            norm[col] = (lo, hi) if eq is None else (eq, eq, eq)
-        m = self.manifest(version)
-        data_dir = self.path / m["data_dir"]
+            norm[col] = (lo, hi, None) if eq is None else (eq, eq, [eq])
 
-        def _pred(df: DataFrame) -> DataFrame:
-            for col, t in norm.items():
-                lo, hi = t[0], t[1]
-                if lo is not None:
-                    df = df.filter(F.col(col) >= F.lit(lo))
-                if hi is not None:
-                    df = df.filter(F.col(col) <= F.lit(hi))
+        def _row_filter(df: DataFrame) -> DataFrame:
+            for col, (lo, hi, _) in norm.items():
+                df = _range_filter(df, col, lo, hi)
             return df
 
-        files = m.get("files")
-        if not files:
-            return _pred(self.read(spark, version)), {
-                "files_total": None,
-                "files_read": None,
-                "pruned": False,
-            }
-
-        def _keep(f: dict) -> bool:
-            for col, t in norm.items():
-                lo, hi = t[0], t[1]
-                eq = t[2] if len(t) == 3 else None
-                rng = f.get("stats", {}).get(col)
-                if rng is not None:
-                    f_lo, f_hi = rng
-                    if hi is not None and f_lo > _stat_value(hi):
-                        return False
-                    if lo is not None and f_hi < _stat_value(lo):
-                        return False
-                if eq is not None:
-                    bloom = f.get("bloom", {}).get(col)
-                    if bloom is not None and not _bloom_probe(bloom, eq):
-                        return False
-            return True
-
-        root = self.path if m.get("paths_relative_to") == "table" else data_dir
-        kept = [f for f in files if _keep(f)]
-        info = {"files_total": len(files), "files_read": len(kept), "pruned": True}
-        if not kept:
-            return self.read(spark, version).filter(F.lit(False)), info
-        paths = [str(root / f["path"]) for f in kept]
-        return _pred(self._reader(spark, m).parquet(*paths)), info
+        return self._read_pruned(
+            spark,
+            version,
+            lambda f: all(_file_may_match(f, c, *t) for c, t in norm.items()),
+            _row_filter,
+        )
 
     def read_pruned_in(
         self,
@@ -798,46 +806,11 @@ class VersionedTable:
         from pyspark.sql import functions as F
 
         vals = sorted(set(values))
-        if version is None:
-            version = self.latest_version()
-            if version is None:
-                raise FileNotFoundError(f"no committed version at {self.path}")
-        m = self.manifest(version)
-        data_dir = self.path / m["data_dir"]
-        files = m.get("files")
-        if not vals:
-            df = self.read(spark, version).filter(F.lit(False))
-            n = len(files) if files else None
-            return df, {"files_total": n, "files_read": 0, "pruned": True}
-        if not files:
-            df = self.read(spark, version).filter(F.col(column).isin(vals))
-            return df, {"files_total": None, "files_read": None, "pruned": False}
-
-        def _keep(f: dict) -> bool:
-            rng = f.get("stats", {}).get(column)
-            in_range = vals
-            if rng is not None:
-                lo, hi = rng
-                in_range = [v for v in vals if lo <= _stat_value(v) <= hi]
-                if not in_range:
-                    return False
-            bloom = f.get("bloom", {}).get(column)
-            if bloom is not None and not any(
-                _bloom_probe(bloom, v) for v in in_range
-            ):
-                return False  # every candidate value definitely absent
-            return True
-
-        root = self.path if m.get("paths_relative_to") == "table" else data_dir
-        kept = [f for f in files if _keep(f)]
-        info = {"files_total": len(files), "files_read": len(kept), "pruned": True}
-        if not kept:
-            return self.read(spark, version).filter(F.lit(False)), info
-        paths = [str(root / f["path"]) for f in kept]
-        return (
-            self._reader(spark, m).parquet(*paths)
-            .filter(F.col(column).isin(vals)),
-            info,
+        return self._read_pruned(
+            spark,
+            version,
+            (lambda f: _file_may_match(f, column, values=vals)) if vals else None,
+            lambda df: df.filter(F.col(column).isin(vals)),
         )
 
     def merge(
@@ -856,14 +829,12 @@ class VersionedTable:
         ``txn_id`` makes the merge EXACTLY-ONCE under replay: if ANY
         retained committed version carries this token, the merge is a
         no-op returning that version — so a replayed batch is detected
-        even when other writers or a compact() landed in between
-        (round-3 ADVICE: latest-only inspection missed that case). The
-        scan reads every retained manifest (tiny driver-side JSONs,
-        O(versions)); vacuum() shrinks that set, so replay protection
-        extends exactly as far back as the vacuum retention window —
-        keep it longer than any possible replay horizon.
+        even when other writers or a compact() landed in between. The
+        scan reads every retained manifest, so replay protection extends
+        exactly as far back as the vacuum retention window — keep it
+        longer than any possible replay horizon.
 
-        Schema evolution (round-6, VERDICT r5 ask #6): ADDITIVE drift
+        Schema evolution: ADDITIVE drift
         is reconciled automatically — columns only the source carries
         are appended to the table (existing rows read as NULL) and
         columns only the target carries are NULL-filled on inserted
@@ -878,10 +849,9 @@ class VersionedTable:
         opening data.
         """
         base_version = self.latest_version()
-        if txn_id is not None:
-            for v in reversed(self.versions()):
-                if self.manifest(v).get("txn_id") == txn_id:
-                    return v
+        replayed = self._txn_version(txn_id)
+        if replayed is not None:
+            return replayed
         if base_version is None:
             # first commit: still dedupe the source by key priority
             target = source.filter("1 = 0")
@@ -919,11 +889,10 @@ class VersionedTable:
         already carries the token, publish returns that version as a
         no-op (and drops the now-redundant staged files) instead of
         committing a duplicate."""
-        if staged.txn_id is not None:
-            for v in reversed(self.versions()):
-                if self.manifest(v).get("txn_id") == staged.txn_id:
-                    self.abort(staged)
-                    return v
+        replayed = self._txn_version(staged.txn_id)
+        if replayed is not None:
+            self.abort(staged)
+            return replayed
         # Never commit a manifest pointing at vanished data: a gc run
         # (gc_orphans(include_staged=True)) or stray cleanup between
         # stage() and publish() must fail HERE, not at first read.
@@ -1083,9 +1052,7 @@ class VersionedTable:
         given numeric columns (one wide shuffle — the price of
         clustering), so subsequent scans prune files AND row groups via
         parquet min/max stats on every clustered column."""
-        latest = self.latest_version()
-        if latest is None:
-            raise FileNotFoundError(f"no committed version at {self.path}")
+        latest = self._head()
         df = self.read(spark, latest)
         if cluster_by:
             from pyspark.sql import functions as F
@@ -1129,9 +1096,7 @@ class VersionedTable:
         ``min_files`` small files exist — a no-op needs no commit)."""
         import os
 
-        latest = self.latest_version()
-        if latest is None:
-            raise FileNotFoundError(f"no committed version at {self.path}")
+        latest = self._head()
         m = self.manifest(latest)
         all_files = sorted(self._version_abs_files(m))
         sizes = {f: os.path.getsize(f) for f in all_files}
@@ -1145,28 +1110,12 @@ class VersionedTable:
             self.path / _DATA_DIR / f"v{latest + 1:05d}-{uuid.uuid4().hex[:8]}"
         )
         files, schema = self._write_data_with_stats(packed, data_dir)
-        rel_new = sorted(
-            str(p.relative_to(self.path)) for p in data_dir.glob("part-*.parquet")
-        )
-        rel_big = [str(Path(f).relative_to(self.path)) for f in big]
-        entries: list[dict] = []
-        if files:
-            entries += [
-                {**e, "path": str((data_dir / e["path"]).relative_to(self.path))}
-                for e in files
-            ]
-        prior_root = (
-            self.path
-            if m.get("paths_relative_to") == "table"
-            else self.path / m["data_dir"]
-        )
+        live = big + sorted(str(p) for p in data_dir.glob("part-*.parquet"))
+        _, prior_entries = self._version_files(m)
         big_set = set(big)
-        for e in m.get("files") or []:
-            abs_p = str(prior_root / e["path"])
-            if abs_p in big_set:  # carry the untouched files' skipping stats
-                entries.append(
-                    {**e, "path": str(Path(abs_p).relative_to(self.path))}
-                )
+        entries = [{**e, "path": str(data_dir / e["path"])} for e in files or ()]
+        # carry the untouched files' skipping stats
+        entries += [e for e in prior_entries if e["path"] in big_set]
         # COMPLETENESS INVARIANT: read_pruned/read_pruned_multi treat a
         # non-empty 'files' list as the version's COMPLETE file set, so
         # every live path in file_paths MUST hold an entry. Config
@@ -1178,18 +1127,18 @@ class VersionedTable:
         # read" for them (sound) instead of silently dropping rows.
         if entries:
             covered = {e["path"] for e in entries}
-            entries += [
-                {"path": p, "stats": {}}
-                for p in rel_big + rel_new
-                if p not in covered
-            ]
+            entries += [{"path": p, "stats": {}} for p in live if p not in covered]
+
+        def rel(p: str) -> str:
+            return str(Path(p).relative_to(self.path))
+
         self._commit(
             latest + 1,
             data_dir,
             f"compact-small:{n_out}",
-            files=entries or None,
+            files=[{**e, "path": rel(e["path"])} for e in entries] or None,
             schema=schema,
-            extra={"file_paths": rel_big + rel_new, "paths_relative_to": "table"},
+            extra={"file_paths": [rel(p) for p in live], "paths_relative_to": "table"},
         )
         return latest + 1
 
@@ -1223,13 +1172,13 @@ class VersionedTable:
         return next_version
 
     def _version_abs_files(self, m: dict) -> set[str]:
-        """Absolute data files a manifest references (file list for
-        compact_small manifests, directory listing otherwise)."""
-        paths = self._version_file_paths(m)
-        if paths is not None:
+        """Absolute data files a manifest references: a file-list
+        version's files, or the parquet files in a directory version's
+        directory."""
+        paths, _ = self._version_files(m)
+        if "file_paths" in m:
             return set(paths)
-        d = self.path / m["data_dir"]
-        return {str(p) for p in d.glob("*.parquet")} if d.is_dir() else set()
+        return {str(p) for p in Path(paths[0]).glob("*.parquet")}
 
     def vacuum(self, keep_last: int = 1) -> list[int]:
         """Drop all but the newest ``keep_last`` versions (manifest +

@@ -264,6 +264,7 @@ def test_summary_records_prior_conditions(tmp_path, monkeypatch):
     tmp_path.joinpath("BENCH_r16.json").write_text(json.dumps(
         {"rc": 0, "parsed": {"value": 5.0, "cpus": 32, "loadavg_1m": 4.3, "queries": {"a": 1.0}}}
     ))
+    monkeypatch.setattr(bench.os, "getloadavg", lambda: (4.3, 4.3, 4.3))
     timings = _fake_timings(20)
     for cpus, like in (("32", True), ("4", False)):
         monkeypatch.setenv("SPARK_GRAFT_CPUS", cpus)
@@ -273,6 +274,25 @@ def test_summary_records_prior_conditions(tmp_path, monkeypatch):
         assert parsed["sameset_prev_cpus"] == 32
         assert parsed["sameset_prev_loadavg_1m"] == 4.3
         assert parsed["sameset_like_for_like"] is like
+
+
+@pytest.mark.parametrize("prior_load, like", [(6.0, False), (3.0, True)])
+def test_adverse_load_prior_is_not_like_for_like(tmp_path, monkeypatch, prior_load, like):
+    """At the same ``cpus``, a prior taken at 3x this run's per-core load
+    is not like-for-like; one at 1.5x still is. Both per-core loads are
+    recorded."""
+    tmp_path.joinpath("BENCH_r16.json").write_text(json.dumps(
+        {"rc": 0, "parsed": {"value": 5.0, "cpus": 4, "loadavg_1m": prior_load, "queries": {"a": 1.0}}}
+    ))
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "4")
+    monkeypatch.setattr(bench.os, "getloadavg", lambda: (2.0, 2.0, 2.0))
+    timings = _fake_timings(20)
+    line, _ = bench.build_summaries(timings, {k: 0.0 for k in timings}, "sf0.1", 3, tmp_path)
+    parsed = json.loads(line)
+    assert parsed["sameset_prev_cpus"] == parsed["cpus"] == 4
+    assert parsed["loadavg_per_core"] == 0.5
+    assert parsed["sameset_prev_loadavg_per_core"] == prior_load / 4
+    assert parsed["sameset_like_for_like"] is like
 
 
 @pytest.mark.parametrize("raw", ["8 ", " 8", "8\n"])

@@ -145,6 +145,42 @@ def test_qa_and_audit(glamira):
     assert orr.orphan_product_rate < 0.2
 
 
+
+def test_orphan_rates_equal_duckdb_left_join_count(glamira, tmp_path):
+    """The audit's EXISTS flags count what the reference's LEFT JOIN
+    counts against DISTINCT dim keys, over the staging models written to
+    parquet. The fixture has NULL fact keys and duplicate dim keys: a
+    NULL key is an orphan, and a duplicate key must not fan out."""
+    import duckdb
+
+    p, _ = glamira
+    con = duckdb.connect()
+    for name in ("stg_order", "stg_product", "stg_customer", "stg_location"):
+        p.ref(name).write.parquet(str(tmp_path / name))
+        con.execute(f"CREATE VIEW {name} AS SELECT * FROM '{tmp_path / name}/*.parquet'")
+    assert con.sql("SELECT count(*) FROM stg_order WHERE user_db_id IS NULL").fetchone()[0] > 0
+    assert con.sql(
+        "SELECT count(*) - count(DISTINCT user_db_id) FROM stg_customer"
+    ).fetchone()[0] > 0
+    expect = con.sql(
+        """
+        SELECT count(*) AS fact_rows,
+               count(*) FILTER (WHERE p.k IS NULL) AS orphan_product_rows,
+               count(*) FILTER (WHERE c.k IS NULL) AS orphan_customer_rows,
+               count(*) FILTER (WHERE l.k IS NULL) AS orphan_location_rows
+        FROM stg_order o
+        LEFT JOIN (SELECT DISTINCT product_id AS k FROM stg_product) p ON o.product_id = p.k
+        LEFT JOIN (SELECT DISTINCT user_db_id AS k FROM stg_customer) c ON o.user_db_id = c.k
+        LEFT JOIN (SELECT DISTINCT ip AS k FROM stg_location) l ON o.ip = l.k
+        """
+    ).fetchone()
+    got = p.ref("audit_orphan_rates").collect()[0]
+    assert (
+        got.fact_rows, got.orphan_product_rows, got.orphan_customer_rows,
+        got.orphan_location_rows,
+    ) == expect
+    assert got.orphan_customer_rate == expect[2] / expect[0]
+
 def test_stg_order_vs_duckdb(glamira, spark):
     """Differential: replicate stg_order's flatten+parse in DuckDB over
     the same parquet and compare the full flattened line-item set."""

@@ -846,9 +846,10 @@ def test_shard_balance_rank_window_is_partitioned(spark):
 
 @pytest.fixture(scope="module")
 def customer_branch(spark, tmp_path_factory):
-    """Executed plans of the warehouse's customer models over the test
-    generator's events, keyed by model name. ``customer_email_scd`` is
-    materialized first, as ``mart_dim_customer`` reads it back."""
+    """Executed plans of the warehouse's customer models and its orphan
+    audit over the test generator's events, keyed by model name.
+    ``customer_email_scd`` is materialized first, as
+    ``mart_dim_customer`` reads it back."""
     from glamira_batch_processing_spark.plans.glamira import build_glamira_pipeline
     from glamira_batch_processing_spark.sources.raw_generator import write_raw_tables
 
@@ -861,7 +862,9 @@ def customer_branch(spark, tmp_path_factory):
     )
     p.ref("customer_email_scd")
     plans = {}
-    for name in ("stg_customer", "customer_email_scd", "mart_dim_customer"):
+    for name in (
+        "stg_customer", "customer_email_scd", "mart_dim_customer", "audit_orphan_rates",
+    ):
         df = p.models[name].fn(p)
         df.collect()  # AQE's final plan
         plans[name] = df._jdf.queryExecution().executedPlan()
@@ -899,4 +902,18 @@ def test_customer_email_scd_user_filter_is_semi_join(customer_branch):
     ]
     assert len(semis) == 1, plan.toString()
     assert _shuffles(semis[0].left()) == 0, plan.toString()
+    assert _shuffles(plan) == 2, plan.toString()
+
+
+def test_audit_orphan_rates_existence_joins(customer_branch):
+    """Each dim check is a broadcast ExistenceJoin. A left join would
+    need a ``distinct`` per dim, one shuffle each, to stop duplicate
+    dim keys fanning the fact out; the remaining shuffles are the
+    stg_customer aggregation and the final single-partition count (5
+    with the three distincts)."""
+    plan = customer_branch["audit_orphan_rates"]
+    joins = [n for n in _nodes(plan) if n.getClass().getName().endswith("JoinExec")]
+    exist = [n for n in joins if n.joinType().toString().startswith("ExistenceJoin")]
+    assert len(exist) == 3, plan.toString()
+    assert all("BroadcastHashJoin" in n.getClass().getName() for n in exist), plan.toString()
     assert _shuffles(plan) == 2, plan.toString()

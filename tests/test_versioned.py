@@ -1460,3 +1460,60 @@ def test_read_as_of_timestamp(spark, tmp_path):
     assert t.version_as_of(ts0) == 0
     with pytest.raises(FileNotFoundError, match="existed at"):
         t.version_as_of(ts0 - 10)
+
+
+# ---------------------------------------------------------------------------
+# Pruned reads over both manifest forms
+# ---------------------------------------------------------------------------
+
+
+@pytest.fixture(scope="module")
+def both_forms(spark, tmp_path_factory):
+    """One table holding both manifest forms: v0 is a directory version
+    (1 big file + 6 tiny ones), v1 its compact_small file list (the big
+    file carried forward, the tiny ones packed), and v3 a restore of v1
+    committed after an overwrite (v2)."""
+    t = VersionedTable(
+        tmp_path_factory.mktemp("forms") / "tbl", stat_columns=("k",), bloom_columns=("v",)
+    )
+    big = spark.range(20_000).selectExpr("id AS k", "CAST(id AS STRING) AS v").coalesce(1)
+    small = (
+        spark.range(20_000, 20_060)
+        .selectExpr("id AS k", "CAST(id AS STRING) AS v")
+        .repartition(6)
+    )
+    t.create(big.unionByName(small))
+    assert t.compact_small(spark, target_bytes=64 << 10) == 1
+    t.overwrite(spark.createDataFrame([(0, "x")], "k long, v string"))
+    assert t.restore(1) == 3
+    assert "file_paths" not in t.manifest(0)
+    assert "file_paths" in t.manifest(1) and "file_paths" in t.manifest(3)
+    return t
+
+
+_PRUNED_READS = {
+    "read_pruned": (
+        lambda t, spark, v: t.read_pruned(spark, "k", lower=100, upper=300, version=v),
+        "k BETWEEN 100 AND 300",
+    ),
+    "read_pruned_multi": (
+        lambda t, spark, v: t.read_pruned_multi(
+            spark, {"k": {"lower": 20_010}, "v": {"equals": "20030"}}, version=v
+        ),
+        "k >= 20010 AND v = '20030'",
+    ),
+    "read_pruned_in": (
+        lambda t, spark, v: t.read_pruned_in(spark, "k", [12, 20_030, 99_999], version=v),
+        "k IN (12, 20030, 99999)",
+    ),
+}
+
+
+@pytest.mark.parametrize("version", [0, 1, 3], ids=["directory", "compact_small", "restored"])
+@pytest.mark.parametrize("reader", sorted(_PRUNED_READS))
+def test_pruned_reads_equal_full_scan_on_both_manifest_forms(spark, both_forms, reader, version):
+    read, where = _PRUNED_READS[reader]
+    df, info = read(both_forms, spark, version)
+    assert info["pruned"] and info["files_read"] <= info["files_total"], info
+    assert _rows(df) == _rows(both_forms.read(spark, version).filter(where))
+    assert _rows(df)
