@@ -5,41 +5,3 @@ whole-stage-codegen friendly, no Python UDFs. These are the building
 blocks the reference implements as giant inline SQL expressions
 (SURVEY.md §2.8).
 """
-
-from .cleaning import (
-    FAKE_NULL_VOCAB,
-    clean_string,
-    is_blank,
-    is_fake_null,
-    normalize_email,
-    parse_localized_number,
-    safe_divide,
-    user_id_status,
-)
-from .keys import surrogate_key, item_key, location_key
-from .currency import (
-    currency_code_expr,
-    currency_status_expr,
-    infer_currency_from_tld,
-    url_host,
-    url_tld,
-)
-
-__all__ = [
-    "FAKE_NULL_VOCAB",
-    "clean_string",
-    "is_blank",
-    "is_fake_null",
-    "normalize_email",
-    "parse_localized_number",
-    "safe_divide",
-    "user_id_status",
-    "surrogate_key",
-    "item_key",
-    "location_key",
-    "currency_code_expr",
-    "currency_status_expr",
-    "infer_currency_from_tld",
-    "url_host",
-    "url_tld",
-]

@@ -5,95 +5,3 @@ Each module re-expresses one reference operator family Spark-first
 similarity, text, multimodal, sessionization, sketches, skew, as-of)
 the reference lacks.
 """
-
-from .asof import asof_join
-from .behavior import funnel_counts, funnel_user_flags
-from .audit import column_profile, null_rates, orphan_rates, qa_flags
-from .dedup import (
-    band_signatures,
-    doc_shingles,
-    exact_dedup_stats,
-    incremental_lsh_pairs,
-    lsh_candidate_pairs,
-    lsh_candidate_pairs_fast,
-    minhash_signatures,
-    minhash_signatures_fast,
-    ngram_jaccard_pairs,
-    simhash_bits,
-)
-from .bpe import bpe_encode_stats, bpe_train, encode_text
-from .clustering import kmeans_fit, lloyd_step_quantized, seed_centroids
-from .incremental import merge_upsert
-from .pq import pq_adc_topk, pq_codebooks, pq_encode_expr
-from .rangejoin import range_lookup_join
-from .similarity import (
-    cosine,
-    cosine_topk,
-    cosine_topk_np,
-    dot,
-    ivf_assign,
-    ivf_search,
-    ivf_search_np,
-    norm,
-)
-from .sketches import (
-    cms_estimate,
-    cms_sketch,
-    hll_estimate,
-    hll_sketch,
-    kmv_estimate,
-    kmv_sketch,
-)
-from .skew import salted_agg, with_salt
-from .timeseries import gapfill_by_key
-from .windows import dedupe_latest, rank_dedupe, scd2_apply, scd2_from_history
-
-__all__ = [
-    "asof_join",
-    "gapfill_by_key",
-    "funnel_counts",
-    "funnel_user_flags",
-    "null_rates",
-    "column_profile",
-    "orphan_rates",
-    "qa_flags",
-    "band_signatures",
-    "bpe_encode_stats",
-    "bpe_train",
-    "encode_text",
-    "doc_shingles",
-    "exact_dedup_stats",
-    "incremental_lsh_pairs",
-    "lsh_candidate_pairs",
-    "lsh_candidate_pairs_fast",
-    "minhash_signatures_fast",
-    "minhash_signatures",
-    "ngram_jaccard_pairs",
-    "simhash_bits",
-    "merge_upsert",
-    "range_lookup_join",
-    "kmeans_fit",
-    "lloyd_step_quantized",
-    "seed_centroids",
-    "cosine",
-    "cosine_topk",
-    "dot",
-    "ivf_assign",
-    "ivf_search",
-    "ivf_search_np",
-    "cosine_topk_np",
-    "norm",
-    "kmv_estimate",
-    "kmv_sketch",
-    "cms_sketch",
-    "cms_estimate",
-    "pq_adc_topk",
-    "pq_codebooks",
-    "pq_encode_expr",
-    "salted_agg",
-    "with_salt",
-    "dedupe_latest",
-    "rank_dedupe",
-    "scd2_apply",
-    "scd2_from_history",
-]

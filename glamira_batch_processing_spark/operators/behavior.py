@@ -54,25 +54,3 @@ def funnel_user_flags(
     return df.groupBy(user_col).agg(
         *[F.max(q).alias(f"stage_{i}") for i, q in enumerate(qualified)]
     )
-
-
-def funnel_counts(
-    events: DataFrame,
-    stages: Sequence[str],
-    **kwargs,
-) -> DataFrame:
-    """One-row funnel rollup: ``users_<stage>`` completion counts plus
-    ``rate_<k>`` = users at stage k / users at stage k-1 (single IEEE
-    division of exact counts)."""
-    flags = funnel_user_flags(events, stages, **kwargs)
-    aggs = [
-        F.sum(f"stage_{i}").cast("long").alias(f"users_{ev}")
-        for i, ev in enumerate(stages)
-    ]
-    rates = [
-        (F.sum(f"stage_{i}").cast("double") / F.sum(f"stage_{i - 1}")).alias(
-            f"rate_{stages[i - 1]}_to_{stages[i]}"
-        )
-        for i in range(1, len(stages))
-    ]
-    return flags.agg(*(aggs + rates))

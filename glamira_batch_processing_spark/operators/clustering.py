@@ -1,25 +1,14 @@
-"""Distributed k-means (Lloyd's algorithm) over embedding columns.
+"""K-means (Lloyd's algorithm) steps over embedding columns.
 
 Not in the reference (its only "clustering" is BigQuery table
-clustering); this is the training step the IVF ANN index
-(operators/similarity.py) needs for real centroids instead of seeded
-ones.
+clustering); :func:`lloyd_assign` is the nearest-centroid assignment
+behind SemDeDup (operators/similarity.py) and the IVF-PQ coarse cells
+(operators/pq.py).
 
-Spark-first iterative shape (same discipline as
-operators/components.py): per round one distributed pass computes
-per-cluster (count, component-sums) PARTIALS inside an Arrow/numpy
-mapInPandas kernel — k rows per partition, never row data — and the
-driver reduces those k x partitions tiny rows and updates the k x dim
-centroid array. Centroids travel to executors in the task closure
-(broadcast analog). Rounds are driver control flow only; the corpus is
-scanned once per round with no shuffle at all (the partial reduce is a
-collect of control-plane-sized data, deliberately NOT a groupBy — k
-and dim are tiny, a shuffle would cost more than it saves).
-
-The oracle-facing single step (``lloyd_assign_quantized`` +
-``sql_lloyd_step``) instead uses ordered-fold Column expressions with
-literal centroids and integer-quantized component sums, so DuckDB
-reproduces the assignment and the aggregation bit-for-bit (the same
+The oracle-facing single step (``lloyd_step_quantized`` +
+``sql_lloyd_step``) uses ordered-fold Column expressions with literal
+centroids and integer-quantized component sums, so DuckDB reproduces
+the assignment and the aggregation bit-for-bit (the same
 floor(x*1e6 + 0.5) money-math trick the warehouse queries use —
 float->decimal casts would diverge by 1 ulp between engines, quantized
 bigint sums cannot).
@@ -67,8 +56,7 @@ def lloyd_assign(vec: Column, centroids: list[list[float]]) -> Column:
     """Nearest-centroid id (ties -> lower id) as a Column expression.
 
     Argmin is array_min over (dist, id) structs — each distance subtree
-    appears ONCE, keeping the tree linear in k (round 14; same shape as
-    pq_encode_expr). The round-13 chained when() duplicated the running
+    appears ONCE, keeping the tree linear in k (round 14). The round-13 chained when() duplicated the running
     best per step (~3^k nodes of interpreted fold — the dominant cost
     of every lloyd_assign caller at bench scale). Struct ordering is
     (d, id) lexicographic, so ties break to the lower id exactly like
@@ -180,108 +168,3 @@ def sql_lloyd_step(
     FROM dists
     GROUP BY 1
     """
-
-
-def kmeans_fit(
-    vectors: DataFrame,
-    k: int = 8,
-    n_iter: int = 10,
-    vec_col: str = "embedding",
-    tol: float = 1e-6,
-):
-    """Production Lloyd's: Arrow/numpy assignment kernel, driver-side
-    centroid update. Returns (centroids ndarray [k, dim], inertia float,
-    rounds run).
-
-    Initialization is deterministic (md5-seeded) so runs are
-    reproducible without RNG state. Each round scans the corpus once
-    with ZERO shuffles; executors emit k (count, sum-vector, inertia)
-    partials per partition and the driver reduces them — at 100 TB the
-    collected partials are k x partitions x dim doubles, control-plane
-    sized, while the corpus never moves.
-    """
-    import numpy as np
-    from pyspark.sql.types import (
-        ArrayType,
-        DoubleType,
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    # NULL embeddings would crash the numpy kernel (np.vstack on a 0-d
-    # nan array); drop them — matching "skip unparseable rows" semantics
-    # of the other production kernels — before anything else.
-    vectors = vectors.filter(F.col(vec_col).isNotNull())
-    first = vectors.select(vec_col).first()
-    if first is None:
-        raise ValueError("kmeans_fit: empty input")
-    dim = len(first[0])
-    cents = np.array(seed_centroids(dim, k), dtype=np.float64)
-
-    partial_schema = StructType(
-        [
-            StructField("cluster_id", IntegerType()),
-            StructField("n", LongType()),
-            StructField("vec_sum", ArrayType(DoubleType())),
-            StructField("inertia", DoubleType()),
-        ]
-    )
-
-    inertia = float("inf")
-    rounds = 0
-    for _ in range(n_iter):
-        C = cents.copy()  # closure-shipped snapshot for this round
-
-        def partials(batches):
-            import pandas as pd
-
-            sums = np.zeros((k, C.shape[1]))
-            counts = np.zeros(k, dtype=np.int64)
-            sse = 0.0
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                V = np.vstack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-                # ||v - c||^2 = ||v||^2 - 2 v.c + ||c||^2
-                d2 = (
-                    (V * V).sum(axis=1, keepdims=True)
-                    - 2.0 * (V @ C.T)
-                    + (C * C).sum(axis=1)
-                )
-                lab = np.argmin(d2, axis=1)
-                sse += float(d2[np.arange(len(lab)), lab].sum())
-                for j in range(k):
-                    m = lab == j
-                    counts[j] += int(m.sum())
-                    if m.any():
-                        sums[j] += V[m].sum(axis=0)
-            yield pd.DataFrame(
-                {
-                    "cluster_id": np.arange(k, dtype=np.int32),
-                    "n": counts,
-                    "vec_sum": list(sums),
-                    "inertia": np.full(k, sse / k),
-                }
-            )
-
-        rows = vectors.select(vec_col).mapInPandas(partials, partial_schema).collect()
-        counts = np.zeros(k, dtype=np.int64)
-        sums = np.zeros_like(cents)
-        new_inertia = 0.0
-        for r in rows:
-            counts[r.cluster_id] += r.n
-            sums[r.cluster_id] += np.asarray(r.vec_sum)
-            new_inertia += r.inertia
-        new_cents = cents.copy()
-        nonempty = counts > 0
-        new_cents[nonempty] = sums[nonempty] / counts[nonempty, None]
-        shift = float(np.abs(new_cents - cents).max())
-        cents = new_cents
-        rounds += 1
-        if inertia - new_inertia <= tol and shift <= tol:
-            inertia = new_inertia
-            break
-        inertia = new_inertia
-    return cents, inertia, rounds

@@ -25,6 +25,8 @@ engine), minima are lexicographic, ordering has total tie-breaks.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -45,6 +47,14 @@ def exact_dedup_stats(df: DataFrame, text_col: str = "text", id_col: str = "doc_
     )
 
 
+def _ngram_explode(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFrame:
+    """(id, g) rows, one per word n-gram: ``g`` is a struct of the n
+    consecutive lower-cased words (fields "0".."n-1")."""
+    w = F.split(F.lower(F.col(text_col)), " ")
+    sz = F.greatest(F.size(w) - (n - 1), F.lit(0))
+    z = F.arrays_zip(*[F.slice(w, k + 1, sz) for k in range(n)])
+    return df.select(id_col, F.explode(z).alias("g"))
+
 
 def doc_shingles(
     df: DataFrame,
@@ -61,10 +71,7 @@ def doc_shingles(
     Pass distinct=False when the consumer is multiplicity-insensitive
     (e.g. min() in minhash) to skip the dedup shuffle.
     """
-    w = F.split(F.lower(F.col(text_col)), " ")
-    sz = F.greatest(F.size(w) - (n - 1), F.lit(0))
-    z = F.arrays_zip(*[F.slice(w, k + 1, sz) for k in range(n)])
-    out = df.select(id_col, F.explode(z).alias("g")).select(
+    out = _ngram_explode(df, text_col, id_col, n).select(
         id_col,
         F.concat_ws(" ", *[F.col(f"g.{k}") for k in range(n)]).alias("shingle"),
     )
@@ -211,7 +218,12 @@ def lsh_candidate_pairs_on_shingles(
     shingle pass and feed both legs instead of re-running the corpus
     explode per leg (guide §2.4)."""
     mh = minhash_signatures(shingled, id_col, num_hashes)
-    sigs = band_signatures(mh, id_col, num_hashes, band_rows)
+    return _bucket_pairs(band_signatures(mh, id_col, num_hashes, band_rows), id_col)
+
+
+def _bucket_pairs(sigs: DataFrame, id_col: str) -> DataFrame:
+    """Distinct (doc_a < doc_b) pairs sharing a (band, band_sig) bucket:
+    the LSH bucket self-join."""
     a = sigs.select(F.col(id_col).alias("doc_a"), "band", "band_sig")
     b = sigs.select(F.col(id_col).alias("doc_b"), "band", "band_sig")
     return (
@@ -219,6 +231,29 @@ def lsh_candidate_pairs_on_shingles(
         .filter(F.col("doc_a") < F.col("doc_b"))
         .select("doc_a", "doc_b")
         .distinct()
+    )
+
+
+def _band_stack(
+    mh: DataFrame,
+    id_col: str,
+    num_hashes: int,
+    band_rows: int,
+    combine: Callable[[list[Column]], Column],
+) -> DataFrame:
+    """(id, band, band_sig) rows: band b's signature is ``combine`` of
+    its ``band_rows`` minhash columns, stacked with one explode."""
+    bands = [
+        F.struct(
+            F.lit(b).alias("band"),
+            combine([F.col(f"mh{b * band_rows + r}") for r in range(band_rows)]).alias(
+                "band_sig"
+            ),
+        )
+        for b in range(num_hashes // band_rows)
+    ]
+    return mh.select(id_col, F.explode(F.array(*bands)).alias("bs")).select(
+        id_col, F.col("bs.band").alias("band"), F.col("bs.band_sig").alias("band_sig")
     )
 
 
@@ -230,19 +265,9 @@ def band_signatures(
 ) -> DataFrame:
     """(id, band, band_sig) rows from an mh0..mh{k-1} signature table —
     the LSH banding step, shared by one-shot and incremental dedup."""
-    n_bands = num_hashes // band_rows
-    band_cols = []
-    for b in range(n_bands):
-        sig = F.concat_ws(
-            "|",
-            *[
-                F.col(f"mh{b * band_rows + r}").cast("string")
-                for r in range(band_rows)
-            ],
-        )
-        band_cols.append(F.struct(F.lit(b).alias("band"), sig.alias("band_sig")))
-    return mh.select(id_col, F.explode(F.array(*band_cols)).alias("bs")).select(
-        id_col, F.col("bs.band").alias("band"), F.col("bs.band_sig").alias("band_sig")
+    return _band_stack(
+        mh, id_col, num_hashes, band_rows,
+        lambda cols: F.concat_ws("|", *[c.cast("string") for c in cols]),
     )
 
 
@@ -310,10 +335,7 @@ def doc_shingle_words(
     ever materializing the concatenated shingle string (measured ~2x
     on the LSH fast path: the concat_ws dominated once hashing became
     cheap)."""
-    w = F.split(F.lower(F.col(text_col)), " ")
-    sz = F.greatest(F.size(w) - (n - 1), F.lit(0))
-    z = F.arrays_zip(*[F.slice(w, k + 1, sz) for k in range(n)])
-    return df.select(id_col, F.explode(z).alias("g")).select(
+    return _ngram_explode(df, text_col, id_col, n).select(
         id_col, *[F.col(f"g.{k}").alias(f"w{k}") for k in range(n)]
     )
 
@@ -383,24 +405,8 @@ def lsh_candidate_pairs_fast_on_words(
     shingle frame (see :func:`doc_shingle_words`) — the shared-shingle
     split, as in :func:`lsh_candidate_pairs_on_shingles`."""
     mh = minhash_signatures_fast(shingled_words, id_col, num_hashes, n)
-    n_bands = num_hashes // band_rows
-    band_cols = []
-    for b in range(n_bands):
-        sig = F.xxhash64(
-            *[F.col(f"mh{b * band_rows + r}") for r in range(band_rows)]
-        )
-        band_cols.append(F.struct(F.lit(b).alias("band"), sig.alias("band_sig")))
-    sigs = mh.select(
-        id_col, F.explode(F.array(*band_cols)).alias("bs")
-    ).select(id_col, F.col("bs.band").alias("band"), F.col("bs.band_sig").alias("band_sig"))
-    a = sigs.select(F.col(id_col).alias("doc_a"), "band", "band_sig")
-    b = sigs.select(F.col(id_col).alias("doc_b"), "band", "band_sig")
-    return (
-        a.join(b, ["band", "band_sig"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
+    sigs = _band_stack(mh, id_col, num_hashes, band_rows, lambda cols: F.xxhash64(*cols))
+    return _bucket_pairs(sigs, id_col)
 
 
 def simhash_bits(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", bits: int = 32) -> DataFrame:

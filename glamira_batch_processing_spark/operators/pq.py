@@ -13,19 +13,18 @@ index fits executor memory where raw vectors cannot.
 
 Engine-exact determinism (the repo's standard tricks):
 - codebooks are md5-derived literals (``pq_codebooks``) — embeddable
-  in any engine; swap in kmeans_fit-trained codebooks per subspace for
-  production recall, the algebra is unchanged;
+  in any engine; trained codebooks per subspace drop in unchanged
+  (same [m][ks][d/m] shape), the algebra does not depend on them;
 - every subspace distance is an ordered double fold QUANTIZED to
   integer micros (floor(x*1e6 + 0.5)) before any comparison or sum, so
   argmin ties, ADC sums, and rankings are bit-identical in DuckDB
   (float sums reorder across partitions; bigint sums cannot);
 - encode and oracle share ONE relational formulation (broadcast
-  centroids x quantized arg-min with lower-code tie-break);
-  ``pq_encode_expr`` is the equivalent scan-fused expression form,
-  kept for composition into projections — equivalence is pinned by the
-  numpy-reference test. (The expression form's m*ks distance subtrees
-  exceed the whole-stage-codegen method limit and run interpreted, so
-  the join form is also the faster one.)
+  centroids x quantized arg-min with lower-code tie-break), pinned
+  against a plain numpy reference in the tests. (A scan-fused
+  expression form of the encode has m*ks distance subtrees that exceed
+  the whole-stage-codegen method limit and run interpreted, so the
+  join form is the faster one.)
 """
 
 from __future__ import annotations
@@ -69,47 +68,6 @@ def subspace_fold_q(term, ds: int) -> Column:
         t = term(i)
         total = t if total is None else total + t
     return F.floor(total * QUANT + F.lit(0.5)).cast("long")
-
-
-def _subdist_q(vec: Column, s: int, centroid: list[float]) -> Column:
-    """Quantized squared L2 between subspace s of ``vec`` and a literal
-    centroid: left-associated term sum -> floor(x*1e6 + 0.5) bigint.
-
-    UNROLLED element_at arithmetic, not aggregate()/zip_with():
-    higher-order array functions evaluate their lambda interpreted,
-    per element — with 128 centroid distances per row that measured
-    ~6x slower than the codegen'd explicit sum. The left-assoc order
-    ((t1+t2)+t3)... matches DuckDB's list_reduce fold exactly."""
-    ds = len(centroid)
-
-    def term(i: int) -> Column:
-        x = F.element_at(vec, s * ds + i + 1).cast("double") - F.lit(centroid[i])
-        return x * x
-
-    return subspace_fold_q(term, ds)
-
-
-def pq_encode_expr(vec: Column, codebooks: list[list[list[float]]]) -> list[Column]:
-    """m code Columns (nearest centroid per subspace, quantized-distance
-    argmin, ties -> lower code) — a pure expression tree that fuses
-    into the scan: encoding 100 TB is a zero-shuffle projection.
-
-    The argmin is array_min over (dist, code) structs — each distance
-    subtree appears ONCE, keeping the plan linear in ks (a chained
-    when()-argmin duplicates the running best per step: 2^ks nodes,
-    which OOMs the driver at ks=16)."""
-    codes = []
-    for s, book in enumerate(codebooks):
-        pairs = F.array(
-            *[
-                F.struct(
-                    _subdist_q(vec, s, cent).alias("d"), F.lit(c).alias("c")
-                )
-                for c, cent in enumerate(book)
-            ]
-        )
-        codes.append(F.array_min(pairs).getField("c").alias(f"code{s}"))
-    return codes
 
 
 def pq_centroids_df(spark: SparkSession, codebooks: list[list[list[float]]]) -> DataFrame:
@@ -164,11 +122,10 @@ def pq_adc_topk(
 
     # Relational encode: corpus x broadcast centroids (m*ks tiny rows),
     # one quantized subspace distance per joined row, then a map-side-
-    # combinable min-agg on (vector, subspace). The expression-tree
-    # encode (pq_encode_expr) is semantically identical but its m*ks
-    # distance subtrees overflow the whole-stage-codegen method limit
-    # and fall back to interpreted eval — measured ~5x slower than this
-    # join at sf0.1. Shuffle volume here is m compact rows per vector
+    # combinable min-agg on (vector, subspace). An expression-tree
+    # encode is semantically identical but its m*ks distance subtrees
+    # overflow the whole-stage-codegen method limit and fall back to
+    # interpreted eval — measured ~5x slower than this join at sf0.1. Shuffle volume here is m compact rows per vector
     # (the size of the codes themselves).
     cents = pq_centroids_df(spark, codebooks)
 
@@ -310,19 +267,21 @@ def ivfpq_adc_topk(
     )
 
     queries = base if query_pred is None else base.filter(query_pred)
+    # codes and qtab both carry the ``s`` column of cents: the query side
+    # renames its keys so the join compares two columns, not s = s
     qtab = queries.crossJoin(F.broadcast(cents)).select(
         F.col(id_col).alias("query_id"),
         F.col("cell").alias("qcell"),
-        "s",
-        F.col("c").alias("code"),
+        F.col("s").alias("qs"),
+        F.col("c").alias("qcode"),
         resid_subdist("vec").alias("partial_q"),
     )
 
     scored = codes.join(
         F.broadcast(qtab),
-        (codes.s == qtab.s)
-        & (codes.code == qtab.code)
-        & (codes.cell == qtab.qcell),
+        (F.col("s") == F.col("qs"))
+        & (F.col("code") == F.col("qcode"))
+        & (F.col("cell") == F.col("qcell")),
     )
     if exclude_self:
         scored = scored.filter(F.col("query_id") != F.col("neighbor_id"))

@@ -33,10 +33,6 @@ def norm(a: Column) -> Column:
     return F.sqrt(dot(a, a))
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
-
-
 def sql_dot(a: str, b: str) -> str:
     """DuckDB twin of :func:`dot` — same fold order, same doubles."""
     return (
@@ -58,10 +54,14 @@ def cosine_topk(
 
     The query side is broadcast (small); scoring is a map-side nested
     loop over the corpus scan — no shuffle until the final per-query
-    top-k, which is a window over query_id.
+    top-k, which is a window over query_id. Each side's norm is computed
+    once per row (``qnrm`` / ``cnrm``), not once per scored pair.
     """
-    j = corpus.join(F.broadcast(queries), F.col(query_id) != F.col(corpus_id))
-    scored = j.withColumn("cosine_sim", cosine(F.col(query_vec), F.col(corpus_vec)))
+    q = queries.withColumn("qnrm", norm(F.col(query_vec)))
+    c = corpus.withColumn("cnrm", norm(F.col(corpus_vec)))
+    sim = dot(F.col(query_vec), F.col(corpus_vec)) / (F.col("qnrm") * F.col("cnrm"))
+    j = c.join(F.broadcast(q), F.col(query_id) != F.col(corpus_id))
+    scored = j.withColumn("cosine_sim", sim)
     w = Window.partitionBy(query_id).orderBy(
         F.desc("cosine_sim"), F.col(corpus_id)
     )
@@ -210,27 +210,22 @@ def ivf_search(
     nprobe=1 -> ~0.36, nprobe=2 -> higher, nprobe=K -> 1.0 (exact).
     Cost grows linearly with nprobe; K buckets shrink candidates ~K/nprobe.
     ``query_pred`` selects the query rows from ``vectors``.
+
+    The ordered-fold reference the Arrow kernel :func:`ivf_search_np` is
+    tested against; the registered IVF queries build on the same
+    :func:`ivf_rank`.
     """
-    normed = vectors.withColumn("__nrm", norm(F.col(vec_col)))
-    cents = centroids.withColumn("__cnrm", norm(F.col(centroid_vec)))
-    c_sim = dot(F.col(vec_col), F.col(centroid_vec)) / (
-        F.col("__nrm") * F.col("__cnrm")
-    )
-    scored_c = normed.crossJoin(F.broadcast(cents)).withColumn("__csim", c_sim)
-    w_assign = Window.partitionBy(vec_id).orderBy(
-        F.desc("__csim"), F.col(centroid_id)
-    )
-    ranked = scored_c.withColumn("__crn", F.row_number().over(w_assign))
-    assigned = ranked.filter(F.col("__crn") == 1).select(
+    ranked = ivf_rank(vectors, centroids, vec_id, vec_col, centroid_id, centroid_vec)
+    assigned = ranked.filter(F.col("rn") == 1).select(
         F.col(vec_id).alias("neighbor_id"),
         F.col(vec_col).alias("__cvec2"),
-        F.col("__nrm").alias("__cnrm2"),
+        F.col("nrm").alias("__cnrm2"),
         F.col(centroid_id).alias("__bucket"),
     )
-    probes = ranked.filter(query_pred & (F.col("__crn") <= nprobe)).select(
+    probes = ranked.filter(query_pred & (F.col("rn") <= nprobe)).select(
         F.col(vec_id).alias("query_id"),
         F.col(vec_col).alias("__qvec"),
-        F.col("__nrm").alias("__qnrm"),
+        F.col("nrm").alias("__qnrm"),
         F.col(centroid_id).alias("__bucket"),
     )
     cand = probes.join(assigned, "__bucket").filter(
@@ -240,6 +235,7 @@ def ivf_search(
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.col("neighbor_id"))
     return (
         cand.withColumn("cosine_sim", sim)
+        # a centroid id listed twice puts one pair in two probed buckets
         .dropDuplicates(["query_id", "neighbor_id"])
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
@@ -256,7 +252,8 @@ def ivf_search_np(
     vec_id: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Arrow/numpy IVF ANN: the production twin of :func:`ivf_search`.
+    """Arrow/numpy IVF ANN: the production twin of the fold reference
+    :func:`ivf_search`.
 
     Both kernels — centroid assignment and within-bucket scoring — run
     as vectorized mapInPandas (Arrow batch -> BLAS matmul / einsum), so
@@ -311,7 +308,7 @@ def ivf_search_np(
             Vn = V / np.linalg.norm(V, axis=1, keepdims=True)
             sims = Vn @ Cn.T  # (batch, K)
             # stable argsort on -sims: ties break toward the lower
-            # centroid id (Cn rows are id-sorted), matching ivf_search.
+            # centroid id (Cn rows are id-sorted), matching ivf_rank.
             order = np.argsort(-sims, axis=1, kind="stable")
             nvec_list = list(Vn)
             out_vid, out_isq, out_rank, out_bucket, out_vec = [], [], [], [], []
@@ -408,6 +405,34 @@ def ivf_search_np(
     )
 
 
+def ivf_rank(
+    vectors: DataFrame,
+    centroids: DataFrame,
+    vec_id: str = "vec_id",
+    vec_col: str = "embedding",
+    centroid_id: str = "centroid_id",
+    centroid_vec: str = "cvec",
+) -> DataFrame:
+    """Every vector paired with every centroid (broadcast cross join),
+    ranked per vector by cosine: ``rn`` 1 is the nearest centroid, ties
+    break to the lower ``centroid_id``. Adds the vector's norm ``nrm``,
+    the centroid's ``cnrm`` and the similarity ``c_sim``.
+
+    The one IVF centroid-ranking step: assignment is its ``rn == 1``
+    cut (:func:`ivf_assign`), multi-probe takes ``rn <= nprobe``. Each
+    norm is computed once per row, not once per vector x centroid
+    pair — the same ordered fold, so the doubles are identical."""
+    normed = vectors.withColumn("nrm", norm(F.col(vec_col)))
+    cents = centroids.withColumn("cnrm", norm(F.col(centroid_vec)))
+    sim = dot(F.col(vec_col), F.col(centroid_vec)) / (F.col("nrm") * F.col("cnrm"))
+    w = Window.partitionBy(vec_id).orderBy(F.desc("c_sim"), F.col(centroid_id))
+    return (
+        normed.crossJoin(F.broadcast(cents))
+        .withColumn("c_sim", sim)
+        .withColumn("rn", F.row_number().over(w))
+    )
+
+
 def ivf_assign(
     vectors: DataFrame,
     centroids: DataFrame,
@@ -416,15 +441,12 @@ def ivf_assign(
     centroid_id: str = "centroid_id",
     centroid_vec: str = "cvec",
 ) -> DataFrame:
-    """Assign each vector to its highest-cosine centroid (broadcast join
-    + deterministic argmax via row_number)."""
-    j = vectors.crossJoin(F.broadcast(centroids))
-    scored = j.withColumn("c_sim", cosine(F.col(vec_col), F.col(centroid_vec)))
-    w = Window.partitionBy(vec_id).orderBy(F.desc("c_sim"), F.col(centroid_id))
+    """(vec_id, vec_col, nrm, centroid_id): each vector's highest-cosine
+    centroid — the rank-1 cut of :func:`ivf_rank`."""
     return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select(vec_id, vec_col, centroid_id)
+        ivf_rank(vectors, centroids, vec_id, vec_col, centroid_id, centroid_vec)
+        .filter(F.col("rn") == 1)
+        .select(vec_id, vec_col, "nrm", centroid_id)
     )
 
 

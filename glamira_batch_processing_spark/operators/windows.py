@@ -30,16 +30,6 @@ def dedupe_latest(df: DataFrame, keys: list[str], order_by: list[Column]) -> Dat
     )
 
 
-def rank_dedupe(df: DataFrame, keys: list[str], order_by: list[Column]) -> DataFrame:
-    """RANK()=1 dedupe (W4) — keeps ties unless order is total."""
-    w = Window.partitionBy(*keys).orderBy(*order_by)
-    return (
-        df.withColumn("__rnk", F.rank().over(w))
-        .filter(F.col("__rnk") == 1)
-        .drop("__rnk")
-    )
-
-
 def scd2_from_history(
     df: DataFrame,
     key: str,
@@ -59,29 +49,3 @@ def scd2_from_history(
     return df.withColumn("valid_from", ts).withColumn("valid_to", nxt).withColumn(
         "is_current", nxt.isNull()
     )
-
-
-def scd2_apply(
-    history: DataFrame,
-    new_events: DataFrame,
-    key: str,
-    ts: Column,
-    tiebreak: Column,
-) -> DataFrame:
-    """Incrementally apply a batch of new events to an SCD2 history.
-
-    Only partitions whose key appears in the batch are recomputed
-    (semi-join select + window rebuild); untouched keys pass through
-    as-is. At 100 TB this is the difference between rewriting the whole
-    history and rewriting the few % of keys that changed — combine with
-    a key-partitioned table layout to turn the anti-join into partition
-    pruning. Result is identical to a full scd2_from_history rebuild.
-    """
-    affected_keys = new_events.select(key).distinct()
-    untouched = history.join(affected_keys, key, "left_anti")
-    base_cols = [c for c in history.columns if c not in ("valid_from", "valid_to", "is_current")]
-    affected_hist = history.join(affected_keys, key, "left_semi").select(base_cols)
-    rebuilt = scd2_from_history(
-        affected_hist.unionByName(new_events.select(base_cols)), key, ts, tiebreak
-    )
-    return untouched.unionByName(rebuilt)

@@ -23,9 +23,11 @@ from ..operators.dedup import (
 )
 from ..operators.multimodal import decode_images, sample_frames, with_text_payload
 from ..operators.similarity import (
+    cosine_topk,
     dot,
     hyperplane_bucket,
     hyperplane_lsh_planes,
+    ivf_assign,
     norm,
     sql_dot,
     sql_hyperplane_bucket,
@@ -447,31 +449,11 @@ def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle is the per-query top-k window. Dot products are ordered
     double folds — bit-identical to the DuckDB oracle."""
     e = table(spark, sf_dir, "embeddings")
-    normed = e.withColumn("nrm", norm(F.col("embedding")))
-    q = normed.filter(F.col("vec_id") % 100 == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qvec"),
-        F.col("nrm").alias("qnrm"),
+    q = e.filter(F.col("vec_id") % 100 == 0).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
     )
-    c = normed.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("cvec"),
-        F.col("nrm").alias("cnrm"),
-    )
-    scored = c.join(
-        F.broadcast(q), F.col("query_id") != F.col("neighbor_id")
-    ).withColumn(
-        "cosine_sim",
-        dot(F.col("qvec"), F.col("cvec")) / (F.col("qnrm") * F.col("cnrm")),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine_sim"), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 10)
-        .select("query_id", "neighbor_id", "rank", "cosine_sim")
-    )
+    c = e.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("cvec"))
+    return cosine_topk(q, c, k=10, corpus_id="neighbor_id", corpus_vec="cvec")
 
 
 @query("ann_cosine_topk_np")
@@ -576,23 +558,10 @@ def ann_ivf_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket. The candidate set shrinks by ~K vs brute force — this is
     how 100 TB ANN stays tractable. Recall is approximate by design."""
     e = table(spark, sf_dir, "embeddings")
-    normed = e.withColumn("nrm", norm(F.col("embedding")))
-    cents = normed.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("centroid_id"),
-        F.col("embedding").alias("cvec"),
-        F.col("nrm").alias("cnrm"),
+    cents = e.filter(F.col("vec_id") < 8).select(
+        F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("cvec")
     )
-    sim_c = dot(F.col("embedding"), F.col("cvec")) / (F.col("nrm") * F.col("cnrm"))
-    w_assign = Window.partitionBy("vec_id").orderBy(
-        F.desc("c_sim"), F.col("centroid_id")
-    )
-    assigned = (
-        normed.crossJoin(F.broadcast(cents))
-        .withColumn("c_sim", sim_c)
-        .withColumn("rn", F.row_number().over(w_assign))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "embedding", "nrm", "centroid_id")
-    )
+    assigned = ivf_assign(e, cents)
     q = assigned.filter(F.col("vec_id") % 100 == 0).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("qvec"),
@@ -641,9 +610,8 @@ def kmeans_lloyd_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     every vector to its nearest of 8 literal md5-seeded centroids via
     ordered-fold squared L2 (bit-identical in DuckDB), then per-cluster
     count + integer-quantized component sums (the floor(x*1e6+0.5)
-    money-math trick — order-independent, engine-exact). The production
-    trainer is operators/clustering.py::kmeans_fit (Arrow/numpy
-    partials, zero-shuffle rounds); this query pins its semantics."""
+    money-math trick — order-independent, engine-exact). A trainer
+    iterates this step until the centroids stop moving."""
     e = table(spark, sf_dir, "embeddings")
     return lloyd_step_quantized(e, _KMEANS_CENTS)
 

@@ -369,7 +369,7 @@ def f7_math_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
 def zorder_key_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Morton (Z-order) clustering key over (o_custkey, o_orderkey) —
     the multi-dimensional data-skipping sort key behind
-    sources/writers.py::write_zordered. The DuckDB oracle reproduces the
+    ``VersionedTable.compact(cluster_by=...)``. The DuckDB oracle reproduces the
     identical min/max scaling, quantization, and bit interleave, so the
     clustering layout is engine-portable bit-for-bit; the actual
     row-group skipping it buys is measured against real parquet

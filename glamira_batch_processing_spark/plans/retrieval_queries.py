@@ -752,7 +752,7 @@ def ann_recall_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     of only the closest, trading candidate volume for recall. This is
     the measurement that picks the production nprobe; recall must rise
     monotonically in expectation and reaches 1.0 at nprobe = K
-    (pinned separately for the Arrow ``ivf_search`` in pytest).
+    (pinned separately for the Arrow ``ivf_search_np`` in pytest).
 
     Scale shape: identical to ``ann_recall_eval`` except the probe
     side fans out nprobe-fold (still query-sample-sized); the corpus
@@ -760,7 +760,7 @@ def ann_recall_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment, and the candidate join stays a bucket equi-join.
     """
     from pyspark.sql import Window
-    from ..operators.similarity import dot, norm
+    from ..operators.similarity import dot, ivf_rank
 
     from .datapipe_queries import ann_cosine_topk
 
@@ -770,23 +770,10 @@ def ann_recall_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("query_id", "neighbor_id")
     )
     e = table(spark, sf_dir, "embeddings")
-    normed = e.withColumn("nrm", norm(F.col("embedding")))
-    cents = normed.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("centroid_id"),
-        F.col("embedding").alias("cvec"),
-        F.col("nrm").alias("cnrm"),
+    cents = e.filter(F.col("vec_id") < 8).select(
+        F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("cvec")
     )
-    sim_c = dot(F.col("embedding"), F.col("cvec")) / (
-        F.col("nrm") * F.col("cnrm")
-    )
-    w_assign = Window.partitionBy("vec_id").orderBy(
-        F.desc("c_sim"), F.col("centroid_id")
-    )
-    ranked = (
-        normed.crossJoin(F.broadcast(cents))
-        .withColumn("c_sim", sim_c)
-        .withColumn("rn", F.row_number().over(w_assign))
-    )
+    ranked = ivf_rank(e, cents)
     assigned = ranked.filter(F.col("rn") == 1).select(
         "vec_id", "embedding", "nrm", "centroid_id"
     )
@@ -1435,47 +1422,30 @@ def ann_index_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    from ..operators.similarity import dot, norm
+    from ..operators.similarity import dot, ivf_assign
     from ..sources.versioned import VersionedTable
     from .lifecycle_queries import _scratch
 
-    e = table(spark, sf_dir, "embeddings")
-    normed = e.select(
-        "vec_id", "embedding", norm(F.col("embedding")).alias("nrm")
-    )
-    cents = normed.filter(F.col("vec_id") < _IDX_NLIST).select(
-        F.col("vec_id").alias("centroid_id"),
-        F.col("embedding").alias("cvec"),
-        F.col("nrm").alias("cnrm"),
+    e = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    cents = e.filter(F.col("vec_id") < _IDX_NLIST).select(
+        F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("cvec")
     )
 
     def assign(df: DataFrame) -> DataFrame:
-        sim_c = dot(F.col("embedding"), F.col("cvec")) / (
-            F.col("nrm") * F.col("cnrm")
-        )
-        w = Window.partitionBy("vec_id").orderBy(
-            F.desc("c_sim"), F.col("centroid_id")
-        )
-        return (
-            df.crossJoin(F.broadcast(cents))
-            .withColumn("c_sim", sim_c)
-            .withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select("vec_id", "centroid_id", "embedding", "nrm")
-        )
+        return ivf_assign(df, cents).select("vec_id", "centroid_id", "embedding", "nrm")
 
     vt = VersionedTable(
         _scratch("ann_index_persist", sf_dir) / "ivf_index",
         stat_columns=("centroid_id",),
     )
     vt.create(
-        assign(normed.filter(F.col("vec_id") % 10 != 9)).repartition(
+        assign(e.filter(F.col("vec_id") % 10 != 9)).repartition(
             4, "centroid_id"
         )
     )
     vt.merge(
         spark,
-        assign(normed.filter(F.col("vec_id") % 10 == 9)),
+        assign(e.filter(F.col("vec_id") % 10 == 9)),
         keys=["vec_id"],
     )
     vt.compact(spark, target_files=4, cluster_by=["centroid_id"])

@@ -123,8 +123,9 @@ def asof_join_last_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     as oracle. Uses the broadcast formulation (per-user purchase history
     broadcast as sorted arrays, zero Exchange on the events branch) —
     the right side is bounded by distinct purchasing users. The
-    union+window asof_join handles the big-right case; both are
-    equivalence-tested in tests/test_operators.py."""
+    union+window ``asof_join`` is the reference it is equivalence-tested
+    against (tests/test_operators.py) and the form for a right side
+    over the broadcast bound."""
     from ..operators.asof import asof_join_broadcast
 
     e = table(spark, sf_dir, "events")

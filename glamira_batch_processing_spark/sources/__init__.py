@@ -1,28 +1,2 @@
 """Sources & sinks: synthetic raw generation, schema-reconciling readers,
 partitioned / z-ordered writers, versioned (transactional) tables."""
-
-from .chunked_source import ChunkedExportDataSource
-from .versioned import StagedWrite, VersionConflictError, VersionedTable
-from .writers import (
-    sql_zorder_key,
-    write_csv,
-    write_manifest,
-    write_partitioned,
-    write_training_shards,
-    write_zordered,
-    zorder_key,
-)
-
-__all__ = [
-    "ChunkedExportDataSource",
-    "StagedWrite",
-    "VersionConflictError",
-    "VersionedTable",
-    "sql_zorder_key",
-    "write_csv",
-    "write_manifest",
-    "write_partitioned",
-    "write_training_shards",
-    "write_zordered",
-    "zorder_key",
-]

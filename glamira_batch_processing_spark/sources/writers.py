@@ -1,37 +1,16 @@
-"""Warehouse-layout writers.
+"""Z-order (Morton) clustering keys for warehouse-layout writes.
 
-ref: ETL/load_to_bigquery.py:37-94 — day partitioning + clustering on
-the warehouse table (S7); Source/*.py CSV sinks (S8); manifest JSON
-docs (S10). Spark-native: partitionBy for pruning,
-sortWithinPartitions for clustering-like locality (row-group skipping),
-atomic output committer replaces the hand-rolled retry/resume logic.
+ref: ETL/load_to_bigquery.py:37-94 — clustering on the warehouse table
+(S7). :func:`zorder_key` is the sort key behind
+``VersionedTable.compact(cluster_by=...)`` (the OPTIMIZE ZORDER analog);
+:func:`sql_zorder_key` is its DuckDB twin. Day partitioning is a
+``Pipeline`` table model's ``partition_by``.
 """
 
 from __future__ import annotations
 
-import json
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def write_partitioned(
-    df: DataFrame,
-    path: str,
-    partition_col: str = "date",
-    cluster_cols: list[str] | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Day-partitioned, cluster-sorted parquet table (S7).
-
-    partitionBy gives partition pruning on the incremental lookback
-    filter; sortWithinPartitions gives parquet row-group min/max
-    locality on the cluster keys (BigQuery clustering analog).
-    """
-    out = df
-    if cluster_cols:
-        out = out.repartition(F.col(partition_col)).sortWithinPartitions(*cluster_cols)
-    out.write.mode(mode).partitionBy(partition_col).parquet(path)
 
 
 def _str_prefix_val(v: str | None, lcp: int) -> float:
@@ -136,39 +115,6 @@ def zorder_key(
     return df, z
 
 
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    zorder_cols: list[str],
-    bits: int = 16,
-    n_files: int | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Z-order-clustered parquet write (the OPTIMIZE ZORDER analog).
-
-    repartitionByRange on the Morton key places z-adjacent rows in the
-    same file AND the same row groups, so point/box filters on any of
-    ``zorder_cols`` prune files and row groups via parquet min/max
-    stats. Use for the 2+ filter-column case where
-    ``write_partitioned``'s single sort key can't serve all predicates.
-
-    ``n_files`` pins the output file count (an explicit count keeps AQE
-    from coalescing a small table into one file, which would leave a
-    single stats range and nothing to skip); default = the session's
-    shuffle parallelism.
-    """
-    out, z = zorder_key(df, zorder_cols, bits=bits)
-    n = n_files or int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    (
-        out.withColumn("__z", z)
-        .repartitionByRange(n, F.col("__z"))
-        .sortWithinPartitions("__z")
-        .drop("__z")
-        .write.mode(mode)
-        .parquet(path)
-    )
-
-
 def sql_zorder_key(table: str, cols: list[str], bits: int = 16) -> str:
     """DuckDB twin of :func:`zorder_key` as a SQL select-list expression.
 
@@ -200,42 +146,3 @@ def sql_zorder_key(table: str, cols: list[str], bits: int = 16) -> str:
             pos = b * n + (n - 1 - i)
             terms.append(f"((({q} >> {b}) & 1) << {pos})")
     return " + ".join(terms)
-
-
-def write_training_shards(
-    df: DataFrame,
-    path: str,
-    n_shards: int = 128,
-    id_col: str = "doc_id",
-    mode: str = "overwrite",
-) -> None:
-    """Deterministic training-shard layout: shard = xxhash64(id) mod n,
-    one parquet file per shard, rows in a fixed order within the shard.
-
-    This is the delivery format a trainer consumes: shard membership is
-    a pure function of the id (stable under corpus growth and across
-    rewrites — no RNG, no row-order dependence), shards are
-    size-balanced by the hash, and the per-shard file is byte-stable so
-    downstream caching/resume can trust it. Reading one shard prunes
-    via the partition column."""
-    shard = F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_shards)).cast("int")
-    (
-        df.withColumn("shard", shard)
-        .repartition(n_shards, F.col("shard"))
-        .sortWithinPartitions("shard", id_col)
-        .write.mode(mode)
-        .partitionBy("shard")
-        .parquet(path)
-    )
-
-
-def write_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Header-once CSV sink (S8). Task-level atomicity replaces the
-    reference's append+fsync crash-safety."""
-    df.write.mode(mode).option("header", True).csv(path)
-
-
-def write_manifest(path: str, manifest: dict) -> None:
-    """Run-manifest JSON document (S10) — control-plane metadata."""
-    with open(path, "w", encoding="utf-8") as fh:
-        json.dump(manifest, fh, indent=2, sort_keys=True, default=str)

@@ -9,10 +9,7 @@ import datetime as dt
 from pyspark.sql import functions as F
 
 import __spark_entry__  # noqa: F401  (populates the registry)
-from glamira_batch_processing_spark.operators.behavior import (
-    funnel_counts,
-    funnel_user_flags,
-)
+from glamira_batch_processing_spark.operators.behavior import funnel_user_flags
 from glamira_batch_processing_spark.plans.registry import QUERIES
 from tests.conftest import SF_SMALL
 
@@ -74,20 +71,6 @@ def test_funnel_same_timestamp_tiebreak(spark):
         for r in funnel_user_flags(e, ["view", "click"]).collect()
     }
     assert flags == {1: (1, 1), 2: (1, 0)}
-
-
-def test_funnel_counts_rollup(spark):
-    e = _events(
-        spark,
-        [
-            (1, 1, "view"), (1, 2, "click"),
-            (2, 1, "view"),
-        ],
-    )
-    row = funnel_counts(e, ["view", "click"]).collect()[0]
-    assert row.users_view == 2
-    assert row.users_click == 1
-    assert row.rate_view_to_click == 0.5
 
 
 def test_transition_probabilities_sum_to_one(spark):

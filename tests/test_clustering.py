@@ -1,105 +1,6 @@
-"""kmeans_fit: convergence laws + trained centroids improve IVF recall."""
+"""The production IVF scorer's nprobe knob against the recall curve."""
 
 from __future__ import annotations
-
-import numpy as np
-import pytest
-from pyspark.sql import functions as F
-
-from glamira_batch_processing_spark.operators.clustering import (
-    kmeans_fit,
-    seed_centroids,
-)
-
-
-def _blobs(spark, n_per=40, dim=8):
-    """Three well-separated deterministic blobs."""
-    centers = [np.full(dim, 0.0), np.full(dim, 10.0), np.full(dim, -10.0)]
-    rows = []
-    vid = 0
-    for ci, c in enumerate(centers):
-        for i in range(n_per):
-            # deterministic jitter in [-0.5, 0.5)
-            jit = np.array(
-                [(((vid * 31 + d * 7) % 97) / 97.0) - 0.5 for d in range(dim)]
-            )
-            rows.append((vid, (c + jit).tolist()))
-            vid += 1
-    return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-
-
-def test_kmeans_converges_and_separates_blobs(spark):
-    df = _blobs(spark)
-    cents, inertia, rounds = kmeans_fit(df, k=3, n_iter=15)
-    assert cents.shape == (3, 8)
-    assert rounds <= 15
-    # converged centroids sit on the blob centers (within jitter radius)
-    found = sorted(round(float(c.mean())) for c in cents)
-    assert found == [-10, 0, 10]
-    # inertia at the solution is the jitter variance only: well below
-    # a single inter-blob distance
-    assert inertia < 100.0
-
-
-def test_kmeans_inertia_monotone(spark):
-    df = _blobs(spark)
-    inertias = []
-    for n in (1, 2, 4, 8):
-        _, inertia, _ = kmeans_fit(df, k=3, n_iter=n, tol=0.0)
-        inertias.append(inertia)
-    assert all(a >= b - 1e-9 for a, b in zip(inertias, inertias[1:]))
-
-
-def test_kmeans_empty_input_raises(spark):
-    df = spark.createDataFrame([], "vec_id long, embedding array<double>")
-    with pytest.raises(ValueError):
-        kmeans_fit(df, k=2)
-
-
-def test_trained_centroids_make_ivf_exact_on_clustered_data(spark):
-    """The point of kmeans_fit: on cluster-structured data the trained
-    centroids align IVF buckets with the true clusters, so nprobe=1
-    recall vs exact top-k is perfect. (On structureless corpora the
-    training can't help — that's inherent to IVF, not the trainer.)"""
-    import pandas as pd
-
-    from glamira_batch_processing_spark.operators.similarity import ivf_search_np
-
-    dim = 8
-    centers = []
-    for axis, sign in ((0, 1.0), (1, 1.0), (0, -1.0)):
-        c = np.zeros(dim)
-        c[axis] = 10.0 * sign
-        centers.append(c)
-    rows = []
-    vid = 0
-    for c in centers:
-        for _ in range(30):
-            jit = np.array(
-                [(((vid * 31 + d * 7) % 97) / 97.0 - 0.5) * 0.2 for d in range(dim)]
-            )
-            rows.append((vid, (c + jit).tolist()))
-            vid += 1
-    vecs = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-
-    # exact cosine top-5 per query, computed directly in numpy
-    V = np.array([r[1] for r in rows])
-    Vn = V / np.linalg.norm(V, axis=1, keepdims=True)
-    sims = Vn @ Vn.T
-    np.fill_diagonal(sims, -np.inf)
-    queries = list(range(0, vid, 10))
-    truth = {q: set(np.argsort(-sims[q])[:5].tolist()) for q in queries}
-
-    cents, _, _ = kmeans_fit(vecs, k=3, n_iter=10)
-    pdf = pd.DataFrame(
-        {"centroid_id": range(len(cents)), "cvec": [list(c) for c in cents]}
-    )
-    res = ivf_search_np(vecs, pdf, F.col("vec_id") % 10 == 0, k=5, nprobe=1)
-    got: dict = {}
-    for r in res.collect():
-        got.setdefault(r.query_id, set()).add(r.neighbor_id)
-    per_q = [len(truth[q] & got.get(q, set())) / 5 for q in queries]
-    assert sum(per_q) / len(per_q) == 1.0
 
 
 def test_ivf_search_np_nprobe_matches_recall_curve(spark):

@@ -11,7 +11,7 @@ from glamira_batch_processing_spark.operators.multimodal import (
     sample_frames,
     with_text_payload,
 )
-from glamira_batch_processing_spark.operators.similarity import cosine, cosine_topk
+from glamira_batch_processing_spark.operators.similarity import cosine_topk
 from glamira_batch_processing_spark.operators.skew import salted_agg, with_salt
 from glamira_batch_processing_spark.operators.windows import scd2_from_history
 
@@ -483,7 +483,6 @@ def test_review_fixes_hardening(spark):
     assert _decode_image_real(jpeg) == (20, 10, "jpeg")
 
     # null embeddings must not crash the numpy kernels
-    from glamira_batch_processing_spark.operators.clustering import kmeans_fit
     from glamira_batch_processing_spark.operators.similarity import ivf_search_np
     import pandas as pd
 
@@ -491,8 +490,6 @@ def test_review_fixes_hardening(spark):
         [(0, [1.0, 0.0]), (1, None), (2, [0.9, 0.1]), (3, [0.0, 1.0])],
         "vec_id long, embedding array<double>",
     )
-    cents, _, _ = kmeans_fit(vecs, k=2, n_iter=3)
-    assert cents.shape == (2, 2)
     cpdf = pd.DataFrame({"centroid_id": [0, 1], "cvec": [[1.0, 0.0], [0.0, 1.0]]})
     res = ivf_search_np(vecs, cpdf, F.col("vec_id") == 0, k=2, nprobe=2)
     assert {r.neighbor_id for r in res.collect()} <= {2, 3}
@@ -894,39 +891,6 @@ def test_hll_shard_merge_is_elementwise_max(spark):
     )
 
 
-def test_gapfill_by_key(spark):
-    import datetime as dt
-
-    from glamira_batch_processing_spark.operators.timeseries import gapfill_by_key
-
-    h = lambda hour: dt.datetime(2024, 1, 1, hour, 30)  # noqa: E731
-    df = spark.createDataFrame(
-        [
-            ("a", h(0), 1.0),
-            ("a", h(0), 2.0),   # same bar: later/tiebreak wins
-            ("a", h(3), 9.0),   # hours 1-2 are gaps, fill with bar-0 value
-            ("b", h(5), 7.0),   # single-bar key: spine of one row
-        ],
-        "k string, ts timestamp, v double",
-    )
-    out = {
-        (r.k, r.bar_ts.hour): (r.n_events, r.is_gap, r.filled_v)
-        for r in gapfill_by_key(df, ["k"], "ts", "v").collect()
-    }
-    assert len(out) == 5  # a: hours 0..3, b: hour 5
-    assert out[("a", 0)][0] == 2 and out[("a", 0)][1] == 0
-    assert out[("a", 1)] == (0, 1, out[("a", 0)][2])  # gap, forward-filled
-    assert out[("a", 2)][1] == 1
-    assert out[("a", 3)] == (1, 0, 9.0)
-    assert out[("b", 5)] == (1, 0, 7.0)
-    # same-bar ties resolve deterministically across reruns/partitionings
-    again = {
-        (r.k, r.bar_ts.hour): r.filled_v
-        for r in gapfill_by_key(df.repartition(7), ["k"], "ts", "v").collect()
-    }
-    assert again[("a", 0)] == out[("a", 0)][2]
-
-
 def test_quantile_sample_error_bound_and_merge(spark):
     """The 256-row sample quantiles must land near the exact quantiles
     (DKW-style bound: 256 samples give ~±0.09 rank error at 99%
@@ -962,16 +926,15 @@ def test_quantile_sample_error_bound_and_merge(spark):
 
 
 def test_pq_encode_and_adc_match_numpy_reference(spark):
-    """PQ codes and ADC rankings equal an independent driver-side numpy
-    reimplementation (round-half-up micro-quantization, lower-code
-    ties), on real embeddings."""
+    """PQ ADC rankings equal an independent plain-numpy
+    reimplementation of the encode and the ADC sum (round-half-up
+    micro-quantization, lower-code ties), on real embeddings."""
     import numpy as np
 
     from glamira_batch_processing_spark.operators.pq import (
         QUANT,
         pq_adc_topk,
         pq_codebooks,
-        pq_encode_expr,
     )
     from tests.conftest import SF_MEDIUM
 
@@ -998,12 +961,7 @@ def test_pq_encode_and_adc_match_numpy_reference(spark):
             for s in range(8)
         ]
 
-    got_codes = {
-        r.vec_id: [r[f"code{s}"] for s in range(8)]
-        for r in e.select("vec_id", *pq_encode_expr(F.col("embedding"), books)).collect()
-    }
-    for vid, v in vecs.items():
-        assert got_codes[vid] == encode(v), vid
+    codes = {vid: encode(v) for vid, v in vecs.items()}
 
     # ADC: query = the first two vectors
     qids = sorted(vecs)[:2]
@@ -1019,7 +977,7 @@ def test_pq_encode_and_adc_match_numpy_reference(spark):
             if vid == q:
                 continue
             scores[vid] = sum(
-                subdist_q(vecs[q], s, B[s][got_codes[vid][s]]) for s in range(8)
+                subdist_q(vecs[q], s, B[s][codes[vid][s]]) for s in range(8)
             )
         top = sorted(scores.items(), key=lambda kv: (kv[1], kv[0]))[:5]
         for rank, (vid, sc) in enumerate(top, start=1):

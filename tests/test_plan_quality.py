@@ -147,15 +147,17 @@ def test_interval_join_is_hash_join(spark):
 
 
 def test_fact_write_partition_prunes(spark, tmp_path):
-    """partitionBy(date) tables must prune partitions on a date filter."""
-    from glamira_batch_processing_spark.sources.writers import write_partitioned
+    """partitionBy(date) tables must prune partitions on a date filter:
+    a table model with ``partition_by``, the path mart_fact_order
+    writes through."""
+    from glamira_batch_processing_spark.plans.pipeline import Pipeline
 
-    path = str(tmp_path / "fact")
     df = table(spark, SF_SMALL, "orders").withColumn(
         "date", F.date_format("o_orderdate", "yyyy-MM")
     )
-    write_partitioned(df, path, partition_col="date")
-    back = spark.read.parquet(path).filter(F.col("date") == "1996-01")
+    p = Pipeline(spark, workdir=str(tmp_path))
+    p.model("fact", materialized="table", partition_by="date")(lambda _p: df)
+    back = p.ref("fact").filter(F.col("date") == "1996-01")
     plan = plan_of(back)
     m = plan.split("PartitionFilters:")[1].splitlines()[0]
     assert "date" in m
@@ -917,3 +919,49 @@ def test_audit_orphan_rates_existence_joins(customer_branch):
     assert len(exist) == 3, plan.toString()
     assert all("BroadcastHashJoin" in n.getClass().getName() for n in exist), plan.toString()
     assert _shuffles(plan) == 2, plan.toString()
+
+
+def _plan_shape(plan) -> dict[str, int]:
+    """Counts of the exchange, nested-loop-join and window operators in
+    an executed plan, with every reused exchange expanded in place. AQE
+    decides at run time which of two identical stages runs and which
+    reuses it, so counting only what ran varies between runs; the
+    expanded tree does not."""
+    kinds = (
+        "ShuffleExchangeExec", "BroadcastExchangeExec",
+        "BroadcastNestedLoopJoinExec", "WindowExec",
+    )
+    names, stack = [], [plan]
+    while stack:
+        node = stack.pop()
+        cname = node.getClass().getName()
+        if cname.endswith("AdaptiveSparkPlanExec"):
+            stack.append(node.executedPlan())
+        elif "QueryStage" in cname:
+            stack.append(node.plan())
+        elif cname.endswith("ReusedExchangeExec"):
+            stack.append(node.child())
+        else:
+            names.append(cname.rsplit(".", 1)[-1])
+            stack.extend(node.children().apply(i) for i in range(node.children().size()))
+    return {k: names.count(k) for k in kinds}
+
+
+@pytest.mark.parametrize(
+    "name, shape",
+    [
+        # (shuffle, broadcast, nested-loop join, window)
+        ("ann_cosine_topk", (1, 1, 1, 1)),
+        ("ann_ivf_bucketed", (3, 3, 2, 3)),
+        ("ann_recall_multiprobe", (13, 20, 12, 14)),
+    ],
+)
+def test_ann_plans_keep_their_shape(spark, name, shape):
+    """The brute-force and IVF queries run through the shared
+    cosine_topk / ivf_rank operators: one broadcast nested-loop scoring
+    pass per ranking, and exchanges only for the per-vector and
+    per-query windows and the bucket joins."""
+    df = QUERIES[name](spark, SF_SMALL)
+    df.collect()  # AQE's final plan
+    got = _plan_shape(df._jdf.queryExecution().executedPlan())
+    assert tuple(got.values()) == shape, got

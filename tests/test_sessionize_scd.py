@@ -1,14 +1,10 @@
-"""Stateful streaming sessionization + incremental SCD2 apply."""
+"""Stateful streaming sessionization and funnels against their batch forms."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from glamira_batch_processing_spark.operators.windows import (
-    scd2_apply,
-    scd2_from_history,
-)
 from glamira_batch_processing_spark.streaming.sessionize import (
     sessionize_batch,
     sessionize_stateful,
@@ -60,26 +56,6 @@ def test_stateful_sessionize_matches_batch(spark, tmp_path):
         for r in b.groupBy("user_id", "session_seq").agg(F.count("*").alias("n")).collect()
     }
     assert bs == {(1, 1): 2, (1, 2): 1, (2, 1): 1}
-
-
-def test_scd2_apply_equals_full_rebuild(spark):
-    hist_events = spark.createDataFrame(
-        [(1, 10, "a"), (1, 20, "b"), (2, 10, "x"), (3, 10, "q")],
-        "k long, ts long, v string",
-    )
-    history = scd2_from_history(hist_events, "k", F.col("ts"), F.col("v"))
-    new_batch = spark.createDataFrame(
-        [(1, 30, "c"), (4, 5, "new")], "k long, ts long, v string"
-    )
-    applied = scd2_apply(history, new_batch, "k", F.col("ts"), F.col("v"))
-    full = scd2_from_history(
-        hist_events.unionByName(new_batch), "k", F.col("ts"), F.col("v")
-    )
-    norm = lambda df: sorted(map(tuple, df.select("k", "ts", "v", "valid_from", "valid_to", "is_current").collect()))  # noqa: E731
-    assert norm(applied) == norm(full)
-    # untouched keys (2, 3) were not recomputed but are present & current
-    cur = {r.k for r in applied.filter("is_current").collect()}
-    assert cur == {1, 2, 3, 4}
 
 
 def test_stateful_funnel_matches_batch(spark, tmp_path):

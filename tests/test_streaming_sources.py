@@ -1,5 +1,5 @@
 """Streaming windows and watermarks, and source utilities (schema drift
-reconcile, partitioned writer)."""
+reconcile, partitioned table write)."""
 
 from __future__ import annotations
 
@@ -7,8 +7,8 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from glamira_batch_processing_spark.plans.pipeline import Pipeline
 from glamira_batch_processing_spark.sources.readers import reconcile_read
-from glamira_batch_processing_spark.sources.writers import write_partitioned
 from glamira_batch_processing_spark.streaming.ingest import windowed_event_counts
 
 
@@ -116,41 +116,21 @@ def test_schema_drift_reconcile(spark, tmp_path):
 
 
 def test_write_partitioned_prunes(spark, tmp_path):
-    path = str(tmp_path / "fact")
+    """A table model with ``partition_by`` (mart_fact_order's write
+    path) lays out one directory per date, and a date filter prunes."""
     df = spark.createDataFrame(
         [("2024-01-01", 1, 5.0), ("2024-01-01", 2, 6.0), ("2024-01-02", 3, 7.0)],
         "date string, k long, v double",
     )
-    write_partitioned(df, path, partition_col="date", cluster_cols=["k"])
-    back = spark.read.parquet(path)
+    p = Pipeline(spark, workdir=str(tmp_path))
+    p.model("fact", materialized="table", partition_by="date")(lambda _p: df)
+    back = p.ref("fact")
     assert back.count() == 3
     one_day = back.filter(F.col("date") == "2024-01-02")
     assert one_day.count() == 1
     # partition pruning visible in the physical plan
     plan = one_day._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan or "partitionFilters" in plan.lower()
-
-
-def test_csv_and_manifest_writers(spark, tmp_path):
-    """S8 CSV sink (header, round-trip) and S10 manifest JSON."""
-    import json
-
-    from glamira_batch_processing_spark.sources.writers import (
-        write_csv,
-        write_manifest,
-    )
-
-    df = spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string")
-    csv_path = str(tmp_path / "out_csv")
-    write_csv(df, csv_path)
-    back = spark.read.csv(csv_path, header=True, inferSchema=True)
-    assert sorted(map(tuple, back.collect())) == [(1, "a"), (2, "b")]
-
-    mpath = str(tmp_path / "manifest.json")
-    write_manifest(mpath, {"rows": 2, "source": "test", "when": "2026-08-13"})
-    with open(mpath) as fh:
-        m = json.load(fh)
-    assert m["rows"] == 2 and m["source"] == "test"
 
 
 def test_streaming_session_window(spark, tmp_path):

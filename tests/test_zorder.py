@@ -15,7 +15,7 @@ from pathlib import Path
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
-from glamira_batch_processing_spark.sources.writers import write_zordered
+from glamira_batch_processing_spark.sources.versioned import VersionedTable
 
 
 def _row_groups_intersecting(path: str, col: str, lo: float, hi: float):
@@ -42,11 +42,12 @@ def test_zorder_skips_row_groups_on_second_dimension(spark, tmp_path):
         .withColumn("y", (F.col("id") * 104729) % 10_000)
     )
     plain = str(tmp_path / "plain_x_sorted")
-    zord = str(tmp_path / "zordered")
-    # baseline: single-column clustering on x (what write_partitioned's
-    # cluster_cols would give a non-partitioned table)
+    # baseline: single-column clustering on x
     df.repartitionByRange(32, F.col("x")).sortWithinPartitions("x").write.parquet(plain)
-    write_zordered(df, zord, ["x", "y"], n_files=32)
+    t = VersionedTable(tmp_path / "zordered")
+    t.create(df)
+    v = t.compact(spark, target_files=32, cluster_by=["x", "y"])
+    zord = str(t.path / t.manifest(v)["data_dir"])
 
     # same total rows in both layouts
     assert spark.read.parquet(zord).count() == 100_000
@@ -73,48 +74,12 @@ def test_zorder_skips_row_groups_on_second_dimension(spark, tmp_path):
     assert got == expect
 
 
-def test_training_shards_deterministic_and_complete(spark, tmp_path):
-    from glamira_batch_processing_spark.sources.writers import write_training_shards
-
-    df = spark.range(5000).select(
-        F.col("id").alias("doc_id"), (F.col("id") % 97).alias("payload")
-    )
-    p1, p2 = str(tmp_path / "s1"), str(tmp_path / "s2")
-    write_training_shards(df, p1, n_shards=16)
-    write_training_shards(df, p2, n_shards=16)
-
-    # every shard dir exists, one data file each, byte-stable across writes
-    import hashlib
-
-    def shard_files(p):
-        out = {}
-        for d in sorted(Path(p).glob("shard=*")):
-            files = sorted(f for f in d.glob("*.parquet"))
-            assert len(files) == 1, (d, files)
-            out[d.name] = hashlib.md5(files[0].read_bytes()).hexdigest()
-        return out
-
-    s1, s2 = shard_files(p1), shard_files(p2)
-    assert len(s1) == 16
-    assert s1 == s2  # byte-identical shard files across rewrites
-
-    # shard membership is the documented pure function of the id
-    back = spark.read.parquet(p1)
-    assert back.count() == 5000
-    mismatch = back.filter(
-        F.col("shard") != F.pmod(F.xxhash64(F.col("doc_id")), F.lit(16)).cast("int")
-    ).count()
-    assert mismatch == 0
-
-
 def test_zorder_string_column_prunes_after_prefix_strip(spark, tmp_path):
     """String z-order (round 7): keys sharing a long common prefix
     ('user-...') must still cluster — the prefix is stripped before the
     6-byte order-preserving image, so the distinguishing bytes drive
     the buckets. Verified end-to-end through VersionedTable: a point
     lookup on the clustered string key opens a strict subset of files."""
-    from glamira_batch_processing_spark.sources.versioned import VersionedTable
-
     t = VersionedTable(tmp_path / "tbl", stat_columns=("uid",))
     df = spark.range(4000).selectExpr(
         "CONCAT('user-', LPAD(CAST(id AS STRING), 6, '0')) AS uid", "id AS v"
