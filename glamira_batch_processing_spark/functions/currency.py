@@ -106,11 +106,7 @@ def infer_currency_from_tld(status: Column, current_url: Column) -> Column:
 FX_SCHEMA = "fx_date date, base_code string, currency_code string, usd_to_ccy double"
 
 
-def fx_rates(
-    spark: SparkSession,
-    rows: list[tuple] | None = None,
-    csv_path: str | None = None,
-) -> DataFrame:
+def fx_rates(spark: SparkSession) -> DataFrame:
     """The fx seed as a small broadcast-able DataFrame.
 
     ref: seeds/fx_to_usd_22_01_26.csv + dbt_project.yml:49-57 (typed
@@ -118,16 +114,13 @@ def fx_rates(
     ``usd_to_ccy`` units of ``currency_code``, so
     ``amount_usd = amount_ccy / usd_to_ccy``.
 
-    By default loads the packaged CSV seed with an explicit typed schema
-    (the dbt column_types analog); ``rows`` overrides for tests.
+    Loads the packaged CSV seed with an explicit typed schema (the dbt
+    column_types analog).
     """
-    if rows is not None:
-        return spark.createDataFrame(rows, FX_SCHEMA)
-    if csv_path is None:
-        from pathlib import Path
+    from pathlib import Path
 
-        csv_path = str(Path(__file__).resolve().parent.parent / "seeds" / "fx_to_usd.csv")
-    return spark.read.csv(csv_path, header=True, schema=FX_SCHEMA)
+    csv_path = Path(__file__).resolve().parent.parent / "seeds" / "fx_to_usd.csv"
+    return spark.read.csv(str(csv_path), header=True, schema=FX_SCHEMA)
 
 
 import datetime as _dt

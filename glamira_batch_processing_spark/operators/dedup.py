@@ -36,13 +36,14 @@ def content_key(text: Column) -> Column:
     return F.md5(text)
 
 
-def exact_dedup_stats(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Per content-hash: copy count + canonical (minimum) id."""
+def exact_dedup_stats(df: DataFrame) -> DataFrame:
+    """Per content-hash of ``text``: copy count + canonical (minimum)
+    ``doc_id``."""
     return (
-        df.groupBy(content_key(F.col(text_col)).alias("content_hash"))
+        df.groupBy(content_key(F.col("text")).alias("content_hash"))
         .agg(
             F.count("*").alias("n_copies"),
-            F.min(id_col).alias("canonical_doc_id"),
+            F.min("doc_id").alias("canonical_doc_id"),
         )
     )
 
@@ -78,30 +79,25 @@ def doc_shingles(
     return out.distinct() if distinct else out
 
 
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    threshold: float = 0.6,
-) -> DataFrame:
-    """Pairs (doc_a < doc_b) with Jaccard(shingles) >= threshold.
+def ngram_jaccard_pairs(df: DataFrame, threshold: float = 0.6) -> DataFrame:
+    """Pairs (doc_a < doc_b) with Jaccard(word-3-gram shingles of
+    ``text``) >= threshold.
 
     Candidate generation is an inverted-index self-join on shingle —
     only docs sharing at least one shingle are compared.
     """
-    sh = doc_shingles(df, text_col, id_col, n)
-    sizes = sh.groupBy(id_col).agg(F.count("*").alias("n_shingles"))
-    a = sh.select(F.col(id_col).alias("doc_a"), "shingle")
-    b = sh.select(F.col(id_col).alias("doc_b"), "shingle")
+    sh = doc_shingles(df)
+    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_shingles"))
+    a = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
+    b = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
     inter = (
         a.join(b, "shingle")
         .filter(F.col("doc_a") < F.col("doc_b"))
         .groupBy("doc_a", "doc_b")
         .agg(F.count("*").alias("n_common"))
     )
-    sa = sizes.select(F.col(id_col).alias("doc_a"), F.col("n_shingles").alias("size_a"))
-    sb = sizes.select(F.col(id_col).alias("doc_b"), F.col("n_shingles").alias("size_b"))
+    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_shingles").alias("size_a"))
+    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_shingles").alias("size_b"))
     out = (
         inter.join(sa, "doc_a")
         .join(sb, "doc_b")
@@ -116,8 +112,8 @@ def ngram_jaccard_pairs(
 
 # Universal-hash family for the md5 minhash fold: fixed odd
 # coefficients (deterministic; regenerate with random.Random(20260814))
-# and the Mersenne prime modulus 2^31 - 1. The DuckDB oracle twins
-# inline the same pairs as a VALUES list.
+# and the Mersenne prime modulus 2^31 - 1. The DuckDB twin
+# (``SQL_MINHASH_CTES``) lists the same pairs as a VALUES list.
 MINHASH_P = 2147483647
 MINHASH_COEFFS: tuple[tuple[int, int], ...] = (
     (1571058545, 730493953),
@@ -180,13 +176,11 @@ def minhash_signatures(
 
 def lsh_candidate_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
     num_hashes: int = 12,
     band_rows: int = 3,
 ) -> DataFrame:
-    """Distinct candidate pairs (doc_a < doc_b) sharing >=1 LSH band.
+    """Distinct candidate pairs (doc_a < doc_b) sharing >=1 LSH band,
+    over the word-3-gram shingles of each (doc_id, text) row.
 
     Pipeline: codegen shingle explode (no DISTINCT) -> ONE groupBy(doc)
     shuffle computing all k minhashes as wide min() aggregates -> band
@@ -201,8 +195,8 @@ def lsh_candidate_pairs(
     columns re-inlines the whole shingle pipeline after projection
     collapse. The exploded+wide-agg form is ~10x faster.)
     """
-    sh = doc_shingles(df, text_col, id_col, n, distinct=False)
-    return lsh_candidate_pairs_on_shingles(sh, id_col, num_hashes, band_rows)
+    sh = doc_shingles(df, distinct=False)
+    return lsh_candidate_pairs_on_shingles(sh, "doc_id", num_hashes, band_rows)
 
 
 def lsh_candidate_pairs_on_shingles(
@@ -275,17 +269,13 @@ def incremental_lsh_pairs(
     spark,
     sig_table,
     new_docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    num_hashes: int = 12,
-    band_rows: int = 3,
     txn_id: str | None = None,
 ):
     """Dedup-at-ingest: returns (version, pairs) where ``pairs`` are
     the candidate pairs INVOLVING the new batch, and the new batch's
-    minhash signatures are merged into ``sig_table`` (a VersionedTable
-    keyed on ``id_col``) as one atomic commit.
+    minhash signatures (12 hashes, 4 bands of 3 rows) are merged into
+    ``sig_table`` (a VersionedTable keyed on ``doc_id``) as one atomic
+    commit.
 
     The 100 TB ingest shape: the corpus is never re-shingled — each
     batch computes its own signatures (linear in the batch), MERGEs
@@ -299,18 +289,18 @@ def incremental_lsh_pairs(
     the union corpus, restricted to pairs touching the batch: both
     sides band with the same universal-hash minhashes.
     """
-    sh = doc_shingles(new_docs, text_col, id_col, n, distinct=False)
-    new_mh = minhash_signatures(sh, id_col, num_hashes)
+    sh = doc_shingles(new_docs, distinct=False)
+    new_mh = minhash_signatures(sh)
     if sig_table.latest_version() is None:
         version = sig_table.create(new_mh)
     else:
-        version = sig_table.merge(spark, new_mh, keys=[id_col], txn_id=txn_id)
+        version = sig_table.merge(spark, new_mh, keys=["doc_id"], txn_id=txn_id)
     all_mh = sig_table.read(spark, version)
-    new_bands = band_signatures(new_mh, id_col, num_hashes, band_rows).select(
-        F.col(id_col).alias("doc_b"), "band", "band_sig"
+    new_bands = band_signatures(new_mh).select(
+        F.col("doc_id").alias("doc_b"), "band", "band_sig"
     )
-    all_bands = band_signatures(all_mh, id_col, num_hashes, band_rows).select(
-        F.col(id_col).alias("doc_a"), "band", "band_sig"
+    all_bands = band_signatures(all_mh).select(
+        F.col("doc_id").alias("doc_a"), "band", "band_sig"
     )
     pairs = (
         all_bands.join(F.broadcast(new_bands), ["band", "band_sig"])
@@ -324,19 +314,14 @@ def incremental_lsh_pairs(
     return version, pairs
 
 
-def doc_shingle_words(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-) -> DataFrame:
-    """(id, w0..w{n-1}) rows — one row per n-gram, words kept as
-    separate columns so consumers can hash the tuple directly without
-    ever materializing the concatenated shingle string (measured ~2x
-    on the LSH fast path: the concat_ws dominated once hashing became
-    cheap)."""
-    return _ngram_explode(df, text_col, id_col, n).select(
-        id_col, *[F.col(f"g.{k}").alias(f"w{k}") for k in range(n)]
+def doc_shingle_words(df: DataFrame, n: int = 3) -> DataFrame:
+    """(doc_id, w0..w{n-1}) rows over ``text`` — one row per n-gram,
+    words kept as separate columns so consumers can hash the tuple
+    directly without ever materializing the concatenated shingle string
+    (measured ~2x on the LSH fast path: the concat_ws dominated once
+    hashing became cheap)."""
+    return _ngram_explode(df, "text", "doc_id", n).select(
+        "doc_id", *[F.col(f"g.{k}").alias(f"w{k}") for k in range(n)]
     )
 
 
@@ -369,9 +354,6 @@ def minhash_signatures_fast(
 
 def lsh_candidate_pairs_fast(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
     num_hashes: int = 12,
     band_rows: int = 3,
 ) -> DataFrame:
@@ -388,10 +370,8 @@ def lsh_candidate_pairs_fast(
     safe for candidate generation feeding exact verification or
     component clustering.
     """
-    sh = doc_shingle_words(df, text_col, id_col, n)
-    return lsh_candidate_pairs_fast_on_words(
-        sh, id_col, n, num_hashes, band_rows
-    )
+    sh = doc_shingle_words(df)
+    return lsh_candidate_pairs_fast_on_words(sh, "doc_id", 3, num_hashes, band_rows)
 
 
 def lsh_candidate_pairs_fast_on_words(
@@ -409,15 +389,16 @@ def lsh_candidate_pairs_fast_on_words(
     return _bucket_pairs(sigs, id_col)
 
 
-def simhash_bits(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", bits: int = 32) -> DataFrame:
-    """Per-doc SimHash signature string of ``bits`` 0/1 chars.
+def simhash_bits(df: DataFrame, bits: int = 32) -> DataFrame:
+    """Per-doc (``doc_id``) SimHash signature string of ``bits`` 0/1
+    chars over the tokens of ``text``.
 
     Bit i is derived from hex digit i of md5(token): (digit & 1). Tokens
     vote +1/-1 per bit with multiplicity; the sign of the sum is the
     signature bit. Identical signatures => near-identical token bags.
     """
     toks = df.select(
-        id_col, F.explode(F.split(F.lower(F.col(text_col)), " ")).alias("tok")
+        "doc_id", F.explode(F.split(F.lower(F.col("text")), " ")).alias("tok")
     ).withColumn("h", F.md5("tok"))
     hexmap = "0123456789abcdef"
     aggs = []
@@ -425,28 +406,74 @@ def simhash_bits(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", 
         digit = F.instr(F.lit(hexmap), F.substring(F.col("h"), i + 1, 1)) - 1
         vote = F.when(digit % 2 == 1, F.lit(1)).otherwise(F.lit(-1))
         aggs.append(F.sum(vote).alias(f"s{i}"))
-    sums = toks.groupBy(id_col).agg(*aggs)
+    sums = toks.groupBy("doc_id").agg(*aggs)
     sig = F.concat(
         *[
             F.when(F.col(f"s{i}") > 0, F.lit("1")).otherwise(F.lit("0"))
             for i in range(bits)
         ]
     )
-    return sums.select(id_col, sig.alias("simhash"))
+    return sums.select("doc_id", sig.alias("simhash"))
 
 
 # --- DuckDB SQL twins ------------------------------------------------------
 
-def sql_shingles_cte(corpus: str, n: int = 3) -> str:
-    """CTE body producing (doc_id, shingle) distinct from ``corpus``."""
-    parts = " || ' ' || ".join(f"w[i+{k}]" for k in range(n))
+def sql_shingles_cte(corpus: str) -> str:
+    """CTE body producing (doc_id, word-3-gram shingle) distinct from
+    ``corpus``."""
     return f"""
       SELECT DISTINCT doc_id, shingle
       FROM (
         SELECT doc_id,
-               unnest(CASE WHEN len(w) >= {n}
-                 THEN list_transform(range(1, len(w) - {n - 2}), i -> {parts})
+               unnest(CASE WHEN len(w) >= 3
+                 THEN list_transform(range(1, len(w) - 1), i -> w[i+0] || ' ' || w[i+1] || ' ' || w[i+2])
                  ELSE [] END) AS shingle
         FROM (SELECT doc_id, str_split(lower(text), ' ') AS w FROM {corpus})
       )
     """
+
+
+# The md5 minhash fold and its 4 x 3 banding over a ``shingles`` CTE:
+# ``mh`` (doc_id, seed, minhash) and ``sigs`` (doc_id, band, band_sig),
+# the twin of minhash_signatures + band_signatures.
+SQL_MINHASH_CTES = f"""mh AS (
+      SELECT doc_id, seed, MIN((a * h1 + b * h2) % {MINHASH_P}) AS minhash
+      FROM (
+        SELECT doc_id,
+               CAST(concat('0x', substr(md5(shingle), 1, 7)) AS BIGINT) AS h1,
+               CAST(concat('0x', substr(md5(shingle), 9, 7)) AS BIGINT) AS h2
+        FROM shingles
+      ), (VALUES {", ".join(f"({j}, {a}, {b})" for j, (a, b) in enumerate(MINHASH_COEFFS))}) AS coeffs(seed, a, b)
+      GROUP BY doc_id, seed
+    ),
+    sigs AS (
+      SELECT doc_id, seed // 3 AS band,
+             string_agg(CAST(minhash AS VARCHAR), '|' ORDER BY seed) AS band_sig
+      FROM mh GROUP BY doc_id, seed // 3
+    )"""
+
+
+def sql_lsh_pairs_cte(name: str) -> str:
+    """CTE ``name`` (doc_a < doc_b): the pairs sharing a ``sigs`` bucket."""
+    return f"""{name} AS (
+      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+      FROM sigs a JOIN sigs b ON a.band = b.band AND a.band_sig = b.band_sig
+      WHERE a.doc_id < b.doc_id
+    )"""
+
+
+def sql_components_ctes(pairs: str) -> str:
+    """CTEs ``edges`` (both directions of each ``pairs`` row) and the
+    recursive ``r(node, lab)``: every label reachable from each node,
+    whose per-node MIN is the connected-component id (needs ``WITH
+    RECURSIVE``)."""
+    return f"""edges AS (
+      SELECT doc_a AS a, doc_b AS b FROM {pairs}
+      UNION
+      SELECT doc_b AS a, doc_a AS b FROM {pairs}
+    ),
+    r(node, lab) AS (
+      SELECT a, a FROM edges
+      UNION
+      SELECT e.b, r.lab FROM r JOIN edges e ON e.a = r.node
+    )"""

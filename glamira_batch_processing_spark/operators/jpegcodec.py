@@ -608,53 +608,24 @@ def encode_baseline_jpeg(
         # the flat value is written into a uint8 DQT segment; values
         # outside [1, 255] would silently wrap and corrupt round trips
         raise ValueError(f"quant must be in [1, 255], got {quant}")
-    rgb = np.asarray(rgb, dtype=np.float64)
-    h, w = rgb.shape[:2]
-    r, g, b = rgb[..., 0], rgb[..., 1], rgb[..., 2]
-    y = 0.299 * r + 0.587 * g + 0.114 * b
-    cb = -0.168736 * r - 0.331264 * g + 0.5 * b + 128.0
-    cr = 0.5 * r - 0.418688 * g - 0.081312 * b + 128.0
-    if subsample:
-        samp = [(2, 2), (1, 1), (1, 1)]
-        # pad to even dims then average 2x2
-        pe_h, pe_w = (h + 1) // 2 * 2, (w + 1) // 2 * 2
-        def pool(p):
-            pp = np.pad(p, ((0, pe_h - h), (0, pe_w - w)), mode="edge")
-            return (
-                pp.reshape(pe_h // 2, 2, pe_w // 2, 2).mean(axis=(1, 3))
-            )
-        planes = [y, pool(cb), pool(cr)]
-    else:
-        samp = [(1, 1), (1, 1), (1, 1)]
-        planes = [y, cb, cr]
-    hmax = max(s[0] for s in samp)
-    vmax = max(s[1] for s in samp)
-    mcus_x = (w + 8 * hmax - 1) // (8 * hmax)
-    mcus_y = (h + 8 * vmax - 1) // (8 * vmax)
-    qtbl = np.full(64, quant, dtype=np.int32)
+    grids, samp, (mcus_x, mcus_y), qtbl, h, w = _rgb_to_coef_grids(
+        rgb, subsample, quant
+    )
+    # each component's blocks in emission (MCU-interleaved) order
+    coef_store = [
+        [
+            grid[my * samp[ci][1] + by, mx * samp[ci][0] + bx]
+            for my in range(mcus_y)
+            for mx in range(mcus_x)
+            for by in range(samp[ci][1])
+            for bx in range(samp[ci][0])
+        ]
+        for ci, grid in enumerate(grids)
+    ]
 
     # First pass: compute all (symbol, bits) streams to learn tables.
     dc_syms: list[list[int]] = [[], []]  # class-id 0 = luma, 1 = chroma
     ac_syms: list[list[int]] = [[], []]
-    blocks_per_comp = []
-    coef_store: list[list[np.ndarray]] = []
-    for ci, p in enumerate(planes):
-        ch, cw = p.shape
-        tw, th = mcus_x * samp[ci][0] * 8, mcus_y * samp[ci][1] * 8
-        pp = np.pad(p, ((0, th - ch), (0, tw - cw)), mode="edge") - 128.0
-        comp_blocks = []
-        for my in range(mcus_y):
-            for mx in range(mcus_x):
-                for by in range(samp[ci][1]):
-                    for bx in range(samp[ci][0]):
-                        y0 = (my * samp[ci][1] + by) * 8
-                        x0 = (mx * samp[ci][0] + bx) * 8
-                        blk = pp[y0 : y0 + 8, x0 : x0 + 8]
-                        coef = _T @ blk @ _T.T
-                        zz = np.rint(coef.reshape(64)[_ZZ] / qtbl).astype(np.int32)
-                        comp_blocks.append(zz)
-        coef_store.append(comp_blocks)
-        blocks_per_comp.append(len(comp_blocks))
     # gather symbols in true emission (MCU-interleaved) order, with the
     # same restart-boundary DC resets the emission pass applies
     idx0 = [0] * 3

@@ -523,8 +523,6 @@ def _decode_image_fake(payload: bytes) -> tuple[int, int, str]:
 
 def decode_images(
     df: DataFrame,
-    payload_col: str = "payload",
-    id_col: str = "doc_id",
     strict: bool = False,
 ) -> DataFrame:
     """binary payload -> typed image metadata via mapInPandas.
@@ -540,9 +538,9 @@ def decode_images(
         import pandas as pd
 
         for pdf in batches:
-            payloads = pdf[payload_col]
+            payloads = pdf["payload"]
             rows = []
-            for doc_id, payload in zip(pdf[id_col], payloads):
+            for doc_id, payload in zip(pdf["doc_id"], payloads):
                 b = bytes(payload)
                 try:
                     w, h, fmt = _decode_image_real(b)
@@ -565,13 +563,11 @@ def decode_images(
                 rows, columns=[f.name for f in IMAGE_META_SCHEMA.fields]
             )
 
-    return df.select(id_col, payload_col).mapInPandas(fn, IMAGE_META_SCHEMA)
+    return df.select("doc_id", "payload").mapInPandas(fn, IMAGE_META_SCHEMA)
 
 
 def sample_frames(
     df: DataFrame,
-    payload_col: str = "payload",
-    id_col: str = "doc_id",
     frame_size: int = 32,
     stride: int = 96,
 ) -> DataFrame:
@@ -584,7 +580,7 @@ def sample_frames(
 
         for pdf in batches:
             rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
+            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
                 b = bytes(payload)
                 for k, off in enumerate(range(0, len(b), stride)):
                     frame = b[off : off + frame_size]
@@ -595,7 +591,7 @@ def sample_frames(
                 rows, columns=[f.name for f in FRAME_SAMPLE_SCHEMA.fields]
             )
 
-    return df.select(id_col, payload_col).mapInPandas(fn, FRAME_SAMPLE_SCHEMA)
+    return df.select("doc_id", "payload").mapInPandas(fn, FRAME_SAMPLE_SCHEMA)
 
 
 # Variant-fixture table: name -> (SOF marker, sample precision, ncomp).
@@ -829,8 +825,6 @@ def _wav_fmt_probe(b: bytes) -> tuple[int, int, str] | None:
 
 def decode_audio(
     df: DataFrame,
-    payload_col: str = "payload",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """binary payload -> typed audio metadata via mapInPandas.
 
@@ -852,13 +846,11 @@ def decode_audio(
 
         for pdf in batches:
             rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
+            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
                 b = bytes(payload)
                 try:
                     with wave.open(io.BytesIO(b), "rb") as w:
-                        nch = w.getnchannels()
-                        rate = w.getframerate()
-                        nfr = w.getnframes()
+                        nch, _, rate, nfr = w.getparams()[:4]
                     rows.append(
                         (
                             int(doc_id),
@@ -885,13 +877,13 @@ def decode_audio(
                 rows, columns=[f.name for f in AUDIO_META_SCHEMA.fields]
             )
 
-    return df.select(id_col, payload_col).mapInPandas(fn, AUDIO_META_SCHEMA)
+    return df.select("doc_id", "payload").mapInPandas(fn, AUDIO_META_SCHEMA)
 
 
-def with_text_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
+def with_text_payload(df: DataFrame) -> DataFrame:
     """Attach a binary payload column derived from text (the test stand-in
     for real image/audio bytes)."""
-    return df.withColumn("payload", F.encode(F.col(text_col), "utf-8"))
+    return df.withColumn("payload", F.encode(F.col("text"), "utf-8"))
 
 
 AUDIO_RESAMPLE_SCHEMA = StructType(
@@ -911,8 +903,6 @@ AUDIO_RESAMPLE_SCHEMA = StructType(
 def resample_audio(
     df: DataFrame,
     target_rate: int,
-    payload_col: str = "payload",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Nearest-neighbor PCM16 WAV resampling via Arrow-batched
     mapInPandas: decode the real container, transform samples (output
@@ -936,14 +926,12 @@ def resample_audio(
 
         for pdf in batches:
             rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
+            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
                 b = bytes(payload)
                 try:
                     with wave.open(io.BytesIO(b), "rb") as w:
-                        nch = w.getnchannels()
-                        rate = w.getframerate()
-                        nfr = w.getnframes()
-                        if w.getsampwidth() != 2:
+                        nch, width, rate, nfr = w.getparams()[:4]
+                        if width != 2:
                             raise wave.Error("only PCM16")
                         raw = w.readframes(nfr)
                     samples = np.frombuffer(raw, dtype="<i2").reshape(
@@ -980,4 +968,4 @@ def resample_audio(
                 rows, columns=[f.name for f in AUDIO_RESAMPLE_SCHEMA.fields]
             )
 
-    return df.select(id_col, payload_col).mapInPandas(fn, AUDIO_RESAMPLE_SCHEMA)
+    return df.select("doc_id", "payload").mapInPandas(fn, AUDIO_RESAMPLE_SCHEMA)

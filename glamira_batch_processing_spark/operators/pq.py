@@ -31,7 +31,7 @@ from __future__ import annotations
 
 import hashlib
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 QUANT = 1_000_000  # micro-quantization, same as the warehouse money math
@@ -95,27 +95,20 @@ def pq_adc_topk(
     queries: DataFrame,
     codebooks: list[list[list[float]]],
     id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 10,
-    exclude_self: bool = True,
 ) -> DataFrame:
     """(query_id, neighbor_id, rank, adc_q1e6): top-k candidates per
     query by ADC distance over PQ codes.
 
-    ``queries`` must have (query_id, qvec). The corpus side never
+    ``queries`` must have (query_id, qvec), drawn from the corpus id
+    space: a candidate whose id equals the query_id is the query itself
+    and is dropped. The corpus side (``embedding``) never
     touches raw query vectors: candidates are scored by joining their
     (s, code) rows to the query's broadcast distance table (m*ks rows
     per query) and summing m exact bigint partials. Shuffle budget:
     one exchange for the (query, candidate) partial sum, one for the
     per-query top-k window — independent of dim.
-
-    ``exclude_self`` drops candidates whose id equals the query_id —
-    correct ONLY when queries are drawn from the corpus id space; set
-    False for external query sets, where an id coincidence would
-    silently exclude a legitimate neighbor.
     """
-    from pyspark.sql import Window
-
     spark = embeddings.sparkSession
     ds = len(codebooks[0][0])
     ks = len(codebooks[0])
@@ -138,7 +131,7 @@ def pq_adc_topk(
 
         return term
 
-    dist_q = subspace_fold_q(rel_term(vec_col), ds)
+    dist_q = subspace_fold_q(rel_term("embedding"), ds)
     codes = (
         embeddings.crossJoin(F.broadcast(cents))
         .select(
@@ -156,18 +149,7 @@ def pq_adc_topk(
         subspace_fold_q(rel_term("qvec"), ds).alias("partial_q"),
     )
 
-    scored = codes.join(F.broadcast(qtab), ["s", "code"])
-    if exclude_self:
-        scored = scored.filter(F.col("query_id") != F.col("neighbor_id"))
-    scored = scored.groupBy("query_id", "neighbor_id").agg(
-        F.sum("partial_q").alias("adc_q1e6")
-    )
-    w = Window.partitionBy("query_id").orderBy("adc_q1e6", "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "adc_q1e6")
-    )
+    return _adc_topk(codes.join(F.broadcast(qtab), ["s", "code"]), k)
 
 
 def ivfpq_adc_topk(
@@ -175,10 +157,8 @@ def ivfpq_adc_topk(
     coarse_centroids: list[list[float]],
     codebooks: list[list[list[float]]],
     id_col: str = "vec_id",
-    vec_col: str = "embedding",
     query_pred: Column | None = None,
     k: int = 5,
-    exclude_self: bool = True,
     fan_out_partitions: int | None = None,
 ) -> DataFrame:
     """IVF + PQ with RESIDUAL encoding (Jegou et al. 2011 §IV — the
@@ -203,12 +183,9 @@ def ivfpq_adc_topk(
     ``query_pred`` should select a PROBE-sized set: the per-query
     distance table (m*ks rows each) broadcasts, so all-vectors-as-
     queries (query_pred=None) is only sane on small corpora — exactly
-    like handing a full table to any broadcast side. ``exclude_self``
-    as in :func:`pq_adc_topk` (queries here ARE corpus rows, so the
-    default True is right for this entry point).
+    like handing a full table to any broadcast side. Queries are corpus
+    rows, so a query never ranks itself (as in :func:`pq_adc_topk`).
     """
-    from pyspark.sql import Window
-
     from .clustering import lloyd_assign
 
     spark = embeddings.sparkSession
@@ -220,8 +197,8 @@ def ivfpq_adc_topk(
     )
     base = embeddings.select(
         F.col(id_col),
-        F.col(vec_col).alias("vec"),
-        lloyd_assign(F.col(vec_col), coarse_centroids).alias("cell"),
+        F.col("embedding").alias("vec"),
+        lloyd_assign(F.col("embedding"), coarse_centroids).alias("cell"),
     )
     if (
         fan_out_partitions
@@ -283,10 +260,19 @@ def ivfpq_adc_topk(
         & (F.col("code") == F.col("qcode"))
         & (F.col("cell") == F.col("qcell")),
     )
-    if exclude_self:
-        scored = scored.filter(F.col("query_id") != F.col("neighbor_id"))
-    scored = scored.groupBy("query_id", "neighbor_id").agg(
-        F.sum("partial_q").alias("adc_q1e6")
+    return _adc_topk(scored, k)
+
+
+def _adc_topk(scored: DataFrame, k: int) -> DataFrame:
+    """(query_id, neighbor_id, rank, adc_q1e6): the ADC tail shared by
+    both entry points. ``scored`` holds one ``partial_q`` row per
+    (query, candidate, subspace); a candidate that is the query itself
+    is dropped, the m partials are summed exactly, and the k smallest
+    distances per query are ranked (ties to the lower neighbor_id)."""
+    scored = (
+        scored.filter(F.col("query_id") != F.col("neighbor_id"))
+        .groupBy("query_id", "neighbor_id")
+        .agg(F.sum("partial_q").alias("adc_q1e6"))
     )
     w = Window.partitionBy("query_id").orderBy("adc_q1e6", "neighbor_id")
     return (

@@ -45,30 +45,29 @@ def cosine_topk(
     queries: DataFrame,
     corpus: DataFrame,
     k: int = 10,
-    query_id: str = "query_id",
     corpus_id: str = "vec_id",
-    query_vec: str = "qvec",
     corpus_vec: str = "embedding",
 ) -> DataFrame:
     """Exact top-k neighbors per query by cosine, excluding self-matches.
+    ``queries`` has (query_id, qvec) rows.
 
     The query side is broadcast (small); scoring is a map-side nested
     loop over the corpus scan — no shuffle until the final per-query
     top-k, which is a window over query_id. Each side's norm is computed
     once per row (``qnrm`` / ``cnrm``), not once per scored pair.
     """
-    q = queries.withColumn("qnrm", norm(F.col(query_vec)))
+    q = queries.withColumn("qnrm", norm(F.col("qvec")))
     c = corpus.withColumn("cnrm", norm(F.col(corpus_vec)))
-    sim = dot(F.col(query_vec), F.col(corpus_vec)) / (F.col("qnrm") * F.col("cnrm"))
-    j = c.join(F.broadcast(q), F.col(query_id) != F.col(corpus_id))
+    sim = dot(F.col("qvec"), F.col(corpus_vec)) / (F.col("qnrm") * F.col("cnrm"))
+    j = c.join(F.broadcast(q), F.col("query_id") != F.col(corpus_id))
     scored = j.withColumn("cosine_sim", sim)
-    w = Window.partitionBy(query_id).orderBy(
+    w = Window.partitionBy("query_id").orderBy(
         F.desc("cosine_sim"), F.col(corpus_id)
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select(query_id, F.col(corpus_id).alias("neighbor_id"), "rank", "cosine_sim")
+        .select("query_id", F.col(corpus_id).alias("neighbor_id"), "rank", "cosine_sim")
     )
 
 
@@ -76,8 +75,6 @@ def cosine_topk_np(
     queries_pdf,
     corpus: DataFrame,
     k: int = 10,
-    corpus_id: str = "vec_id",
-    corpus_vec: str = "embedding",
 ) -> DataFrame:
     """Vectorized exact top-k: per-partition numpy matmul via mapInPandas.
 
@@ -113,8 +110,8 @@ def cosine_topk_np(
 
     def score(batches):
         for pdf in batches:
-            ids = np.asarray(pdf[corpus_id], dtype=np.int64)
-            C = np.vstack([np.asarray(v, dtype=np.float64) for v in pdf[corpus_vec]])
+            ids = np.asarray(pdf["vec_id"], dtype=np.int64)
+            C = np.vstack([np.asarray(v, dtype=np.float64) for v in pdf["embedding"]])
             Cn = C / np.linalg.norm(C, axis=1, keepdims=True)
             sims = Qn @ Cn.T  # (n_queries, batch)
             for qi, qid in enumerate(q_ids):
@@ -129,8 +126,8 @@ def cosine_topk_np(
                 )
 
     partial = (
-        corpus.filter(F.col(corpus_vec).isNotNull())
-        .select(corpus_id, corpus_vec)
+        corpus.filter(F.col("embedding").isNotNull())
+        .select("vec_id", "embedding")
         .mapInPandas(score, out_schema)
     )
     # merge per-partition top-k -> global top-k
@@ -198,10 +195,6 @@ def ivf_search(
     query_pred,
     k: int = 10,
     nprobe: int = 1,
-    vec_id: str = "vec_id",
-    vec_col: str = "embedding",
-    centroid_id: str = "centroid_id",
-    centroid_vec: str = "cvec",
 ) -> DataFrame:
     """Multi-probe IVF ANN: queries search their ``nprobe`` nearest
     centroid buckets instead of one.
@@ -215,18 +208,18 @@ def ivf_search(
     tested against; the registered IVF queries build on the same
     :func:`ivf_rank`.
     """
-    ranked = ivf_rank(vectors, centroids, vec_id, vec_col, centroid_id, centroid_vec)
+    ranked = ivf_rank(vectors, centroids)
     assigned = ranked.filter(F.col("rn") == 1).select(
-        F.col(vec_id).alias("neighbor_id"),
-        F.col(vec_col).alias("__cvec2"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("__cvec2"),
         F.col("nrm").alias("__cnrm2"),
-        F.col(centroid_id).alias("__bucket"),
+        F.col("centroid_id").alias("__bucket"),
     )
     probes = ranked.filter(query_pred & (F.col("rn") <= nprobe)).select(
-        F.col(vec_id).alias("query_id"),
-        F.col(vec_col).alias("__qvec"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("__qvec"),
         F.col("nrm").alias("__qnrm"),
-        F.col(centroid_id).alias("__bucket"),
+        F.col("centroid_id").alias("__bucket"),
     )
     cand = probes.join(assigned, "__bucket").filter(
         F.col("query_id") != F.col("neighbor_id")
@@ -249,8 +242,6 @@ def ivf_search_np(
     query_pred,
     k: int = 10,
     nprobe: int = 1,
-    vec_id: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Arrow/numpy IVF ANN: the production twin of the fold reference
     :func:`ivf_search`.
@@ -304,7 +295,7 @@ def ivf_search_np(
                 continue
             ids = np.asarray(pdf["__vid"], dtype=np.int64)
             is_q = np.asarray(pdf["__is_q"], dtype=bool)
-            V = np.vstack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
+            V = np.vstack([np.asarray(v, dtype=np.float64) for v in pdf["embedding"]])
             Vn = V / np.linalg.norm(V, axis=1, keepdims=True)
             sims = Vn @ Cn.T  # (batch, K)
             # stable argsort on -sims: ties break toward the lower
@@ -335,10 +326,10 @@ def ivf_search_np(
     # NULL vectors would crash the numpy kernels; drop them (the fold
     # variant scores them as NULL similarity, which the top-k then
     # never selects — same observable result).
-    tagged = vectors.filter(F.col(vec_col).isNotNull()).select(
-        F.col(vec_id).alias("__vid"),
+    tagged = vectors.filter(F.col("embedding").isNotNull()).select(
+        F.col("vec_id").alias("__vid"),
         query_pred.alias("__is_q"),
-        F.col(vec_col),
+        F.col("embedding"),
     )
     # Both the probe branch and the candidate branch consume this, so
     # the assign kernel runs twice over the corpus. Measured: persisting
@@ -405,27 +396,21 @@ def ivf_search_np(
     )
 
 
-def ivf_rank(
-    vectors: DataFrame,
-    centroids: DataFrame,
-    vec_id: str = "vec_id",
-    vec_col: str = "embedding",
-    centroid_id: str = "centroid_id",
-    centroid_vec: str = "cvec",
-) -> DataFrame:
-    """Every vector paired with every centroid (broadcast cross join),
-    ranked per vector by cosine: ``rn`` 1 is the nearest centroid, ties
-    break to the lower ``centroid_id``. Adds the vector's norm ``nrm``,
+def ivf_rank(vectors: DataFrame, centroids: DataFrame) -> DataFrame:
+    """Every (vec_id, embedding) vector paired with every (centroid_id,
+    cvec) centroid (broadcast cross join), ranked per vector by cosine:
+    ``rn`` 1 is the nearest centroid, ties break to the lower
+    ``centroid_id``. Adds the vector's norm ``nrm``,
     the centroid's ``cnrm`` and the similarity ``c_sim``.
 
     The one IVF centroid-ranking step: assignment is its ``rn == 1``
     cut (:func:`ivf_assign`), multi-probe takes ``rn <= nprobe``. Each
     norm is computed once per row, not once per vector x centroid
     pair — the same ordered fold, so the doubles are identical."""
-    normed = vectors.withColumn("nrm", norm(F.col(vec_col)))
-    cents = centroids.withColumn("cnrm", norm(F.col(centroid_vec)))
-    sim = dot(F.col(vec_col), F.col(centroid_vec)) / (F.col("nrm") * F.col("cnrm"))
-    w = Window.partitionBy(vec_id).orderBy(F.desc("c_sim"), F.col(centroid_id))
+    normed = vectors.withColumn("nrm", norm(F.col("embedding")))
+    cents = centroids.withColumn("cnrm", norm(F.col("cvec")))
+    sim = dot(F.col("embedding"), F.col("cvec")) / (F.col("nrm") * F.col("cnrm"))
+    w = Window.partitionBy("vec_id").orderBy(F.desc("c_sim"), F.col("centroid_id"))
     return (
         normed.crossJoin(F.broadcast(cents))
         .withColumn("c_sim", sim)
@@ -433,20 +418,54 @@ def ivf_rank(
     )
 
 
-def ivf_assign(
-    vectors: DataFrame,
-    centroids: DataFrame,
-    vec_id: str = "vec_id",
-    vec_col: str = "embedding",
-    centroid_id: str = "centroid_id",
-    centroid_vec: str = "cvec",
-) -> DataFrame:
-    """(vec_id, vec_col, nrm, centroid_id): each vector's highest-cosine
-    centroid — the rank-1 cut of :func:`ivf_rank`."""
+def ivf_assign(vectors: DataFrame, centroids: DataFrame) -> DataFrame:
+    """(vec_id, embedding, nrm, centroid_id): each vector's
+    highest-cosine centroid — the rank-1 cut of :func:`ivf_rank`."""
     return (
-        ivf_rank(vectors, centroids, vec_id, vec_col, centroid_id, centroid_vec)
+        ivf_rank(vectors, centroids)
         .filter(F.col("rn") == 1)
-        .select(vec_id, vec_col, "nrm", centroid_id)
+        .select("vec_id", "embedding", "nrm", "centroid_id")
+    )
+
+
+def ivf_bucket_scores(queries: DataFrame, corpus: DataFrame) -> DataFrame:
+    """Exact cosine of each query against every other corpus vector in
+    its IVF bucket. Both sides are (vec_id, embedding, nrm, centroid_id)
+    rows as :func:`ivf_assign` gives them; the query side may carry more
+    columns, which pass through. Returns query_id, qvec, qnrm,
+    centroid_id, the extra query columns, neighbor_id, cvec2, cnrm2, c2
+    and cosine_sim: one bucket equi-join, no pairwise work across
+    buckets."""
+    q = queries.select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("qvec"),
+        F.col("nrm").alias("qnrm"),
+        *[c for c in queries.columns if c not in ("vec_id", "embedding", "nrm")],
+    )
+    c = corpus.select(
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("cvec2"),
+        F.col("nrm").alias("cnrm2"),
+        F.col("centroid_id").alias("c2"),
+    )
+    return q.join(
+        c,
+        (F.col("centroid_id") == F.col("c2"))
+        & (F.col("query_id") != F.col("neighbor_id")),
+    ).withColumn(
+        "cosine_sim",
+        dot(F.col("qvec"), F.col("cvec2")) / (F.col("qnrm") * F.col("cnrm2")),
+    )
+
+
+def top_by_cosine(scored: DataFrame, k: int, *keys: str) -> DataFrame:
+    """The ``k`` highest-``cosine_sim`` rows per query (and per ``keys``),
+    ranked 1..k in ``rank``; ties break to the lower ``neighbor_id``."""
+    w = Window.partitionBy(*keys, "query_id").orderBy(
+        F.desc("cosine_sim"), F.col("neighbor_id")
+    )
+    return scored.withColumn("rank", F.row_number().over(w)).filter(
+        F.col("rank") <= k
     )
 
 
@@ -454,15 +473,13 @@ def semdedup_prune(
     vecs: DataFrame,
     centroids: list[list[float]],
     tau: float = 0.35,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023): cluster-scoped semantic dedup.
 
     Assign every vector to its nearest literal centroid (scan-fused
     fold, zero shuffle), then mark a vector pruned when a lower-id
     member of the SAME cluster sits at or above cosine ``tau`` —
-    the min-id survivor policy. Returns (id, cluster_id, is_pruned).
+    the min-id survivor policy. Returns (vec_id, cluster_id, is_pruned).
 
     Pairwise work is an equi-self-join ON cluster_id, never all-pairs:
     with k ~ sqrt(N) clusters the quadratic term is bounded by cluster
@@ -476,18 +493,18 @@ def semdedup_prune(
     from .clustering import lloyd_assign
 
     assigned = vecs.withColumn(
-        "cluster_id", lloyd_assign(F.col(vec_col), centroids)
-    ).withColumn("nrm", norm(F.col(vec_col)))
+        "cluster_id", lloyd_assign(F.col("embedding"), centroids)
+    ).withColumn("nrm", norm(F.col("embedding")))
     a = assigned.select(
         F.col("cluster_id").alias("a_cluster"),
-        F.col(id_col).alias("a_id"),
-        F.col(vec_col).alias("a_vec"),
+        F.col("vec_id").alias("a_id"),
+        F.col("embedding").alias("a_vec"),
         F.col("nrm").alias("a_nrm"),
     )
     b = assigned.select(
         F.col("cluster_id").alias("b_cluster"),
-        F.col(id_col).alias("b_id"),
-        F.col(vec_col).alias("b_vec"),
+        F.col("vec_id").alias("b_id"),
+        F.col("embedding").alias("b_vec"),
         F.col("nrm").alias("b_nrm"),
     )
     sim = dot(F.col("a_vec"), F.col("b_vec")) / (F.col("a_nrm") * F.col("b_nrm"))
@@ -498,12 +515,12 @@ def semdedup_prune(
             & (F.col("a_id") < F.col("b_id")),
         )
         .filter(sim >= tau)
-        .select(F.col("b_id").alias(id_col))
+        .select(F.col("b_id").alias("vec_id"))
         .distinct()
         .withColumn("hit", F.lit(1))
     )
-    return assigned.join(pruned, id_col, "left").select(
-        id_col,
+    return assigned.join(pruned, "vec_id", "left").select(
+        "vec_id",
         "cluster_id",
         F.col("hit").isNotNull().alias("is_pruned"),
     )

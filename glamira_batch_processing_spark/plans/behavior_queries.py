@@ -26,9 +26,9 @@ from .registry import query, table
 # ---------------------------------------------------------------------------
 
 
-@query(
-    "funnel_view_click_purchase",
-    oracle="""
+# Order-sensitive funnel flags in DuckDB: running-max stage flags per
+# user, a click counting only after a view (q_click).
+_FUNNEL_FLAG_CTES = """
     WITH lvl1 AS (
       SELECT user_id,
              CASE WHEN event_type = 'view' THEN 1 ELSE 0 END AS is_view,
@@ -47,7 +47,12 @@ from .registry import query, table
                PARTITION BY user_id ORDER BY ts, event_id
                ROWS UNBOUNDED PRECEDING) AS seen_q_click
       FROM lvl1
-    ),
+    )"""
+
+
+@query(
+    "funnel_view_click_purchase",
+    oracle=f"""{_FUNNEL_FLAG_CTES},
     per_user AS (
       SELECT user_id,
              max(is_view) AS u_view,

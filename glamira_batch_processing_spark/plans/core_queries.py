@@ -82,9 +82,33 @@ def split_total(name: str) -> F.Column:
     )
 
 
-@query(
-    "q1_pricing_summary",
-    oracle="""
+def _q1_aggs(qty: F.Column, price_c: F.Column, disc_c: F.Column, tax_c: F.Column) -> list[F.Column]:
+    """Q1's per-group partial sums over integer quantities and cents."""
+    return [
+        F.sum(qty).alias("sq"),  # qty <= 50/row: plain long is exact
+        *split_sum(price_c, "sbp"),
+        *split_sum(price_c * (100 - disc_c), "sdp"),
+        *split_sum(price_c * (100 - disc_c) * (100 + tax_c), "sc"),
+        F.count("*").alias("n"),
+    ]
+
+
+def _q1_columns() -> list[F.Column]:
+    """Q1's output columns from the :func:`_q1_aggs` partial sums."""
+    return [
+        F.col("l_returnflag"),
+        F.col("l_linestatus"),
+        F.col("sq").cast("double").alias("sum_qty"),
+        (split_total("sbp").cast("double") / 100).alias("sum_base_price"),
+        (split_total("sdp").cast("double") / 10000).alias("sum_disc_price"),
+        (split_total("sc").cast("double") / 1000000).alias("sum_charge"),
+        (F.col("sq").cast("double") / F.col("n")).alias("avg_qty"),
+        (split_total("sbp").cast("double") / 100 / F.col("n")).alias("avg_price"),
+        F.col("n").alias("count_order"),
+    ]
+
+
+_Q1_ORACLE = """
     WITH c AS (
       SELECT l_returnflag, l_linestatus,
              CAST(l_quantity AS BIGINT) AS qty,
@@ -103,7 +127,12 @@ def split_total(name: str) -> F.Column:
       CAST(SUM(price_c) AS DOUBLE)/100/COUNT(*) AS avg_price,
       COUNT(*) AS count_order
     FROM c GROUP BY l_returnflag, l_linestatus
-    """,
+    """
+
+
+@query(
+    "q1_pricing_summary",
+    oracle=_Q1_ORACLE,
 )
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Group-agg spine of the engine (ref: stg_order.sql:131 line totals +
@@ -126,24 +155,8 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         # skips the per-row date conversion (round-8 q1 profiling).
         l.filter(F.col("l_shipdate") < F.lit("2001-09-03").cast("timestamp_ntz"))
         .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.sum(qty).alias("sq"),  # qty <= 50/row: plain long is exact
-            *split_sum(price_c, "sbp"),
-            *split_sum(price_c * (100 - disc_c), "sdp"),
-            *split_sum(price_c * (100 - disc_c) * (100 + tax_c), "sc"),
-            F.count("*").alias("n"),
-        )
-        .select(
-            "l_returnflag",
-            "l_linestatus",
-            F.col("sq").cast("double").alias("sum_qty"),
-            (split_total("sbp").cast("double") / 100).alias("sum_base_price"),
-            (split_total("sdp").cast("double") / 10000).alias("sum_disc_price"),
-            (split_total("sc").cast("double") / 1000000).alias("sum_charge"),
-            (F.col("sq").cast("double") / F.col("n")).alias("avg_qty"),
-            (split_total("sbp").cast("double") / 100 / F.col("n")).alias("avg_price"),
-            F.col("n").alias("count_order"),
-        )
+        .agg(*_q1_aggs(qty, price_c, disc_c, tax_c))
+        .select(*_q1_columns())
     )
 
 

@@ -9,11 +9,14 @@ DuckDB oracle reproduces the identical corpus.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators import text as T
 from ..operators.dedup import (
+    SQL_MINHASH_CTES,
     exact_dedup_stats,
     lsh_candidate_pairs,
     lsh_candidate_pairs_fast,
@@ -28,9 +31,11 @@ from ..operators.similarity import (
     hyperplane_bucket,
     hyperplane_lsh_planes,
     ivf_assign,
+    ivf_bucket_scores,
     norm,
     sql_dot,
     sql_hyperplane_bucket,
+    top_by_cosine,
 )
 from .registry import fan_out, query, table
 
@@ -161,21 +166,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 _LSH_PAIRS_ORACLE = f"""
     WITH {corpus_cte()},
     shingles AS ({sql_shingles_cte("corpus")}),
-    mh AS (
-      SELECT doc_id, seed, MIN((a * h1 + b * h2) % 2147483647) AS minhash
-      FROM (
-        SELECT doc_id,
-               CAST(concat('0x', substr(md5(shingle), 1, 7)) AS BIGINT) AS h1,
-               CAST(concat('0x', substr(md5(shingle), 9, 7)) AS BIGINT) AS h2
-        FROM shingles
-      ), (VALUES (0, 1571058545, 730493953), (1, 1660058741, 1293707557), (2, 1122761735, 1579482915), (3, 72772567, 776319283), (4, 1809802581, 1088400267), (5, 1716185263, 1854787491), (6, 1376580201, 1232262117), (7, 126093127, 1718349005), (8, 1255154079, 929465995), (9, 1495162255, 1110399377), (10, 253380337, 223979957), (11, 331484111, 2008330133)) AS coeffs(seed, a, b)
-      GROUP BY doc_id, seed
-    ),
-    sigs AS (
-      SELECT doc_id, seed // 3 AS band,
-             string_agg(CAST(minhash AS VARCHAR), '|' ORDER BY seed) AS band_sig
-      FROM mh GROUP BY doc_id, seed // 3
-    )
+    {SQL_MINHASH_CTES}
     SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
     FROM sigs a JOIN sigs b ON a.band = b.band AND a.band_sig = b.band_sig
     WHERE a.doc_id < b.doc_id
@@ -225,14 +216,15 @@ def dedup_streaming_ingest_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     arrives as THREE mtime-ordered file chunks replayed through a real
     Structured Streaming file source (maxFilesPerTrigger=1 +
     availableNow), and each micro-batch runs incremental_lsh_pairs
-    (operators/dedup.py:242) — signatures for the BATCH ONLY are
+    (operators/dedup.py) — signatures for the BATCH ONLY are
     computed and MERGEd into a persistent VersionedTable signature
     store (txn_id = batch id, so a replayed batch neither duplicates
     signatures nor double-reports), then band buckets are probed with
     the batch broadcast as the small side. The union of per-batch pair
-    emissions must hash-match the WHOLE-CORPUS batch LSH oracle
-    (dedup_minhash_lsh's SQL verbatim): every pair is discovered
-    exactly once, at the batch where its later-arriving member lands.
+    emissions must hash-match the WHOLE-CORPUS batch LSH oracle: its
+    oracle is its batch twin ``dedup_minhash_lsh``'s,
+    ``_LSH_PAIRS_ORACLE``. Every pair is discovered exactly once, at the
+    batch where its later-arriving member lands.
 
     Chunks are cut on doc_id % 3 — an expression the injected
     duplicate offsets do NOT preserve (100000 % 3 = 1, 200000 % 3 = 2),
@@ -418,30 +410,60 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# Similarity search: brute-force cosine top-k.
-# ---------------------------------------------------------------------------
-@query(
-    "ann_cosine_topk",
-    oracle=f"""
-    WITH normed AS (
+# DuckDB twins of the cosine scorers: every vector with its norm, the
+# exact scores of every 100th vector against the corpus, the IVF
+# assignment to the nearest of the first ``nlist`` vectors, and the
+# per-query top-k of a ``scored`` CTE.
+_SQL_NORMED = f"""normed AS (
       SELECT vec_id, embedding, sqrt({sql_dot("embedding", "embedding")}) AS nrm
       FROM embeddings
-    ),
+    )"""
+_SQL_EXACT_SCORED = f"""
+    WITH {_SQL_NORMED},
     scored AS (
       SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
              {sql_dot("q.embedding", "c.embedding")} / (q.nrm * c.nrm) AS cosine_sim
       FROM normed q JOIN normed c ON q.vec_id != c.vec_id
       WHERE q.vec_id % 100 = 0
-    )
-    SELECT query_id, neighbor_id, rank, cosine_sim FROM (
+    )"""
+
+
+def _sql_ivf_assigned(nlist: int) -> str:
+    return f"""
+    WITH {_SQL_NORMED},
+    centroids AS (SELECT * FROM normed WHERE vec_id < {nlist}),
+    assigned AS (
+      SELECT vec_id, embedding, nrm, centroid_id FROM (
+        SELECT v.vec_id, v.embedding, v.nrm, c.vec_id AS centroid_id,
+               row_number() OVER (
+                 PARTITION BY v.vec_id
+                 ORDER BY {sql_dot("v.embedding", "c.embedding")} / (v.nrm * c.nrm) DESC,
+                          c.vec_id
+               ) AS rn
+        FROM normed v CROSS JOIN centroids c
+      ) WHERE rn = 1
+    )"""
+
+
+def _sql_top_by_cosine(cols: str, k: int) -> str:
+    return f"""
+    SELECT {cols} FROM (
       SELECT *, row_number() OVER (
         PARTITION BY query_id ORDER BY cosine_sim DESC, neighbor_id
       ) AS rank
       FROM scored
     )
-    WHERE rank <= 10
-    """,
+    WHERE rank <= {k}
+    """
+
+
+# ---------------------------------------------------------------------------
+# Similarity search: brute-force cosine top-k.
+# ---------------------------------------------------------------------------
+@query(
+    "ann_cosine_topk",
+    oracle=_SQL_EXACT_SCORED
+    + _sql_top_by_cosine("query_id, neighbor_id, rank, cosine_sim", 10),
 )
 def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact cosine top-10 for every 100th vector as query. Queries are
@@ -464,8 +486,8 @@ def ann_cosine_topk_np(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle parity. No DuckDB oracle here: numpy's pairwise/SIMD
     summation differs from the sequential fold in the last ~ulp, so
     parity with the fold path is asserted in pytest with tolerance
-    (tests/test_similarity.py) and the driver records a rows-only
-    check. The query set is collected to pandas by design: ANN query
+    (tests/test_operators.py::test_cosine_topk_np_matches_fold) and the
+    driver records a rows-only check. The query set is collected to pandas by design: ANN query
     workloads are small and ship in the task closure (broadcast
     analog); the corpus side stays fully distributed."""
     from ..operators.similarity import cosine_topk_np
@@ -481,25 +503,7 @@ def ann_cosine_topk_np(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ann_cosine_topk_np_ids",
-    oracle=f"""
-    WITH normed AS (
-      SELECT vec_id, embedding, sqrt({sql_dot("embedding", "embedding")}) AS nrm
-      FROM embeddings
-    ),
-    scored AS (
-      SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-             {sql_dot("q.embedding", "c.embedding")} / (q.nrm * c.nrm) AS cosine_sim
-      FROM normed q JOIN normed c ON q.vec_id != c.vec_id
-      WHERE q.vec_id % 100 = 0
-    )
-    SELECT query_id, neighbor_id FROM (
-      SELECT *, row_number() OVER (
-        PARTITION BY query_id ORDER BY cosine_sim DESC, neighbor_id
-      ) AS rank
-      FROM scored
-    )
-    WHERE rank <= 10
-    """,
+    oracle=_SQL_EXACT_SCORED + _sql_top_by_cosine("query_id, neighbor_id", 10),
 )
 def ann_cosine_topk_np_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ids-only projection of the numpy BLAS kernel (VERDICT r12 ask
@@ -509,8 +513,9 @@ def ann_cosine_topk_np_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~ulp), but the id set is float-robust — the k-boundary score gaps
     in this corpus are orders of magnitude wider than the ~1e-12
     summation-order divergence. Set-equality vs the fold path is
-    pinned in pytest (tests/test_similarity.py) and held at
-    sf0.001/0.01/0.1/sf1 when gated (round-13 verification)."""
+    pinned in pytest
+    (tests/test_operators.py::test_cosine_topk_np_ids_set_matches_fold)
+    and held at sf0.001/0.01/0.1/sf1 when gated."""
     return ann_cosine_topk_np(spark, sf_dir).select("query_id", "neighbor_id")
 
 
@@ -519,38 +524,14 @@ def ann_cosine_topk_np_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @query(
     "ann_ivf_bucketed",
-    oracle=f"""
-    WITH normed AS (
-      SELECT vec_id, embedding, sqrt({sql_dot("embedding", "embedding")}) AS nrm
-      FROM embeddings
-    ),
-    centroids AS (SELECT * FROM normed WHERE vec_id < 8),
-    assigned AS (
-      SELECT vec_id, embedding, nrm, centroid_id FROM (
-        SELECT v.vec_id, v.embedding, v.nrm, c.vec_id AS centroid_id,
-               row_number() OVER (
-                 PARTITION BY v.vec_id
-                 ORDER BY {sql_dot("v.embedding", "c.embedding")} / (v.nrm * c.nrm) DESC,
-                          c.vec_id
-               ) AS rn
-        FROM normed v CROSS JOIN centroids c
-      ) WHERE rn = 1
-    ),
+    oracle=f"""{_sql_ivf_assigned(8)},
     scored AS (
       SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, q.centroid_id,
              {sql_dot("q.embedding", "c.embedding")} / (q.nrm * c.nrm) AS cosine_sim
       FROM assigned q
       JOIN assigned c ON q.centroid_id = c.centroid_id AND q.vec_id != c.vec_id
       WHERE q.vec_id % 100 = 0
-    )
-    SELECT query_id, centroid_id, neighbor_id, rank, cosine_sim FROM (
-      SELECT *, row_number() OVER (
-        PARTITION BY query_id ORDER BY cosine_sim DESC, neighbor_id
-      ) AS rank
-      FROM scored
-    )
-    WHERE rank <= 5
-    """,
+    ){_sql_top_by_cosine("query_id, centroid_id, neighbor_id, rank, cosine_sim", 5)}""",
 )
 def ann_ivf_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN: assign every vector to its nearest of 8 deterministic
@@ -562,31 +543,9 @@ def ann_ivf_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("cvec")
     )
     assigned = ivf_assign(e, cents)
-    q = assigned.filter(F.col("vec_id") % 100 == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qvec"),
-        F.col("nrm").alias("qnrm"),
-        "centroid_id",
-    )
-    c = assigned.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("cvec2"),
-        F.col("nrm").alias("cnrm2"),
-        F.col("centroid_id").alias("c2"),
-    )
-    scored = q.join(
-        c, (F.col("centroid_id") == F.col("c2")) & (F.col("query_id") != F.col("neighbor_id"))
-    ).withColumn(
-        "cosine_sim",
-        dot(F.col("qvec"), F.col("cvec2")) / (F.col("qnrm") * F.col("cnrm2")),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine_sim"), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 5)
-        .select("query_id", "centroid_id", "neighbor_id", "rank", "cosine_sim")
+    scored = ivf_bucket_scores(assigned.filter(F.col("vec_id") % 100 == 0), assigned)
+    return top_by_cosine(scored, 5).select(
+        "query_id", "centroid_id", "neighbor_id", "rank", "cosine_sim"
     )
 
 
@@ -641,38 +600,14 @@ def ann_ivf_bucketed_np(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ann_ivf_bucketed_np_ids",
-    oracle=f"""
-    WITH normed AS (
-      SELECT vec_id, embedding, sqrt({sql_dot("embedding", "embedding")}) AS nrm
-      FROM embeddings
-    ),
-    centroids AS (SELECT * FROM normed WHERE vec_id < 8),
-    assigned AS (
-      SELECT vec_id, embedding, nrm, centroid_id FROM (
-        SELECT v.vec_id, v.embedding, v.nrm, c.vec_id AS centroid_id,
-               row_number() OVER (
-                 PARTITION BY v.vec_id
-                 ORDER BY {sql_dot("v.embedding", "c.embedding")} / (v.nrm * c.nrm) DESC,
-                          c.vec_id
-               ) AS rn
-        FROM normed v CROSS JOIN centroids c
-      ) WHERE rn = 1
-    ),
+    oracle=f"""{_sql_ivf_assigned(8)},
     scored AS (
       SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
              {sql_dot("q.embedding", "c.embedding")} / (q.nrm * c.nrm) AS cosine_sim
       FROM assigned q
       JOIN assigned c ON q.centroid_id = c.centroid_id AND q.vec_id != c.vec_id
       WHERE q.vec_id % 100 = 0
-    )
-    SELECT query_id, neighbor_id FROM (
-      SELECT *, row_number() OVER (
-        PARTITION BY query_id ORDER BY cosine_sim DESC, neighbor_id
-      ) AS rank
-      FROM scored
-    )
-    WHERE rank <= 5
-    """,
+    ){_sql_top_by_cosine("query_id, neighbor_id", 5)}""",
 )
 def ann_ivf_bucketed_np_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ids-only projection of the numpy IVF kernel (round 13 — the
@@ -959,6 +894,29 @@ def multimodal_decode_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     return decode_images(d)
 
 
+def _payloads(d: DataFrame, make: Callable[[int], bytes]) -> DataFrame:
+    """(doc_id, payload) with ``payload = make(doc_id)`` for each row of
+    ``d``: synthetic media bytes rendered per Arrow batch."""
+
+    def gen(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            payloads = [make(int(i)) for i in pdf["doc_id"]]
+            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+
+    return d.mapInPandas(gen, "doc_id long, payload binary")
+
+
+def _wav_payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """PCM16 WAVs for every 10th document: 100..499 frames at 8 kHz,
+    mono or stereo, all derived from doc_id."""
+    from ..operators.multimodal import wav_bytes
+
+    d = table(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 == 0).select("doc_id")
+    return _payloads(d, lambda i: wav_bytes(100 + i % 400, 8000, 1 + i % 2, seed=i))
+
+
 @query(
     "multimodal_image_meta",
     oracle="""
@@ -981,21 +939,10 @@ def multimodal_image_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.multimodal import decode_images, image_bytes
 
     d = table(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 == 0).select("doc_id")
-
-    def gen(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            fmts = ["png", "gif", "bmp", "jpeg"]
-            payloads = [
-                image_bytes(
-                    fmts[int(i) % 4], 16 + int(i) % 48, 16 + (int(i) * 7) % 48
-                )
-                for i in pdf["doc_id"]
-            ]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    payloads = d.mapInPandas(gen, "doc_id long, payload binary")
+    fmts = ["png", "gif", "bmp", "jpeg"]
+    payloads = _payloads(
+        d, lambda i: image_bytes(fmts[i % 4], 16 + i % 48, 16 + (i * 7) % 48)
+    )
     meta = decode_images(payloads, strict=True)
     return meta.select("doc_id", "format", "width", "height")
 
@@ -1037,20 +984,10 @@ def multimodal_variant_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
     )
     names = list(JPEG_VARIANTS)  # insertion-ordered: baseline..extended
-
-    def gen(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            payloads = [
-                variant_jpeg_bytes(
-                    names[int(i) % 8], 16 + int(i) % 48, 16 + (int(i) * 7) % 48
-                )
-                for i in pdf["doc_id"]
-            ]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    payloads = d.mapInPandas(gen, "doc_id long, payload binary")
+    payloads = _payloads(
+        d,
+        lambda i: variant_jpeg_bytes(names[i % 8], 16 + i % 48, 16 + (i * 7) % 48),
+    )
     meta = decode_images(payloads, strict=True)
     return meta.select("doc_id", "format", "width", "height")
 
@@ -1075,21 +1012,9 @@ def multimodal_audio_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     recomputes every field arithmetically (44-byte canonical PCM header
     + 2 bytes x frames x channels), so a decoder that misreads any
     header field fails the value hash."""
-    from ..operators.multimodal import decode_audio, wav_bytes
+    from ..operators.multimodal import decode_audio
 
-    d = table(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 == 0).select("doc_id")
-
-    def gen(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            payloads = [
-                wav_bytes(100 + int(i) % 400, 8000, 1 + int(i) % 2, seed=int(i))
-                for i in pdf["doc_id"]
-            ]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    payloads = d.mapInPandas(gen, "doc_id long, payload binary")
+    payloads = _wav_payloads(spark, sf_dir)
     return decode_audio(payloads)
 
 
@@ -1192,21 +1117,9 @@ def multimodal_audio_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     frames, or re-encodes a malformed container, fails the value hash.
     Sample-level decimation/repeat correctness is pinned in pytest
     against a numpy reference."""
-    from ..operators.multimodal import resample_audio, wav_bytes
+    from ..operators.multimodal import resample_audio
 
-    d = table(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 == 0).select("doc_id")
-
-    def gen(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            payloads = [
-                wav_bytes(100 + int(i) % 400, 8000, 1 + int(i) % 2, seed=int(i))
-                for i in pdf["doc_id"]
-            ]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    payloads = d.mapInPandas(gen, "doc_id long, payload binary")
+    payloads = _wav_payloads(spark, sf_dir)
     out = resample_audio(payloads, target_rate=4000)
     return out.select(
         "doc_id",
@@ -1594,20 +1507,23 @@ from ..operators.sq import (  # noqa: E402
 )
 
 _SQ_DIM = 64
-
-
-@query(
-    "ann_sq8_topk",
-    oracle=f"""
-    WITH {sql_sq8_params_cte("embeddings", "embedding", _SQ_DIM)},
-    codes AS (
+# The corpus encoded to SQ8 codes (``codes``) and decoded back (``deq``)
+# under the ``sqparams`` CTE.
+_SQL_SQ8_DEQ = f"""codes AS (
       SELECT vec_id, {sql_sq8_codes("embedding", _SQ_DIM)} AS codes
       FROM embeddings, sqparams
     ),
     deq AS (
       SELECT vec_id, {sql_sq8_dequant("codes", _SQ_DIM)} AS deq
       FROM codes, sqparams
-    ),
+    )"""
+
+
+@query(
+    "ann_sq8_topk",
+    oracle=f"""
+    WITH {sql_sq8_params_cte("embeddings", "embedding", _SQ_DIM)},
+    {_SQL_SQ8_DEQ},
     scored AS (
       SELECT q.vec_id AS query_id, d.vec_id AS neighbor_id,
              CAST(FLOOR(list_reduce(
@@ -1676,14 +1592,7 @@ _SQL_SQ_L2 = (
         WHERE q.vec_id % 100 = 0
       ) WHERE rank <= {_SQ_RECALL_K}
     ),
-    codes AS (
-      SELECT vec_id, {sql_sq8_codes("embedding", _SQ_DIM)} AS codes
-      FROM embeddings, sqparams
-    ),
-    deq AS (
-      SELECT vec_id, {sql_sq8_dequant("codes", _SQ_DIM)} AS deq
-      FROM codes, sqparams
-    ),
+    {_SQL_SQ8_DEQ},
     approx AS (
       SELECT query_id, neighbor_id FROM (
         SELECT q.vec_id AS query_id, d.vec_id AS neighbor_id,
@@ -1801,30 +1710,21 @@ def _video_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
     )
 
-    def gen(batches):
-        import pandas as pd
+    # parameterize on k = doc_id // 20: doc_id % 20 == 0 makes doc_id %
+    # {4,5} constant, which would collapse the fixture to 2-frame
+    # 8-px-tall 10-fps videos and never exercise later sampled frames or
+    # varied rates
+    def video(k: int) -> bytes:
+        return mjpeg_video_bytes(
+            k,
+            width=16 + (k % 3) * 8,
+            height=8 + (k % 5) * 8,
+            n_frames=2 + k % 4,
+            rate=10 + k % 5,
+            scale=1,
+        )
 
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                # parameterize on doc_id // 20: doc_id % 20 == 0 makes
-                # doc_id % {4,5} constant, which would collapse the
-                # fixture to 2-frame 8-px-tall 10-fps videos and never
-                # exercise later sampled frames or varied rates
-                k = int(i) // 20
-                payloads.append(
-                    mjpeg_video_bytes(
-                        k,
-                        width=16 + (k % 3) * 8,
-                        height=8 + (k % 5) * 8,
-                        n_frames=2 + k % 4,
-                        rate=10 + k % 5,
-                        scale=1,
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    return d.mapInPandas(gen, "doc_id long, payload binary")
+    return _payloads(d, lambda i: video(i // 20))
 
 
 @query(
@@ -1947,22 +1847,12 @@ def multimodal_video_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 == 7).select("doc_id")
     variants = ["mjpg", "xvid", "h264", "corrupt", "unknown"]
 
-    def gen(batches):
-        import pandas as pd
+    def video(k: int) -> bytes:
+        return variant_video_bytes(
+            variants[k % 5],
+            width=16 + (k % 3) * 8,
+            height=8 + (k % 4) * 8,
+            n_frames=2 + k % 3,
+        )
 
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                k = int(i) // 10
-                payloads.append(
-                    variant_video_bytes(
-                        variants[k % 5],
-                        width=16 + (k % 3) * 8,
-                        height=8 + (k % 4) * 8,
-                        n_frames=2 + k % 3,
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    payloads = d.mapInPandas(gen, "doc_id long, payload binary")
-    return route_videos(payloads)
+    return route_videos(_payloads(d, lambda i: video(i // 10)))

@@ -61,9 +61,8 @@ def tumbling_window_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "interval_join_attribution",
-    oracle="""
+# Every view in the 15 minutes before a purchase by the same user.
+_ATTRIBUTION_ORACLE = """
     SELECT p.event_id AS purchase_id,
            p.user_id,
            epoch_us(p.ts) AS purchase_ts_us,
@@ -75,8 +74,10 @@ def tumbling_window_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
      AND v.ts <= p.ts
      AND v.ts >= p.ts - INTERVAL '15 minutes'
     WHERE p.event_type = 'purchase' AND v.event_type = 'view'
-    """,
-)
+    """
+
+
+@query("interval_join_attribution", oracle=_ATTRIBUTION_ORACLE)
 def interval_join_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Purchase attribution: every view by the same user within the 15
     minutes before a purchase (``streaming.joins.interval_join``). As a
@@ -103,29 +104,14 @@ def interval_join_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "interval_join_streaming_gate",
-    oracle="""
-    SELECT p.event_id AS purchase_id,
-           p.user_id,
-           epoch_us(p.ts) AS purchase_ts_us,
-           v.event_id AS view_id,
-           epoch_us(v.ts) AS view_ts_us
-    FROM events p
-    JOIN events v
-      ON p.user_id = v.user_id
-     AND v.ts <= p.ts
-     AND v.ts >= p.ts - INTERVAL '15 minutes'
-    WHERE p.event_type = 'purchase' AND v.event_type = 'view'
-    """,
-)
+@query("interval_join_streaming_gate", oracle=_ATTRIBUTION_ORACLE)
 def interval_join_streaming_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The STREAM-STREAM interval join under the external oracle gate
-    (new round 13 — ``interval_join_attribution`` proves the PLAN in
-    batch; this replays the identical ``streaming.joins.interval_join``
-    as a REAL two-source Structured Streaming join and hash-matches
-    the union of its append-mode emissions against the same batch
-    oracle). Purchases and views arrive as two file sources, four
+    (``interval_join_attribution`` proves the PLAN in batch; this
+    replays the identical ``streaming.joins.interval_join`` as a REAL
+    two-source Structured Streaming join and hash-matches the union of
+    its append-mode emissions against the same batch oracle: its oracle
+    is its batch twin's, ``_ATTRIBUTION_ORACLE``). Purchases and views arrive as two file sources, four
     mtime-ordered chunks each, one file per source per micro-batch.
 
     The VIEW side is deliberately delivered ONE CHUNK LATER than its

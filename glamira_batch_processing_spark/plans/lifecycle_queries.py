@@ -44,6 +44,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .core_queries import _Q1_ORACLE, _q1_aggs, _q1_columns, cents
 from .registry import query, table
 
 
@@ -128,9 +129,37 @@ def s1_chunked_export_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "s11_cdc_diff",
-    oracle="""
+def _s11_versions(
+    spark: SparkSession, t, o: DataFrame, parts: int, delete: str
+) -> tuple[int, int, int]:
+    """Commit the s11 lifecycle's first three versions of ``t`` from the
+    orders frame ``o``: v0 the history load (before 1997) in ``parts``
+    files, v1 the lookback re-extract (from 1996-07) MERGEd on the order
+    key with the source winning, v2 a DELETE WHERE ``delete``. Rows carry
+    exact cents, an ISO date and the load that wrote them — the algebra
+    ``_S11_MERGED`` restates."""
+
+    def shape(df: DataFrame, from_source: int) -> DataFrame:
+        return df.select(
+            "o_orderkey",
+            "o_custkey",
+            F.floor(F.col("o_totalprice") * 100 + 0.5).cast("long").alias("total_cents"),
+            F.date_format("o_orderdate", "yyyy-MM-dd").alias("order_date"),
+            F.lit(from_source).alias("from_source"),
+        )
+
+    v0 = t.create(shape(o.filter(F.col("o_orderdate") < "1997-01-01"), 0).repartition(parts))
+    v1 = t.merge(
+        spark,
+        shape(o.filter(F.col("o_orderdate") >= "1996-07-01"), 1),
+        keys=["o_orderkey"],
+    )
+    return v0, v1, t.delete_where(spark, delete)
+
+
+# The s11 oracles' shared algebra: the v0 history load, the lookback
+# re-extract, and the MERGE (source wins on key) as a row_number upsert.
+_S11_MERGED = """
     WITH tgt AS (
       SELECT o_orderkey, o_custkey,
              CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS total_cents,
@@ -153,7 +182,12 @@ def s1_chunked_export_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         ) AS rn
         FROM (SELECT * FROM tgt UNION ALL SELECT * FROM src)
       ) WHERE rn = 1
-    ),
+    )"""
+
+
+@query(
+    "s11_cdc_diff",
+    oracle=f"""{_S11_MERGED},
     v2 AS (
       SELECT * FROM merged WHERE NOT (o_orderkey % 7 = 0)
     ),
@@ -197,52 +231,13 @@ def s11_cdc_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = VersionedTable(_scratch("s11_cdc_diff", sf_dir))
     o = table(spark, sf_dir, "orders")
-
-    def shape(df: DataFrame, from_source: int) -> DataFrame:
-        return df.select(
-            "o_orderkey",
-            "o_custkey",
-            F.floor(F.col("o_totalprice") * 100 + 0.5).cast("long").alias("total_cents"),
-            F.date_format("o_orderdate", "yyyy-MM-dd").alias("order_date"),
-            F.lit(from_source).alias("from_source"),
-        )
-
-    t.create(shape(o.filter(F.col("o_orderdate") < "1997-01-01"), 0).repartition(4))
-    t.merge(
-        spark,
-        shape(o.filter(F.col("o_orderdate") >= "1996-07-01"), 1),
-        keys=["o_orderkey"],
-    )
-    v2 = t.delete_where(spark, "o_orderkey % 7 = 0")
+    _, _, v2 = _s11_versions(spark, t, o, 4, "o_orderkey % 7 = 0")
     return t.diff(spark, 0, v2, keys=["o_orderkey"])
 
 
 @query(
     "s11_incremental_view",
-    oracle="""
-    WITH tgt AS (
-      SELECT o_orderkey, o_custkey,
-             CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS total_cents,
-             strftime(CAST(o_orderdate AS DATE), '%Y-%m-%d') AS order_date,
-             0 AS from_source
-      FROM orders WHERE o_orderdate < TIMESTAMP '1997-01-01'
-    ),
-    src AS (
-      SELECT o_orderkey, o_custkey,
-             CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS total_cents,
-             strftime(CAST(o_orderdate AS DATE), '%Y-%m-%d') AS order_date,
-             1 AS from_source
-      FROM orders WHERE o_orderdate >= TIMESTAMP '1996-07-01'
-    ),
-    merged AS (
-      SELECT o_orderkey, o_custkey, total_cents, order_date, from_source
-      FROM (
-        SELECT *, row_number() OVER (
-          PARTITION BY o_orderkey ORDER BY from_source DESC
-        ) AS rn
-        FROM (SELECT * FROM tgt UNION ALL SELECT * FROM src)
-      ) WHERE rn = 1
-    ),
+    oracle=f"""{_S11_MERGED},
     v2 AS (
       SELECT * FROM merged WHERE NOT (o_orderkey % 7 = 0)
     )
@@ -270,72 +265,25 @@ def s11_incremental_view(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = VersionedTable(_scratch("s11_incremental_view", sf_dir))
     o = table(spark, sf_dir, "orders")
-
-    def shape(df: DataFrame, from_source: int) -> DataFrame:
-        return df.select(
-            "o_orderkey",
-            "o_custkey",
-            F.floor(F.col("o_totalprice") * 100 + 0.5).cast("long").alias("total_cents"),
-            F.date_format("o_orderdate", "yyyy-MM-dd").alias("order_date"),
-            F.lit(from_source).alias("from_source"),
+    versions = _s11_versions(spark, t, o, 4, "o_orderkey % 7 = 0")
+    mat = t.read(spark, versions[0]).groupBy(
+        F.substring("order_date", 1, 7).alias("month"), "from_source"
+    ).agg(
+        F.sum("total_cents").alias("total_cents"),
+        F.count("*").alias("n_rows"),
+    )
+    # refresh through each commit's change feed, never rescanning the fact
+    for old, new in zip(versions, versions[1:]):
+        cdc = t.diff(spark, old, new, keys=["o_orderkey"], with_old=True).withColumn(
+            "month", F.substring("order_date", 1, 7)
+        ).withColumn("old_month", F.substring("old_order_date", 1, 7))
+        mat = maintain_sum_agg(
+            mat, cdc, ["month", "from_source"], ["total_cents"]
         )
-
-    def rollup(df: DataFrame) -> DataFrame:
-        return df.groupBy(
-            F.substring("order_date", 1, 7).alias("month"), "from_source"
-        ).agg(
-            F.sum("total_cents").alias("total_cents"),
-            F.count("*").alias("n_rows"),
-        )
-
-    v0 = t.create(
-        shape(o.filter(F.col("o_orderdate") < "1997-01-01"), 0).repartition(4)
-    )
-    mat = rollup(t.read(spark, v0))
-    v1 = t.merge(
-        spark,
-        shape(o.filter(F.col("o_orderdate") >= "1996-07-01"), 1),
-        keys=["o_orderkey"],
-    )
-    cdc1 = t.diff(spark, v0, v1, keys=["o_orderkey"], with_old=True).withColumn(
-        "month", F.substring("order_date", 1, 7)
-    ).withColumn("old_month", F.substring("old_order_date", 1, 7))
-    mat = maintain_sum_agg(
-        mat, cdc1, ["month", "from_source"], ["total_cents"]
-    )
-    v2 = t.delete_where(spark, "o_orderkey % 7 = 0")
-    cdc2 = t.diff(spark, v1, v2, keys=["o_orderkey"], with_old=True).withColumn(
-        "month", F.substring("order_date", 1, 7)
-    ).withColumn("old_month", F.substring("old_order_date", 1, 7))
-    mat = maintain_sum_agg(
-        mat, cdc2, ["month", "from_source"], ["total_cents"]
-    )
     return mat
 
 
-@query(
-    "q1_coded_layout",
-    oracle="""
-    WITH c AS (
-      SELECT l_returnflag, l_linestatus,
-             CAST(l_quantity AS BIGINT) AS qty,
-             CAST(floor(l_extendedprice*100 + 0.5) AS BIGINT) AS price_c,
-             CAST(floor(l_discount*100 + 0.5) AS BIGINT) AS disc_c,
-             CAST(floor(l_tax*100 + 0.5) AS BIGINT) AS tax_c
-      FROM lineitem
-      WHERE CAST(l_shipdate AS DATE) <= DATE '2001-09-02'
-    )
-    SELECT l_returnflag, l_linestatus,
-      CAST(SUM(qty) AS DOUBLE) AS sum_qty,
-      CAST(SUM(price_c) AS DOUBLE)/100 AS sum_base_price,
-      CAST(SUM(price_c*(100-disc_c)) AS DOUBLE)/10000 AS sum_disc_price,
-      CAST(SUM(price_c*(100-disc_c)*(100+tax_c)) AS DOUBLE)/1000000 AS sum_charge,
-      CAST(SUM(qty) AS DOUBLE)/COUNT(*) AS avg_qty,
-      CAST(SUM(price_c) AS DOUBLE)/100/COUNT(*) AS avg_price,
-      COUNT(*) AS count_order
-    FROM c GROUP BY l_returnflag, l_linestatus
-    """,
-)
+@query("q1_coded_layout", oracle=_Q1_ORACLE)
 def q1_coded_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     """q1 over the dictionary-coded TYPED warehouse layout (VERDICT r8
     ask #2): the staging layer writes ``l_returnflag``/``l_linestatus``
@@ -357,7 +305,6 @@ def q1_coded_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
         decode_after_agg_inline,
         dict_encode_columns,
     )
-    from .core_queries import cents, split_sum, split_total
 
     l = table(spark, sf_dir, "lineitem").select(
         "l_returnflag",
@@ -383,32 +330,15 @@ def q1_coded_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
         c: spark.read.parquet(str(dst / f"dim_{c}.parquet"))
         for c in ("l_returnflag", "l_linestatus")
     }
-    price_c, disc_c, tax_c = F.col("price_c"), F.col("disc_c"), F.col("tax_c")
     agg = (
         lc.filter(F.col("l_shipdate") < F.lit("2001-09-03").cast("timestamp_ntz"))
         .groupBy("l_returnflag_code", "l_linestatus_code")
-        .agg(
-            F.sum("qty").alias("sq"),
-            *split_sum(price_c, "sbp"),
-            *split_sum(price_c * (100 - disc_c), "sdp"),
-            *split_sum(price_c * (100 - disc_c) * (100 + tax_c), "sc"),
-            F.count("*").alias("n"),
-        )
+        .agg(*_q1_aggs(*map(F.col, ("qty", "price_c", "disc_c", "tax_c"))))
     )
     # inline decode: two bounded (<=256-row) dim collects + literal map
     # lookups on the 6 post-aggregate rows — no join jobs (the measured
     # per-query constant of re-broadcasting static metadata; SCALE.md).
-    return decode_after_agg_inline(agg, read_dims).select(
-        "l_returnflag",
-        "l_linestatus",
-        F.col("sq").cast("double").alias("sum_qty"),
-        (split_total("sbp").cast("double") / 100).alias("sum_base_price"),
-        (split_total("sdp").cast("double") / 10000).alias("sum_disc_price"),
-        (split_total("sc").cast("double") / 1000000).alias("sum_charge"),
-        (F.col("sq").cast("double") / F.col("n")).alias("avg_qty"),
-        (split_total("sbp").cast("double") / 100 / F.col("n")).alias("avg_price"),
-        F.col("n").alias("count_order"),
-    )
+    return decode_after_agg_inline(agg, read_dims).select(*_q1_columns())
 
 
 @query(
@@ -480,24 +410,7 @@ def s11_time_travel_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = VersionedTable(_scratch("s11_time_travel_restore", sf_dir))
     o = table(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 5 == 0)
-
-    def shape(df: DataFrame, from_source: int) -> DataFrame:
-        return df.select(
-            "o_orderkey",
-            "o_custkey",
-            F.floor(F.col("o_totalprice") * 100 + 0.5)
-            .cast("long")
-            .alias("total_cents"),
-            F.lit(from_source).alias("from_source"),
-        )
-
-    t.create(shape(o.filter(F.col("o_orderdate") < "1997-01-01"), 0))
-    t.merge(
-        spark,
-        shape(o.filter(F.col("o_orderdate") >= "1996-07-01"), 1),
-        keys=["o_orderkey"],
-    )
-    t.delete_where(spark, "o_custkey % 3 = 0")
+    _s11_versions(spark, t, o, 1, "o_custkey % 3 = 0")
     t.restore(1)
     cols = ["o_orderkey", "o_custkey", "total_cents", "from_source"]
     v1 = t.read(spark, version=1).select(F.lit("v1_asof").alias("leg"), *cols)
@@ -508,30 +421,7 @@ def s11_time_travel_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "s11_versioned_lifecycle",
-    oracle="""
-    WITH tgt AS (
-      SELECT o_orderkey, o_custkey,
-             CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS total_cents,
-             strftime(CAST(o_orderdate AS DATE), '%Y-%m-%d') AS order_date,
-             0 AS from_source
-      FROM orders WHERE o_orderdate < TIMESTAMP '1997-01-01'
-    ),
-    src AS (
-      SELECT o_orderkey, o_custkey,
-             CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS total_cents,
-             strftime(CAST(o_orderdate AS DATE), '%Y-%m-%d') AS order_date,
-             1 AS from_source
-      FROM orders WHERE o_orderdate >= TIMESTAMP '1996-07-01'
-    ),
-    merged AS (
-      SELECT o_orderkey, o_custkey, total_cents, order_date, from_source
-      FROM (
-        SELECT *, row_number() OVER (
-          PARTITION BY o_orderkey ORDER BY from_source DESC
-        ) AS rn
-        FROM (SELECT * FROM tgt UNION ALL SELECT * FROM src)
-      ) WHERE rn = 1
-    ),
+    oracle=f"""{_S11_MERGED},
     after_delete AS (
       SELECT * FROM merged WHERE NOT (o_orderkey % 7 = 0)
     )
@@ -560,27 +450,9 @@ def s11_versioned_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
         stat_columns=("o_orderkey", "o_custkey"),
     )
     o = table(spark, sf_dir, "orders")
-
-    def shape(df: DataFrame, from_source: int) -> DataFrame:
-        return df.select(
-            "o_orderkey",
-            "o_custkey",
-            F.floor(F.col("o_totalprice") * 100 + 0.5).cast("long").alias("total_cents"),
-            F.date_format("o_orderdate", "yyyy-MM-dd").alias("order_date"),
-            F.lit(from_source).alias("from_source"),
-        )
-
-    # v0: history load, deliberately fragmented so compact_small has
-    # small files to pack (streaming-ingest steady state).
-    t.create(shape(o.filter(F.col("o_orderdate") < "1997-01-01"), 0).repartition(8))
-    # v1: lookback MERGE — overlapping re-extract, source wins on key.
-    t.merge(
-        spark,
-        shape(o.filter(F.col("o_orderdate") >= "1996-07-01"), 1),
-        keys=["o_orderkey"],
-    )
-    # v2: row-level DELETE.
-    t.delete_where(spark, "o_orderkey % 7 = 0")
+    # v0 is deliberately fragmented (8 files) so compact_small has small
+    # files to pack (streaming-ingest steady state).
+    _s11_versions(spark, t, o, 8, "o_orderkey % 7 = 0")
     # v3: incremental OPTIMIZE — packs the small files, carries the
     # rest forward by reference (O(small bytes), never O(table)).
     t.compact_small(spark, target_bytes=64 << 20, min_files=2)

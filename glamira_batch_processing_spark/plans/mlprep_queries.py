@@ -14,11 +14,14 @@ from pyspark.sql import functions as F
 
 from ..operators.components import connected_components
 from ..operators.dedup import (
+    SQL_MINHASH_CTES,
     doc_shingle_words,
     lsh_candidate_pairs,
     lsh_candidate_pairs_fast,
     lsh_candidate_pairs_fast_on_words,
     lsh_candidate_pairs_on_shingles,
+    sql_components_ctes,
+    sql_lsh_pairs_cte,
     sql_shingles_cte,
 )
 from ..operators.mlprep import (
@@ -284,36 +287,9 @@ def sample_stratified_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH RECURSIVE {corpus_cte()},
     shingles AS ({sql_shingles_cte("corpus")}),
-    mh AS (
-      SELECT doc_id, seed, MIN((a * h1 + b * h2) % 2147483647) AS minhash
-      FROM (
-        SELECT doc_id,
-               CAST(concat('0x', substr(md5(shingle), 1, 7)) AS BIGINT) AS h1,
-               CAST(concat('0x', substr(md5(shingle), 9, 7)) AS BIGINT) AS h2
-        FROM shingles
-      ), (VALUES (0, 1571058545, 730493953), (1, 1660058741, 1293707557), (2, 1122761735, 1579482915), (3, 72772567, 776319283), (4, 1809802581, 1088400267), (5, 1716185263, 1854787491), (6, 1376580201, 1232262117), (7, 126093127, 1718349005), (8, 1255154079, 929465995), (9, 1495162255, 1110399377), (10, 253380337, 223979957), (11, 331484111, 2008330133)) AS coeffs(seed, a, b)
-      GROUP BY doc_id, seed
-    ),
-    sigs AS (
-      SELECT doc_id, seed // 3 AS band,
-             string_agg(CAST(minhash AS VARCHAR), '|' ORDER BY seed) AS band_sig
-      FROM mh GROUP BY doc_id, seed // 3
-    ),
-    pairs AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM sigs a JOIN sigs b ON a.band = b.band AND a.band_sig = b.band_sig
-      WHERE a.doc_id < b.doc_id
-    ),
-    edges AS (
-      SELECT doc_a AS a, doc_b AS b FROM pairs
-      UNION
-      SELECT doc_b AS a, doc_a AS b FROM pairs
-    ),
-    r(node, lab) AS (
-      SELECT a, a FROM edges
-      UNION
-      SELECT e.b, r.lab FROM r JOIN edges e ON e.a = r.node
-    ),
+    {SQL_MINHASH_CTES},
+    {sql_lsh_pairs_cte("pairs")},
+    {sql_components_ctes("pairs")},
     comp AS (
       SELECT node, MIN(lab) AS component FROM r GROUP BY node
     )
@@ -351,36 +327,9 @@ def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH RECURSIVE {corpus_cte()},
     shingles AS ({sql_shingles_cte("corpus")}),
-    mh AS (
-      SELECT doc_id, seed, MIN((a * h1 + b * h2) % 2147483647) AS minhash
-      FROM (
-        SELECT doc_id,
-               CAST(concat('0x', substr(md5(shingle), 1, 7)) AS BIGINT) AS h1,
-               CAST(concat('0x', substr(md5(shingle), 9, 7)) AS BIGINT) AS h2
-        FROM shingles
-      ), (VALUES (0, 1571058545, 730493953), (1, 1660058741, 1293707557), (2, 1122761735, 1579482915), (3, 72772567, 776319283), (4, 1809802581, 1088400267), (5, 1716185263, 1854787491), (6, 1376580201, 1232262117), (7, 126093127, 1718349005), (8, 1255154079, 929465995), (9, 1495162255, 1110399377), (10, 253380337, 223979957), (11, 331484111, 2008330133)) AS coeffs(seed, a, b)
-      GROUP BY doc_id, seed
-    ),
-    sigs AS (
-      SELECT doc_id, seed // 3 AS band,
-             string_agg(CAST(minhash AS VARCHAR), '|' ORDER BY seed) AS band_sig
-      FROM mh GROUP BY doc_id, seed // 3
-    ),
-    pairs AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM sigs a JOIN sigs b ON a.band = b.band AND a.band_sig = b.band_sig
-      WHERE a.doc_id < b.doc_id
-    ),
-    edges AS (
-      SELECT doc_a AS a, doc_b AS b FROM pairs
-      UNION
-      SELECT doc_b AS a, doc_a AS b FROM pairs
-    ),
-    r(node, lab) AS (
-      SELECT a, a FROM edges
-      UNION
-      SELECT e.b, r.lab FROM r JOIN edges e ON e.a = r.node
-    ),
+    {SQL_MINHASH_CTES},
+    {sql_lsh_pairs_cte("pairs")},
+    {sql_components_ctes("pairs")},
     comp AS (SELECT node, MIN(lab) AS component FROM r GROUP BY node),
     ranked AS (
       SELECT c.component, c.node AS doc_id, length(co.text) AS doc_len,
@@ -443,36 +392,9 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH RECURSIVE {corpus_cte()},
     shingles AS ({sql_shingles_cte("corpus")}),
-    mh AS (
-      SELECT doc_id, seed, MIN((a * h1 + b * h2) % 2147483647) AS minhash
-      FROM (
-        SELECT doc_id,
-               CAST(concat('0x', substr(md5(shingle), 1, 7)) AS BIGINT) AS h1,
-               CAST(concat('0x', substr(md5(shingle), 9, 7)) AS BIGINT) AS h2
-        FROM shingles
-      ), (VALUES (0, 1571058545, 730493953), (1, 1660058741, 1293707557), (2, 1122761735, 1579482915), (3, 72772567, 776319283), (4, 1809802581, 1088400267), (5, 1716185263, 1854787491), (6, 1376580201, 1232262117), (7, 126093127, 1718349005), (8, 1255154079, 929465995), (9, 1495162255, 1110399377), (10, 253380337, 223979957), (11, 331484111, 2008330133)) AS coeffs(seed, a, b)
-      GROUP BY doc_id, seed
-    ),
-    sigs AS (
-      SELECT doc_id, seed // 3 AS band,
-             string_agg(CAST(minhash AS VARCHAR), '|' ORDER BY seed) AS band_sig
-      FROM mh GROUP BY doc_id, seed // 3
-    ),
-    pairs AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM sigs a JOIN sigs b ON a.band = b.band AND a.band_sig = b.band_sig
-      WHERE a.doc_id < b.doc_id
-    ),
-    edges AS (
-      SELECT doc_a AS a, doc_b AS b FROM pairs
-      UNION
-      SELECT doc_b AS a, doc_a AS b FROM pairs
-    ),
-    r(node, lab) AS (
-      SELECT a, a FROM edges
-      UNION
-      SELECT e.b, r.lab FROM r JOIN edges e ON e.a = r.node
-    ),
+    {SQL_MINHASH_CTES},
+    {sql_lsh_pairs_cte("pairs")},
+    {sql_components_ctes("pairs")},
     comp AS (SELECT node, MIN(lab) AS component FROM r GROUP BY node),
     keyed AS (
       SELECT c.doc_id,
@@ -641,36 +563,9 @@ _DATAPIPE_ORACLE = f"""
     WITH RECURSIVE {corpus_cte()},
     q AS (SELECT doc_id, text FROM corpus WHERE {_sql_quality("text")} >= 0.55),
     shingles AS ({sql_shingles_cte("q")}),
-    mh AS (
-      SELECT doc_id, seed, MIN((a * h1 + b * h2) % 2147483647) AS minhash
-      FROM (
-        SELECT doc_id,
-               CAST(concat('0x', substr(md5(shingle), 1, 7)) AS BIGINT) AS h1,
-               CAST(concat('0x', substr(md5(shingle), 9, 7)) AS BIGINT) AS h2
-        FROM shingles
-      ), (VALUES (0, 1571058545, 730493953), (1, 1660058741, 1293707557), (2, 1122761735, 1579482915), (3, 72772567, 776319283), (4, 1809802581, 1088400267), (5, 1716185263, 1854787491), (6, 1376580201, 1232262117), (7, 126093127, 1718349005), (8, 1255154079, 929465995), (9, 1495162255, 1110399377), (10, 253380337, 223979957), (11, 331484111, 2008330133)) AS coeffs(seed, a, b)
-      GROUP BY doc_id, seed
-    ),
-    sigs AS (
-      SELECT doc_id, seed // 3 AS band,
-             string_agg(CAST(minhash AS VARCHAR), '|' ORDER BY seed) AS band_sig
-      FROM mh GROUP BY doc_id, seed // 3
-    ),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM sigs a JOIN sigs b ON a.band = b.band AND a.band_sig = b.band_sig
-      WHERE a.doc_id < b.doc_id
-    ),
-    edges AS (
-      SELECT doc_a AS a, doc_b AS b FROM cand
-      UNION
-      SELECT doc_b AS a, doc_a AS b FROM cand
-    ),
-    r(node, lab) AS (
-      SELECT a, a FROM edges
-      UNION
-      SELECT e.b, r.lab FROM r JOIN edges e ON e.a = r.node
-    ),
+    {SQL_MINHASH_CTES},
+    {sql_lsh_pairs_cte("cand")},
+    {sql_components_ctes("cand")},
     comp AS (SELECT node, MIN(lab) AS component FROM r GROUP BY node),
     dedup AS (
       SELECT doc_id, text FROM q

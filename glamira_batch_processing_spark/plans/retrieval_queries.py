@@ -66,9 +66,9 @@ _BM25_SCORE_SQL = " + ".join(
 )
 
 
-@query(
-    "search_bm25_topk",
-    oracle=f"""
+# Per-doc length and query-term counts (``tf``) and the corpus totals
+# BM25 needs (``stats``).
+_SQL_BM25_STATS = f"""
     WITH tf AS (
       SELECT doc_id,
              len(str_split(lower(text), ' ')) AS dl,
@@ -86,7 +86,12 @@ _BM25_SCORE_SQL = " + ".join(
                  for i in range(len(_BM25_TERMS))
              )}
       FROM tf
-    ),
+    )"""
+
+
+@query(
+    "search_bm25_topk",
+    oracle=f"""{_SQL_BM25_STATS},
     scored AS (
       SELECT doc_id, dl,
              {", ".join(f"tf{i}" for i in range(len(_BM25_TERMS)))},
@@ -389,18 +394,22 @@ def quality_gopher_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ANN recall evaluation: IVF vs exact ground truth.
 # ---------------------------------------------------------------------------
 
-from ..operators.similarity import sql_dot  # noqa: E402
+from ..operators.similarity import (  # noqa: E402
+    ivf_bucket_scores,
+    sql_dot,
+    top_by_cosine,
+)
+from .datapipe_queries import (  # noqa: E402
+    _SQL_NORMED,
+    _sql_ivf_assigned,
+    _sql_top_by_cosine,
+)
 
 _RECALL_K = 5
-
-
-@query(
-    "ann_recall_eval",
-    oracle=f"""
-    WITH normed AS (
-      SELECT vec_id, embedding, sqrt({sql_dot("embedding", "embedding")}) AS nrm
-      FROM embeddings
-    ),
+# Ground truth of the recall queries: each 100th vector's exact cosine
+# top-k neighbor ids.
+_SQL_EXACT_TOPK = f"""
+    WITH {_SQL_NORMED},
     exact AS (
       SELECT query_id, neighbor_id FROM (
         SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
@@ -412,7 +421,12 @@ _RECALL_K = 5
         FROM normed q JOIN normed c ON q.vec_id != c.vec_id
         WHERE q.vec_id % 100 = 0
       ) WHERE rank <= {_RECALL_K}
-    ),
+    )"""
+
+
+@query(
+    "ann_recall_eval",
+    oracle=f"""{_SQL_EXACT_TOPK},
     centroids AS (SELECT * FROM normed WHERE vec_id < 8),
     assigned AS (
       SELECT vec_id, embedding, nrm, centroid_id FROM (
@@ -688,23 +702,7 @@ def _recall_multiprobe_oracle() -> str:
       ) WHERE rank <= {_RECALL_K}"""
         )
     approx_union = "\n      UNION ALL".join(levels)
-    return f"""
-    WITH normed AS (
-      SELECT vec_id, embedding, sqrt({sql_dot("embedding", "embedding")}) AS nrm
-      FROM embeddings
-    ),
-    exact AS (
-      SELECT query_id, neighbor_id FROM (
-        SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-               row_number() OVER (
-                 PARTITION BY q.vec_id
-                 ORDER BY {sql_dot("q.embedding", "c.embedding")}
-                          / (q.nrm * c.nrm) DESC, c.vec_id
-               ) AS rank
-        FROM normed q JOIN normed c ON q.vec_id != c.vec_id
-        WHERE q.vec_id % 100 = 0
-      ) WHERE rank <= {_RECALL_K}
-    ),
+    return f"""{_SQL_EXACT_TOPK},
     centroids AS (SELECT * FROM normed WHERE vec_id < 8),
     ranked AS (
       SELECT v.vec_id, v.embedding, v.nrm, c.vec_id AS centroid_id,
@@ -755,12 +753,12 @@ def ann_recall_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     (pinned separately for the Arrow ``ivf_search_np`` in pytest).
 
     Scale shape: identical to ``ann_recall_eval`` except the probe
-    side fans out nprobe-fold (still query-sample-sized); the corpus
-    is scanned and bucketed ONCE — probe levels reuse the same
-    assignment, and the candidate join stays a bucket equi-join.
+    side fans out to the deepest level's nprobe (still
+    query-sample-sized); the corpus is scanned and bucketed ONCE, ONE
+    bucket equi-join scores every level's candidates, and ONE window
+    over (nprobe, query_id) ranks them, so each run does the same work.
     """
-    from pyspark.sql import Window
-    from ..operators.similarity import dot, ivf_rank
+    from ..operators.similarity import ivf_rank
 
     from .datapipe_queries import ann_cosine_topk
 
@@ -777,54 +775,20 @@ def ann_recall_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     assigned = ranked.filter(F.col("rn") == 1).select(
         "vec_id", "embedding", "nrm", "centroid_id"
     )
+    # One candidate join over the deepest probe level: each candidate
+    # keeps the rank ``rn`` of the probed centroid, and a level keeps
+    # the candidates with rn <= nprobe. A neighbor sits in one bucket
+    # and a query's probed centroids are distinct, so each level's
+    # candidates are the ones its own probe join would find.
     probes = ranked.filter(
         (F.col("rn") <= max(_PROBE_LEVELS)) & (F.col("vec_id") % 100 == 0)
-    ).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("centroid_id").alias("probe_centroid"),
-        "rn",
+    ).select("vec_id", "embedding", "nrm", "centroid_id", "rn")
+    scored = ivf_bucket_scores(probes, assigned).withColumn(
+        "nprobe", F.explode(F.array(*[F.lit(p) for p in _PROBE_LEVELS]))
+    ).filter(F.col("rn") <= F.col("nprobe"))
+    approx = top_by_cosine(scored, _RECALL_K, "nprobe").select(
+        "nprobe", "query_id", "neighbor_id"
     )
-    q_side = assigned.filter(F.col("vec_id") % 100 == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qvec"),
-        F.col("nrm").alias("qnrm"),
-    )
-    c_side = assigned.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("cvec2"),
-        F.col("nrm").alias("cnrm2"),
-        F.col("centroid_id").alias("c2"),
-    )
-    per_level = []
-    for p in _PROBE_LEVELS:
-        cand = (
-            q_side.join(
-                probes.filter(F.col("rn") <= p), "query_id"
-            )
-            .join(
-                c_side,
-                (F.col("probe_centroid") == F.col("c2"))
-                & (F.col("query_id") != F.col("neighbor_id")),
-            )
-            .withColumn(
-                "cosine_sim",
-                dot(F.col("qvec"), F.col("cvec2"))
-                / (F.col("qnrm") * F.col("cnrm2")),
-            )
-        )
-        w = Window.partitionBy("query_id").orderBy(
-            F.desc("cosine_sim"), F.col("neighbor_id")
-        )
-        per_level.append(
-            cand.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= _RECALL_K)
-            .select(
-                F.lit(p).alias("nprobe"), "query_id", "neighbor_id"
-            )
-        )
-    approx = per_level[0]
-    for lvl in per_level[1:]:
-        approx = approx.unionByName(lvl)
     hits = (
         exact.join(approx, ["query_id", "neighbor_id"])
         .groupBy("nprobe", "query_id")
@@ -1048,15 +1012,7 @@ def _tivf_oracle() -> str:
       FROM ready q
       JOIN ready c ON q.centroid_id = c.centroid_id AND q.vec_id != c.vec_id
       WHERE q.vec_id % 100 = 0
-    )
-    SELECT query_id, centroid_id, neighbor_id, rank, cosine_sim FROM (
-      SELECT *, row_number() OVER (
-        PARTITION BY query_id ORDER BY cosine_sim DESC, neighbor_id
-      ) AS rank
-      FROM scored
-    )
-    WHERE rank <= {_TIVF_TOPK}
-    """
+    ){_sql_top_by_cosine("query_id, centroid_id, neighbor_id, rank, cosine_sim", _TIVF_TOPK)}"""
 
 
 @query("ann_ivf_trained", oracle=_tivf_oracle())
@@ -1088,10 +1044,8 @@ def ivf_trained_topk(spark, sf_dir, query_pred) -> DataFrame:
     centroids, then the proven IVF bucket-join path — training adds
     ONE shuffle over the seeded-centroid variant.
     """
-    from pyspark.sql import Window
-
     from ..operators.clustering import lloyd_assign, seed_centroids
-    from ..operators.similarity import dot, norm
+    from ..operators.similarity import norm
 
     seeds = seed_centroids(dim=_TIVF_SUB, k=_TIVF_K)
     e = table(spark, sf_dir, "embeddings")
@@ -1157,35 +1111,9 @@ def ivf_trained_topk(spark, sf_dir, query_pred) -> DataFrame:
     # re_assigned is corpus-sized, so at sf10 the scoring join
     # otherwise flips to SortMergeJoin and shuffles the CORPUS
     # (round-12 plan diff: BroadcastHashJoin -> SMJ + 2 Exchanges).
-    q = F.broadcast(
-        re_assigned.filter(query_pred).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("qvec"),
-            F.col("nrm").alias("qnrm"),
-            "centroid_id",
-        )
-    )
-    c = re_assigned.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("cvec"),
-        F.col("nrm").alias("cnrm"),
-        F.col("centroid_id").alias("c2"),
-    )
-    scored = q.join(
-        c,
-        (F.col("centroid_id") == F.col("c2"))
-        & (F.col("query_id") != F.col("neighbor_id")),
-    ).withColumn(
-        "cosine_sim",
-        dot(F.col("qvec"), F.col("cvec")) / (F.col("qnrm") * F.col("cnrm")),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine_sim"), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _TIVF_TOPK)
-        .select("query_id", "centroid_id", "neighbor_id", "rank", "cosine_sim")
+    scored = ivf_bucket_scores(F.broadcast(re_assigned.filter(query_pred)), re_assigned)
+    return top_by_cosine(scored, _TIVF_TOPK).select(
+        "query_id", "centroid_id", "neighbor_id", "rank", "cosine_sim"
     )
 
 
@@ -1209,25 +1137,7 @@ _RRF_EXPR = (
 
 @query(
     "search_hybrid_rrf",
-    oracle=f"""
-    WITH tf AS (
-      SELECT doc_id,
-             len(str_split(lower(text), ' ')) AS dl,
-             {", ".join(
-                 f"len(list_filter(str_split(lower(text), ' '),"
-                 f" w -> w = '{t}')) AS tf{i}"
-                 for i, t in enumerate(_BM25_TERMS)
-             )}
-      FROM documents
-    ),
-    stats AS (
-      SELECT COUNT(*) AS n_docs, SUM(dl) AS sum_dl,
-             {", ".join(
-                 f"SUM(CASE WHEN tf{i} > 0 THEN 1 ELSE 0 END) AS df{i}"
-                 for i in range(len(_BM25_TERMS))
-             )}
-      FROM tf
-    ),
+    oracle=f"""{_SQL_BM25_STATS},
     lex_top AS (
       SELECT doc_id, {_BM25_SCORE_SQL} AS bm25
       FROM tf CROSS JOIN stats
@@ -1361,38 +1271,14 @@ _IDX_TOPK = 3
 
 @query(
     "ann_index_persist",
-    oracle=f"""
-    WITH normed AS (
-      SELECT vec_id, embedding, sqrt({sql_dot("embedding", "embedding")}) AS nrm
-      FROM embeddings
-    ),
-    centroids AS (SELECT * FROM normed WHERE vec_id < {_IDX_NLIST}),
-    assigned AS (
-      SELECT vec_id, embedding, nrm, centroid_id FROM (
-        SELECT v.vec_id, v.embedding, v.nrm, c.vec_id AS centroid_id,
-               row_number() OVER (
-                 PARTITION BY v.vec_id
-                 ORDER BY {sql_dot("v.embedding", "c.embedding")} / (v.nrm * c.nrm) DESC,
-                          c.vec_id
-               ) AS rn
-        FROM normed v CROSS JOIN centroids c
-      ) WHERE rn = 1
-    ),
+    oracle=f"""{_sql_ivf_assigned(_IDX_NLIST)},
     scored AS (
       SELECT q.vec_id AS query_id, q.centroid_id, c.vec_id AS neighbor_id,
              {sql_dot("q.embedding", "c.embedding")} / (q.nrm * c.nrm) AS cosine_sim
       FROM assigned q
       JOIN assigned c ON q.centroid_id = c.centroid_id AND q.vec_id != c.vec_id
       WHERE q.vec_id % 50 = 0
-    )
-    SELECT query_id, centroid_id, neighbor_id, rank, cosine_sim FROM (
-      SELECT *, row_number() OVER (
-        PARTITION BY query_id ORDER BY cosine_sim DESC, neighbor_id
-      ) AS rank
-      FROM scored
-    )
-    WHERE rank <= {_IDX_TOPK}
-    """,
+    ){_sql_top_by_cosine("query_id, centroid_id, neighbor_id, rank, cosine_sim", _IDX_TOPK)}""",
 )
 def ann_index_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF index LIFECYCLE: the index is a persisted TABLE, not a
@@ -1420,9 +1306,7 @@ def ann_index_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
     (control plane), and an empty probe set short-circuits inside
     read_pruned_in to a schema-preserving empty scan (ADVICE r10).
     """
-    from pyspark.sql import Window
-
-    from ..operators.similarity import dot, ivf_assign
+    from ..operators.similarity import ivf_assign
     from ..sources.versioned import VersionedTable
     from .lifecycle_queries import _scratch
 
@@ -1457,31 +1341,6 @@ def ann_index_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
         for r in probes.select("centroid_id").distinct().collect()
     )
     cand, _info = vt.read_pruned_in(spark, "centroid_id", probe_lists)
-    q = probes.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qvec"),
-        F.col("nrm").alias("qnrm"),
-        "centroid_id",
-    )
-    c = cand.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("cvec2"),
-        F.col("nrm").alias("cnrm2"),
-        F.col("centroid_id").alias("c2"),
-    )
-    scored = q.join(
-        c,
-        (F.col("centroid_id") == F.col("c2"))
-        & (F.col("query_id") != F.col("neighbor_id")),
-    ).withColumn(
-        "cosine_sim",
-        dot(F.col("qvec"), F.col("cvec2")) / (F.col("qnrm") * F.col("cnrm2")),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine_sim"), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _IDX_TOPK)
-        .select("query_id", "centroid_id", "neighbor_id", "rank", "cosine_sim")
+    return top_by_cosine(ivf_bucket_scores(probes, cand), _IDX_TOPK).select(
+        "query_id", "centroid_id", "neighbor_id", "rank", "cosine_sim"
     )

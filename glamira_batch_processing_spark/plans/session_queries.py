@@ -7,12 +7,13 @@ from pyspark.sql import functions as F
 
 from ..operators.sketches import hll_sketch, kmv_estimate, sql_hll_sketch, sql_kmv_estimate
 from ..streaming.sessionize import sessionize_batch
+from .behavior_queries import _FUNNEL_FLAG_CTES
 from .registry import query, table
 
 
-@query(
-    "sessionize_gap30m",
-    oracle="""
+# 30-minute gap sessionization in DuckDB: a lag start flag, then a
+# running sum of the flags numbers each user's sessions.
+_GAP_SEQ_CTES = """
     WITH s AS (
       SELECT user_id, event_id, epoch_us(ts) AS ts_us,
              CASE WHEN lag(epoch_us(ts)) OVER w IS NULL
@@ -27,15 +28,18 @@ from .registry import query, table
         ROWS UNBOUNDED PRECEDING
       ) AS BIGINT) AS session_seq
       FROM s
-    )
+    )"""
+_GAP_SESSIONS_ORACLE = f"""{_GAP_SEQ_CTES}
     SELECT user_id, session_seq,
            COUNT(*) AS n_events,
            min(ts_us) AS session_start_us,
            max(ts_us) AS session_end_us
     FROM seq
     GROUP BY user_id, session_seq
-    """,
-)
+    """
+
+
+@query("sessionize_gap30m", oracle=_GAP_SESSIONS_ORACLE)
 def sessionize_gap30m(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based sessionization (30-min): lag -> start flag -> running
     sum -> per-session rollup. The streaming twin is the
@@ -55,22 +59,7 @@ def sessionize_gap30m(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "sessionize_builtin_window",
-    oracle="""
-    WITH s AS (
-      SELECT user_id, event_id, epoch_us(ts) AS ts_us,
-             CASE WHEN lag(epoch_us(ts)) OVER w IS NULL
-                       OR epoch_us(ts) - lag(epoch_us(ts)) OVER w > 1800000000
-                  THEN 1 ELSE 0 END AS is_start
-      FROM events
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    ),
-    seq AS (
-      SELECT *, CAST(SUM(is_start) OVER (
-        PARTITION BY user_id ORDER BY ts_us, event_id
-        ROWS UNBOUNDED PRECEDING
-      ) AS BIGINT) AS session_seq
-      FROM s
-    )
+    oracle=f"""{_GAP_SEQ_CTES}
     SELECT user_id,
            COUNT(*) AS n_events,
            min(ts_us) AS session_start_us,
@@ -507,32 +496,7 @@ def asof_forward_next_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "sessionize_streaming_gate",
-    oracle="""
-    WITH s AS (
-      SELECT user_id, event_id, epoch_us(ts) AS ts_us,
-             CASE WHEN lag(epoch_us(ts)) OVER w IS NULL
-                       OR epoch_us(ts) - lag(epoch_us(ts)) OVER w > 1800000000
-                  THEN 1 ELSE 0 END AS is_start
-      FROM events
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    ),
-    seq AS (
-      SELECT *, CAST(SUM(is_start) OVER (
-        PARTITION BY user_id ORDER BY ts_us, event_id
-        ROWS UNBOUNDED PRECEDING
-      ) AS BIGINT) AS session_seq
-      FROM s
-    )
-    SELECT user_id, session_seq,
-           COUNT(*) AS n_events,
-           min(ts_us) AS session_start_us,
-           max(ts_us) AS session_end_us
-    FROM seq
-    GROUP BY user_id, session_seq
-    """,
-)
+@query("sessionize_streaming_gate", oracle=_GAP_SESSIONS_ORACLE)
 def sessionize_streaming_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The STATEFUL STREAMING sessionizer under the external oracle
     gate (round 9): events are staged as four time-ordered file chunks
@@ -543,7 +507,8 @@ def sessionize_streaming_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     with their batch_id. The final read resolves each (user, session)
     to its LAST emission (update-sink semantics) and must hash-match
     the same 30-min-gap sessionization stated declaratively over the
-    batch table by the DuckDB oracle. This externalizes what
+    batch table: its oracle is its batch twin ``sessionize_gap30m``'s,
+    ``_GAP_SESSIONS_ORACLE``. This externalizes what
     tests/test_sessionize_scd.py proves on toy rows: exactly-once
     cross-batch state at corpus scale (streaming/sessionize.py:103,
     the applyInPandasWithState path)."""
@@ -672,26 +637,7 @@ def alerts_streaming_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "funnel_streaming_gate",
-    oracle="""
-    WITH lvl1 AS (
-      SELECT user_id,
-             CASE WHEN event_type = 'view' THEN 1 ELSE 0 END AS is_view,
-             CASE WHEN event_type = 'click' THEN 1 ELSE 0 END AS is_click,
-             CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS is_purchase,
-             max(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) OVER (
-               PARTITION BY user_id ORDER BY ts, event_id
-               ROWS UNBOUNDED PRECEDING) AS seen_view,
-             ts, event_id
-      FROM events
-    ),
-    lvl2 AS (
-      SELECT user_id, is_view, is_purchase,
-             is_click * seen_view AS q_click,
-             max(is_click * seen_view) OVER (
-               PARTITION BY user_id ORDER BY ts, event_id
-               ROWS UNBOUNDED PRECEDING) AS seen_q_click
-      FROM lvl1
-    )
+    oracle=f"""{_FUNNEL_FLAG_CTES}
     SELECT user_id,
            CAST(max(is_view) + max(q_click)
                 + max(is_purchase * seen_q_click) AS BIGINT) AS stage_reached

@@ -39,23 +39,11 @@ def stage_time_ordered_chunks(
     source processes chunks in order (``latestFirst`` default false)."""
     u = Window.partitionBy(key_col).orderBy(*order_cols)
     n = Window.partitionBy(key_col)
-    chunked = df.withColumn(
-        "__chunk",
-        F.least(
-            F.lit(n_chunks - 1),
-            ((F.row_number().over(u) - 1) * n_chunks / F.count("*").over(n)).cast(
-                "int"
-            ),
-        ),
+    chunk = F.least(
+        F.lit(n_chunks - 1),
+        ((F.row_number().over(u) - 1) * n_chunks / F.count("*").over(n)).cast("int"),
     )
-    for i in range(n_chunks):
-        d = src / f"c{i}"
-        chunked.filter(F.col("__chunk") == i).drop("__chunk").coalesce(
-            1
-        ).write.parquet(str(d))
-        for p in d.glob("*.parquet"):
-            os.utime(p, (base_mtime + i, base_mtime + i))
-    return f"{src}/c*"
+    return stage_keyed_chunks(df, src, chunk, n_chunks, base_mtime)
 
 
 def stage_keyed_chunks(

@@ -953,7 +953,7 @@ def _plan_shape(plan) -> dict[str, int]:
         # (shuffle, broadcast, nested-loop join, window)
         ("ann_cosine_topk", (1, 1, 1, 1)),
         ("ann_ivf_bucketed", (3, 3, 2, 3)),
-        ("ann_recall_multiprobe", (13, 20, 12, 14)),
+        ("ann_recall_multiprobe", (6, 7, 5, 5)),
     ],
 )
 def test_ann_plans_keep_their_shape(spark, name, shape):
