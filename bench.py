@@ -263,6 +263,25 @@ def time_queries(spark, qs, names, sf_dir: str, reps: int):
     return timings, stddevs, errors
 
 
+def jvm_record(spark) -> dict:
+    """The driver JVM's start and warm-up costs so far: how it used the
+    class archive, milliseconds spent in the JIT compiler and in GC
+    (summed over the collectors), and how many classes Janino compiled
+    for generated code."""
+    from glamira_batch_processing_spark.session import archive_state
+
+    jvm = spark.sparkContext._jvm
+    mx = jvm.java.lang.management.ManagementFactory
+    gcs = mx.getGarbageCollectorMXBeans()
+    codegen = jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return {
+        "class_archive": archive_state(),
+        "jit_ms": mx.getCompilationMXBean().getTotalCompilationTime(),
+        "gc_ms": sum(gcs.get(i).getCollectionTime() for i in range(gcs.size())),
+        "janino_compiles": codegen.METRIC_COMPILATION_TIME().getCount(),
+    }
+
+
 def main() -> None:
     from glamira_batch_processing_spark import get_spark
     from __spark_entry__ import queries
@@ -276,6 +295,7 @@ def main() -> None:
         timings, stddevs, SF_DIR, REPS, Path(__file__).resolve().parent
     )
     full["errors"] = errors
+    full["jvm"] = jvm_record(spark)
     Path(__file__).resolve().parent.joinpath("BENCH_SUMMARY.json").write_text(
         json.dumps(full, indent=1) + "\n"
     )

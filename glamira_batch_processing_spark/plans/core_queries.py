@@ -16,7 +16,7 @@ from ..functions.cleaning import (
     parse_localized_number,
     parse_localized_number_sql,
 )
-from .registry import date_between, date_ge, date_gt, date_le, date_lt, fan_out, query, table
+from .registry import date_ge, date_gt, date_lt, fan_out, query, table
 
 
 # ---------------------------------------------------------------------------

@@ -17,7 +17,6 @@ from ..operators.dedup import (
     SQL_MINHASH_CTES,
     doc_shingle_words,
     lsh_candidate_pairs,
-    lsh_candidate_pairs_fast,
     lsh_candidate_pairs_fast_on_words,
     lsh_candidate_pairs_on_shingles,
     sql_components_ctes,

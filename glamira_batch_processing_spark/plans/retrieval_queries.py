@@ -597,8 +597,6 @@ def mix_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``quality_bigram_familiarity``'s proven 100 TB shape plus a 1-row
     totals broadcast.
     """
-    from ..operators.spans import word_windows
-
     docs = table(spark, sf_dir, "documents")
     # fan_out deliberately NOT applied here (round 14): the single-task
     # pre-checkpoint segment is only ~0.4 s at sf0.1 and the sandwich

@@ -18,8 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .core_queries import _dec38, cents, split_sum, split_total
-from .registry import date_between, date_ge, date_gt, date_le, date_lt, query, table
+from .core_queries import cents, split_sum, split_total
+from .registry import date_between, date_ge, date_lt, query, table
 
 # Exact revenue units: cents(price) * (100 - cents(discount)); divide
 # by 10000 only at the very end, after the decimal(38,0) sum.

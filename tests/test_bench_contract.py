@@ -339,3 +339,16 @@ def test_failing_query_is_recorded_not_fatal(monkeypatch, capsys):
         "flaky": "RuntimeError: lost executor",
     }
     assert "ValueError: no such table" in capsys.readouterr().err
+
+
+def test_jvm_record_keys(spark):
+    """BENCH_SUMMARY.json's ``jvm`` record: the class-archive state and
+    the driver JVM's JIT, GC and Janino counters, read over py4j."""
+    spark.range(10).selectExpr("sum(id)").collect()
+    record = bench.jvm_record(spark)
+    assert set(record) == {"class_archive", "jit_ms", "gc_ms", "janino_compiles"}
+    assert re.fullmatch(r"used|dumping|off: .+", record["class_archive"])
+    assert all(isinstance(record[k], int) and record[k] >= 0
+               for k in ("jit_ms", "gc_ms", "janino_compiles"))
+    assert record["janino_compiles"] > 0
+    json.dumps(record)
